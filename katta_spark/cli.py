@@ -367,19 +367,14 @@ def main(argv: list[str] | None = None) -> int:
                         "count-only search counts OR matches; pass -k for "
                         "AND-mode results"
                     )
-                if (args.min_should_match or syns) and len(dirs) > 1:
-                    raise SystemExit(
-                        "--min-should-match/--synonyms are single-index"
-                    )
-                n = count_matches(spark, dirs if len(dirs) > 1 else dirs[0],
-                                  args.query,
+                n = count_matches(spark, dirs, args.query,
                                   min_should_match=args.min_should_match,
                                   synonyms=syns)
                 print(f"{n} Hits found in {time.time() - t0:.3f}sec.")
             else:
                 # totalHits + top-k hit table (Katta.java:823-838)
                 out = search_with_total(
-                    spark, dirs if len(dirs) > 1 else dirs[0], args.query,
+                    spark, dirs, args.query,
                     k=args.k, mode=args.mode,
                     min_should_match=args.min_should_match, synonyms=syns,
                 )

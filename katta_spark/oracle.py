@@ -125,5 +125,8 @@ def bm25_topk(
         scored.withColumn("score", F.col("score_d").cast(score_dtype))
         .select(*cols)
         .orderBy(*order)
-        .limit(k)
+        # at most n_docs docs can score; Spark's takeOrdered allocates 2·k
+        # slots per task, so an "every hit" k such as 10**9 would ask for
+        # gigabytes of heap
+        .limit(min(k, n_docs))
     )

@@ -2397,7 +2397,7 @@ KERNEL_MODES: dict[str, object] = {
 
 def _resolve_syn_groups(
     spark: SparkSession,
-    index: IndexHandle,
+    handles: "list[IndexHandle]",
     synonyms: "dict[str, list[str]] | None",
     qweights: dict[str, float],
     must: set[str],
@@ -2410,7 +2410,8 @@ def _resolve_syn_groups(
     (Lucene's SynonymQuery includes the original term); group_df = max
     member GLOBAL df (SynonymQuery.java's docFreq), resolved once
     driver-side (memoized per handle) so every shard scores the group
-    with the same idf."""
+    with the same idf. Over several indexes a member's df is its sum
+    across them — the df of the merged index."""
     if not synonyms:
         return []
     syn_groups: list[tuple[float, int, tuple[str, ...]]] = []
@@ -2458,16 +2459,60 @@ def _resolve_syn_groups(
                     "to one clause"
                 )
         claimed.update(members)
-        dfs = index.df_of_terms(spark, members)
-        syn_groups.append(
-            (qweights[key], max(dfs.values()), tuple(members))
-        )
+        dfs = [h.df_of_terms(spark, members) for h in handles]
+        group_df = max(sum(d[m] for d in dfs) for m in members)
+        syn_groups.append((qweights[key], group_df, tuple(members)))
     return syn_groups
+
+
+def _open_handles(
+    spark: SparkSession, index: "IndexHandle | str | list[IndexHandle | str]"
+) -> list[IndexHandle]:
+    """The searched indexes as opened handles — a bare index (handle or
+    path) is the one-element list."""
+    ixs = index if isinstance(index, (list, tuple)) else [index]
+    if not ixs:
+        raise ValueError("need at least one index")
+    return [
+        IndexHandle.open(spark, ix) if isinstance(ix, str) else ix for ix in ixs
+    ]
+
+
+def _union_shards(handles: list[IndexHandle], frame_of) -> DataFrame:
+    """Bag union of one shard-keyed frame per index (SURVEY.md §2.7).
+    Each index's shard ids are offset past the earlier indexes' so
+    per-shard kernel groups never collide; one index returns its frame
+    untouched."""
+    if len(handles) == 1:
+        return frame_of(handles[0])
+    out, off = None, 0
+    for h in handles:
+        part = frame_of(h).withColumn(
+            "shard_id", (F.col("shard_id") + F.lit(off)).cast("int")
+        )
+        out = part if out is None else out.unionByName(part)
+        off += h.num_shards
+    return out
+
+
+def _corpus_stats(
+    spark: SparkSession, handles: list[IndexHandle]
+) -> tuple[float, float]:
+    """(numDocs, avgdl) of the searched corpus — Katta's phase-1 summing
+    across indexes (LuceneClient.java:271-281). One index returns its
+    stored scalars (no Spark job); several sum the memoized per-handle
+    totals. avgdl == 0 (every analyzed text empty) becomes 1.0, as at
+    build time and in the oracle, so keyword-term scores stay finite."""
+    if len(handles) == 1:
+        return float(handles[0].n_docs), handles[0].avgdl
+    n_docs = float(sum(h.n_docs for h in handles))
+    tot_dl = sum(h.total_dl(spark) for h in handles)
+    return n_docs, (tot_dl / n_docs if n_docs else 0.0) or 1.0
 
 
 def search(
     spark: SparkSession,
-    index: IndexHandle | str,
+    index: "IndexHandle | str | list[IndexHandle | str]",
     query: str,
     k: int = 10,
     shard_ids: list[int] | None = None,
@@ -2494,6 +2539,22 @@ def search(
     """Top-k BM25 search. Returns DataFrame(doc_id, shard_id, score) ordered
     by the exact reference tie-break, ≤ k rows.
 
+    ``index`` is one index (handle or path) or a LIST of indexes searched
+    as one corpus — Katta's multi-index search (``search(query, ["idx1",
+    "idx2"])``, LuceneClient.java:149-203, LuceneClientTest.java:266-279);
+    a one-element list is the bare index. Phase 1 aggregates df / numDocs
+    / avgdl across ALL searched indexes (DocumentFrequencyWritable
+    summing, LuceneClient.java:271-281), so scores are identical to one
+    merged index; phase 2 is a bag union of per-index shard streams
+    (shard ids offset per index) through the same kernels and final top-k
+    merge (SURVEY.md §2.7). Every clause option, filter, tombstone deny
+    and paging form below applies to lists too, except ``shard_ids``
+    (shards of ONE index) and a CachedFilter (prepared for one index's
+    sharding). A list is also the INCREMENTAL-UPDATE story: new documents
+    build a small delta index and queries span [base, delta] with
+    combined stats — the analog of deploying an additional index version
+    in Katta.
+
     ``_dv_sort`` (internal, used by :func:`search_sorted`): a tuple
     ``(specs, dv_k)`` with specs = [(col, 'asc'|'desc'), ...] over the
     index's docvalue sidecar — the shard kernels then look sort keys up
@@ -2505,8 +2566,11 @@ def search(
     keyword terms, ``term^2.5`` boosts, and three dictionary rewrites —
     ``ab*`` prefix wildcards, ``term~N`` fuzzy (bounded Levenshtein),
     ``field:[lo TO hi]`` / ``{lo TO hi}`` / open-``*`` term ranges —
-    each expanded globally against the stats table under the
-    maxClauseCount cap, every expanded term scoring with its own df/idf.
+    each expanded against the stats table under the maxClauseCount cap,
+    every expanded term scoring with its own df/idf. Over a list the
+    rewrites expand PER INDEX — Lucene rewrites against each shard's own
+    dictionary (LuceneServer.java:602-624) — and a term expanded by
+    several indexes scores once at its clause boost.
 
     Boolean syntax (parse_bool_query — Lucene QueryParser's operators,
     which Katta exposes verbatim, Katta.java:825-826): ``+term`` MUST,
@@ -2527,10 +2591,10 @@ def search(
     Filtered search (Katta's Filter, ILuceneServer.java:84-101, applied at
     LuceneServer.java:334-345: restricts the matched set WITHOUT changing
     surviving docs' scores): pass ``filter_df`` — any DataFrame whose
-    ``filter_doc_col`` holds allowed docIDs. It is shuffled by the index's
-    own sharding function and COGROUPED with the postings, so each shard
-    kernel sees exactly its own allowed set — fully distributed, nothing
-    travels through the driver (``filter_docs`` list remains as a
+    ``filter_doc_col`` holds allowed docIDs. It is shuffled by each
+    index's own sharding function and COGROUPED with the postings, so each
+    shard kernel sees exactly its own allowed set — fully distributed,
+    nothing travels through the driver (``filter_docs`` list remains as a
     convenience wrapper for tiny driver-side sets).
 
     Paging: ``offset=N`` returns ranks N..N+k of the merged ranking —
@@ -2557,9 +2621,20 @@ def search(
     composition — Lucene's parser likewise applies synonyms to analyzed
     term clauses, not to wildcard/range rewrites).
     """
-    if isinstance(index, str):
-        index = IndexHandle.open(spark, index)
-    index._record_query()
+    handles = _open_handles(spark, index)
+    for h in handles:
+        h._record_query()
+    if len(handles) > 1:
+        if shard_ids is not None:
+            raise ValueError(
+                "shard_ids select shards of ONE index — search that index "
+                "alone"
+            )
+        if isinstance(filter_df, CachedFilter):
+            raise ValueError(
+                "CachedFilter is single-index (multi-index searches offset "
+                "shard ids per index) — pass the raw filter DataFrame"
+            )
     # ---- result paging (Lucene parity): ``offset`` pages like a
     # TopScoreDocCollector over offset+k (every shard emits offset+k —
     # exact, and exactly Lucene's shallow-paging cost model); ``_cursor``
@@ -2594,11 +2669,14 @@ def search(
     # tombstoned (deleted) docs are denied inside the kernels before any
     # cap — Lucene's liveDocs skip at collection time; df/N/avgdl stay
     # STALE until expunge, exactly like Lucene pre-merge
-    deny = _deny_handle(spark, index)
+    deny = _deny_handle_multi(spark, handles)
     sql_t = "float" if score_dtype == "float32" else "double"
     empty_schema = f"doc_id long, shard_id int, score {sql_t}"
     if _with_total:
         empty_schema += ", shard_total long"
+    kw_fields = tuple(
+        dict.fromkeys(f for h in handles for f in h.keyword_fields)
+    )
     must: set[str] = set()
     must_not: set[str] = set()
     phrases: list[tuple[list[str], int]] = []
@@ -2612,12 +2690,14 @@ def search(
         )
     unquoted = _re_mod.sub(r'"[^"]*"(~\d+)?(\^\d+(?:\.\d+)?)?', " ", query)
     has_phrase = unquoted != query
-    if (min_should_match or synonyms) and (
-        _TREE_RE.search(unquoted)
-        or _RANGE_RE.search(unquoted)
-        or "*" in unquoted
+    rewrite = (
+        "*" in unquoted
         or "~" in unquoted
         or "?" in unquoted
+        or bool(_RANGE_RE.search(unquoted))
+    )
+    if (min_should_match or synonyms) and (
+        _TREE_RE.search(unquoted) or rewrite
     ):
         raise ValueError(
             "min_should_match/synonyms apply to analyzed term clauses "
@@ -2637,12 +2717,7 @@ def search(
             raise ValueError(
                 "phrases cannot be combined with AND/OR/NOT grouping"
             )
-        if (
-            "*" in unquoted
-            or "~" in unquoted
-            or "?" in unquoted
-            or _RANGE_RE.search(unquoted)
-        ):
+        if rewrite:
             raise ValueError(
                 "wildcard/fuzzy/range clauses cannot be combined with "
                 "AND/OR/NOT grouping"
@@ -2652,30 +2727,34 @@ def search(
                 "AND/OR/NOT grouping defines its own clause semantics; "
                 f"mode={mode!r} is not combinable with it"
             )
-        tree, qweights = parse_tree_query(query, index.keyword_fields)
+        tree, qweights = parse_tree_query(query, kw_fields)
         _, must_not = tree_terms(tree)
-    elif _RANGE_RE.search(unquoted):
-        if has_phrase:
-            raise ValueError("phrases cannot be combined with range clauses")
-        qweights = expand_ranges(spark, index, query)
-    elif "*" in unquoted or "~" in unquoted or "?" in unquoted:
+    elif rewrite:
         if has_phrase:
             raise ValueError(
-                "phrases cannot be combined with wildcard/fuzzy clauses"
+                "phrases cannot be combined with wildcard/fuzzy/range "
+                "clauses"
             )
-        qweights = expand_wildcards(spark, index, query)
+        # a term expanded by several indexes' dictionaries scores ONCE at
+        # its clause boost (each shard scores its own rewrite in Katta —
+        # summing across indexes would double-weight shared terms)
+        qweights = {}
+        for h in handles:
+            for t, w in expand_ranges(spark, h, query).items():
+                qweights[t] = max(qweights.get(t, 0.0), w)
     else:
         qweights, must, must_not, phrases = parse_bool_query(
-            query, index.keyword_fields
+            query, kw_fields
         )
-    if phrases and not index.positions:
-        raise ValueError(
-            f"phrase query against index {index.index_dir!r} built with "
-            "positions=False (omitted term positions) — rebuild with "
-            "positions=True to run phrase/slop queries"
-        )
+    for h in handles if phrases else ():
+        if not h.positions:
+            raise ValueError(
+                f"phrase query against index {h.index_dir!r} built with "
+                "positions=False (omitted term positions) — rebuild with "
+                "positions=True to run phrase/slop queries"
+            )
     syn_groups = _resolve_syn_groups(
-        spark, index, synonyms, qweights, must, must_not, phrases
+        spark, handles, synonyms, qweights, must, must_not, phrases
     )
     boolean = (
         bool(must or must_not or phrases)
@@ -2728,13 +2807,36 @@ def search(
     # else prunes them at the parquet scan (explicit column selection —
     # applyInPandas would otherwise drag every column through Arrow)
     kcols = _KERNEL_COLS + (["positions"] if phrases else [])
-    if shard_ids is None:
+    n_docs, avgdl = _corpus_stats(spark, handles)
+    index = handles[0]
+    if len(handles) > 1:
+        # Phase 1 across indexes sums per-handle df driver-side (memoized
+        # per handle — repeated queries over warm handles collect nothing)
+        # into a broadcast (th, term, df_g) table joined per row, as below.
+        df_tot: dict[str, int] = {}
+        for h in handles:
+            for t, d in h.df_of_terms(spark, terms).items():
+                if d:
+                    df_tot[t] = df_tot.get(t, 0) + d
+        postings = _union_shards(
+            handles,
+            lambda h: h.postings(spark)
+            .where(F.col("th").isin(hashes))
+            .select(*kcols),
+        )
+        df_g = _local_df(
+            spark,
+            [(term_hash(t), t, d) for t, d in df_tot.items()],
+            ["th", "term", "df_g"],
+            "th long, term string, df_g long",
+        )
+        postings = postings.join(F.broadcast(df_g), "th")
+    elif shard_ids is None:
         # Phase 1 (global df per term — Katta's getDocFrequencies,
         # LuceneClient.java:264-286) is a broadcast join of the tiny stats
         # rows into the postings scan — no driver round-trip between the
         # phases; the kernel derives idf from the joined global df. The
         # stats rows also carry the term STRING (postings store only th).
-        n_docs, avgdl = float(index.n_docs), index.avgdl
         postings = index.postings(spark)
         if use_isin:
             # th is the pushed predicate (int64 min/max row-group skipping)
@@ -2823,6 +2925,14 @@ def search(
             "doc_id long",
         )
         filter_doc_col = "doc_id"
+    fdf = None
+    if filter_df is not None:
+        # the allowed set keyed by each index's own sharding function
+        fdf = _union_shards(
+            handles, lambda h: _filter_frame(h, filter_df, filter_doc_col)
+        )
+        if shard_ids is not None:
+            fdf = fdf.where(F.col("shard_id").isin(shard_ids))
     if _dv_sort is not None or _dv_group is not None or _dv_agg is not None:
         if _with_total:
             raise ValueError(
@@ -2862,15 +2972,16 @@ def search(
             extra_cols = [f"__sv{i}" for i in range(len(specs))]
         from katta_spark.docvalues import dv_path as _dvp
 
-        dvdf = index._rel(spark, _dvp(index.index_dir)).where(
-            F.col("col").isin(dv_cols)
+        # per-index sidecars, shard ids offset like the postings
+        dvdf = _union_shards(
+            handles,
+            lambda h: h._rel(spark, _dvp(h.index_dir)).where(
+                F.col("col").isin(dv_cols)
+            ),
         )
         if shard_ids is not None:
             dvdf = dvdf.where(F.col("shard_id").isin(shard_ids))
         if filter_df is not None:
-            fdf = _filter_frame(index, filter_df, filter_doc_col)
-            if shard_ids is not None:
-                fdf = fdf.where(F.col("shard_id").isin(shard_ids))
             dvdf = _dv_with_filter(dvdf, fdf)
         if _dv_agg is not None:
             # aggregate cogs collapse to constant-size per-shard partials
@@ -2899,10 +3010,6 @@ def search(
                 lambda pdf: kernel(pdf), out_schema
             )
     else:
-        fdf = _filter_frame(index, filter_df, filter_doc_col)
-        if shard_ids is not None:
-            fdf = fdf.where(F.col("shard_id").isin(shard_ids))
-
         def cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             if not len(left):
                 return _empty_hits(score_dtype, _with_total)
@@ -2942,6 +3049,11 @@ def search(
     return out
 
 
+# Katta's multi-index search is search() over a list of indexes; the
+# older name stays bound to the same function.
+search_multi = search
+
+
 def search_after(
     spark: SparkSession,
     index: "IndexHandle | str | list[IndexHandle | str]",
@@ -2975,20 +3087,6 @@ def search_after(
     results carry). Requires a scoring query (or/and/boolean/tree);
     totals don't combine (Lucene's searchAfter collectors don't track
     them either)."""
-    if isinstance(index, (list, tuple)) and len(index) == 1:
-        index = index[0]  # one-element list IS a single index (cli.py does
-        # the same unwrap) — clause options and shard_ids then apply
-    if isinstance(index, (list, tuple)):
-        if min_should_match or synonyms:
-            raise ValueError(
-                "min_should_match/synonyms are single-index for now — "
-                "merge or compact the indexes first"
-            )
-        return search_multi(
-            spark, list(index), query, k=k, mode=mode,
-            score_dtype=score_dtype, filter_df=filter_df,
-            filter_doc_col=filter_doc_col, _cursor=tuple(after),
-        )
     return search(
         spark, index, query, k=k, mode=mode, score_dtype=score_dtype,
         min_should_match=min_should_match, synonyms=synonyms,
@@ -3036,45 +3134,25 @@ def search_with_total(
     """
     if offset < 0:
         raise ValueError(f"offset must be >= 0, got {offset}")
-    k_eff = k + offset
     sql_t = "float" if score_dtype == "float32" else "double"
     schema = (
         f"doc_id long, shard_id int, score {sql_t}, total_hits long, "
         "shards_hit int, shards_total int"
     )
-    if isinstance(index, (list, tuple)) and len(index) == 1:
-        index = index[0]  # one-element list IS a single index
-    if isinstance(index, (list, tuple)):
-        if min_should_match or synonyms:
-            raise ValueError(
-                "min_should_match/synonyms are single-index for now — "
-                "merge or compact the indexes first"
-            )
-        handles = [
-            IndexHandle.open(spark, ix) if isinstance(ix, str) else ix
-            for ix in index
-        ]
-        shards_total = sum(h.num_shards for h in handles)
-        rows = search_multi(
-            spark, handles, query, k=k_eff, mode=mode, score_dtype=score_dtype,
-            filter_df=filter_df, filter_doc_col=filter_doc_col,
-            ordered=False, _with_total=True,
-        ).collect()
-    else:
-        if isinstance(index, str):
-            index = IndexHandle.open(spark, index)
-        shards_total = index.num_shards
-        rows = search(
-            spark, index, query, k=k_eff, mode=mode, score_dtype=score_dtype,
-            min_should_match=min_should_match, synonyms=synonyms,
-            prune=False, ordered=False,
-            filter_df=filter_df, filter_doc_col=filter_doc_col,
-            _with_total=True,
-        ).collect()
+    handles = _open_handles(spark, index)
+    rows = search(
+        spark, handles, query, k=k + offset, mode=mode,
+        score_dtype=score_dtype,
+        min_should_match=min_should_match, synonyms=synonyms,
+        prune=False, ordered=False,
+        filter_df=filter_df, filter_doc_col=filter_doc_col,
+        _with_total=True,
+    ).collect()
     if not rows:
         return _local_df(spark, [], None, schema)
     per_shard = {r.shard_id: int(r.shard_total) for r in rows}
     total = sum(per_shard.values())
+    shards_total = sum(h.num_shards for h in handles)
     # paging slices the client merge (totals unaffected — Hits reports
     # the full count whatever page is displayed)
     top = sorted(rows, key=lambda r: (-r.score, r.doc_id, -r.shard_id))[
@@ -3093,347 +3171,9 @@ def search_with_total(
     )
 
 
-def search_multi(
-    spark: SparkSession,
-    indexes: list[IndexHandle | str],
-    query: str,
-    k: int = 10,
-    mode: str = "or",
-    score_dtype: str = "float32",
-    filter_df: DataFrame | None = None,
-    filter_doc_col: str = "doc_id",
-    ordered: bool = True,
-    offset: int = 0,
-    _with_total: bool = False,
-    _dv_sort: tuple | None = None,
-    _cursor: tuple | None = None,
-) -> DataFrame:
-    """Search several indexes as one corpus — Katta's multi-index search
-    (``search(query, ["idx1", "idx2"])``, LuceneClientTest.java:266-279).
-    ``filter_df`` restricts matches like in :func:`search` (Katta's Filter
-    also applies to multi-index searches): the allowed set is mapped
-    through EACH index's own sharding function (+ shard offset) and
-    cogrouped per shard.
-
-    Semantics replicated exactly: phase 1 aggregates df / numDocs across
-    ALL searched indexes (DocumentFrequencyWritable summing,
-    LuceneClient.java:271-281), so scores are identical to a single merged
-    index; phase 2 is a bag union of per-index shard streams through the
-    same final top-k merge (SURVEY.md §2.7). Boolean syntax carries over:
-    ``+MUST`` / ``-MUST_NOT`` clauses, phrases (index-only positional
-    verify) and AND/OR/NOT grouping evaluate against the combined stats
-    exactly as in :func:`search`.
-
-    This is also the INCREMENTAL-UPDATE story: new documents build a small
-    delta index and queries span [base, delta] with combined stats — the
-    analog of deploying an additional index version in Katta.
-    """
-    handles = [
-        IndexHandle.open(spark, ix) if isinstance(ix, str) else ix for ix in indexes
-    ]
-    if isinstance(filter_df, CachedFilter):
-        raise ValueError(
-            "CachedFilter is single-index (multi-index searches offset "
-            "shard ids per index) — pass the raw filter DataFrame"
-        )
-    if offset < 0:
-        raise ValueError(f"offset must be >= 0, got {offset}")
-    if offset and _cursor is not None:
-        raise ValueError(
-            "offset and search_after are alternative paging forms — pass one"
-        )
-    if (offset or _cursor is not None) and (_dv_sort is not None or not ordered):
-        raise ValueError(
-            "offset/search_after page the score-ranked result; use "
-            "search_sorted(offset=...) for field-sorted paging"
-        )
-    if _cursor is not None and _with_total:
-        raise ValueError("search_after does not combine with totals")
-    k_eff = k + offset
-    # tombstones across every searched index (deny inside the kernels;
-    # stats stay stale until expunge — Lucene liveDocs semantics)
-    deny = _deny_handle_multi(spark, handles)
-    sql_t = "float" if score_dtype == "float32" else "double"
-    empty_schema = f"doc_id long, shard_id int, score {sql_t}"
-    if _with_total:
-        empty_schema += ", shard_total long"
-    all_kw = tuple({f for h in handles for f in h.keyword_fields})
-    # Boolean clause surface over the combined corpus: +MUST / -MUST_NOT,
-    # phrases (in-index positional verify — no per-index source needed)
-    # and AND/OR/NOT grouping parse exactly as in search(). Dictionary
-    # rewrites (wildcard/fuzzy/range) expand PER INDEX — exactly Katta's
-    # model, where Lucene rewrites the query against each shard's own
-    # dictionary (LuceneServer.java:602-624) — and the expansions union
-    # with combined stats, so results equal one merged index.
-    query = fold_spaced_fields(query)
-    unquoted = _re_mod.sub(r'"[^"]*"(~\d+)?(\^\d+(?:\.\d+)?)?', " ", query)
-    has_phrase = unquoted != query
-    tree = None
-    must: set[str] = set()
-    must_not: set[str] = set()
-    phrases: list[tuple[list[str], int]] = []
-    if (
-        "*" in unquoted
-        or "~" in unquoted
-        or "?" in unquoted
-        or _RANGE_RE.search(unquoted)
-    ):
-        if _TREE_RE.search(unquoted):
-            raise ValueError(
-                "wildcard/fuzzy/range clauses cannot be combined with "
-                "AND/OR/NOT grouping"
-            )
-        if has_phrase:
-            raise ValueError(
-                "phrases cannot be combined with wildcard/fuzzy/range "
-                "clauses"
-            )
-        # a term expanded by several indexes' dictionaries scores ONCE at
-        # its clause boost (each shard scores its own rewrite in Katta —
-        # summing across indexes would double-weight shared terms)
-        qweights = {}
-        for h in handles:
-            for t, w in expand_ranges(spark, h, query).items():
-                qweights[t] = max(qweights.get(t, 0.0), w)
-    elif _TREE_RE.search(unquoted):
-        if has_phrase:
-            raise ValueError(
-                "phrases cannot be combined with AND/OR/NOT grouping"
-            )
-        if mode != "or":
-            raise ValueError(
-                "AND/OR/NOT grouping defines its own clause semantics; "
-                f"mode={mode!r} is not combinable with it"
-            )
-        tree, qweights = parse_tree_query(query, all_kw)
-        _, must_not = tree_terms(tree)
-    else:
-        qweights, must, must_not, phrases = parse_bool_query(query, all_kw)
-        if (must or must_not) and mode != "or":
-            raise ValueError(
-                "boolean operators (+/-) define their own clause "
-                f"semantics; mode={mode!r} is not combinable with them"
-            )
-    if phrases:
-        for h in handles:
-            if not h.positions:
-                raise ValueError(
-                    f"phrase query against index {h.index_dir!r} built "
-                    "with positions=False (omitted term positions) — "
-                    "rebuild with positions=True to run phrase/slop queries"
-                )
-    if not qweights or k <= 0:
-        return _local_df(spark, [], None, empty_schema)
-    terms = sorted(set(qweights) | must_not)
-
-    # phase 1: combined stats over all indexes
-    n_docs = float(sum(h.n_docs for h in handles))
-    # exact combined avgdl from per-index shard stats (memoized per handle
-    # — repeated queries over the same handles collect nothing here)
-    tot_dl = sum(h.total_dl(spark) for h in handles)
-    avgdl = tot_dl / n_docs if n_docs else 1.0
-    # per-handle df, memoized (df_of_terms) — repeated multi-index queries
-    # over warm handles collect nothing here
-    df_tot: dict[str, int] = {}
-    for h in handles:
-        for t, d in h.df_of_terms(spark, terms).items():
-            if d:
-                df_tot[t] = df_tot.get(t, 0) + d
-    live_terms = sorted(df_tot)
-    live_scoring = [t for t in live_terms if t in qweights]
-    if not live_scoring or (
-        mode == "and" and len(live_scoring) < len(set(qweights))
-    ):
-        return _local_df(spark, [], None, empty_schema)
-    if must and not must <= set(live_terms):
-        return _local_df(spark, [], None, empty_schema)  # a MUST term is absent
-    live_hashes = [term_hash(t) for t in live_terms]
-
-    # phase 2: bag union of per-index postings; shard ids are offset so the
-    # per-shard kernel groups never collide across indexes. The cross-index
-    # global df (and the term string — postings store only th) is
-    # broadcast-joined per row, as in search().
-    kcols = _KERNEL_COLS + (["positions"] if phrases else [])
-    parts = []
-    sh_off = 0
-    for h in handles:
-        p = (
-            h.postings(spark)
-            .where(F.col("th").isin(live_hashes))
-            .select(*kcols)
-            .withColumn(
-                "shard_id", (F.col("shard_id") + F.lit(sh_off)).cast("int")
-            )
-        )
-        parts.append(p)
-        sh_off += h.num_shards
-    postings = parts[0]
-    for p in parts[1:]:
-        postings = postings.unionByName(p)
-    df_g = _local_df(
-        spark,
-        [(term_hash(t), t, int(d)) for t, d in df_tot.items()],
-        ["th", "term", "df_g"],
-        "th long, term string, df_g long",
-    )
-    postings = postings.join(F.broadcast(df_g), "th")
-
-    if tree is not None:
-        kernel = _make_tree_kernel(
-            tree, qweights, n_docs, avgdl, k_eff, score_dtype, _with_total,
-            cursor=_cursor,
-        )
-    elif mode == "and":
-        kernel = _make_and_kernel(
-            qweights, n_docs, avgdl, k_eff, score_dtype, _with_total,
-            cursor=_cursor,
-        )
-    elif mode == "match":
-        # scores-off path (Katta's default — LuceneServer.java:97 only
-        # tracks scores when asked): used by multi-index search_sorted
-        # with track_scores=False
-        if _cursor is not None:
-            raise ValueError(
-                "search_after requires a scoring mode ('or'/'and' or a "
-                "boolean/tree query); got mode='match'"
-            )
-        kernel = _make_match_kernel(
-            qweights, n_docs, avgdl, k_eff, score_dtype, _with_total
-        )
-    else:
-        # with totals the count must be exact → no block pruning; boolean
-        # clauses (must/not/phrase) also disable pruning inside the kernel
-        kernel = _make_score_kernel(
-            qweights, n_docs, avgdl, k_eff,
-            not _with_total and not must and not must_not and not phrases
-            and _cursor is None,
-            score_dtype,
-            _with_total, frozenset(must), frozenset(must_not),
-            tuple(phrases), cursor=_cursor,
-        )
-    out_schema = f"shard_id int, doc_id long, score {sql_t}"
-    if _with_total:
-        out_schema += ", shard_total long"
-    if _dv_sort is not None:
-        # per-index sidecars, shard ids offset like the postings — the
-        # same TopFieldCollector cap as single-index (see search())
-        if _with_total:
-            raise ValueError("_dv_sort does not combine with _with_total")
-        from katta_spark.docvalues import dv_path as _dvp
-
-        specs, dv_k = _dv_sort
-        dv_cog = _make_dv_sort_cog(
-            kernel, specs, dv_k, score_dtype,
-            filtered=filter_df is not None, deny=deny,
-        )
-        dv_parts = []
-        sh_off = 0
-        for h in handles:
-            dv_parts.append(
-                h._rel(spark, _dvp(h.index_dir))
-                .where(F.col("col").isin([n for n, _ in specs]))
-                .withColumn(
-                    "shard_id", (F.col("shard_id") + F.lit(sh_off)).cast("int")
-                )
-            )
-            sh_off += h.num_shards
-        dvdf = dv_parts[0]
-        for p in dv_parts[1:]:
-            dvdf = dvdf.unionByName(p)
-        if filter_df is not None:
-            fbase = filter_df.select(
-                F.col(filter_doc_col).cast("long").alias("doc_id")
-            )
-            fparts = []
-            sh_off = 0
-            for h in handles:
-                fparts.append(
-                    fbase.withColumn(
-                        "shard_id",
-                        (h.shard_expr(F.col("doc_id")) + F.lit(sh_off)).cast(
-                            "int"
-                        ),
-                    )
-                )
-                sh_off += h.num_shards
-            fdf = fparts[0]
-            for fp in fparts[1:]:
-                fdf = fdf.unionByName(fp)
-            dvdf = _dv_with_filter(dvdf, fdf)
-        sv_schema = ", ".join(f"__sv{i} long" for i in range(len(specs)))
-        hits = (
-            postings.groupBy("shard_id")
-            .cogroup(dvdf.groupBy("shard_id"))
-            .applyInPandas(dv_cog, out_schema + ", " + sv_schema)
-        )
-        return hits.select(
-            "doc_id", "shard_id", "score",
-            *[f"__sv{i}" for i in range(len(specs))],
-        )
-    if filter_df is None:
-        if deny is not None:
-            hits = postings.groupBy("shard_id").applyInPandas(
-                lambda pdf: kernel(pdf, DocFilter(None, deny.value)),
-                out_schema,
-            )
-        else:
-            hits = postings.groupBy("shard_id").applyInPandas(
-                lambda pdf: kernel(pdf), out_schema
-            )
-    else:
-        fbase = filter_df.select(F.col(filter_doc_col).cast("long").alias("doc_id"))
-        fparts = []
-        sh_off = 0
-        for h in handles:
-            fparts.append(
-                fbase.withColumn(
-                    "shard_id",
-                    (h.shard_expr(F.col("doc_id")) + F.lit(sh_off)).cast("int"),
-                )
-            )
-            sh_off += h.num_shards
-        fdf = fparts[0]
-        for fp in fparts[1:]:
-            fdf = fdf.unionByName(fp)
-
-        def cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if not len(left):
-                return _empty_hits(score_dtype, _with_total)
-            allowed = np.unique(right["doc_id"].to_numpy(np.int64))
-            return kernel(left, DocFilter(allowed, _deny_val(deny)))
-
-        hits = (
-            postings.groupBy("shard_id")
-            .cogroup(fdf.groupBy("shard_id"))
-            .applyInPandas(cog, out_schema)
-        )
-    sel = ["doc_id", "shard_id", "score"] + (
-        ["shard_total"] if _with_total else []
-    )
-    hits = hits.select(*sel)
-    if not ordered:
-        return hits
-    out = hits.orderBy(
-        F.col("score").desc(), F.col("doc_id").asc(), F.col("shard_id").desc()
-    ).limit(k_eff)
-    if offset:
-        from pyspark.sql import Window
-
-        w = Window.orderBy(
-            F.col("score").desc(), F.col("doc_id").asc(),
-            F.col("shard_id").desc(),
-        )
-        out = (
-            out.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") > offset)
-            .drop("__rn")
-        )
-    return out
-
-
 def search_sorted(
     spark: SparkSession,
-    index: IndexHandle | str,
+    index: "IndexHandle | str | list[IndexHandle | str]",
     query: str,
     source: DataFrame,
     sort_cols: list,
@@ -3467,17 +3207,14 @@ def search_sorted(
     scores are only computed when requested).
 
     A LIST of indexes sorts across all of them (Katta sorted search spans
-    the searched indices, LuceneClientTest.java:330) via search_multi's
+    the searched indices, LuceneClientTest.java:330) via search()'s
     combined-stats bag union; ``source`` must cover the union corpus.
     """
     if offset < 0:
         raise ValueError(f"offset must be >= 0, got {offset}")
+    ihs = _open_handles(spark, index)
     specs = _norm_sort_specs(sort_cols)
     if specs is not None:
-        ihs = [
-            IndexHandle.open(spark, ix) if isinstance(ix, str) else ix
-            for ix in (index if isinstance(index, (list, tuple)) else [index])
-        ]
         kinds0 = ihs[0].docvalue_kinds()
         if all(
             all(n in h.docvalue_kinds() for n, _ in specs) for h in ihs
@@ -3489,10 +3226,8 @@ def search_sorted(
             # key; those take the source-join path below, which sorts on
             # the original values)
             return _search_sorted_dv(
-                spark,
-                ihs if isinstance(index, (list, tuple)) else ihs[0],
-                query, source, specs, k, track_scores, id_cols, doc_id_col,
-                filter_df, filter_doc_col, offset,
+                spark, ihs, query, source, specs, k, track_scores, id_cols,
+                doc_id_col, filter_df, filter_doc_col, offset,
             )
     # fallback: candidate docs = union of posting lists (huge k caps
     # nothing away); when scores aren't tracked, the match-only kernel
@@ -3502,21 +3237,11 @@ def search_sorted(
             F.col(n).asc() if d == "asc" else F.col(n).desc()
             for n, d in specs
         ]
-    if isinstance(index, (list, tuple)):
-        matches = search_multi(
-            spark, list(index), query, k=2**31 - 1, score_dtype="float64",
-            ordered=False, mode="or" if track_scores else "match",
-            filter_df=filter_df, filter_doc_col=filter_doc_col,
-        )
-    else:
-        if isinstance(index, str):
-            index = IndexHandle.open(spark, index)
-        matches = search(
-            spark, index, query, k=2**31 - 1, prune=False,
-            score_dtype="float64",
-            ordered=False, mode="or" if track_scores else "match",
-            filter_df=filter_df, filter_doc_col=filter_doc_col,
-        )
+    matches = search(
+        spark, ihs, query, k=2**31 - 1, prune=False, score_dtype="float64",
+        ordered=False, mode="or" if track_scores else "match",
+        filter_df=filter_df, filter_doc_col=filter_doc_col,
+    )
     if doc_id_col is None:
         src = source.withColumn("doc_id", F.xxhash64(*[F.col(c) for c in id_cols]))
     else:
@@ -3572,7 +3297,7 @@ def _norm_sort_specs(sort_cols) -> "list[tuple[str, str]] | None":
 
 def _search_sorted_dv(
     spark: SparkSession,
-    index: IndexHandle,
+    handles: list[IndexHandle],
     query: str,
     source: DataFrame,
     specs: list,
@@ -3587,28 +3312,20 @@ def _search_sorted_dv(
     """Docvalue fast path: per-shard in-index field-sort cap (≤ k·shards
     rows leave the kernels), global merge on the mapped keys, then ONE
     broadcast join of the merged top-k to ``source`` for display columns.
-    ``index`` may be a LIST of dv-carrying handles (combined stats via
-    search_multi, per-index sidecars cogrouped per offset shard).
+    Several dv-carrying handles search with combined stats, their
+    sidecars cogrouped per offset shard.
     ``filter_df`` composes with the cap: the allowed docIDs cogroup into
     the kernels ahead of the per-shard dv selection — Katta's
     search(query, sort, filter) in one call (ILuceneServer.java:84-101,
     LuceneClientTest.java:562-617)."""
     dv_k = k + offset  # TopFieldCollector pages at offset+k per shard
-    if isinstance(index, (list, tuple)):
-        hits = search_multi(
-            spark, list(index), query, k=2**31 - 1,
-            score_dtype="float64", ordered=False, _dv_sort=(specs, dv_k),
-            mode="or" if track_scores else "match",
-            filter_df=filter_df, filter_doc_col=filter_doc_col,
-        )
-    else:
-        hits = search(
-            spark, index, query, k=2**31 - 1, prune=False,
-            score_dtype="float64", ordered=False,
-            mode="or" if track_scores else "match",
-            _dv_sort=(specs, dv_k),
-            filter_df=filter_df, filter_doc_col=filter_doc_col,
-        )
+    hits = search(
+        spark, handles, query, k=2**31 - 1, prune=False,
+        score_dtype="float64", ordered=False,
+        mode="or" if track_scores else "match",
+        _dv_sort=(specs, dv_k),
+        filter_df=filter_df, filter_doc_col=filter_doc_col,
+    )
     # Across MULTIPLE indexes a STRING column's mapped keys are per-index
     # dictionary RANKS — internally consistent (the per-shard cap above is
     # sound) but NOT comparable between indexes. For the global merge,
@@ -3619,7 +3336,6 @@ def _search_sorted_dv(
     # broadcast join decorates the candidates — nothing corpus-sized
     # shuffles. Single-index string sorts keep the pure-rank merge (one
     # dictionary ⇒ ranks ARE the global order).
-    handles = list(index) if isinstance(index, (list, tuple)) else [index]
     str_ix = [
         i for i, (n, _) in enumerate(specs)
         if handles[0].docvalue_kinds().get(n) == "string"
@@ -4018,7 +3734,7 @@ def search_batch(
                 qstr, index.keyword_fields
             )
             groups = _resolve_syn_groups(
-                spark, index, q_syns, qw, must, must_not, ph
+                spark, [index], q_syns, qw, must, must_not, ph
             )
             plans.append(
                 ("flat", qw, frozenset(must), frozenset(must_not),
@@ -4319,11 +4035,7 @@ def count_matches(
     grouping) delegate to the search kernels' exact shard totals — Katta's
     count() likewise counts the PARSED query's matches, not term-OR
     matches (phrases verify in-index against the positional postings)."""
-    handles = (
-        [IndexHandle.open(spark, ix) if isinstance(ix, str) else ix for ix in index]
-        if isinstance(index, (list, tuple))
-        else [IndexHandle.open(spark, index) if isinstance(index, str) else index]
-    )
+    handles = _open_handles(spark, index)
     all_kw = tuple({f for h in handles for f in h.keyword_fields})
     query = fold_spaced_fields(query)
     if query.strip() == "*:*":
@@ -4363,10 +4075,9 @@ def count_matches(
     ):
         # non-flat query: the search kernels' exact totals ARE the count
         # (rewrites expand against the dictionary there — per index when
-        # several are searched, via search_multi's per-index expansion)
-        multi = handles if len(handles) > 1 else handles[0]
+        # several are searched)
         rows = search_with_total(
-            spark, multi, query, k=1,
+            spark, handles, query, k=1,
             min_should_match=min_should_match, synonyms=synonyms,
         ).collect()
         return int(rows[0]["total_hits"]) if rows else 0
@@ -4374,21 +4085,12 @@ def count_matches(
     if not terms:
         return 0
     hashes = [term_hash(t) for t in terms]
-    parts = []
-    offset = 0
-    for h in handles:
-        parts.append(
-            h.postings(spark)
-            .where(F.col("th").isin(hashes))
-            .select("shard_id", "doc_ids", "tfs", "doclens")
-            .withColumn(
-                "shard_id", (F.col("shard_id") + F.lit(offset)).cast("int")
-            )
-        )
-        offset += h.num_shards
-    postings = parts[0]
-    for p in parts[1:]:
-        postings = postings.unionByName(p)
+    postings = _union_shards(
+        handles,
+        lambda h: h.postings(spark)
+        .where(F.col("th").isin(hashes))
+        .select("shard_id", "doc_ids", "tfs", "doclens"),
+    )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         docs = [decode_posting_list(r.doc_ids, r.tfs, r.doclens)[0]
@@ -4639,16 +4341,13 @@ def _resolve_ranges(ranges, kind: str):
     return labels, bounds
 
 
-def _dv_agg_common(index, query_kw: dict):
-    """(handles, list_input) — normalize the index argument for the dv
-    aggregate operators and fold their shared search() kwargs."""
-    ihs = index if isinstance(index, (list, tuple)) else [index]
-    if not ihs:
-        raise ValueError("need at least one index")
+def _dv_agg_common(spark: SparkSession, index, query_kw: dict):
+    """Open the dv aggregate operators' index argument as handles and
+    fold their shared search() kwargs."""
     query_kw.update(
         k=2**31 - 1, prune=False, ordered=False, score_dtype="float64",
     )
-    return list(ihs)
+    return _open_handles(spark, index)
 
 
 def facet_ranges(
@@ -4688,11 +4387,7 @@ def facet_ranges(
         mode=mode, shard_ids=shard_ids, filter_df=filter_df,
         filter_doc_col=filter_doc_col,
     )
-    ihs = _dv_agg_common(index, kw)
-    ihs = [
-        IndexHandle.open(spark, ix) if isinstance(ix, str) else ix
-        for ix in ihs
-    ]
+    ihs = _dv_agg_common(spark, index, kw)
     kind = _dv_numeric_kind(ihs[0], col)
     for h in ihs[1:]:
         if _dv_numeric_kind(h, col) != kind:
@@ -4761,11 +4456,7 @@ def match_stats(
         mode=mode, shard_ids=shard_ids, filter_df=filter_df,
         filter_doc_col=filter_doc_col,
     )
-    ihs = _dv_agg_common(index, kw)
-    ihs = [
-        IndexHandle.open(spark, ix) if isinstance(ix, str) else ix
-        for ix in ihs
-    ]
+    ihs = _dv_agg_common(spark, index, kw)
     kind = _dv_numeric_kind(ihs[0], col)
     for h in ihs[1:]:
         if _dv_numeric_kind(h, col) != kind:
@@ -5219,7 +4910,7 @@ def explain_score(
             "positions=True to run phrase/slop queries"
         )
     syn_groups = _resolve_syn_groups(
-        spark, index, synonyms, qweights, must, must_not, phrases
+        spark, [index], synonyms, qweights, must, must_not, phrases
     )
     syn_members = {m for _, _, members in syn_groups for m in members}
     boolean = (

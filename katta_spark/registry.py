@@ -86,12 +86,12 @@ def search_by_name(
 ) -> DataFrame:
     """Search indexes by registered name/pattern — the
     ``search("idx1,idx2", q)`` / ``search("index[12]", q)`` client surface
-    (ILuceneClient.java:61-112). One resolved index takes the single-index
-    fast path; several go through the stats-combining multi-index search.
+    (ILuceneClient.java:61-112). The resolved indexes are searched as one
+    corpus with combined stats.
     """
-    from katta_spark.query import search, search_multi
+    from katta_spark.query import search
 
-    dirs = resolve(root, patterns)
-    if len(dirs) == 1:
-        return search(spark, dirs[0], query, k=k, mode=mode, score_dtype=score_dtype)
-    return search_multi(spark, dirs, query, k=k, mode=mode, score_dtype=score_dtype)
+    return search(
+        spark, resolve(root, patterns), query, k=k, mode=mode,
+        score_dtype=score_dtype,
+    )

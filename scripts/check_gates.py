@@ -3,7 +3,8 @@
 Runs every __spark_entry__.queries() entry and its oracle_sql() twin at a
 given sf dir (default sf0.01), compares row count, schema width, and the
 column-name-sorted value matrix. Prints one JSON line per gate and a
-summary. Usage:
+summary. Exits 1 when any gate fails and 2 on an unknown gate name.
+Usage:
 
     python scripts/check_gates.py [sf_dir] [gate ...]
 """
@@ -95,6 +96,8 @@ def main() -> None:
         n_fail += 0 if ok or res.get("err") == "no_oracle" else 1
         print(json.dumps(res))
     print(f"SUMMARY: {'ALL GREEN' if n_fail == 0 else f'{n_fail} FAILING'}")
+    if n_fail:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

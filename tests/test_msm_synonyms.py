@@ -308,10 +308,13 @@ def test_guard_rails(spark, midx):
         )
     with pytest.raises(ValueError, match=">= 0"):
         search(spark, midx, "hotalpha", min_should_match=-1)
-    with pytest.raises(ValueError, match="single-index"):
-        search_with_total(
-            spark, [midx, midx], "hotalpha", min_should_match=1
-        )
+    # a list of indexes takes msm/synonyms too: two copies of the index
+    # bag-union, so the match count doubles
+    one = search_with_total(spark, midx, "hotalpha", min_should_match=1)
+    two = search_with_total(
+        spark, [midx, midx], "hotalpha", min_should_match=1
+    )
+    assert two.first().total_hits == 2 * one.first().total_hits
 
 
 def test_msm_fuzz_against_oracle(spark, midx, docs):

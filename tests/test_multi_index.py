@@ -47,27 +47,124 @@ def split_indexes(spark, tiny_transcripts, tmp_path_factory):
 
 
 @pytest.mark.parametrize(
-    "query,k,mode",
+    "query,k,mode,opts",
     [
-        ("hotalpha", 10, "or"),
-        ("hotalpha w00011 w00013", 10, "or"),
-        ("hotalpha hotbeta", 15, "and"),
-        ("w01999", 10, "or"),
+        pytest.param("hotalpha", 10, "or", {}, id="hotalpha-10-or"),
+        pytest.param(
+            "hotalpha w00011 w00013", 10, "or", {},
+            id="hotalpha w00011 w00013-10-or",
+        ),
+        pytest.param(
+            "hotalpha hotbeta", 15, "and", {}, id="hotalpha hotbeta-15-and"
+        ),
+        pytest.param("w01999", 10, "or", {}, id="w01999-10-or"),
+        pytest.param(
+            "hotalpha w00011 w00013", 10, "or", {"min_should_match": 2},
+            id="msm",
+        ),
+        pytest.param(
+            "hotalpha w00011", 10, "or", {"synonyms": {"w00011": ["w00013"]}},
+            id="synonyms",
+        ),
+        pytest.param(
+            "hotalpha hotbeta w00011", 10, "or",
+            {"min_should_match": 2, "synonyms": {"w00011": ["w00013"]}},
+            id="msm-synonyms",
+        ),
     ],
 )
-def test_split_equals_whole(spark, split_indexes, query, k, mode):
+def test_split_equals_whole(spark, split_indexes, query, k, mode, opts):
     """Compliance: 2 half indexes searched together == 1 whole index.
 
     Scores must be identical because phase-1 stats aggregate across the
-    searched indexes exactly like DocumentFrequencyWritable summing."""
+    searched indexes exactly like DocumentFrequencyWritable summing (a
+    synonym group's df is the max over its members of the summed df).
+    The same holds for totals and counts."""
+    from katta_spark.query import search_with_total
+
     whole, a, b = split_indexes
-    got = search_multi(spark, [a, b], query, k=k, mode=mode).collect()
-    want = search(spark, whole, query, k=k, mode=mode).collect()
+    got = search_multi(spark, [a, b], query, k=k, mode=mode, **opts).collect()
+    want = search(spark, whole, query, k=k, mode=mode, **opts).collect()
     assert [r.doc_id for r in got] == [r.doc_id for r in want]
     np.testing.assert_allclose(
         np.array([r.score for r in got], dtype=np.float32),
         np.array([r.score for r in want], dtype=np.float32),
         rtol=2e-6,
+    )
+    got_t = search_with_total(
+        spark, [a, b], query, k=k, mode=mode, **opts
+    ).collect()
+    want_t = search_with_total(
+        spark, whole, query, k=k, mode=mode, **opts
+    ).collect()
+    assert [r.doc_id for r in got_t] == [r.doc_id for r in want]
+    assert [r.total_hits for r in got_t] == [r.total_hits for r in want_t]
+    if mode == "or":
+        want_n = want_t[0].total_hits if want_t else 0
+        assert count_matches(spark, [a, b], query, **opts) == want_n
+        assert count_matches(spark, whole, query, **opts) == want_n
+
+
+def test_multi_index_modes(spark, split_indexes):
+    """A list dispatches ``mode`` through the same kernel registry as one
+    index: an unknown mode raises, a registered one runs per offset shard."""
+    import pandas as pd
+
+    from katta_spark import operators
+
+    _, a, b = split_indexes
+    with pytest.raises(ValueError, match="unknown search mode"):
+        search_multi(spark, [a, b], "hotalpha", k=5, mode="bogus")
+
+    def one_per_shard(qw, n, avgdl, k, prune, dt, wt):
+        def kernel(pdf, filter_docs=None):
+            return pd.DataFrame({
+                "shard_id": np.array([pdf["shard_id"].iloc[0]], np.int32),
+                "doc_id": np.array([0], np.int64),
+                "score": np.array([1.0], dt),
+            })
+        return kernel
+
+    operators.register_kernel("one_per_shard", one_per_shard)
+    try:
+        rows = search_multi(
+            spark, [a, b], "hotalpha", k=10, mode="one_per_shard"
+        ).collect()
+    finally:
+        del operators.KERNEL_MODES["one_per_shard"]
+    # a holds the even doc ids and b the odd ones, so each fills one of
+    # its two shards: a's shard 0 and b's shard 1, offset past a's to 3
+    assert sorted(r.shard_id for r in rows) == [0, 3]
+    assert all(r.doc_id == 0 for r in rows)
+
+
+def test_keyword_only_indexes_score_like_oracle(
+    spark, tiny_transcripts, tmp_path_factory
+):
+    """Indexes whose analyzed text is empty everywhere have avgdl 0; the
+    combined stats apply the same avgdl == 0 -> 1.0 guard as the build
+    and the oracle, so keyword terms score like the union corpus."""
+    docs = with_doc_ids(
+        tiny_transcripts.where(F.col("turn_idx") < 4).withColumn(
+            "text", F.lit("")
+        ),
+        1,
+    )
+    dirs = []
+    for parity in (0, 1):
+        d = str(tmp_path_factory.mktemp(f"kwonly{parity}"))
+        build_index(
+            spark, docs.where(F.pmod(F.col("doc_id"), F.lit(2)) == parity),
+            d, num_shards=2, keyword_cols=("role",),
+        )
+        dirs.append(d)
+    got = search(spark, dirs, "role:user", k=10, score_dtype="float64").collect()
+    want = bm25_topk(
+        docs, "role:user", k=10, keyword_cols=("role",)
+    ).collect()
+    assert got and [r.doc_id for r in got] == [r.doc_id for r in want]
+    np.testing.assert_allclose(
+        [r.score for r in got], [r.score for r in want], rtol=1e-6
     )
 
 

@@ -181,6 +181,30 @@ def test_msm_synonym_plan_shape(spark, idx):
     assert post and all("positions" not in s for s in post), post
 
 
+def test_one_index_phase1_is_broadcast_join(spark, idx):
+    """One index keeps phase 1 inside the query plan (stats rows
+    broadcast-joined into the postings scan): a plain-OR search and
+    search_with_total read neither the driver-side df memo nor the shard
+    stats, the mirror of test_multi_index_stats_memoized."""
+    from katta_spark.query import IndexHandle, search_with_total
+
+    h = IndexHandle.open(spark, idx)
+
+    def _boom(*_a, **_k):
+        raise AssertionError("one-index search collected stats driver-side")
+
+    try:
+        h.df_of_terms = _boom
+        h.shards = _boom
+        hits = search(spark, h, "hotalpha w00011", k=10).collect()
+        tot = search_with_total(spark, h, "hotalpha w00011", k=10).collect()
+    finally:
+        # open() memoizes handles per (dir, mtime): drop the instance
+        # overrides so later tests sharing this dir see the real methods
+        del h.df_of_terms, h.shards
+    assert hits and [r.doc_id for r in tot] == [r.doc_id for r in hits]
+
+
 def test_dv_sorted_plan_shape(spark, tiny_transcripts, tmp_path_factory):
     """Docvalue fast path plan: the sidecar scan is predicate-pushed to
     the named sort column, and the display join broadcasts the merged
