@@ -2399,12 +2399,9 @@ def _resolve_syn_groups(
     spark: SparkSession,
     handles: "list[IndexHandle]",
     synonyms: "dict[str, list[str]] | None",
-    qweights: dict[str, float],
-    must: set[str],
-    must_not: set[str],
-    phrases: list,
+    c: "_Clauses",
 ) -> list[tuple[float, int, tuple[str, ...]]]:
-    """Validate a ``synonyms`` mapping against the parsed query and
+    """Validate a ``synonyms`` mapping against the parsed clauses and
     resolve each group to ``(weight, group_df, members)`` — the
     SynonymQuery construction step. members[0] is the query term itself
     (Lucene's SynonymQuery includes the original term); group_df = max
@@ -2414,8 +2411,9 @@ def _resolve_syn_groups(
     across them — the df of the merged index."""
     if not synonyms:
         return []
+    qweights, must, must_not = c.qweights, c.must, c.must_not
     syn_groups: list[tuple[float, int, tuple[str, ...]]] = []
-    phrase_toks = {t for toks, _ in phrases for t in toks}
+    phrase_toks = {t for toks, _ in c.phrases for t in toks}
     claimed: set[str] = set()
     for raw_key, raw_syns in sorted(synonyms.items()):
         ktoks = tokenize_str(raw_key)
@@ -2508,6 +2506,270 @@ def _corpus_stats(
     n_docs = float(sum(h.n_docs for h in handles))
     tot_dl = sum(h.total_dl(spark) for h in handles)
     return n_docs, (tot_dl / n_docs if n_docs else 0.0) or 1.0
+
+
+class _Clauses(NamedTuple):
+    """A query lowered once — the analog of Lucene's Query→Weight step
+    (SURVEY.md §2), shared by every entry point. ``tree`` is the
+    parse_tree_query tree of an AND/OR/NOT query (None otherwise);
+    ``rewrite`` is the folded query string while its wildcard/fuzzy/range
+    clauses still await dictionary expansion (None once expanded, or when
+    the query has none)."""
+
+    tree: "tuple | None"
+    qweights: dict[str, float]
+    must: set[str]
+    must_not: set[str]
+    phrases: list[tuple[list[str], int]]
+    syn_groups: list[tuple[float, int, tuple[str, ...]]]
+    min_should: int
+    rewrite: "str | None"
+
+    @property
+    def flat(self) -> bool:
+        """Plain OR of terms (boosts and keyword terms included): what the
+        counting and faceting kernels evaluate on their own."""
+        return (
+            self.tree is None
+            and self.rewrite is None
+            and not (self.must or self.must_not or self.phrases)
+            and self.min_should == 0
+        )
+
+    @property
+    def boolean(self) -> bool:
+        return (
+            bool(self.must or self.must_not or self.phrases)
+            or self.min_should > 0
+            or bool(self.syn_groups)
+        )
+
+    @property
+    def terms(self) -> list[str]:
+        """The fetch set: scoring terms ∪ excluded terms (the kernel needs
+        their postings for the exclusion mask) ∪ synonym-group members
+        (they blend into their group's pseudo-term)."""
+        return sorted(
+            set(self.qweights)
+            | self.must_not
+            | {m for _, _, members in self.syn_groups for m in members}
+        )
+
+
+def _parse_clauses(
+    handles: list[IndexHandle],
+    query: str,
+    mode: str = "or",
+    min_should_match: int = 0,
+    synonyms: "dict[str, list[str]] | None" = None,
+) -> _Clauses:
+    """The pure half of :func:`_lower_query`: fold, route, parse and refuse
+    the clause combinations that have no semantics — no Spark job. A
+    rewrite query comes back with its expansion pending (``rewrite``).
+    Keyword terms are those of any searched index's keyword fields."""
+    keyword_fields = tuple(
+        dict.fromkeys(f for h in handles for f in h.keyword_fields)
+    )
+    # Route on the UNQUOTED remainder: '~' inside '"a b"~3' is a phrase
+    # slop, not a fuzzy operator, and quoted spans must never reach the
+    # dictionary-expansion paths.
+    query = fold_spaced_fields(query)
+    if min_should_match < 0:
+        raise ValueError(
+            f"min_should_match must be >= 0, got {min_should_match}"
+        )
+    unquoted = _re_mod.sub(r'"[^"]*"(~\d+)?(\^\d+(?:\.\d+)?)?', " ", query)
+    has_phrase = unquoted != query
+    rewrite = (
+        "*" in unquoted
+        or "~" in unquoted
+        or "?" in unquoted
+        or bool(_RANGE_RE.search(unquoted))
+    )
+    is_tree = bool(_TREE_RE.search(unquoted))
+    if (min_should_match or synonyms) and (is_tree or rewrite):
+        raise ValueError(
+            "min_should_match/synonyms apply to analyzed term clauses "
+            "only — not to AND/OR/NOT grouping or wildcard/fuzzy/range "
+            "rewrites (Lucene's parser applies synonym graphs and "
+            "minimumNumberShouldMatch at the term-clause level too)"
+        )
+    if is_tree:
+        if has_phrase:
+            raise ValueError(
+                "phrases cannot be combined with AND/OR/NOT grouping"
+            )
+        if rewrite:
+            raise ValueError(
+                "wildcard/fuzzy/range clauses cannot be combined with "
+                "AND/OR/NOT grouping"
+            )
+        if mode != "or":
+            raise ValueError(
+                "AND/OR/NOT grouping defines its own clause semantics; "
+                f"mode={mode!r} is not combinable with it"
+            )
+        # qweights covers every leaf, negated ones included: the fetch set
+        tree, qweights = parse_tree_query(query, keyword_fields)
+        return _Clauses(tree, qweights, set(), set(), [], [], 0, None)
+    if rewrite:
+        if has_phrase:
+            raise ValueError(
+                "phrases cannot be combined with wildcard/fuzzy/range "
+                "clauses"
+            )
+        return _Clauses(None, {}, set(), set(), [], [], 0, query)
+    qweights, must, must_not, phrases = parse_bool_query(
+        query, keyword_fields
+    )
+    return _Clauses(
+        None, qweights, must, must_not, phrases, [], min_should_match, None
+    )
+
+
+def _lower_query(
+    spark: SparkSession,
+    handles: list[IndexHandle],
+    query: str,
+    mode: str = "or",
+    min_should_match: int = 0,
+    synonyms: "dict[str, list[str]] | None" = None,
+) -> _Clauses:
+    """Lower ``query`` once for every entry point: :func:`_parse_clauses`,
+    then the steps that read the indexes — rewrite expansion, the
+    positions check and synonym-group resolution."""
+    c = _parse_clauses(handles, query, mode, min_should_match, synonyms)
+    if c.rewrite is not None:
+        # Over several indexes the rewrites expand PER INDEX (Lucene
+        # rewrites against each shard's own dictionary), and a term
+        # expanded by several indexes scores ONCE at its clause boost —
+        # summing would double-weight shared terms.
+        qweights: dict[str, float] = {}
+        for h in handles:
+            for t, w in expand_ranges(spark, h, c.rewrite).items():
+                qweights[t] = max(qweights.get(t, 0.0), w)
+        c = c._replace(qweights=qweights, rewrite=None)
+    for h in handles if c.phrases else ():
+        if not h.positions:
+            raise ValueError(
+                f"phrase query against index {h.index_dir!r} built with "
+                "positions=False (omitted term positions) — rebuild with "
+                "positions=True to run phrase/slop queries"
+            )
+    c = c._replace(syn_groups=_resolve_syn_groups(spark, handles, synonyms, c))
+    if c.boolean and mode != "or":
+        raise ValueError(
+            "boolean operators (+/-/phrase/min_should_match/synonyms) "
+            f"define their own clause semantics; mode={mode!r} is not "
+            "combinable with them"
+        )
+    return c
+
+
+def _fetch_postings(
+    spark: SparkSession,
+    handles: list[IndexHandle],
+    terms: list[str],
+    cols: list[str],
+    shard_ids: list[int] | None = None,
+) -> tuple[DataFrame, float, float]:
+    """Phase 1 of a search: the postings rows of ``terms`` (columns
+    ``cols``) joined with each term's string and global df (``term``,
+    ``df_g``), plus (numDocs, avgdl) of the searched corpus. ``shard_ids``
+    (one index only) scores with the selected shards' own stats.
+
+    Term hashes are computed DRIVER-SIDE with the pure-Python xxHash64
+    (bit-identical to F.xxhash64, parity-tested) — zero Spark jobs. Small
+    term lists become a pushed In(th, …) scan predicate (row-group
+    skipping); LARGE lists (broad wildcard expansions) would bloat the
+    plan and degenerate the pushed predicate, so past _ISIN_MAX_TERMS the
+    term list travels as a broadcast-joined side table instead — the
+    postings are filtered by the (inner) broadcast stats join itself."""
+    hashes = sorted(term_hash(t) for t in terms)
+    use_isin = len(hashes) <= _ISIN_MAX_TERMS
+    q_pairs = [(term_hash(t), t) for t in terms]
+
+    def _stats_for_query(stats_df):
+        # the term guard drops any query term whose xxhash64 collides with
+        # a different indexed term
+        if use_isin:
+            return stats_df.where(
+                F.col("th").isin(hashes) & F.col("term").isin(terms)
+            )
+        q_df = _local_df(
+            spark, q_pairs, ["th", "term"], "th long, term string"
+        )
+        return stats_df.join(F.broadcast(q_df), ["th", "term"], "left_semi")
+
+    n_docs, avgdl = _corpus_stats(spark, handles)
+    index = handles[0]
+    if len(handles) > 1:
+        # Phase 1 across indexes sums per-handle df driver-side (memoized
+        # per handle — repeated queries over warm handles collect nothing)
+        # into a broadcast (th, term, df_g) table joined per row, as below.
+        df_tot: dict[str, int] = {}
+        for h in handles:
+            for t, d in h.df_of_terms(spark, terms).items():
+                if d:
+                    df_tot[t] = df_tot.get(t, 0) + d
+        postings = _union_shards(
+            handles,
+            lambda h: h.postings(spark)
+            .where(F.col("th").isin(hashes))
+            .select(*cols),
+        )
+        df_g = _local_df(
+            spark,
+            [(term_hash(t), t, d) for t, d in df_tot.items()],
+            ["th", "term", "df_g"],
+            "th long, term string, df_g long",
+        )
+        postings = postings.join(F.broadcast(df_g), "th")
+    elif shard_ids is None:
+        # Phase 1 (global df per term — Katta's getDocFrequencies,
+        # LuceneClient.java:264-286) is a broadcast join of the tiny stats
+        # rows into the postings scan — no driver round-trip between the
+        # phases; the kernel derives idf from the joined global df. The
+        # stats rows also carry the term STRING (postings store only th).
+        postings = index.postings(spark)
+        if use_isin:
+            # th is the pushed predicate (int64 min/max row-group skipping)
+            postings = postings.where(F.col("th").isin(hashes))
+        postings = postings.select(*cols)
+        stats_small = _stats_for_query(index.stats(spark)).select(
+            "th", "term", F.col("df").alias("df_g")
+        )
+        postings = postings.join(F.broadcast(stats_small), "th")
+    else:
+        # Shard-subset search scores with SUBSET-global stats, exactly like
+        # Katta's phase 1 over only the searched indices' shards
+        # (LuceneClient.java:264-286). df comes from the selected postings
+        # rows themselves; N/avgdl from the per-shard stats table.
+        srows = (
+            index.shards(spark).where(F.col("shard_id").isin(shard_ids)).collect()
+        )
+        n_docs = float(sum(r["n_docs"] for r in srows))
+        avgdl = (
+            float(sum(r["sum_dl"] for r in srows)) / n_docs if n_docs else 1.0
+        )
+        postings = index.postings(spark).where(F.col("shard_id").isin(shard_ids))
+        if use_isin:
+            postings = postings.where(F.col("th").isin(hashes))
+            postings = postings.select(*cols)
+        else:
+            th_df = _local_df(
+                spark, [(h,) for h in hashes], ["th"], "th long"
+            )
+            postings = postings.select(*cols).join(
+                F.broadcast(th_df), "th", "left_semi"
+            )
+        term_map = _stats_for_query(index.stats(spark)).select("th", "term")
+        # subset-global df joined per row (same shape as the global path)
+        df_sub = postings.groupBy("th").agg(F.sum("df").alias("df_g"))
+        postings = postings.join(F.broadcast(term_map), "th").join(
+            F.broadcast(df_sub), "th"
+        )
+    return postings, n_docs, avgdl
 
 
 def search(
@@ -2665,7 +2927,9 @@ def search(
                 "after must be (score, doc_id, shard_id) of the last hit"
             )
         prune = False
-    k_eff = k + offset
+    # at most every doc of the searched corpus can rank: a larger k would
+    # only size Spark's takeOrdered buffers (2·k slots per task)
+    k_eff = min(k + offset, sum(h.n_docs for h in handles))
     # tombstoned (deleted) docs are denied inside the kernels before any
     # cap — Lucene's liveDocs skip at collection time; df/N/avgdl stay
     # STALE until expunge, exactly like Lucene pre-merge
@@ -2674,233 +2938,53 @@ def search(
     empty_schema = f"doc_id long, shard_id int, score {sql_t}"
     if _with_total:
         empty_schema += ", shard_total long"
-    kw_fields = tuple(
-        dict.fromkeys(f for h in handles for f in h.keyword_fields)
-    )
-    must: set[str] = set()
-    must_not: set[str] = set()
-    phrases: list[tuple[list[str], int]] = []
-    # Route on the UNQUOTED remainder: '~' inside '"a b"~3' is a phrase
-    # slop, not a fuzzy operator, and quoted spans must never reach the
-    # dictionary-expansion paths.
-    query = fold_spaced_fields(query)
-    if min_should_match < 0:
-        raise ValueError(
-            f"min_should_match must be >= 0, got {min_should_match}"
-        )
-    unquoted = _re_mod.sub(r'"[^"]*"(~\d+)?(\^\d+(?:\.\d+)?)?', " ", query)
-    has_phrase = unquoted != query
-    rewrite = (
-        "*" in unquoted
-        or "~" in unquoted
-        or "?" in unquoted
-        or bool(_RANGE_RE.search(unquoted))
-    )
-    if (min_should_match or synonyms) and (
-        _TREE_RE.search(unquoted) or rewrite
-    ):
-        raise ValueError(
-            "min_should_match/synonyms apply to analyzed term clauses "
-            "only — not to AND/OR/NOT grouping or wildcard/fuzzy/range "
-            "rewrites (Lucene's parser applies synonym graphs and "
-            "minimumNumberShouldMatch at the term-clause level too)"
-        )
     if synonyms and shard_ids is not None:
         raise ValueError(
             "synonyms resolve the blended group df from GLOBAL stats; "
             "shard-subset search scores with subset stats — the two do "
             "not compose"
         )
-    tree = None
-    if _TREE_RE.search(unquoted):
-        if has_phrase:
-            raise ValueError(
-                "phrases cannot be combined with AND/OR/NOT grouping"
-            )
-        if rewrite:
-            raise ValueError(
-                "wildcard/fuzzy/range clauses cannot be combined with "
-                "AND/OR/NOT grouping"
-            )
-        if mode != "or":
-            raise ValueError(
-                "AND/OR/NOT grouping defines its own clause semantics; "
-                f"mode={mode!r} is not combinable with it"
-            )
-        tree, qweights = parse_tree_query(query, kw_fields)
-        _, must_not = tree_terms(tree)
-    elif rewrite:
-        if has_phrase:
-            raise ValueError(
-                "phrases cannot be combined with wildcard/fuzzy/range "
-                "clauses"
-            )
-        # a term expanded by several indexes' dictionaries scores ONCE at
-        # its clause boost (each shard scores its own rewrite in Katta —
-        # summing across indexes would double-weight shared terms)
-        qweights = {}
-        for h in handles:
-            for t, w in expand_ranges(spark, h, query).items():
-                qweights[t] = max(qweights.get(t, 0.0), w)
-    else:
-        qweights, must, must_not, phrases = parse_bool_query(
-            query, kw_fields
-        )
-    for h in handles if phrases else ():
-        if not h.positions:
-            raise ValueError(
-                f"phrase query against index {h.index_dir!r} built with "
-                "positions=False (omitted term positions) — rebuild with "
-                "positions=True to run phrase/slop queries"
-            )
-    syn_groups = _resolve_syn_groups(
-        spark, handles, synonyms, qweights, must, must_not, phrases
+    c = _lower_query(
+        spark, handles, query, mode, min_should_match, synonyms
     )
-    boolean = (
-        bool(must or must_not or phrases)
-        or min_should_match > 0
-        or bool(syn_groups)
-    )
-    if boolean and mode != "or":
-        raise ValueError(
-            "boolean operators (+/-/phrase/min_should_match/synonyms) "
-            f"define their own clause semantics; mode={mode!r} is not "
-            "combinable with them"
-        )
-    if not qweights or k <= 0:
+    if not c.qweights or k <= 0:
         if _dv_agg is not None:
             return _local_df(spark, [], None, _dv_agg[3])
         return _local_df(spark, [], None, empty_schema)
-
-    # fetch set = scoring terms ∪ excluded terms (the kernel needs the
-    # excluded terms' postings to build the per-shard exclusion mask)
-    # ∪ synonym-group members (they blend into their group's pseudo-term)
-    terms = sorted(
-        set(qweights)
-        | must_not
-        | {m for _, _, members in syn_groups for m in members}
-    )
-    # Term hashes computed DRIVER-SIDE with the pure-Python xxHash64
-    # (bit-identical to F.xxhash64, parity-tested) — zero Spark jobs.
-    hashes = sorted(term_hash(t) for t in terms)
-    # Small term lists become a pushed In(th, …) scan predicate (row-group
-    # skipping); LARGE lists (broad wildcard expansions) would bloat the
-    # plan and degenerate the pushed predicate, so past the threshold the
-    # term list travels as a broadcast-joined side table instead — the
-    # postings are filtered by the (inner) broadcast stats join itself.
-    use_isin = len(hashes) <= _ISIN_MAX_TERMS
-    q_pairs = [(term_hash(t), t) for t in terms]
-
-    def _stats_for_query(stats_df):
-        # the term guard drops any query term whose xxhash64 collides with
-        # a different indexed term
-        if use_isin:
-            return stats_df.where(
-                F.col("th").isin(hashes) & F.col("term").isin(terms)
-            )
-        q_df = _local_df(
-            spark, q_pairs, ["th", "term"], "th long, term string"
-        )
-        return stats_df.join(F.broadcast(q_df), ["th", "term"], "left_semi")
-
     # phrase queries additionally fetch the positions blobs; everything
     # else prunes them at the parquet scan (explicit column selection —
     # applyInPandas would otherwise drag every column through Arrow)
-    kcols = _KERNEL_COLS + (["positions"] if phrases else [])
-    n_docs, avgdl = _corpus_stats(spark, handles)
-    index = handles[0]
-    if len(handles) > 1:
-        # Phase 1 across indexes sums per-handle df driver-side (memoized
-        # per handle — repeated queries over warm handles collect nothing)
-        # into a broadcast (th, term, df_g) table joined per row, as below.
-        df_tot: dict[str, int] = {}
-        for h in handles:
-            for t, d in h.df_of_terms(spark, terms).items():
-                if d:
-                    df_tot[t] = df_tot.get(t, 0) + d
-        postings = _union_shards(
-            handles,
-            lambda h: h.postings(spark)
-            .where(F.col("th").isin(hashes))
-            .select(*kcols),
-        )
-        df_g = _local_df(
-            spark,
-            [(term_hash(t), t, d) for t, d in df_tot.items()],
-            ["th", "term", "df_g"],
-            "th long, term string, df_g long",
-        )
-        postings = postings.join(F.broadcast(df_g), "th")
-    elif shard_ids is None:
-        # Phase 1 (global df per term — Katta's getDocFrequencies,
-        # LuceneClient.java:264-286) is a broadcast join of the tiny stats
-        # rows into the postings scan — no driver round-trip between the
-        # phases; the kernel derives idf from the joined global df. The
-        # stats rows also carry the term STRING (postings store only th).
-        postings = index.postings(spark)
-        if use_isin:
-            # th is the pushed predicate (int64 min/max row-group skipping)
-            postings = postings.where(F.col("th").isin(hashes))
-        postings = postings.select(*kcols)
-        stats_small = _stats_for_query(index.stats(spark)).select(
-            "th", "term", F.col("df").alias("df_g")
-        )
-        postings = postings.join(F.broadcast(stats_small), "th")
-    else:
-        # Shard-subset search scores with SUBSET-global stats, exactly like
-        # Katta's phase 1 over only the searched indices' shards
-        # (LuceneClient.java:264-286). df comes from the selected postings
-        # rows themselves; N/avgdl from the per-shard stats table. The
-        # baked block maxima assume corpus stats, so block pruning is off.
+    kcols = _KERNEL_COLS + (["positions"] if c.phrases else [])
+    postings, n_docs, avgdl = _fetch_postings(
+        spark, handles, c.terms, kcols, shard_ids
+    )
+    if shard_ids is not None:
+        # the baked block maxima assume corpus stats
         prune = False
-        srows = (
-            index.shards(spark).where(F.col("shard_id").isin(shard_ids)).collect()
-        )
-        n_docs = float(sum(r["n_docs"] for r in srows))
-        avgdl = (
-            float(sum(r["sum_dl"] for r in srows)) / n_docs if n_docs else 1.0
-        )
-        postings = index.postings(spark).where(F.col("shard_id").isin(shard_ids))
-        if use_isin:
-            postings = postings.where(F.col("th").isin(hashes))
-            postings = postings.select(*kcols)
-        else:
-            th_df = _local_df(
-                spark, [(h,) for h in hashes], ["th"], "th long"
-            )
-            postings = postings.select(*kcols).join(
-                F.broadcast(th_df), "th", "left_semi"
-            )
-        term_map = _stats_for_query(index.stats(spark)).select("th", "term")
-        # subset-global df joined per row (same shape as the global path)
-        df_sub = postings.groupBy("th").agg(F.sum("df").alias("df_g"))
-        postings = postings.join(F.broadcast(term_map), "th").join(
-            F.broadcast(df_sub), "th"
-        )
 
-    if tree is not None:
+    if c.tree is not None:
         kernel = _make_tree_kernel(
-            tree, qweights, n_docs, avgdl, k_eff, score_dtype, _with_total,
+            c.tree, c.qweights, n_docs, avgdl, k_eff, score_dtype, _with_total,
             prune=prune, cursor=_cursor,
         )
-    elif boolean:
+    elif c.boolean:
         kernel = _make_score_kernel(
-            qweights, n_docs, avgdl, k_eff, False, score_dtype,
-            _with_total, frozenset(must), frozenset(must_not),
-            tuple(phrases), cursor=_cursor,
-            min_should=min_should_match, syn_groups=tuple(syn_groups),
+            c.qweights, n_docs, avgdl, k_eff, False, score_dtype,
+            _with_total, frozenset(c.must), frozenset(c.must_not),
+            tuple(c.phrases), cursor=_cursor,
+            min_should=c.min_should, syn_groups=tuple(c.syn_groups),
         )
     elif _cursor is not None:
         # cursor paging needs score-ranked kernels — built directly
         # (the registry's factory signature has no cursor slot)
         if mode == "or":
             kernel = _make_score_kernel(
-                qweights, n_docs, avgdl, k_eff, False, score_dtype,
+                c.qweights, n_docs, avgdl, k_eff, False, score_dtype,
                 _with_total, cursor=_cursor,
             )
         elif mode == "and":
             kernel = _make_and_kernel(
-                qweights, n_docs, avgdl, k_eff, score_dtype, _with_total,
+                c.qweights, n_docs, avgdl, k_eff, score_dtype, _with_total,
                 cursor=_cursor,
             )
         else:
@@ -2914,7 +2998,7 @@ def search(
                 f"unknown search mode {mode!r}; registered: {sorted(KERNEL_MODES)}"
             )
         kernel = KERNEL_MODES[mode](
-            qweights, n_docs, avgdl, k_eff, prune, score_dtype, _with_total
+            c.qweights, n_docs, avgdl, k_eff, prune, score_dtype, _with_total
         )
     out_schema = f"shard_id int, doc_id long, score {sql_t}"
     if _with_total:
@@ -3632,7 +3716,7 @@ def search_grouped(
 
 def search_batch(
     spark: SparkSession,
-    index: "IndexHandle | str",
+    index: "IndexHandle | str | list[IndexHandle | str]",
     queries: "list[str | dict]",
     k: int = 10,
     score_dtype: str = "float32",
@@ -3654,8 +3738,13 @@ def search_batch(
     Query surface: flat terms, ``+``/``-`` boolean clauses, phrases
     (in-index positional verify, like :func:`search`), AND/OR/NOT
     grouping, and the dictionary rewrites (wildcard/fuzzy/range — each
-    expanded once driver-side, then batched like flat terms). The same
-    clause-combination guards as search() apply per query.
+    expanded once driver-side, then batched like flat terms). Every query
+    is lowered by the same front end as :func:`search`, so the same
+    clause-combination guards apply per query.
+
+    ``index`` may be a LIST of indexes, searched as one corpus exactly as
+    :func:`search` does: rewrites expand per index, df and corpus stats
+    sum across the indexes, and result shard ids are offset per index.
 
     A batch entry may also be a dict ``{"q": <query string>,
     "min_should_match": m, "synonyms": {...}}`` carrying the per-query
@@ -3664,137 +3753,33 @@ def search_batch(
     and counts as one msm clause)."""
     from pyspark.sql import Window
 
-    if isinstance(index, str):
-        index = IndexHandle.open(spark, index)
-    index._record_query()
+    handles = _open_handles(spark, index)
+    for h in handles:
+        h._record_query()
     # tombstoned docs masked at decode time for every batched query
     # (liveDocs; see search())
-    deny = _deny_handle(spark, index)
+    deny = _deny_handle_multi(spark, handles)
     sql_t = "float" if score_dtype == "float32" else "double"
     out_schema = f"query_id int, shard_id int, doc_id long, score {sql_t}"
-    # Per-query plan: ("flat", qweights, must, must_not, phrases) |
-    # ("tree", tree). Routing mirrors search() exactly (same guards, same
-    # rewrite paths).
-    plans: list[tuple] = []
+    plans: list[_Clauses] = []
     for entry in queries:
         if isinstance(entry, dict):
             qstr = entry["q"]
             q_msm = int(entry.get("min_should_match", 0) or 0)
             q_syns = entry.get("synonyms") or None
-            if q_msm < 0:
-                raise ValueError(
-                    f"min_should_match must be >= 0, got {q_msm}"
-                )
         else:
             qstr, q_msm, q_syns = entry, 0, None
-        qstr = fold_spaced_fields(qstr)
-        unquoted = _re_mod.sub(r'"[^"]*"(~\d+)?(\^\d+(?:\.\d+)?)?', " ", qstr)
-        has_phrase = unquoted != qstr
-        if (q_msm or q_syns) and (
-            _TREE_RE.search(unquoted)
-            or _RANGE_RE.search(unquoted)
-            or "*" in unquoted
-            or "~" in unquoted
-            or "?" in unquoted
-        ):
-            raise ValueError(
-                "min_should_match/synonyms apply to analyzed term clauses "
-                "only — not to AND/OR/NOT grouping or wildcard/fuzzy/"
-                "range rewrites"
-            )
-        if (
-            "*" in unquoted
-            or "~" in unquoted
-            or "?" in unquoted
-            or _RANGE_RE.search(unquoted)
-        ):
-            if _TREE_RE.search(unquoted):
-                raise ValueError(
-                    "wildcard/fuzzy/range clauses cannot be combined with "
-                    "AND/OR/NOT grouping"
-                )
-            if has_phrase:
-                raise ValueError(
-                    "phrases cannot be combined with wildcard/fuzzy/range "
-                    "clauses"
-                )
-            plans.append(
-                ("flat", expand_ranges(spark, index, qstr), frozenset(),
-                 frozenset(), (), 0, ())
-            )
-        elif _TREE_RE.search(unquoted):
-            if has_phrase:
-                raise ValueError(
-                    "phrases cannot be combined with AND/OR/NOT grouping"
-                )
-            tree, _ = parse_tree_query(qstr, index.keyword_fields)
-            plans.append(("tree", tree))
-        else:
-            qw, must, must_not, ph = parse_bool_query(
-                qstr, index.keyword_fields
-            )
-            groups = _resolve_syn_groups(
-                spark, [index], q_syns, qw, must, must_not, ph
-            )
-            plans.append(
-                ("flat", qw, frozenset(must), frozenset(must_not),
-                 tuple(ph), q_msm, tuple(groups))
-            )
-
-    def _plan_terms(plan) -> set:
-        if plan[0] == "tree":
-            pos_s, neg_s = tree_terms(plan[1])
-            return pos_s | neg_s
-        return (
-            set(plan[1])
-            | set(plan[3])
-            | {m for _, _, members in plan[6] for m in members}
-        )
-
+        plans.append(_lower_query(spark, handles, qstr, "or", q_msm, q_syns))
     phrase_terms = {
-        t
-        for plan in plans
-        if plan[0] == "flat"
-        for toks, _ in plan[4]
-        for t in toks
+        t for plan in plans for toks, _ in plan.phrases for t in toks
     }
-
-    if phrase_terms and not index.positions:
-        raise ValueError(
-            f"phrase query in batch against index {index.index_dir!r} "
-            "built with positions=False (omitted term positions) — "
-            "rebuild with positions=True to run phrase/slop queries"
-        )
-    all_terms = sorted({t for plan in plans for t in _plan_terms(plan)})
+    all_terms = sorted({t for plan in plans for t in plan.terms})
     if not all_terms or k <= 0:
         return _local_df(spark, [], None, out_schema)
-    hashes = sorted(term_hash(t) for t in all_terms)
-    n_docs, avgdl = float(index.n_docs), index.avgdl
-
-    # NOTE: mirrors search()'s _stats_for_query fetch contract (pushed
-    # In(th) under the threshold, broadcast semi-join above it, th+term
-    # double predicate as the hash-collision guard) — keep the two in step.
     bcols = _KERNEL_COLS + (["positions"] if phrase_terms else [])
-    postings = index.postings(spark)
-    if len(hashes) <= _ISIN_MAX_TERMS:
-        postings = postings.where(F.col("th").isin(hashes)).select(*bcols)
-        stats_small = (
-            index.stats(spark)
-            .where(F.col("th").isin(hashes) & F.col("term").isin(all_terms))
-            .select("th", "term", F.col("df").alias("df_g"))
-        )
-    else:
-        q_df = _local_df(
-            spark, [(term_hash(t), t) for t in all_terms], ["th", "term"],
-            "th long, term string",
-        )
-        stats_small = (
-            index.stats(spark)
-            .join(F.broadcast(q_df), ["th", "term"], "left_semi")
-            .select("th", "term", F.col("df").alias("df_g"))
-        )
-        postings = postings.select(*bcols)
-    postings = postings.join(F.broadcast(stats_small), "th")
+    postings, n_docs, avgdl = _fetch_postings(
+        spark, handles, all_terms, bcols
+    )
 
     def _empty_batch() -> pd.DataFrame:
         return pd.DataFrame(
@@ -3807,11 +3792,7 @@ def search_batch(
         )
 
     syn_member_terms = {
-        m
-        for plan in plans
-        if plan[0] == "flat"
-        for _, _, members in plan[6]
-        for m in members
+        m for plan in plans for _, _, members in plan.syn_groups for m in members
     }
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -3842,13 +3823,16 @@ def search_batch(
             )
         out_q, out_d, out_s = [], [], []
         for qi, plan in enumerate(plans):
-            if plan[0] == "tree":
-                docs_u, s64, _ = _eval_tree_scores(plan[1], decoded)
+            if plan.tree is not None:
+                docs_u, s64, _ = _eval_tree_scores(plan.tree, decoded)
                 if docs_u is None or docs_u.size == 0:
                     continue
                 sc = s64.astype(score_dtype)
             else:
-                _, qw, must, must_not, phrases, q_msm, groups = plan
+                qw, must, must_not, phrases, q_msm, groups = (
+                    plan.qweights, plan.must, plan.must_not, plan.phrases,
+                    plan.min_should, plan.syn_groups,
+                )
                 members_here = {
                     m for _, _, mem in groups for m in mem
                 }
@@ -4036,18 +4020,14 @@ def count_matches(
     count() likewise counts the PARSED query's matches, not term-OR
     matches (phrases verify in-index against the positional postings)."""
     handles = _open_handles(spark, index)
-    all_kw = tuple({f for h in handles for f in h.keyword_fields})
-    query = fold_spaced_fields(query)
+    c = _parse_clauses(
+        handles, query, min_should_match=min_should_match, synonyms=synonyms
+    )
     if query.strip() == "*:*":
         # MatchAllDocsQuery — Lucene QueryParser's *:* production; the
         # classic "how many docs are deployed" probe
         # (client.count(new MatchAllDocsQuery())). min_should_match /
-        # synonyms refuse exactly like search() does for any '*' query.
-        if min_should_match or synonyms:
-            raise ValueError(
-                "min_should_match/synonyms apply to analyzed term clauses "
-                "only — not to MatchAllDocsQuery (*:*)"
-            )
+        # synonyms were refused above, like for any '*' query.
         # Counted from the corpus scalars minus the tombstones that
         # reference REAL docs: delete_docs accepts ids absent from the
         # index ("ignored at query time", delete.py) — Lucene's
@@ -4060,14 +4040,7 @@ def count_matches(
             for h in handles
         )
     if (
-        '"' in query
-        or _TREE_RE.search(query)
-        or "*" in query
-        or "~" in query
-        or "?" in query
-        or _RANGE_RE.search(query)
-        or any(tok[0] in "+-" and len(tok) > 1 for tok in query.split())
-        or min_should_match > 0
+        not c.flat
         or bool(synonyms)
         # tombstones: the search kernels' totals already skip deleted
         # docs (liveDocs), so a tombstoned index counts through them too
@@ -4081,7 +4054,7 @@ def count_matches(
             min_should_match=min_should_match, synonyms=synonyms,
         ).collect()
         return int(rows[0]["total_hits"]) if rows else 0
-    terms = sorted(parse_query(query, all_kw))
+    terms = sorted(c.qweights)
     if not terms:
         return 0
     hashes = [term_hash(t) for t in terms]
@@ -4133,30 +4106,28 @@ def facet_counts(
     sorted arrays), emitting one (value, n) row per value per shard —
     output is |values| x shards rows, never per-doc. Per-shard counts sum
     (a doc lives in exactly one shard) and TakeOrderedAndProject merges
-    the top-k. Flat term queries only — rewrites/phrases/trees are
-    refused (their match sets live in the scoring kernels; compose via
-    search + get_details groupBy for those).
+    the top-k. Flat term queries only (a quoted keyword value
+    ``field:"v"`` is one term) — rewrites/phrases/+/-/trees are refused
+    (their match sets live in the scoring kernels; compose via search +
+    get_details groupBy for those).
     """
-    if isinstance(index, (list, tuple)):
-        if len(index) == 0:
-            raise ValueError("facet_counts needs at least one index")
-        if len(index) > 1:
-            parts = [
-                facet_counts(spark, ix, query, field, k=2**31 - 1,
-                             mode=mode, shard_ids=shard_ids)
-                for ix in index
-            ]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return (
-                out.groupBy("value")
-                .agg(F.sum("count").alias("count"))
-                .orderBy(F.desc("count"), F.asc("value"))
-                .limit(k)
-            )
-        index = index[0]
-    h = IndexHandle.open(spark, index) if isinstance(index, str) else index
+    handles = _open_handles(spark, index)
+    if len(handles) > 1:
+        parts = [
+            facet_counts(spark, h, query, field, k=2**31 - 1,
+                         mode=mode, shard_ids=shard_ids)
+            for h in handles
+        ]
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return (
+            out.groupBy("value")
+            .agg(F.sum("count").alias("count"))
+            .orderBy(F.desc("count"), F.asc("value"))
+            .limit(k)
+        )
+    h = handles[0]
     # tombstoned docs never count toward a facet value (Lucene facets
     # consult liveDocs); counts use the live match set
     deny = _deny_handle(spark, h)
@@ -4167,22 +4138,14 @@ def facet_counts(
         )
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    query = fold_spaced_fields(query)
-    if (
-        '"' in query
-        or _TREE_RE.search(query)
-        or "*" in query
-        or "~" in query
-        or "?" in query
-        or _RANGE_RE.search(query)
-        or any(tok[0] in "+-" and len(tok) > 1 for tok in query.split())
-    ):
+    c = _parse_clauses([h], query, mode)
+    if not c.flat:
         raise ValueError(
             "facet_counts supports flat term queries; for boolean/"
             "phrase/rewrite queries compose search() + get_details() and "
             "group client-side"
         )
-    terms = sorted(set(parse_query(query, h.keyword_fields)))
+    terms = sorted(c.qweights)
     out_schema = "value string, count long"
     if not terms:
         return spark.createDataFrame([], out_schema)
@@ -4859,76 +4822,33 @@ def explain_score(
     arithmetic over that bounded clause list runs driver-side, the same
     bounded-metadata budget as the k.shards client merge.
     """
-    if isinstance(index, str):
-        index = IndexHandle.open(spark, index)
+    handles = _open_handles(spark, index)
+    if len(handles) > 1:
+        raise ValueError(
+            "explain_score explains one index — pass the index that holds "
+            "the doc"
+        )
+    index = handles[0]
     index._record_query()
     target = int(doc_id)
-    query = fold_spaced_fields(query)
-    if min_should_match < 0:
-        raise ValueError(
-            f"min_should_match must be >= 0, got {min_should_match}"
-        )
-    unquoted = _re_mod.sub(r'"[^"]*"(~\d+)?(\^\d+(?:\.\d+)?)?', " ", query)
-    has_phrase = unquoted != query
-    if _TREE_RE.search(unquoted):
+    c = _lower_query(
+        spark, handles, query, mode, min_should_match, synonyms
+    )
+    if c.tree is not None:
         raise ValueError(
             "explain_score does not support AND/OR/NOT tree grouping — "
             "a tree's match condition is not a flat clause list; run "
             "search() for tree queries"
-        )
-    if (min_should_match or synonyms) and (
-        _RANGE_RE.search(unquoted)
-        or "*" in unquoted
-        or "~" in unquoted
-        or "?" in unquoted
-    ):
-        raise ValueError(
-            "min_should_match/synonyms apply to analyzed term clauses "
-            "only — not to wildcard/fuzzy/range rewrites"
-        )
-    must: set[str] = set()
-    must_not: set[str] = set()
-    phrases: list[tuple[list[str], int]] = []
-    if _RANGE_RE.search(unquoted):
-        if has_phrase:
-            raise ValueError("phrases cannot be combined with range clauses")
-        qweights = expand_ranges(spark, index, query)
-    elif "*" in unquoted or "~" in unquoted or "?" in unquoted:
-        if has_phrase:
-            raise ValueError(
-                "phrases cannot be combined with wildcard/fuzzy clauses"
-            )
-        qweights = expand_wildcards(spark, index, query)
-    else:
-        qweights, must, must_not, phrases = parse_bool_query(
-            query, index.keyword_fields
-        )
-    if phrases and not index.positions:
-        raise ValueError(
-            f"phrase query against index {index.index_dir!r} built with "
-            "positions=False (omitted term positions) — rebuild with "
-            "positions=True to run phrase/slop queries"
-        )
-    syn_groups = _resolve_syn_groups(
-        spark, [index], synonyms, qweights, must, must_not, phrases
-    )
-    syn_members = {m for _, _, members in syn_groups for m in members}
-    boolean = (
-        bool(must or must_not or phrases)
-        or min_should_match > 0
-        or bool(syn_groups)
-    )
-    if boolean and mode != "or":
-        raise ValueError(
-            "boolean operators (+/-/phrase/min_should_match/synonyms) "
-            f"define their own clause semantics; mode={mode!r} is not "
-            "combinable with them"
         )
     if mode not in ("or", "and"):
         raise ValueError(
             f"explain_score explains scoring searches; mode={mode!r} "
             "has no score to explain"
         )
+    qweights, must, must_not, phrases, syn_groups = (
+        c.qweights, c.must, c.must_not, c.phrases, c.syn_groups
+    )
+    syn_members = {m for _, _, members in syn_groups for m in members}
     out_schema = (
         "term string, clause string, qweight double, tf long, dl long, "
         "df long, idf double, tf_norm double, contribution double, "
@@ -4937,29 +4857,18 @@ def explain_score(
     if not qweights and not must_not:
         return _local_df(spark, [], None, out_schema)
 
-    terms = sorted(set(qweights) | must_not | syn_members)
-    hashes = sorted(term_hash(t) for t in terms)
     phrase_tokens = {t for toks, _ in phrases for t in toks}
-    kcols = _KERNEL_COLS[:6] + (["positions"] if phrases else [])
     # (skips/block maxima are pruning state — a single-doc probe never
     # needs them)
-    kcols = [
-        c for c in kcols
-        if c in ("shard_id", "th", "doc_ids", "tfs", "doclens", "positions")
-    ]
-    posts = index.postings(spark).where(F.col("th").isin(hashes))
+    kcols = ["shard_id", "th", "doc_ids", "tfs", "doclens"] + (
+        ["positions"] if phrases else []
+    )
+    posts, n_docs, avgdl = _fetch_postings(spark, handles, c.terms, kcols)
     if index.sharding == "pmod_doc_id":
+        # only the ONE shard that can hold the doc is scanned
         posts = posts.where(
             F.col("shard_id") == int(target % index.num_shards)
         )
-    posts = posts.select(*kcols)
-    q_pairs = [(term_hash(t), t) for t in terms]
-    stats_small = (
-        index.stats(spark)
-        .where(F.col("th").isin(hashes) & F.col("term").isin(terms))
-        .select("th", "term", F.col("df").alias("df_g"))
-    )
-    posts = posts.join(F.broadcast(stats_small), "th")
     phrase_specs = [(tuple(toks), int(slop)) for toks, slop in phrases]
     want_pos = bool(phrase_specs)
 
@@ -5022,20 +4931,29 @@ def explain_score(
             tf_of[r.term] = int(r.tf)
             dl_of[r.term] = int(r.dl)
     dfm = index.df_of_terms(spark, sorted(set(qweights)))
-    n_docs, avgdl = float(index.n_docs), float(index.avgdl)
     deleted = index.deleted_array(spark)
     is_deleted = deleted is not None and bool(
         np.any(deleted == np.int64(target))
     )
+
+    def _factors(df: int, tf: int, dl: int) -> tuple[float, float]:
+        """(idf, tf_norm) of one clause for this doc, scoring.py formulas;
+        tf_norm is 0 when the doc lacks the clause."""
+        idf = float(scoring.idf_np(np.array([df], np.float64), n_docs)[0])
+        if tf <= 0:
+            return idf, 0.0
+        tfn = scoring.tf_norm_np(
+            np.array([tf], np.float64), np.array([dl], np.float64), avgdl
+        )
+        return idf, float(tfn[0])
 
     out_rows: list[tuple] = []
     contributions: list[float] = []
     any_should = False
     should_sat = 0  # satisfied optional clauses (a group counts as one)
     must_ok, not_ok = True, True
-    phrase_token_set = {t for toks, _ in phrase_specs for t in toks}
     n_optional = (
-        len(set(qweights) - must - phrase_token_set - syn_members)
+        len(set(qweights) - must - phrase_tokens - syn_members)
         + len(syn_groups)
     )
     for t in sorted(qweights):
@@ -5046,17 +4964,7 @@ def explain_score(
         tf = tf_of.get(t, 0)
         dl = dl_of.get(t, 0)
         dfv = int(dfm.get(t, 0))
-        idf = float(scoring.idf_np(np.array([dfv], np.float64), n_docs)[0])
-        if tf > 0:
-            tfn = float(
-                scoring.tf_norm_np(
-                    np.array([tf], np.float64),
-                    np.array([dl], np.float64),
-                    avgdl,
-                )[0]
-            )
-        else:
-            tfn = 0.0
+        idf, tfn = _factors(dfv, tf, dl)
         contrib = qw * idf * tfn if tf > 0 else 0.0
         clause = "must" if t in must else "should"
         sat = tf > 0
@@ -5076,19 +4984,7 @@ def explain_score(
         dl = next(
             (dl_of[m] for m in members if tf_of.get(m, 0) > 0), 0
         )
-        gidf = float(
-            scoring.idf_np(np.array([gdf], np.float64), n_docs)[0]
-        )
-        if tf_sum > 0:
-            gtfn = float(
-                scoring.tf_norm_np(
-                    np.array([tf_sum], np.float64),
-                    np.array([dl], np.float64),
-                    avgdl,
-                )[0]
-            )
-        else:
-            gtfn = 0.0
+        gidf, gtfn = _factors(gdf, tf_sum, dl)
         contrib = float(weight) * gidf * gtfn if tf_sum > 0 else 0.0
         sat = tf_sum > 0
         if sat:
@@ -5118,7 +5014,7 @@ def explain_score(
         )
     if mode == "and":
         matches = all(tf_of.get(t, 0) > 0 for t in qweights)
-    elif boolean:
+    elif c.boolean:
         matches = (
             must_ok
             and not_ok

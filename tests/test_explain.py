@@ -158,6 +158,18 @@ def test_explain_refuses_trees(spark, eidx):
         explain_score(spark, eidx, "(a AND b) OR c", 1)
 
 
+def test_explain_refuses_index_lists(spark, eidx):
+    """A doc lives in one index: a list of several is refused by name,
+    a one-element list is the bare index."""
+    with pytest.raises(ValueError, match="explains one index"):
+        explain_score(spark, [eidx, eidx], "hotalpha", 1)
+    hit = search(spark, eidx, "hotalpha", k=1).collect()[0]
+    exp = explain_score(spark, [eidx], "hotalpha", hit["doc_id"]).toPandas()
+    assert float(exp["total_score"].iloc[0]) == pytest.approx(
+        float(hit["score"]), rel=1e-6
+    )
+
+
 def test_explain_empty_query(spark, eidx):
     out = explain_score(spark, eidx, "", 1)
     assert out.count() == 0

@@ -20,6 +20,7 @@ from katta_spark.query import (
     IndexHandle,
     count_matches,
     search,
+    search_batch,
     search_multi,
     search_sorted,
 )
@@ -103,6 +104,15 @@ def test_split_equals_whole(spark, split_indexes, query, k, mode, opts):
         want_n = want_t[0].total_hits if want_t else 0
         assert count_matches(spark, [a, b], query, **opts) == want_n
         assert count_matches(spark, whole, query, **opts) == want_n
+        # search_batch lowers each entry like search() and takes a list
+        entry = {"q": query, **opts} if opts else query
+        got_b = search_batch(spark, [a, b], [entry], k=k).collect()
+        assert [r.doc_id for r in got_b] == [r.doc_id for r in want]
+        np.testing.assert_allclose(
+            np.array([r.score for r in got_b], dtype=np.float32),
+            np.array([r.score for r in want], dtype=np.float32),
+            rtol=2e-6,
+        )
 
 
 def test_multi_index_modes(spark, split_indexes):

@@ -228,3 +228,23 @@ def test_dv_sorted_plan_shape(spark, tiny_transcripts, tmp_path_factory):
         s for s in scan_read_schemas(out) if "vals" in s and "bucket" in s
     ]
     assert dv_scans and all("positions" not in s for s in dv_scans)
+
+
+def test_huge_k_is_clamped_to_corpus_size(spark, idx):
+    """No more than the corpus's n_docs docs can rank, so search plans
+    its global merge with k + offset clamped to n_docs: a huge k never
+    sizes Spark's takeOrdered buffers (2·k slots per task). Checked on
+    the plan without running the query; the hits equal k = n_docs."""
+    import re
+
+    from katta_spark.plans import physical_plan
+    from katta_spark.query import IndexHandle
+
+    h = IndexHandle.open(spark, idx)
+    huge = search(spark, h, "hotalpha", k=10**9)
+    plan = physical_plan(huge, mode="simple")
+    limits = [
+        int(n) for n in re.findall(r"TakeOrderedAndProject\(limit=(\d+)", plan)
+    ]
+    assert limits and max(limits) <= h.n_docs, plan[:2000]
+    assert huge.collect() == search(spark, h, "hotalpha", k=h.n_docs).collect()
