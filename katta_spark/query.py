@@ -278,7 +278,13 @@ class IndexHandle:
         takes a fresh frame."""
         cache = self.__dict__.setdefault("_rel_cache", {})
         key = (path, spark)
-        mt = os.stat(path).st_mtime_ns
+        try:
+            mt = os.stat(path).st_mtime_ns
+        except FileNotFoundError as e:
+            raise FileNotFoundError(
+                f"index at {self.index_dir!r} is missing its "
+                f"{os.path.basename(path)} sidecar ({path})"
+            ) from e
         if not fresh:
             hit = cache.get(key)
             if hit is not None and hit[0] == mt:

@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "katta_spark",
@@ -23,6 +25,11 @@ def get_spark(
     master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     shuffle_partitions defaults to the core count locally; on a real
     cluster you would size it to ~2-3x total cores and let AQE coalesce.
+
+    Python workers start through ``katta_spark.daemon`` (a zip importer
+    that re-reads an archive only when it changed, see that module), and
+    the engine's root is appended to ``spark.executorEnv.PYTHONPATH`` so
+    the workers can import it from any working directory.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -59,7 +66,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = {"spark.python.daemon.module": "katta_spark.daemon", **(extra_conf or {})}
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (conf.get("spark.executorEnv.PYTHONPATH"), _ROOT) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

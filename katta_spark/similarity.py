@@ -37,7 +37,13 @@ _REL_CACHE: dict = {}
 
 def _ann_rel(spark: SparkSession, path: str) -> DataFrame:
     key = (path, spark)
-    mt = os.stat(path).st_mtime_ns
+    try:
+        mt = os.stat(path).st_mtime_ns
+    except FileNotFoundError as e:
+        raise FileNotFoundError(
+            f"index at {os.path.dirname(path)!r} is missing its "
+            f"{os.path.basename(path)} sidecar ({path})"
+        ) from e
     hit = _REL_CACHE.get(key)
     if hit is not None and hit[0] == mt:
         return hit[1]

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 import pytest
@@ -66,3 +67,11 @@ def test_corruption_detected_and_refusals(small_index, tmp_path):
         copy_index(str(tmp_path), str(tmp_path / "y"))
     with pytest.raises(ValueError, match="not empty"):
         copy_index(small_index, dst)
+
+
+def test_missing_sidecar_names_index_and_sidecar(spark, small_index, tmp_path):
+    dst = str(tmp_path / "no_stats")
+    copy_index(small_index, dst)
+    shutil.rmtree(os.path.join(dst, "stats.parquet"))
+    with pytest.raises(FileNotFoundError, match=r"no_stats'.*stats\.parquet sidecar"):
+        search(spark, dst, "hotalpha", k=3)

@@ -190,6 +190,18 @@ def test_ann_query_prunes_bucket_partitions(emb, tmp_path):
     assert m and "bucket" in m.group(1), plan[:2000]
 
 
+def test_ann_query_names_a_missing_sidecar(emb, tmp_path):
+    import os
+    import shutil
+
+    d = str(tmp_path / "ann_gone")
+    sim.build_ann_index(emb, d, dim=64, planes=6, seed=7)
+    shutil.rmtree(os.path.join(d, "vectors.parquet"))
+    qvec = list(emb.where(emb.vec_id == 0).collect()[0]["embedding"])
+    with pytest.raises(FileNotFoundError, match=r"ann_gone'.*vectors\.parquet sidecar"):
+        sim.ann_topk(emb.sparkSession, d, qvec, k=5, probe_radius=1)
+
+
 def test_embedding_near_dup_pairs_subset_of_exact(emb):
     """Every reported pair is genuinely >= threshold; candidates restricted
     to shared buckets (a ⊂ of the exact all-pairs result)."""
