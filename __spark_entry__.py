@@ -562,9 +562,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def bm25_batch(spark, sf):
         """Batch query execution: MANY queries in ONE Spark job (the
-        LuceneSearchPerformanceTest throughput shape) — one postings scan
-        pruned to the union of terms, per-shard kernel scores every query,
-        one tiny per-query window merge. The batch mixes flat, boolean
+        LuceneSearchPerformanceTest throughput shape) — one shard-local
+        stage reads the union of terms, per-shard kernel scores every
+        query, a driver-side per-query merge. The batch mixes flat, boolean
         (+MUST/-MUST_NOT), grouped AND/OR/NOT, and PHRASE queries —
         operators amortize too (r3 was flat-only)."""
         out = ksq.search_batch(

@@ -2,12 +2,15 @@
 
 The engine adds no custom Catalyst rules (SURVEY.md §4: everything novel
 lives in kernels and orchestration) — this package asserts that the plans
-Catalyst DOES produce have the shapes we designed for: pushed predicates on
-the postings scan, TakeOrderedAndProject for the global top-k merge, no
+Catalyst DOES produce have the shapes we designed for: one shard-local
+stage per search, TakeOrderedAndProject for the global top-k merge, no
 corpus-sized shuffles on the query path.
 """
 
 from __future__ import annotations
+
+import contextlib
+import itertools
 
 from pyspark.sql import DataFrame
 
@@ -25,22 +28,19 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
 def audit_search_plan(hits: DataFrame) -> dict:
     """Inspect a search() result plan for the designed physical shape:
 
-    - the term predicate reaches the parquet scan (int64 th pushdown:
-      ``In(th, ...)`` for multi-term or ``EqualTo(th, ...)``/``IsNotNull``
-      plus equality for single-term);
-    - the global top-k merge is TakeOrderedAndProject (no full sort);
-    - at most 2 exchanges (one groups postings by shard; AQE may add a
-      coalesce wrapper).
+    - phase 2 is one shard-local stage: ``MapInPandas`` over a ``Range``
+      of shard ids, whose tasks read their shard's postings themselves
+      (no postings file scan in the plan);
+    - no exchange of any kind — neither a shard shuffle nor a
+      broadcast of the stats;
+    - the global top-k merge is TakeOrderedAndProject (no full sort).
     """
-    plan = physical_plan(hits)
-    pushed = False
-    for line in plan.splitlines():
-        if "PushedFilters" in line and "th" in line and "[]" not in line:
-            pushed = True
+    plan = physical_plan(hits, mode="simple")
     return {
-        "pushed_term_filter": pushed,
+        "single_stage": "MapInPandas" in plan and "Range (" in plan,
+        "postings_scan": "postings.parquet" in plan,
         "take_ordered": "TakeOrderedAndProject" in plan,
-        "n_exchanges": plan.count("(Exchange") + plan.count("+- Exchange"),
+        "n_exchanges": plan.count("Exchange"),
         "plan": plan,
     }
 
@@ -67,13 +67,15 @@ def _subtree_lines(plan: str, anchor: str) -> list[str]:
 def audit_details_plan(details) -> dict:
     """get_details must broadcast the TOP-K, not the corpus: the plan is a
     BroadcastHashJoin whose BroadcastExchange subtree contains the search
-    kernel (FlatMapGroupsInPandas), and no sort-merge join of the corpus."""
+    kernel (the shard-local MapInPandas stage, or FlatMapGroupsInPandas
+    for a cogrouped search), and no sort-merge join of the corpus."""
     plan = physical_plan(details, mode="simple")
     bcast_sub = "\n".join(_subtree_lines(plan, "BroadcastExchange"))
     return {
         "broadcast_join": "BroadcastHashJoin" in plan,
         "no_smj": "SortMergeJoin" not in plan,
-        "topk_is_build_side": "FlatMapGroupsInPandas" in bcast_sub,
+        "topk_is_build_side": "MapInPandas" in bcast_sub
+        or "FlatMapGroupsInPandas" in bcast_sub,
         "plan": plan,
     }
 
@@ -101,3 +103,22 @@ def audit_sorted_search_plan(out) -> dict:
         "no_global_limit": "GlobalLimit 2147483647" not in plan,
         "plan": plan,
     }
+
+
+_JOB_GROUP_SEQ = itertools.count()
+
+
+@contextlib.contextmanager
+def jobs_started(spark):
+    """Count the Spark jobs the body starts: runs it under a fresh job
+    group and yields a one-element list that holds the count on exit."""
+    sc = spark.sparkContext
+    gid = f"katta-jobs-{next(_JOB_GROUP_SEQ)}"
+    sc.setJobGroup(gid, "jobs_started")
+    out = [0]
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        out[0] = len(sc.statusTracker().getJobIdsForGroup(gid))

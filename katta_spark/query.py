@@ -2,11 +2,11 @@
 Spark job over the pre-partitioned postings table.
 
 Reference lifecycle (SURVEY.md §3.1, LuceneClient.java:149-203):
-  phase 1: gather global df per term  → we PRECOMPUTED it at build time
-           (immutable index ⇒ stats are a broadcast side table, exactly the
-           invariant Katta exploits via CachedDfSource, LuceneServer.java:441)
-  phase 2: scatter per-shard top-k    → one mapInPandas/applyInPandas kernel
-           per shard partition (partition-pruned, predicate-pushed scan)
+  phase 1: gather global df per term  → PRECOMPUTED at build time and read
+           from the driver-resident term dictionary (termdict.py) — the
+           invariant Katta exploits via CachedDfSource, LuceneServer.java:441
+  phase 2: scatter per-shard top-k    → one mapInPandas task per shard that
+           reads its own postings (a cogroup when a user frame joins in)
   merge  : node + client k-way merges → TakeOrderedAndProject (orderBy+limit)
 
 Tie-break replicated exactly from Hit.java:150-162: score DESC, doc_id ASC,
@@ -45,6 +45,7 @@ from katta_spark.codec import (
     u64_to_i64_order,
     vb_decode,
 )
+from katta_spark.termdict import QueryTerms, TermDict, parquet_files
 from katta_spark.tokenizer import tokenize_str
 from katta_spark.xxhash import term_hash
 
@@ -276,8 +277,15 @@ class IndexHandle:
         ids on the two sides (Spark's ambiguous-self-join check rejects
         one Dataset on both sides of a cogroup), so the second side
         takes a fresh frame."""
-        cache = self.__dict__.setdefault("_rel_cache", {})
-        key = (path, spark)
+        return self._memo(
+            path, None if fresh else (path, spark),
+            lambda: spark.read.parquet(path),
+        )
+
+    def _memo(self, path: str, key, build):
+        """``build()`` memoized per (``key``, directory mtime_ns of
+        ``path``), or built afresh for key None; a missing ``path`` raises
+        naming the index and the sidecar."""
         try:
             mt = os.stat(path).st_mtime_ns
         except FileNotFoundError as e:
@@ -285,14 +293,20 @@ class IndexHandle:
                 f"index at {self.index_dir!r} is missing its "
                 f"{os.path.basename(path)} sidecar ({path})"
             ) from e
-        if not fresh:
-            hit = cache.get(key)
-            if hit is not None and hit[0] == mt:
-                return hit[1]
-        df = spark.read.parquet(path)
-        if not fresh:
-            cache[key] = (mt, df)
-        return df
+        if key is None:
+            return build()
+        cache = self.__dict__.setdefault("_rel_cache", {})
+        hit = cache.get(key)
+        if hit is None or hit[0] != mt:
+            hit = cache[key] = (mt, build())
+        return hit[1]
+
+    def term_dict(self) -> TermDict:
+        """The index's term dictionary (katta_spark.termdict), read with
+        pyarrow once per stats.parquet directory mtime, so warm df lookups
+        and rewrites run no Spark job and an in-place rewrite reloads it."""
+        path = os.path.join(self.index_dir, "stats.parquet")
+        return self._memo(path, "term_dict", lambda: TermDict(path))
 
     def postings(
         self, spark: SparkSession, fresh: bool = False
@@ -328,25 +342,12 @@ class IndexHandle:
         return self._dv_kinds
 
     def df_of_terms(self, spark: SparkSession, terms: list[str]) -> dict[str, int]:
-        """Per-term global df, memoized per handle (df=0 for unindexed
-        terms is cached too) — Katta's CachedDfSource invariant
-        (LuceneServer.java:441: an immutable deployed index never re-serves
-        the same df question twice). Repeated queries over warm handles
-        trigger ZERO stats jobs."""
-        cache: dict[str, int] = self.__dict__.setdefault("_df_cache", {})
-        missing = [t for t in terms if t not in cache]
-        if missing:
-            mhashes = [term_hash(t) for t in missing]
-            rows = (
-                self.stats(spark)
-                .where(F.col("th").isin(mhashes) & F.col("term").isin(missing))
-                .select("term", "df")
-                .collect()
-            )
-            found = {r["term"]: int(r["df"]) for r in rows}
-            for t in missing:
-                cache[t] = found.get(t, 0)
-        return {t: cache[t] for t in terms}
+        """Per-term global df (0 for unindexed terms) from the term
+        dictionary — Katta's CachedDfSource invariant (LuceneServer.java:441:
+        an immutable deployed index never re-serves a df question through
+        a job). ``spark`` is unused: the lookup runs no Spark job."""
+        found = self.term_dict().lookup(terms)
+        return {t: found.get(t, 0) for t in terms}
 
     # ---- tombstones (document deletion; katta_spark.delete) ----------
     #
@@ -764,9 +765,20 @@ def tree_terms(tree: tuple, positive: bool = True) -> tuple[set, set]:
 # million-clause query. Same analog here.
 MAX_WILDCARD_EXPANSIONS = 1024
 
-# Past this many query terms, the scan filter switches from a pushed
-# In(th, …) predicate to a broadcast-joined term table (see search()).
+# Past this many query terms, a postings scan filters by a broadcast
+# semi-join instead of a pushed In(th, …) predicate (see _Fetch.scan).
 _ISIN_MAX_TERMS = 64
+
+
+def _capped_terms(terms: list[str], cap: int, clause: str, hint: str) -> list[str]:
+    """One rewrite clause's expansion, refusing more than ``cap`` terms
+    (Lucene's maxClauseCount analog)."""
+    if len(terms) > cap:
+        raise ValueError(
+            f"{clause} expands to more than {cap} terms (Lucene "
+            f"maxClauseCount analog) — {hint} max_expansions"
+        )
+    return terms
 
 
 def expand_wildcards(
@@ -782,30 +794,34 @@ def expand_wildcards(
     shards score the same rewritten term set.
 
     Expansion is capped at ``max_expansions`` terms per wildcard (Lucene's
-    maxClauseCount analog): the dictionary scan collects at most cap+1
-    rows — a too-broad prefix fails fast without pulling the vocabulary
-    through the driver.
+    maxClauseCount analog): a scan collects at most cap+1 terms — a
+    too-broad prefix fails fast without pulling the vocabulary through
+    the driver.
 
     Fuzzy terms (``term~`` / ``term~1`` — Lucene QueryParser FuzzyQuery
     syntax) expand the same way, to every analyzed dictionary term within
     the given Levenshtein distance (default 2, computed JVM-side with
     ``F.levenshtein``'s bounded form); each expanded term scores as a
     normal OR term (the scoring-rewrite simplification used for wildcards,
-    documented vs Lucene's similarity-boosted rewrite)."""
+    documented vs Lucene's similarity-boosted rewrite).
+
+    Prefix and pattern wildcards expand against the term dictionary
+    (``TermDict.match``, no Spark job); fuzzy terms scan the stats
+    relation in the JVM."""
     import re as _re
 
     qw: dict[str, float] = {}
+    td = index.term_dict()
 
-    def _collect_capped(base, clause: str, boost: float = 1.0) -> None:
-        rows = base.select("term").limit(max_expansions + 1).collect()
-        if len(rows) > max_expansions:
-            raise ValueError(
-                f"{clause!r} expands to more than {max_expansions} terms "
-                "(Lucene maxClauseCount analog) — narrow it or raise "
-                "max_expansions"
-            )
-        for r in rows:
-            qw[r["term"]] = qw.get(r["term"], 0.0) + boost
+    def _collect_capped(terms, clause: str, boost: float = 1.0) -> None:
+        for t in _capped_terms(
+            terms, max_expansions, repr(clause), "narrow it or raise"
+        ):
+            qw[t] = qw.get(t, 0.0) + boost
+
+    def _fuzzy(frame, clause: str, boost: float) -> None:
+        rows = frame.select("term").limit(max_expansions + 1).collect()
+        _collect_capped([r["term"] for r in rows], clause, boost)
 
     kw = set(index.keyword_fields or ())
     for raw in query.split():
@@ -825,7 +841,7 @@ def expand_wildcards(
             fz_f = _re.fullmatch(r"([\w.-]+)~([0-2]?)", val)
             if fz_f:
                 word, dist = fz_f.group(1), int(fz_f.group(2) or 2)
-                _collect_capped(
+                _fuzzy(
                     index.stats(spark)
                     .where(F.col("term").startswith(pfx))
                     .where(
@@ -858,16 +874,9 @@ def expand_wildcards(
                     for p in parts
                 )
                 lit_pre = pfx + (parts[0] if parts[0] not in "*?" else "")
+                rx = "^" + _re.escape(fld) + ":" + rx_val + "$"
                 _collect_capped(
-                    index.stats(spark)
-                    .where(F.col("term").startswith(lit_pre))
-                    .where(
-                        F.col("term").rlike(
-                            "^" + _re.escape(fld) + ":" + rx_val + "$"
-                        )
-                    ),
-                    raw,
-                    boost,
+                    td.match(lit_pre, rx, limit=max_expansions), raw, boost
                 )
             else:
                 raise ValueError(
@@ -880,11 +889,7 @@ def expand_wildcards(
         fz = _re.fullmatch(r"([a-z0-9]+)~([0-2]?)", low)
         if _re.fullmatch(r"[a-z0-9]+\*", low):
             _collect_capped(
-                index.stats(spark)
-                .where(F.col("term").startswith(low[:-1]))
-                .where(~F.col("term").contains(":")),
-                raw,
-                boost,
+                td.match(low[:-1], bare=True, limit=max_expansions), raw, boost
             )
         elif _re.fullmatch(r"[a-z0-9*?]+", low) and ("*" in low or "?" in low):
             # general pattern wildcards (te*t, t?st — WildcardQuery);
@@ -899,15 +904,11 @@ def expand_wildcards(
             rx = "^" + low.replace("*", "[a-z0-9]*").replace("?", "[a-z0-9]") + "$"
             prefix = _re.match(r"[a-z0-9]*", low).group(0)
             _collect_capped(
-                index.stats(spark)
-                .where(F.col("term").startswith(prefix))
-                .where(F.col("term").rlike(rx)),
-                raw,
-                boost,
+                td.match(prefix, rx, limit=max_expansions), raw, boost
             )
         elif fz:
             word, dist = fz.group(1), int(fz.group(2) or 2)
-            _collect_capped(
+            _fuzzy(
                 index.stats(spark)
                 .where(~F.col("term").contains(":"))
                 # cheap length prefilter keeps the bounded levenshtein scan
@@ -973,6 +974,7 @@ def expand_ranges(
     ranges, wildcards and plain terms compose."""
     qw: dict[str, float] = {}
     fields = set(index.keyword_fields or ())
+    td = index.term_dict()
 
     def _expand(m: "_re_mod.Match") -> str:
         fld, lbr, lo, hi, rbr, boost_s = m.groups()
@@ -988,30 +990,20 @@ def expand_ranges(
             # (Lucene's lowercaseExpandedTerms default; keyword-field
             # bounds stay verbatim, KeywordAnalyzer semantics)
             lo, hi = lo.lower(), hi.lower()
-            value = F.col("term")
-            base = index.stats(spark).where(~F.col("term").contains(":"))
-        else:
-            value = F.substring(F.col("term"), len(fld) + 2, 1 << 20)
-            base = index.stats(spark).where(
-                F.col("term").startswith(fld + ":")
-            )
-        if lo != "*":
-            base = base.where(
-                value > lo if lbr == "{" else value >= lo
-            )
-        if hi != "*":
-            base = base.where(
-                value < hi if rbr == "}" else value <= hi
-            )
-        rows = base.select("term").limit(max_expansions + 1).collect()
-        if len(rows) > max_expansions:
-            raise ValueError(
-                f"range {m.group(0)!r} expands to more than "
-                f"{max_expansions} terms (Lucene maxClauseCount analog) — "
-                "narrow the bounds or raise max_expansions"
-            )
-        for r in rows:
-            qw[r["term"]] = qw.get(r["term"], 0.0) + boost
+        pfx = "" if fld is None else fld + ":"
+        # the field's terms share the prefix, so comparing whole term
+        # strings against prefixed bounds compares the values
+        terms = td.match(
+            pfx,
+            lo=None if lo == "*" else pfx + lo, lo_incl=lbr == "[",
+            hi=None if hi == "*" else pfx + hi, hi_incl=rbr == "]",
+            bare=fld is None, limit=max_expansions,
+        )
+        for t in _capped_terms(
+            terms, max_expansions, f"range {m.group(0)!r}",
+            "narrow the bounds or raise",
+        ):
+            qw[t] = qw.get(t, 0.0) + boost
         return " "
 
     rest = _RANGE_RE.sub(_expand, query)
@@ -1022,10 +1014,9 @@ def expand_ranges(
     return qw
 
 
-# Columns the scoring kernels actually read — selected explicitly before
-# applyInPandas so the parquet scan PRUNES everything else (most
-# importantly the positions blobs, which only phrase queries fetch, and
-# cf/sum_dl, which only the build-time stats job reads).
+# Columns the scoring kernels actually read — the shard reader and the
+# cogroup scans fetch nothing else (notably not the positions blobs, which
+# only phrase queries fetch, nor cf/sum_dl, which only build stats read).
 _KERNEL_COLS = [
     "shard_id", "th", "df", "doc_ids", "tfs", "doclens", "skips",
     "max_tf", "min_dl", "block_max_tf", "block_min_dl",
@@ -1628,8 +1619,8 @@ def _make_score_kernel(
         # per-optional-clause matched-doc arrays for min_should counting
         should_seen: dict[str, np.ndarray] = {}
         group_seen: list[np.ndarray] = []
-        # idf from the per-row GLOBAL df (broadcast-joined from the stats
-        # table inside the same job — phase 1 without a driver round-trip);
+        # idf from the per-row GLOBAL df (attached from the query's term
+        # dictionary slice in the task — no phase-1 job or join);
         # then row-level impact bound from raw (max_tf, min_dl), and terms
         # processed in descending max-impact order so the prune threshold
         # grows as fast as possible (MaxScore ordering).
@@ -2672,85 +2663,120 @@ def _lower_query(
     return c
 
 
+def _read_shard(index_dir: str, shard: int, cols: list[str], hashes) -> pd.DataFrame:
+    """The ``cols`` of one shard's postings rows whose th is in ``hashes``,
+    read with pyarrow (the th-sorted files skip by row group); a shard
+    with no directory (no documents) reads as no rows, a postings table
+    this process cannot see raises."""
+    import pyarrow.dataset as pads
+
+    fcols = [c for c in cols if c != "shard_id"]
+    root = os.path.join(index_dir, "postings.parquet")
+    files = parquet_files(os.path.join(root, f"shard_id={shard}"))
+    if not files and not os.path.isdir(root):
+        raise FileNotFoundError(f"postings table {root!r} is not readable here")
+    if not files:
+        return pd.DataFrame(columns=fcols)
+    return (
+        pads.dataset(files, format="parquet")
+        .to_table(columns=fcols, filter=pads.field("th").isin(hashes))
+        .to_pandas()
+    )
+
+
+class _Fetch(NamedTuple):
+    """Phase 1 of a search, resolved on the driver: the query's
+    dictionary ``terms``, the postings columns ``cols`` the kernels read
+    and (numDocs, avgdl) of the searched corpus."""
+
+    handles: list
+    cols: list[str]
+    terms: QueryTerms
+    n_docs: float
+    avgdl: float
+    shard_ids: "list[int] | None"
+
+    def run(
+        self, spark: SparkSession, fn, schema: str, only: "list[int] | None" = None
+    ) -> DataFrame:
+        """Phase 2 as ONE stage with no scan, exchange or broadcast —
+        Katta's node-local IndexSearcher (LuceneServer.java:184-193): task
+        i of ``spark.range`` reads shard i's rows of the query's terms,
+        attaches term/df_g and yields ``fn(pdf)``; a shard without such
+        rows calls nothing. Shard ids are offset per index as in
+        :func:`_union_shards`; ``only`` or ``shard_ids`` keeps a subset."""
+        keep = only if only is not None else self.shard_ids
+        targets, off = [], 0
+        for h in self.handles:
+            d = os.path.abspath(h.index_dir)
+            targets += [
+                (d, s, off + s) for s in range(h.num_shards)
+                if keep is None or s in keep
+            ]
+            off += h.num_shards
+        cols, terms = self.cols, self.terms
+
+        def task(batches):
+            for b in batches:
+                for i in b["id"]:
+                    d, s, g = targets[i]
+                    pdf = terms.attach(_read_shard(d, s, cols, terms.th))
+                    if len(pdf):
+                        out = fn(pdf.assign(shard_id=np.int32(g)))
+                        if len(out):
+                            yield out
+
+        n = len(targets)
+        return spark.range(0, n, 1, max(n, 1)).mapInPandas(task, schema)
+
+    def scan(self, spark: SparkSession) -> DataFrame:
+        """The query's postings rows as a Spark scan, for the paths that
+        cogroup them with a user frame by shard: a pushed In(th, ...)
+        predicate, or past _ISIN_MAX_TERMS a broadcast semi-join (no
+        thousand-literal plans)."""
+        hashes = [int(x) for x in self.terms.th]
+        th_df = F.broadcast(
+            _local_df(spark, [(x,) for x in hashes], ["th"], "th long")
+        ) if len(hashes) > _ISIN_MAX_TERMS else None
+
+        def frame(h):
+            p = h.postings(spark)
+            if th_df is None:
+                return p.where(F.col("th").isin(hashes)).select(*self.cols)
+            return p.select(*self.cols).join(th_df, "th", "left_semi")
+
+        out = _union_shards(self.handles, frame)
+        if self.shard_ids is not None:
+            out = out.where(F.col("shard_id").isin(self.shard_ids))
+        return out
+
+    def wrap(self, kernel):
+        """``kernel`` over scanned rows: attaches term/df_g first."""
+        terms = self.terms
+        return lambda pdf, *a: kernel(terms.attach(pdf), *a)
+
+
 def _fetch_postings(
     spark: SparkSession,
     handles: list[IndexHandle],
     terms: list[str],
     cols: list[str],
     shard_ids: list[int] | None = None,
-) -> tuple[DataFrame, float, float]:
-    """Phase 1 of a search: the postings rows of ``terms`` (columns
-    ``cols``) joined with each term's string and global df (``term``,
-    ``df_g``), plus (numDocs, avgdl) of the searched corpus. ``shard_ids``
-    (one index only) scores with the selected shards' own stats.
-
-    Term hashes are computed DRIVER-SIDE with the pure-Python xxHash64
-    (bit-identical to F.xxhash64, parity-tested) — zero Spark jobs. Small
-    term lists become a pushed In(th, …) scan predicate (row-group
-    skipping); LARGE lists (broad wildcard expansions) would bloat the
-    plan and degenerate the pushed predicate, so past _ISIN_MAX_TERMS the
-    term list travels as a broadcast-joined side table instead — the
-    postings are filtered by the (inner) broadcast stats join itself."""
-    hashes = sorted(term_hash(t) for t in terms)
-    use_isin = len(hashes) <= _ISIN_MAX_TERMS
-    q_pairs = [(term_hash(t), t) for t in terms]
-
-    def _stats_for_query(stats_df):
-        # the term guard drops any query term whose xxhash64 collides with
-        # a different indexed term
-        if use_isin:
-            return stats_df.where(
-                F.col("th").isin(hashes) & F.col("term").isin(terms)
-            )
-        q_df = _local_df(
-            spark, q_pairs, ["th", "term"], "th long, term string"
-        )
-        return stats_df.join(F.broadcast(q_df), ["th", "term"], "left_semi")
-
+) -> _Fetch:
+    """Phase 1 of a search (Katta's getDocFrequencies,
+    LuceneClient.java:264-286) from the term dictionaries, with no Spark
+    job on a warm handle: the query terms the indexes hold and their df,
+    summed across indexes (DocumentFrequencyWritable,
+    LuceneClient.java:271-281), plus (numDocs, avgdl). ``shard_ids`` (one
+    index only) scores with the selected shards' own stats: numDocs and
+    avgdl from the shard table, df summed over their postings rows."""
     n_docs, avgdl = _corpus_stats(spark, handles)
-    index = handles[0]
-    if len(handles) > 1:
-        # Phase 1 across indexes sums per-handle df driver-side (memoized
-        # per handle — repeated queries over warm handles collect nothing)
-        # into a broadcast (th, term, df_g) table joined per row, as below.
-        df_tot: dict[str, int] = {}
-        for h in handles:
-            for t, d in h.df_of_terms(spark, terms).items():
-                if d:
-                    df_tot[t] = df_tot.get(t, 0) + d
-        postings = _union_shards(
-            handles,
-            lambda h: h.postings(spark)
-            .where(F.col("th").isin(hashes))
-            .select(*cols),
-        )
-        df_g = _local_df(
-            spark,
-            [(term_hash(t), t, d) for t, d in df_tot.items()],
-            ["th", "term", "df_g"],
-            "th long, term string, df_g long",
-        )
-        postings = postings.join(F.broadcast(df_g), "th")
-    elif shard_ids is None:
-        # Phase 1 (global df per term — Katta's getDocFrequencies,
-        # LuceneClient.java:264-286) is a broadcast join of the tiny stats
-        # rows into the postings scan — no driver round-trip between the
-        # phases; the kernel derives idf from the joined global df. The
-        # stats rows also carry the term STRING (postings store only th).
-        postings = index.postings(spark)
-        if use_isin:
-            # th is the pushed predicate (int64 min/max row-group skipping)
-            postings = postings.where(F.col("th").isin(hashes))
-        postings = postings.select(*cols)
-        stats_small = _stats_for_query(index.stats(spark)).select(
-            "th", "term", F.col("df").alias("df_g")
-        )
-        postings = postings.join(F.broadcast(stats_small), "th")
-    else:
-        # Shard-subset search scores with SUBSET-global stats, exactly like
-        # Katta's phase 1 over only the searched indices' shards
-        # (LuceneClient.java:264-286). df comes from the selected postings
-        # rows themselves; N/avgdl from the per-shard stats table.
+    dfs: dict[str, int] = {}
+    for h in handles:
+        for t, d in h.term_dict().lookup(terms).items():
+            dfs[t] = dfs.get(t, 0) + d
+    if shard_ids is not None:
+        index = handles[0]
         srows = (
             index.shards(spark).where(F.col("shard_id").isin(shard_ids)).collect()
         )
@@ -2758,24 +2784,14 @@ def _fetch_postings(
         avgdl = (
             float(sum(r["sum_dl"] for r in srows)) / n_docs if n_docs else 1.0
         )
-        postings = index.postings(spark).where(F.col("shard_id").isin(shard_ids))
-        if use_isin:
-            postings = postings.where(F.col("th").isin(hashes))
-            postings = postings.select(*cols)
-        else:
-            th_df = _local_df(
-                spark, [(h,) for h in hashes], ["th"], "th long"
-            )
-            postings = postings.select(*cols).join(
-                F.broadcast(th_df), "th", "left_semi"
-            )
-        term_map = _stats_for_query(index.stats(spark)).select("th", "term")
-        # subset-global df joined per row (same shape as the global path)
-        df_sub = postings.groupBy("th").agg(F.sum("df").alias("df_g"))
-        postings = postings.join(F.broadcast(term_map), "th").join(
-            F.broadcast(df_sub), "th"
-        )
-    return postings, n_docs, avgdl
+        by_th = {term_hash(t): t for t in dfs}
+        parts = [_read_shard(index.index_dir, s, ["th", "df"], list(by_th))
+                 for s in shard_ids]
+        sub = pd.concat(parts).groupby("th")["df"].sum() if parts else {}
+        dfs = {by_th[int(th)]: int(d) for th, d in sub.items()}
+    return _Fetch(
+        handles, cols, QueryTerms.of(dfs), n_docs, avgdl, shard_ids
+    )
 
 
 def search(
@@ -2851,10 +2867,10 @@ def search(
     no longer consulted (v8 indexes store positions). ``mode`` must be
     'or' when boolean operators are present.
 
-    Plan at scale: parquet scan of postings pruned to the query's shards
-    (partition column) and terms (pushed predicate + row-group skipping via
-    the term-sorted layout) → one Arrow kernel per shard → ≤ k·shards rows
-    → TakeOrderedAndProject. The corpus is never shuffled.
+    Plan at scale: one stage of per-shard tasks, each reading its shard's
+    rows of the query's terms (row-group skipping via the term-sorted
+    layout) into the kernel → ≤ k·shards rows → TakeOrderedAndProject.
+    Nothing is shuffled or broadcast (:meth:`_Fetch.run`).
 
     Filtered search (Katta's Filter, ILuceneServer.java:84-101, applied at
     LuceneServer.java:334-345: restricts the matched set WITHOUT changing
@@ -2957,13 +2973,10 @@ def search(
         if _dv_agg is not None:
             return _local_df(spark, [], None, _dv_agg[3])
         return _local_df(spark, [], None, empty_schema)
-    # phrase queries additionally fetch the positions blobs; everything
-    # else prunes them at the parquet scan (explicit column selection —
-    # applyInPandas would otherwise drag every column through Arrow)
+    # only phrase queries fetch the positions blobs
     kcols = _KERNEL_COLS + (["positions"] if c.phrases else [])
-    postings, n_docs, avgdl = _fetch_postings(
-        spark, handles, c.terms, kcols, shard_ids
-    )
+    fetch = _fetch_postings(spark, handles, c.terms, kcols, shard_ids)
+    n_docs, avgdl = fetch.n_docs, fetch.avgdl
     if shard_ids is not None:
         # the baked block maxima assume corpus stats
         prune = False
@@ -3023,7 +3036,13 @@ def search(
         )
         if shard_ids is not None:
             fdf = fdf.where(F.col("shard_id").isin(shard_ids))
-    if _dv_sort is not None or _dv_group is not None or _dv_agg is not None:
+    dv = _dv_sort is not None or _dv_group is not None or _dv_agg is not None
+    if fdf is not None or dv:
+        # a user frame or docvalue sidecar cogroups with the scanned
+        # postings by shard
+        postings = fetch.scan(spark)
+        kernel = fetch.wrap(kernel)
+    if dv:
         if _with_total:
             raise ValueError(
                 "_dv_sort/_dv_group/_dv_agg do not combine with _with_total"
@@ -3088,17 +3107,12 @@ def search(
         )
         return hits.select("doc_id", "shard_id", "score", *extra_cols)
     if filter_df is None:
-        # 1-arg wrapper: applyInPandas treats a 2-arg function as
-        # (group_key, pdf), but our kernels' 2nd arg is the filter set.
-        if deny is not None:
-            hits = postings.groupBy("shard_id").applyInPandas(
-                lambda pdf: kernel(pdf, DocFilter(None, deny.value)),
-                out_schema,
-            )
-        else:
-            hits = postings.groupBy("shard_id").applyInPandas(
-                lambda pdf: kernel(pdf), out_schema
-            )
+        hits = fetch.run(
+            spark,
+            kernel if deny is None
+            else lambda pdf: kernel(pdf, DocFilter(None, deny.value)),
+            out_schema,
+        )
     else:
         def cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             if not len(left):
@@ -3736,10 +3750,16 @@ def search_batch(
     Returns DataFrame(query_id, doc_id, shard_id, score) with ≤ k rows per
     query, ordered by (query_id, score DESC, doc_id ASC, shard_id DESC).
 
-    Plan: ONE postings scan pruned to the UNION of all queries' terms →
-    per-shard kernel decodes each distinct term once and scores every
-    query against it → ≤ |queries|·k rows per shard → one tiny window
-    per query_id for the global merge.
+    Plan: one shard-local stage (:meth:`_Fetch.run`) reads each shard's
+    rows of the UNION of all queries' terms → per-shard kernel decodes
+    each distinct term once and scores every query against it →
+    ≤ |queries|·k rows per shard → a driver-side merge per query_id.
+
+    The call is EAGER: it runs that one job before it returns, and the
+    returned frame is a local one over the merged rows, not a lazy plan.
+    The merge runs in driver pandas and holds every per-shard row at
+    once — up to |queries|·k·shards rows — so size batches to the
+    driver's memory.
 
     Query surface: flat terms, ``+``/``-`` boolean clauses, phrases
     (in-index positional verify, like :func:`search`), AND/OR/NOT
@@ -3757,8 +3777,6 @@ def search_batch(
     clause options of :func:`search` — semantics identical to the
     single-query path (a synonym group scores as one blended pseudo-term
     and counts as one msm clause)."""
-    from pyspark.sql import Window
-
     handles = _open_handles(spark, index)
     for h in handles:
         h._record_query()
@@ -3783,27 +3801,14 @@ def search_batch(
     if not all_terms or k <= 0:
         return _local_df(spark, [], None, out_schema)
     bcols = _KERNEL_COLS + (["positions"] if phrase_terms else [])
-    postings, n_docs, avgdl = _fetch_postings(
-        spark, handles, all_terms, bcols
-    )
-
-    def _empty_batch() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "query_id": pd.array([], dtype="int32"),
-                "shard_id": pd.array([], dtype="int32"),
-                "doc_id": pd.array([], dtype="int64"),
-                "score": pd.array([], dtype=score_dtype),
-            }
-        )
+    fetch = _fetch_postings(spark, handles, all_terms, bcols)
+    n_docs, avgdl = fetch.n_docs, fetch.avgdl
 
     syn_member_terms = {
         m for plan in plans for _, _, members in plan.syn_groups for m in members
     }
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return _empty_batch()
         shard_id = int(pdf["shard_id"].iloc[0])
         dny = _deny_val(deny)
         idf_col = scoring.idf_np(pdf["df_g"].to_numpy(np.float64), n_docs)
@@ -3931,7 +3936,7 @@ def search_batch(
             out_d.append(docs_u)
             out_s.append(sc)
         if not out_q:
-            return _empty_batch()
+            return pd.DataFrame()  # the shard-local stage emits nothing
         qs = np.concatenate(out_q)
         return pd.DataFrame(
             {
@@ -3942,20 +3947,15 @@ def search_batch(
             }
         )
 
-    hits = postings.groupBy("shard_id").applyInPandas(kernel, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc(), F.col("shard_id").desc()
+    # the ≤ |queries|·k rows per shard merge driver-side, per query, in
+    # the reference tie-break (Katta's client merge)
+    hits = fetch.run(spark, kernel, out_schema).toPandas()
+    hits = hits.sort_values(
+        ["query_id", "score", "doc_id", "shard_id"],
+        ascending=[True, False, True, False],
     )
-    return (
-        hits.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy(
-            "query_id",
-            F.col("score").desc(),
-            F.col("doc_id").asc(),
-            F.col("shard_id").desc(),
-        )
+    return spark.createDataFrame(
+        hits.groupby("query_id").head(k).reset_index(drop=True), out_schema
     )
 
 
@@ -4018,8 +4018,7 @@ def count_matches(
 
     A LIST of indexes counts across all of them (Katta's count() sums
     per-node results over every searched index, LuceneClient.java:225-251):
-    match counting needs no stats, so the postings streams simply bag-union
-    with offset shard ids.
+    per-shard counts simply sum across the indexes' shards.
 
     Queries with boolean clauses (``+``/``-``, phrases, AND/OR/NOT
     grouping) delegate to the search kernels' exact shard totals — Katta's
@@ -4063,25 +4062,17 @@ def count_matches(
     terms = sorted(c.qweights)
     if not terms:
         return 0
-    hashes = [term_hash(t) for t in terms]
-    postings = _union_shards(
-        handles,
-        lambda h: h.postings(spark)
-        .where(F.col("th").isin(hashes))
-        .select("shard_id", "doc_ids", "tfs", "doclens"),
+    fetch = _fetch_postings(
+        spark, handles, terms, ["shard_id", "th", "doc_ids", "tfs", "doclens"]
     )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         docs = [decode_posting_list(r.doc_ids, r.tfs, r.doclens)[0]
                 for r in pdf.itertuples(index=False)]
-        n = int(np.unique(np.concatenate(docs)).size) if docs else 0
-        return pd.DataFrame({"shard_id": [int(pdf["shard_id"].iloc[0])], "n": [n]})
+        return pd.DataFrame({"n": [int(np.unique(np.concatenate(docs)).size)]})
 
-    per_shard = postings.groupBy("shard_id").applyInPandas(
-        kernel, "shard_id int, n long"
-    )
-    row = per_shard.agg(F.sum("n").alias("total")).collect()[0]
-    return int(row["total"] or 0)
+    # a doc lives in one shard: per-shard counts sum on the driver
+    return sum(r["n"] for r in fetch.run(spark, kernel, "n long").collect())
 
 
 def facet_counts(
@@ -4869,12 +4860,8 @@ def explain_score(
     kcols = ["shard_id", "th", "doc_ids", "tfs", "doclens"] + (
         ["positions"] if phrases else []
     )
-    posts, n_docs, avgdl = _fetch_postings(spark, handles, c.terms, kcols)
-    if index.sharding == "pmod_doc_id":
-        # only the ONE shard that can hold the doc is scanned
-        posts = posts.where(
-            F.col("shard_id") == int(target % index.num_shards)
-        )
+    fetch = _fetch_postings(spark, handles, c.terms, kcols)
+    n_docs, avgdl = fetch.n_docs, fetch.avgdl
     phrase_specs = [(tuple(toks), int(slop)) for toks, slop in phrases]
     want_pos = bool(phrase_specs)
 
@@ -4903,25 +4890,16 @@ def explain_score(
             else:
                 ok = False
             rows_out.append((" ".join(toks), 0, 0, ok))
-        if not rows_out:
-            return pd.DataFrame(
-                {"term": pd.Series(dtype=object),
-                 "tf": pd.Series(dtype=np.int64),
-                 "dl": pd.Series(dtype=np.int64),
-                 "phrase_ok": pd.Series(dtype=bool)}
-            )
         return pd.DataFrame(
             rows_out, columns=["term", "tf", "dl", "phrase_ok"]
         )
 
-    probe = (
-        posts.groupBy("shard_id")
-        .applyInPandas(
-            lambda pdf: kernel(pdf),
-            "term string, tf long, dl long, phrase_ok boolean",
-        )
-        .toPandas()
-    )
+    probe = fetch.run(
+        spark, kernel, "term string, tf long, dl long, phrase_ok boolean",
+        # under pmod sharding only the ONE shard that can hold the doc
+        only=[target % index.num_shards]
+        if index.sharding == "pmod_doc_id" else None,
+    ).toPandas()
     tf_of = {}
     dl_of = {}
     phrase_ok: dict[str, bool] = {}

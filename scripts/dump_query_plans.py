@@ -99,8 +99,6 @@ def main() -> None:
         "explain_score": lambda q, s: ksq.explain_score(
             spark, h, q, top_doc[s]["doc_id"] if top_doc[s] else 0
         ),
-        # last: a list search fills the per-handle df memo, which would
-        # hide explain_score's own df collect if it ran earlier
         "search_batch_list": lambda q, s: ksq.search_batch(spark, [h, h], [q], k=10),
     }
     for entry, call in calls.items():

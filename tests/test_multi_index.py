@@ -180,8 +180,11 @@ def test_keyword_only_indexes_score_like_oracle(
 
 def test_multi_index_stats_memoized(spark, split_indexes):
     """Repeated multi-index queries over WARM handles must trigger zero
-    stats/shards jobs (df_of_terms + total_dl memoization — Katta's
-    CachedDfSource invariant)."""
+    stats/shards jobs (term dictionary + total_dl memoization — Katta's
+    CachedDfSource invariant): the warm search is the one shard-local
+    job."""
+    from katta_spark.plans import jobs_started
+
     _, a, b = split_indexes
     ha, hb = IndexHandle.open(spark, a), IndexHandle.open(spark, b)
     first = search_multi(spark, [ha, hb], "hotalpha w00011", k=10).collect()
@@ -194,7 +197,11 @@ def test_multi_index_stats_memoized(spark, split_indexes):
         for h in (ha, hb):
             h.stats = _boom
             h.shards = _boom
-        again = search_multi(spark, [ha, hb], "hotalpha w00011", k=10).collect()
+        with jobs_started(spark) as n_jobs:
+            again = search_multi(
+                spark, [ha, hb], "hotalpha w00011", k=10
+            ).collect()
+        assert n_jobs[0] == 1, n_jobs
     finally:
         # open() memoizes handles per (dir, mtime): restore the real
         # methods or every later test sharing these dirs inherits _boom
@@ -208,35 +215,47 @@ def test_multi_index_stats_memoized(spark, split_indexes):
 
 def test_relation_memo_and_invalidation(spark, split_indexes, tmp_path):
     """postings()/stats()/shards() are memoized per (path, session, dir
-    mtime): a warm handle returns the SAME DataFrame (no repeated
+    mtime), and the term dictionary per stats.parquet dir mtime: a warm
+    handle returns the SAME DataFrame / dictionary (no repeated
     read.parquet driver work), and an in-place rewrite of the sidecar
     directory — the expunge/compact shape — bumps the mtime and yields a
-    fresh frame that sees the new files."""
+    fresh frame / reloaded dictionary that sees the new files."""
     whole, _, _ = split_indexes
     h = IndexHandle.open(spark, whole)
     p1 = h.postings(spark)
     assert h.postings(spark) is p1
     assert h.stats(spark) is h.stats(spark)
+    d1 = h.term_dict()
+    assert h.term_dict() is d1
     # rewrite postings.parquet in place (same rows) — the dir mtime
     # changes, so the memo must hand back a NEW frame, not the stale one
     import shutil
     import time as _time
 
-    pdir = os.path.join(whole, "postings.parquet")
-    bak = str(tmp_path / "postings_bak")
-    shutil.copytree(pdir, bak)
+    def _rewrite(name: str) -> None:
+        src = os.path.join(whole, name)
+        bak = str(tmp_path / f"{name}_bak")
+        shutil.copytree(src, bak)
+        _time.sleep(0.01)  # ensure a distinct mtime_ns on coarse filesystems
+        shutil.rmtree(src)
+        shutil.copytree(bak, src)
+        # copytree preserves the source mtime (copystat); a real writer
+        # (Spark overwrite) always leaves a current one — restore that
+        os.utime(src)
+
     n_before = p1.count()
-    _time.sleep(0.01)  # ensure a distinct mtime_ns on coarse filesystems
-    shutil.rmtree(pdir)
-    shutil.copytree(bak, pdir)
-    # copytree preserves the source mtime (copystat); a real writer
-    # (Spark overwrite) always leaves a current one — restore that
-    os.utime(pdir)
+    _rewrite("postings.parquet")
     p2 = h.postings(spark)
     assert p2 is not p1
     assert p2.count() == n_before
     # self-join sites take a detached frame with fresh attribute ids
     assert h.postings(spark, fresh=True) is not h.postings(spark)
+    # the same for stats.parquet: the dictionary reloads from the new files
+    _rewrite("stats.parquet")
+    d2 = h.term_dict()
+    assert d2 is not d1
+    assert d2.n_terms == d1.n_terms
+    assert d2.lookup(["hotalpha"]) == d1.lookup(["hotalpha"])
 
 
 def test_multi_index_filtered(spark, tiny_transcripts, split_indexes):

@@ -1,9 +1,10 @@
 """Physical-plan audits + seeded rank-identity fuzzing.
 
-The plan audit enforces the scale design (SURVEY.md §4): pushed postings
-predicates, TakeOrderedAndProject global merge, no corpus-sized shuffle on
-the query path. The fuzz test hammers the engine-vs-oracle equivalence with
-random queries beyond the fixed reference set.
+The plan audit enforces the scale design (SURVEY.md §4): one shard-local
+stage per search with no exchange, the term filter and column list in that
+stage's reader, TakeOrderedAndProject global merge. The fuzz test hammers
+the engine-vs-oracle equivalence with random queries beyond the fixed
+reference set.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from katta_spark.plans import (
     audit_details_plan,
     audit_search_plan,
     audit_sorted_search_plan,
+    jobs_started,
 )
 from katta_spark.query import get_details, search, search_sorted
 from katta_spark.synth import HOT_TERMS
@@ -37,14 +39,34 @@ def docs(tiny_transcripts):
     return with_doc_ids(tiny_transcripts, 4).cache()
 
 
+@pytest.fixture
+def fetches(monkeypatch):
+    """Every phase-1 fetch a search builds while the test runs: its
+    ``cols`` are the shard reader's column list and ``terms.th`` its term
+    hash set."""
+    import katta_spark.query as ksq
+
+    got = []
+    orig = ksq._fetch_postings
+
+    def record(*a, **kw):
+        got.append(orig(*a, **kw))
+        return got[-1]
+
+    monkeypatch.setattr(ksq, "_fetch_postings", record)
+    return got
+
+
 def test_search_plan_shape(spark, idx):
     hits = search(spark, idx, "hotalpha w00011", k=10)
     audit = audit_search_plan(hits)
-    assert audit["pushed_term_filter"], audit["plan"][:2000]
-    assert audit["take_ordered"], audit["plan"][:2000]
-    # one exchange to group postings by shard; the top-k merge is
+    # one shard-local stage reads the postings itself (no file scan),
+    # nothing is shuffled or broadcast, and the top-k merge is
     # TakeOrderedAndProject (not a full sort exchange)
-    assert audit["n_exchanges"] <= 2, audit["plan"][:2000]
+    assert audit["single_stage"], audit["plan"][:2000]
+    assert not audit["postings_scan"], audit["plan"][:2000]
+    assert audit["take_ordered"], audit["plan"][:2000]
+    assert audit["n_exchanges"] == 0, audit["plan"][:2000]
 
 
 def test_details_plan_broadcasts_topk(spark, idx, tiny_transcripts):
@@ -114,22 +136,23 @@ def test_rank_identity_fuzz(spark, idx, docs):
         )
 
 
-def test_broad_expansion_uses_broadcast_fetch(spark, idx, docs):
-    """Past _ISIN_MAX_TERMS the term fetch must switch from a pushed
-    In(th, ...) predicate to a broadcast-joined term table: a ~990-term
-    wildcard must not inline a thousand literals into the scan, and the
-    result must still rank-match the oracle."""
-    from katta_spark.plans import physical_plan
+def test_broad_expansion_is_single_stage(spark, idx, docs):
+    """A ~990-term wildcard runs through the same single stage as a
+    two-term query: the term hashes ride in the stage's closure, so no
+    thousand-literal predicate lands in the plan and nothing is
+    broadcast or shuffled; the result must still rank-match the
+    oracle."""
     from katta_spark.query import IndexHandle, expand_wildcards
 
     ix = IndexHandle.open(spark, idx)
     expanded = expand_wildcards(spark, ix, "w00*")
-    assert len(expanded) > 64  # the broadcast path threshold
+    assert len(expanded) > 64  # past the scan paths' In(th, ...) limit
     hits = search(spark, idx, "w00*", k=10)
-    plan = physical_plan(hits)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan[:2000]
-    # no giant inlined literal list on the scan
-    assert plan.count(",") < 2000, "term literals leaked into the plan"
+    audit = audit_search_plan(hits)
+    assert audit["single_stage"], audit["plan"][:2000]
+    assert audit["n_exchanges"] == 0, audit["plan"][:2000]
+    # no giant inlined literal list in the plan
+    assert audit["plan"].count(",") < 2000, "term literals leaked into the plan"
     got = search(spark, idx, "w00*", k=10, score_dtype="float64").collect()
     want = bm25_topk(
         docs, " ".join(sorted(expanded)), k=10, shard_col="shard_id",
@@ -140,68 +163,66 @@ def test_broad_expansion_uses_broadcast_fetch(spark, idx, docs):
     ]
 
 
-def test_positions_column_pruned_unless_phrase(spark, idx):
+def test_positions_column_pruned_unless_phrase(spark, idx, fetches):
     """The v8 positions blobs must be fetched ONLY by phrase queries: a
-    flat query's postings ReadSchema excludes positions (and the
-    build-time-only cf/sum_dl), a phrase query's includes it."""
-    from katta_spark.plans import scan_read_schemas
+    flat query's shard reader columns exclude positions (and the
+    build-time-only cf/sum_dl), a phrase query's include it."""
+    search(spark, idx, "hotalpha w00011", k=5)
+    cols = fetches[-1].cols
+    assert "doc_ids" in cols, cols
+    assert "positions" not in cols, cols
+    assert "sum_dl" not in cols and "cf" not in cols, cols
 
-    flat_scans = scan_read_schemas(search(spark, idx, "hotalpha w00011", k=5))
-    post = [s for s in flat_scans if "doc_ids" in s]
-    assert post, flat_scans
-    assert all("positions" not in s for s in post), post
-    assert all("sum_dl" not in s and "cf" not in s for s in post), post
-
-    ph_scans = scan_read_schemas(
-        search(spark, idx, '"hotalpha hotbeta"', k=5)
-    )
-    post = [s for s in ph_scans if "doc_ids" in s]
-    assert post and any("positions" in s for s in post), ph_scans
+    search(spark, idx, '"hotalpha hotbeta"', k=5)
+    cols = fetches[-1].cols
+    assert "doc_ids" in cols and "positions" in cols, cols
 
 
-def test_msm_synonym_plan_shape(spark, idx):
-    """min_should_match / synonym queries keep the designed scan shape:
-    the term predicate (incl. GROUP MEMBERS) stays pushed to the postings
-    scan, positions are never fetched, and the merge is still
-    TakeOrderedAndProject."""
-    from katta_spark.plans import audit_search_plan, scan_read_schemas
+def test_msm_synonym_plan_shape(spark, idx, fetches):
+    """min_should_match / synonym queries keep the designed shape: one
+    shard-local stage whose reader fetches the GROUP MEMBERS too, never
+    the positions, and the merge is still TakeOrderedAndProject."""
+    from katta_spark.xxhash import term_hash
 
     out = search(
         spark, idx, "hotalpha w00011", k=5,
         synonyms={"hotalpha": ["hotbeta"]}, min_should_match=1,
     )
     audit = audit_search_plan(out)
-    assert audit["pushed_term_filter"], audit["plan"]
+    assert audit["single_stage"], audit["plan"]
+    assert audit["n_exchanges"] == 0, audit["plan"]
     assert audit["take_ordered"], audit["plan"]
-    # the member term's hash is in the pushed In(th, ...) set
-    from katta_spark.xxhash import term_hash
-
-    assert str(term_hash("hotbeta")) in audit["plan"]
-    post = [s for s in scan_read_schemas(out) if "doc_ids" in s]
-    assert post and all("positions" not in s for s in post), post
+    # the member term's hash is in the reader's hash set
+    assert term_hash("hotbeta") in set(fetches[-1].terms.th.tolist())
+    assert "positions" not in fetches[-1].cols
 
 
-def test_one_index_phase1_is_broadcast_join(spark, idx):
-    """One index keeps phase 1 inside the query plan (stats rows
-    broadcast-joined into the postings scan): a plain-OR search and
-    search_with_total read neither the driver-side df memo nor the shard
-    stats, the mirror of test_multi_index_stats_memoized."""
+def test_one_index_phase1_runs_no_job(spark, idx):
+    """Phase 1 is a lookup in the handle's term dictionary: on a warm
+    handle a plain-OR search and search_with_total read neither the stats
+    relation nor the shard stats, and each runs exactly one Spark job
+    (the shard-local stage), the mirror of
+    test_multi_index_stats_memoized."""
     from katta_spark.query import IndexHandle, search_with_total
 
     h = IndexHandle.open(spark, idx)
+    search(spark, h, "hotalpha w00011", k=10).collect()  # warm
 
     def _boom(*_a, **_k):
-        raise AssertionError("one-index search collected stats driver-side")
+        raise AssertionError("one-index search read the stats through Spark")
 
     try:
-        h.df_of_terms = _boom
+        h.stats = _boom
         h.shards = _boom
-        hits = search(spark, h, "hotalpha w00011", k=10).collect()
-        tot = search_with_total(spark, h, "hotalpha w00011", k=10).collect()
+        with jobs_started(spark) as n_search:
+            hits = search(spark, h, "hotalpha w00011", k=10).collect()
+        with jobs_started(spark) as n_total:
+            tot = search_with_total(spark, h, "hotalpha w00011", k=10).collect()
     finally:
         # open() memoizes handles per (dir, mtime): drop the instance
         # overrides so later tests sharing this dir see the real methods
-        del h.df_of_terms, h.shards
+        del h.stats, h.shards
+    assert n_search[0] == 1 and n_total[0] == 1, (n_search, n_total)
     assert hits and [r.doc_id for r in tot] == [r.doc_id for r in hits]
 
 

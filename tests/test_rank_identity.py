@@ -132,16 +132,21 @@ def test_wildcard_expansion_cap(spark, index):
     assert qw == {"hotalpha": 1.0}
 
 
-def test_many_term_query_broadcast_path(spark, index, docs):
-    """>_ISIN_MAX_TERMS query terms switch from a pushed In(th) predicate
-    to a broadcast-joined term table; ranking must be identical to the
-    oracle (this also exercises the incremental OR-kernel accumulator on a
-    wide expansion-like query)."""
+def test_many_term_query_single_stage(spark, index, docs):
+    """>_ISIN_MAX_TERMS query terms (where the cogroup paths stop inlining
+    an In(th) predicate) still run as the one shard-local stage, with no
+    exchange or broadcast; ranking must be identical to the oracle (this
+    also exercises the incremental OR-kernel accumulator on a wide
+    expansion-like query)."""
+    from katta_spark.plans import audit_search_plan
     from katta_spark.query import _ISIN_MAX_TERMS
 
     terms = [f"w{i:05d}" for i in range(10, 10 + _ISIN_MAX_TERMS + 10)]
     q = " ".join(terms + ["hotalpha"])
-    got = search(spark, index, q, k=15).collect()
+    hits = search(spark, index, q, k=15)
+    audit = audit_search_plan(hits)
+    assert audit["single_stage"] and audit["n_exchanges"] == 0, audit["plan"]
+    got = hits.collect()
     want = bm25_topk(docs, q, k=15, shard_col="shard_id").collect()
     assert [(r.doc_id, r.shard_id) for r in got] == [
         (r.doc_id, r.shard_id) for r in want
