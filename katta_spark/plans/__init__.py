@@ -2,9 +2,10 @@
 
 The engine adds no custom Catalyst rules (SURVEY.md §4: everything novel
 lives in kernels and orchestration) — this package asserts that the plans
-Catalyst DOES produce have the shapes we designed for: one shard-local
-stage per search, TakeOrderedAndProject for the global top-k merge, no
-corpus-sized shuffles on the query path.
+Catalyst DOES produce have the shapes we designed for: a search result that
+is the client-merged top-k as a local relation (its shard stage ran as one
+job with no SQL plan), one shard-local stage for the lazy unbounded path,
+no corpus-sized shuffles on the query path.
 """
 
 from __future__ import annotations
@@ -28,18 +29,21 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
 def audit_search_plan(hits: DataFrame) -> dict:
     """Inspect a search() result plan for the designed physical shape:
 
-    - phase 2 is one shard-local stage: ``MapInPandas`` over a ``Range``
-      of shard ids, whose tasks read their shard's postings themselves
-      (no postings file scan in the plan);
-    - no exchange of any kind — neither a shard shuffle nor a
-      broadcast of the stats;
-    - the global top-k merge is TakeOrderedAndProject (no full sort).
+    - ``local_result``: the plan is one LocalTableScan — the shard stage
+      already ran inside search() as a plain job, and the driver merged
+      its ≤ k·shards rows (Katta's client merge);
+    - ``single_stage``: for the lazy ``ordered=False`` frame, phase 2 is
+      one shard-local ``MapInPandas`` over a ``Range`` of shard ids;
+    - either way the tasks read their shard's postings themselves (no
+      postings file scan in the plan) and nothing is exchanged —
+      neither a shard shuffle nor a broadcast of the stats.
     """
     plan = physical_plan(hits, mode="simple")
+    body = [ln.strip() for ln in plan.splitlines()[1:] if ln.strip()]
     return {
+        "local_result": len(body) == 1 and body[0].startswith("LocalTableScan"),
         "single_stage": "MapInPandas" in plan and "Range (" in plan,
         "postings_scan": "postings.parquet" in plan,
-        "take_ordered": "TakeOrderedAndProject" in plan,
         "n_exchanges": plan.count("Exchange"),
         "plan": plan,
     }
@@ -66,15 +70,15 @@ def _subtree_lines(plan: str, anchor: str) -> list[str]:
 
 def audit_details_plan(details) -> dict:
     """get_details must broadcast the TOP-K, not the corpus: the plan is a
-    BroadcastHashJoin whose BroadcastExchange subtree contains the search
-    kernel (the shard-local MapInPandas stage, or FlatMapGroupsInPandas
-    for a cogrouped search), and no sort-merge join of the corpus."""
+    BroadcastHashJoin whose BroadcastExchange subtree holds the hits (the
+    LocalTableScan of a merged search, or the FlatMapGroupsInPandas
+    kernel of a cogrouped one), and no sort-merge join of the corpus."""
     plan = physical_plan(details, mode="simple")
     bcast_sub = "\n".join(_subtree_lines(plan, "BroadcastExchange"))
     return {
         "broadcast_join": "BroadcastHashJoin" in plan,
         "no_smj": "SortMergeJoin" not in plan,
-        "topk_is_build_side": "MapInPandas" in bcast_sub
+        "topk_is_build_side": "LocalTableScan" in bcast_sub
         or "FlatMapGroupsInPandas" in bcast_sub,
         "plan": plan,
     }

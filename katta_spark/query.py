@@ -22,6 +22,7 @@ against the unpruned path and the brute-force oracle.
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 from collections.abc import Iterator
@@ -32,6 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 from katta_spark import scoring
 from katta_spark.codec import (
@@ -1033,14 +1035,18 @@ def _local_df(
     workers). A pandas input plans as LocalTableScan: broadcast builds and
     result collects stay JVM/driver-local with no Python tasks.
 
-    ``columns=None`` derives the names from the DDL ``schema`` string
-    (simple ``name type`` lists only — every caller here qualifies).
+    ``rows`` may also be a pandas frame; ``columns=None`` takes the names
+    from the DDL ``schema`` string.
     """
-    if columns is None:
-        columns = [f.strip().split()[0] for f in schema.split(",")]
+    struct = _ddl_schema(schema)
     return spark.createDataFrame(
-        pd.DataFrame(rows, columns=columns), schema
+        pd.DataFrame(rows, columns=columns or struct.names), struct
     )
+
+
+# a DDL parse is a JVM round trip (~4 ms), paid by every search's local
+# result frame: each schema string is parsed once
+_ddl_schema = functools.lru_cache(maxsize=256)(_parse_datatype_string)
 
 
 # Positions arithmetic packs (candidate doc index, adjusted position) into
@@ -2696,15 +2702,14 @@ class _Fetch(NamedTuple):
     avgdl: float
     shard_ids: "list[int] | None"
 
-    def run(
-        self, spark: SparkSession, fn, schema: str, only: "list[int] | None" = None
-    ) -> DataFrame:
-        """Phase 2 as ONE stage with no scan, exchange or broadcast —
-        Katta's node-local IndexSearcher (LuceneServer.java:184-193): task
-        i of ``spark.range`` reads shard i's rows of the query's terms,
-        attaches term/df_g and yields ``fn(pdf)``; a shard without such
-        rows calls nothing. Shard ids are offset per index as in
-        :func:`_union_shards`; ``only`` or ``shard_ids`` keeps a subset."""
+    def _task(self, fn, only: "list[int] | None" = None):
+        """``(task, n)``: ``task(ids)`` runs phase 2 for shard targets
+        ``ids`` of ``range(n)`` — Katta's node-local IndexSearcher
+        (LuceneServer.java:184-193): target i reads its shard's rows of
+        the query's terms, attaches term/df_g and yields ``fn(pdf)``; a
+        shard without such rows calls nothing. Shard ids are offset per
+        index as in :func:`_union_shards`; ``only`` or ``shard_ids`` keeps
+        a subset."""
         keep = only if only is not None else self.shard_ids
         targets, off = [], 0
         for h in self.handles:
@@ -2716,18 +2721,38 @@ class _Fetch(NamedTuple):
             off += h.num_shards
         cols, terms = self.cols, self.terms
 
-        def task(batches):
-            for b in batches:
-                for i in b["id"]:
-                    d, s, g = targets[i]
-                    pdf = terms.attach(_read_shard(d, s, cols, terms.th))
-                    if len(pdf):
-                        out = fn(pdf.assign(shard_id=np.int32(g)))
-                        if len(out):
-                            yield out
+        def task(ids):
+            for i in ids:
+                d, s, g = targets[i]
+                pdf = terms.attach(_read_shard(d, s, cols, terms.th))
+                if len(pdf):
+                    out = fn(pdf.assign(shard_id=np.int32(g)))
+                    if len(out):
+                        yield out
 
-        n = len(targets)
-        return spark.range(0, n, 1, max(n, 1)).mapInPandas(task, schema)
+        return task, len(targets)
+
+    def run(
+        self, spark: SparkSession, fn, schema: str, only: "list[int] | None" = None
+    ) -> pd.DataFrame:
+        """Phase 2 as ONE eager RDD job (no SQL plan, scan, exchange or
+        broadcast) whose per-shard frames concatenate on the driver; for
+        kernels that emit at most k rows (or a count) per shard."""
+        task, n = self._task(fn, only)
+        sc = spark.sparkContext
+        parts = sc.parallelize(range(n), n).mapPartitions(task).collect() if n else []
+        return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
+            columns=_ddl_schema(schema).names
+        )
+
+    def frame(self, spark: SparkSession, fn, schema: str) -> DataFrame:
+        """Phase 2 as a LAZY ``mapInPandas`` stage over a ``Range`` of shard
+        targets, for unbounded callers: no match reaches the driver."""
+        task, n = self._task(fn)
+        return spark.range(0, n, 1, max(n, 1)).mapInPandas(
+            lambda batches: (out for b in batches for out in task(b["id"])),
+            schema,
+        )
 
     def scan(self, spark: SparkSession) -> DataFrame:
         """The query's postings rows as a Spark scan, for the paths that
@@ -2867,10 +2892,14 @@ def search(
     no longer consulted (v8 indexes store positions). ``mode`` must be
     'or' when boolean operators are present.
 
-    Plan at scale: one stage of per-shard tasks, each reading its shard's
+    Plan at scale: one job of per-shard tasks, each reading its shard's
     rows of the query's terms (row-group skipping via the term-sorted
-    layout) into the kernel → ≤ k·shards rows → TakeOrderedAndProject.
-    Nothing is shuffled or broadcast (:meth:`_Fetch.run`).
+    layout) into the kernel → ≤ k·shards rows → Katta's client merge on
+    the driver. Nothing is shuffled or broadcast
+    and no SQL plan is built (:meth:`_Fetch.run`). So the call is EAGER:
+    the job runs before it returns and the result is a local frame.
+    ``ordered=False`` (every match, unsorted, for callers that pass a
+    huge k) and ``filter_df`` searches stay lazy Spark plans.
 
     Filtered search (Katta's Filter, ILuceneServer.java:84-101, applied at
     LuceneServer.java:334-345: restricts the matched set WITHOUT changing
@@ -2950,16 +2979,16 @@ def search(
             )
         prune = False
     # at most every doc of the searched corpus can rank: a larger k would
-    # only size Spark's takeOrdered buffers (2·k slots per task)
+    # only size the kernels' top-k buffers
     k_eff = min(k + offset, sum(h.n_docs for h in handles))
     # tombstoned (deleted) docs are denied inside the kernels before any
     # cap — Lucene's liveDocs skip at collection time; df/N/avgdl stay
     # STALE until expunge, exactly like Lucene pre-merge
     deny = _deny_handle_multi(spark, handles)
     sql_t = "float" if score_dtype == "float32" else "double"
-    empty_schema = f"doc_id long, shard_id int, score {sql_t}"
+    result_schema = f"doc_id long, shard_id int, score {sql_t}"
     if _with_total:
-        empty_schema += ", shard_total long"
+        result_schema += ", total_hits long, shards_hit int, shards_total int"
     if synonyms and shard_ids is not None:
         raise ValueError(
             "synonyms resolve the blended group df from GLOBAL stats; "
@@ -2972,7 +3001,7 @@ def search(
     if not c.qweights or k <= 0:
         if _dv_agg is not None:
             return _local_df(spark, [], None, _dv_agg[3])
-        return _local_df(spark, [], None, empty_schema)
+        return _local_df(spark, [], None, result_schema)
     # only phrase queries fetch the positions blobs
     kcols = _KERNEL_COLS + (["positions"] if c.phrases else [])
     fetch = _fetch_postings(spark, handles, c.terms, kcols, shard_ids)
@@ -3106,13 +3135,16 @@ def search(
             .applyInPandas(dv_cog, out_schema + ", " + extra_schema)
         )
         return hits.select("doc_id", "shard_id", "score", *extra_cols)
+    sel = ["doc_id", "shard_id", "score"] + (["shard_total"] if _with_total else [])
     if filter_df is None:
-        hits = fetch.run(
-            spark,
-            kernel if deny is None
-            else lambda pdf: kernel(pdf, DocFilter(None, deny.value)),
-            out_schema,
+        fn = kernel if deny is None else (
+            lambda pdf: kernel(pdf, DocFilter(None, deny.value))
         )
+        if not ordered:
+            # unbounded callers (k up to 2**31-1) get a lazy frame: their
+            # matches never reach the driver
+            return fetch.frame(spark, fn, out_schema).select(*sel)
+        pdf = fetch.run(spark, fn, out_schema)
     else:
         def cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             if not len(left):
@@ -3124,33 +3156,34 @@ def search(
             postings.groupBy("shard_id")
             .cogroup(fdf.groupBy("shard_id"))
             .applyInPandas(cog, out_schema)
+            .select(*sel)
         )
-    sel = ["doc_id", "shard_id", "score"] + (["shard_total"] if _with_total else [])
-    hits = hits.select(*sel)
-    if not ordered:
-        # Caller does its own ordering (e.g. field sort) — returning the
-        # per-shard union unsorted avoids a global score sort that would
-        # funnel every matching doc through one partition.
-        return hits
-    out = hits.orderBy(
-        F.col("score").desc(), F.col("doc_id").asc(), F.col("shard_id").desc()
-    ).limit(k_eff)
-    if offset:
-        # drop the first ``offset`` rows of the merged ranking — the
-        # window runs over ≤ offset+k rows (the Katta client-merge
-        # analog), never corpus-sized
-        from pyspark.sql import Window
-
-        w = Window.orderBy(
-            F.col("score").desc(), F.col("doc_id").asc(),
-            F.col("shard_id").desc(),
+        if not ordered:
+            # Caller does its own ordering (e.g. field sort) — returning the
+            # per-shard union unsorted avoids a global score sort that would
+            # funnel every matching doc through one partition.
+            return hits
+        if not _with_total:
+            # the caller's filter frame keeps its search a lazy plan
+            return hits.orderBy(
+                F.col("score").desc(), F.col("doc_id").asc(),
+                F.col("shard_id").desc(),
+            ).limit(k_eff).offset(offset)
+        pdf = hits.toPandas()
+    # Katta's client merge (LuceneClient.java:180-198) of the ≤ k·shards
+    # per-shard hits in the reference tie-break; totals sum every answering
+    # shard's match count first (Hits.java:34-51), whatever the page
+    pdf = pdf.sort_values(
+        ["score", "doc_id", "shard_id"], ascending=[False, True, False]
+    )
+    top = pdf.iloc[offset:k_eff]
+    if _with_total:
+        per_shard = pdf.groupby("shard_id")["shard_total"].first()
+        top = top.assign(
+            total_hits=int(per_shard.sum()), shards_hit=len(per_shard),
+            shards_total=sum(h.num_shards for h in handles),
         )
-        out = (
-            out.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") > offset)
-            .drop("__rn")
-        )
-    return out
+    return _local_df(spark, top, None, result_schema)
 
 
 # Katta's multi-index search is search() over a list of indexes; the
@@ -3236,42 +3269,11 @@ def search_with_total(
     all-or-nothing so "searched" coverage is always full — what varies,
     and is reported, is how many shards contributed matches).
     """
-    if offset < 0:
-        raise ValueError(f"offset must be >= 0, got {offset}")
-    sql_t = "float" if score_dtype == "float32" else "double"
-    schema = (
-        f"doc_id long, shard_id int, score {sql_t}, total_hits long, "
-        "shards_hit int, shards_total int"
-    )
-    handles = _open_handles(spark, index)
-    rows = search(
-        spark, handles, query, k=k + offset, mode=mode,
-        score_dtype=score_dtype,
-        min_should_match=min_should_match, synonyms=synonyms,
-        prune=False, ordered=False,
-        filter_df=filter_df, filter_doc_col=filter_doc_col,
+    return search(
+        spark, index, query, k=k, mode=mode, score_dtype=score_dtype,
+        min_should_match=min_should_match, synonyms=synonyms, prune=False,
+        filter_df=filter_df, filter_doc_col=filter_doc_col, offset=offset,
         _with_total=True,
-    ).collect()
-    if not rows:
-        return _local_df(spark, [], None, schema)
-    per_shard = {r.shard_id: int(r.shard_total) for r in rows}
-    total = sum(per_shard.values())
-    shards_total = sum(h.num_shards for h in handles)
-    # paging slices the client merge (totals unaffected — Hits reports
-    # the full count whatever page is displayed)
-    top = sorted(rows, key=lambda r: (-r.score, r.doc_id, -r.shard_id))[
-        offset:offset + k
-    ]
-    return _local_df(
-        spark,
-        [
-            (r.doc_id, r.shard_id, float(r.score), total,
-             len(per_shard), shards_total)
-            for r in top
-        ],
-        ["doc_id", "shard_id", "score", "total_hits", "shards_hit",
-         "shards_total"],
-        schema,
     )
 
 
@@ -3949,14 +3951,11 @@ def search_batch(
 
     # the ≤ |queries|·k rows per shard merge driver-side, per query, in
     # the reference tie-break (Katta's client merge)
-    hits = fetch.run(spark, kernel, out_schema).toPandas()
-    hits = hits.sort_values(
+    hits = fetch.run(spark, kernel, out_schema).sort_values(
         ["query_id", "score", "doc_id", "shard_id"],
         ascending=[True, False, True, False],
     )
-    return spark.createDataFrame(
-        hits.groupby("query_id").head(k).reset_index(drop=True), out_schema
-    )
+    return _local_df(spark, hits.groupby("query_id").head(k), None, out_schema)
 
 
 def _live_tombstone_count(
@@ -4072,7 +4071,7 @@ def count_matches(
         return pd.DataFrame({"n": [int(np.unique(np.concatenate(docs)).size)]})
 
     # a doc lives in one shard: per-shard counts sum on the driver
-    return sum(r["n"] for r in fetch.run(spark, kernel, "n long").collect())
+    return int(fetch.run(spark, kernel, "n long")["n"].sum())
 
 
 def facet_counts(
@@ -4899,7 +4898,7 @@ def explain_score(
         # under pmod sharding only the ONE shard that can hold the doc
         only=[target % index.num_shards]
         if index.sharding == "pmod_doc_id" else None,
-    ).toPandas()
+    )
     tf_of = {}
     dl_of = {}
     phrase_ok: dict[str, bool] = {}

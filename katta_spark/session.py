@@ -7,11 +7,36 @@ decisions (partition counts, broadcast sizes, AQE) are made as if running on
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Spark refuses a spark.python.unix.domain.socket.dir longer than this:
+# each socket is "<dir>/.<uuid4>.sock", 43 more characters, and Linux
+# allows 107.
+_SOCKET_DIR_MAX = 61
+
+
+def _socket_dir() -> str:
+    """A fresh private directory for the session's Unix-domain sockets,
+    removed (with any socket a killed process left behind) at exit. It
+    lives in the temp dir when it fits Spark's limit there, else in
+    ``/tmp``: a long ``TMPDIR`` (a deep checkout's scratch dir) would
+    otherwise fail the session's first Python task, or SparkContext
+    itself with ``AF_UNIX path too long``."""
+    base = tempfile.gettempdir()
+    # mkdtemp names are the prefix plus 8 random characters
+    if len(os.path.join(base, "katta-uds-xxxxxxxx")) > _SOCKET_DIR_MAX:
+        base = "/tmp"
+    d = tempfile.mkdtemp(prefix="katta-uds-", dir=base)
+    atexit.register(shutil.rmtree, d, True)
+    return d
 
 
 def get_spark(
@@ -30,6 +55,14 @@ def get_spark(
     that re-reads an archive only when it changed, see that module), and
     the engine's root is appended to ``spark.executorEnv.PYTHONPATH`` so
     the workers can import it from any working directory.
+
+    The JVM talks to Python over Unix-domain sockets (Spark 4.1's
+    ``spark.python.unix.domain.socket.enabled``), in a private directory
+    removed at exit (:func:`_socket_dir`). Every worker environment
+    carries ``SPARK_SIMPLIFIED_TRACEBACK=1``, which Spark's SQL runners
+    add to theirs: Spark keys its Python worker pools on the environment,
+    so RDD jobs (a search's shard stage) and pandas UDFs share one pool
+    instead of each forking its own.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -66,7 +99,18 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    conf = {"spark.python.daemon.module": "katta_spark.daemon", **(extra_conf or {})}
+    conf = {
+        "spark.python.daemon.module": "katta_spark.daemon",
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK": "1",
+        **(extra_conf or {}),
+    }
+    if (
+        conf["spark.python.unix.domain.socket.enabled"].lower() == "true"
+        and "spark.python.unix.domain.socket.dir" not in conf
+        and SparkContext._active_spark_context is None
+    ):
+        conf["spark.python.unix.domain.socket.dir"] = _socket_dir()
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (conf.get("spark.executorEnv.PYTHONPATH"), _ROOT) if p
     )

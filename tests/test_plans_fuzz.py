@@ -1,8 +1,9 @@
 """Physical-plan audits + seeded rank-identity fuzzing.
 
 The plan audit enforces the scale design (SURVEY.md §4): one shard-local
-stage per search with no exchange, the term filter and column list in that
-stage's reader, TakeOrderedAndProject global merge. The fuzz test hammers
+job per search with no SQL plan and no exchange, the term filter and column
+list in that job's reader, and the client merge on the driver, so a search
+returns a local relation. The fuzz test hammers
 the engine-vs-oracle equivalence with random queries beyond the fixed
 reference set.
 """
@@ -58,21 +59,28 @@ def fetches(monkeypatch):
 
 
 def test_search_plan_shape(spark, idx):
-    hits = search(spark, idx, "hotalpha w00011", k=10)
+    search(spark, idx, "hotalpha w00011", k=10)  # warm the handle
+    with jobs_started(spark) as n_search:
+        hits = search(spark, idx, "hotalpha w00011", k=10)
     audit = audit_search_plan(hits)
-    # one shard-local stage reads the postings itself (no file scan),
-    # nothing is shuffled or broadcast, and the top-k merge is
-    # TakeOrderedAndProject (not a full sort exchange)
-    assert audit["single_stage"], audit["plan"][:2000]
+    # the shard stage ran inside search() as one job that reads the
+    # postings itself (no file scan); the driver merged its rows, so the
+    # result is a local relation: nothing shuffled, broadcast or sorted,
+    # and collecting it starts no job
+    assert n_search[0] == 1, n_search
+    assert audit["local_result"], audit["plan"][:2000]
     assert not audit["postings_scan"], audit["plan"][:2000]
-    assert audit["take_ordered"], audit["plan"][:2000]
     assert audit["n_exchanges"] == 0, audit["plan"][:2000]
+    with jobs_started(spark) as n_collect:
+        assert len(hits.collect()) == 10
+    assert n_collect[0] == 0, n_collect
 
 
 def test_details_plan_broadcasts_topk(spark, idx, tiny_transcripts):
-    """J2 at scale: the broadcast (build) side must be the tiny top-k,
-    never the corpus (a left join hinted on its preserved side silently
-    degrades to a corpus-wide sort-merge join)."""
+    """J2 at scale: the broadcast (build) side must be the tiny top-k (the
+    merged hits' LocalTableScan), never the corpus (a left join hinted on
+    its preserved side silently degrades to a corpus-wide sort-merge
+    join)."""
     hits = search(spark, idx, "hotalpha w00011", k=5)
     details = get_details(spark, hits, tiny_transcripts, fields=["role", "text"])
     audit = audit_details_plan(details)
@@ -137,8 +145,8 @@ def test_rank_identity_fuzz(spark, idx, docs):
 
 
 def test_broad_expansion_is_single_stage(spark, idx, docs):
-    """A ~990-term wildcard runs through the same single stage as a
-    two-term query: the term hashes ride in the stage's closure, so no
+    """A ~990-term wildcard runs through the same single shard job as a
+    two-term query: the term hashes ride in the job's closure, so no
     thousand-literal predicate lands in the plan and nothing is
     broadcast or shuffled; the result must still rank-match the
     oracle."""
@@ -147,9 +155,11 @@ def test_broad_expansion_is_single_stage(spark, idx, docs):
     ix = IndexHandle.open(spark, idx)
     expanded = expand_wildcards(spark, ix, "w00*")
     assert len(expanded) > 64  # past the scan paths' In(th, ...) limit
-    hits = search(spark, idx, "w00*", k=10)
+    with jobs_started(spark) as n_search:
+        hits = search(spark, idx, "w00*", k=10)
     audit = audit_search_plan(hits)
-    assert audit["single_stage"], audit["plan"][:2000]
+    assert n_search[0] == 1, n_search
+    assert audit["local_result"], audit["plan"][:2000]
     assert audit["n_exchanges"] == 0, audit["plan"][:2000]
     # no giant inlined literal list in the plan
     assert audit["plan"].count(",") < 2000, "term literals leaked into the plan"
@@ -180,18 +190,18 @@ def test_positions_column_pruned_unless_phrase(spark, idx, fetches):
 
 def test_msm_synonym_plan_shape(spark, idx, fetches):
     """min_should_match / synonym queries keep the designed shape: one
-    shard-local stage whose reader fetches the GROUP MEMBERS too, never
-    the positions, and the merge is still TakeOrderedAndProject."""
+    shard-local job whose reader fetches the GROUP MEMBERS too, never
+    the positions, and the driver-merged result is a local relation."""
     from katta_spark.xxhash import term_hash
 
-    out = search(
-        spark, idx, "hotalpha w00011", k=5,
-        synonyms={"hotalpha": ["hotbeta"]}, min_should_match=1,
-    )
+    kw = dict(synonyms={"hotalpha": ["hotbeta"]}, min_should_match=1)
+    search(spark, idx, "hotalpha w00011", k=5, **kw)  # warm the handle
+    with jobs_started(spark) as n_search:
+        out = search(spark, idx, "hotalpha w00011", k=5, **kw)
     audit = audit_search_plan(out)
-    assert audit["single_stage"], audit["plan"]
+    assert n_search[0] == 1, n_search
+    assert audit["local_result"], audit["plan"]
     assert audit["n_exchanges"] == 0, audit["plan"]
-    assert audit["take_ordered"], audit["plan"]
     # the member term's hash is in the reader's hash set
     assert term_hash("hotbeta") in set(fetches[-1].terms.th.tolist())
     assert "positions" not in fetches[-1].cols
@@ -251,21 +261,22 @@ def test_dv_sorted_plan_shape(spark, tiny_transcripts, tmp_path_factory):
     assert dv_scans and all("positions" not in s for s in dv_scans)
 
 
-def test_huge_k_is_clamped_to_corpus_size(spark, idx):
-    """No more than the corpus's n_docs docs can rank, so search plans
-    its global merge with k + offset clamped to n_docs: a huge k never
-    sizes Spark's takeOrdered buffers (2·k slots per task). Checked on
-    the plan without running the query; the hits equal k = n_docs."""
-    import re
-
-    from katta_spark.plans import physical_plan
+def test_huge_k_is_clamped_to_corpus_size(spark, idx, monkeypatch):
+    """No more than the corpus's n_docs docs can rank, so search builds
+    its shard kernels with k + offset clamped to n_docs: a huge k never
+    sizes their top-k buffers. The hits equal k = n_docs."""
+    import katta_spark.query as ksq
     from katta_spark.query import IndexHandle
 
+    ks = []
+    factory = ksq.KERNEL_MODES["or"]
+
+    def record(qw, n, a, k, *rest):
+        ks.append(k)
+        return factory(qw, n, a, k, *rest)
+
+    monkeypatch.setitem(ksq.KERNEL_MODES, "or", record)
     h = IndexHandle.open(spark, idx)
-    huge = search(spark, h, "hotalpha", k=10**9)
-    plan = physical_plan(huge, mode="simple")
-    limits = [
-        int(n) for n in re.findall(r"TakeOrderedAndProject\(limit=(\d+)", plan)
-    ]
-    assert limits and max(limits) <= h.n_docs, plan[:2000]
-    assert huge.collect() == search(spark, h, "hotalpha", k=h.n_docs).collect()
+    huge = search(spark, h, "hotalpha", k=10**9).collect()
+    assert ks and max(ks) <= h.n_docs, ks
+    assert huge == search(spark, h, "hotalpha", k=h.n_docs).collect()

@@ -134,18 +134,21 @@ def test_wildcard_expansion_cap(spark, index):
 
 def test_many_term_query_single_stage(spark, index, docs):
     """>_ISIN_MAX_TERMS query terms (where the cogroup paths stop inlining
-    an In(th) predicate) still run as the one shard-local stage, with no
-    exchange or broadcast; ranking must be identical to the oracle (this
-    also exercises the incremental OR-kernel accumulator on a wide
-    expansion-like query)."""
-    from katta_spark.plans import audit_search_plan
+    an In(th) predicate) still run as the one shard-local job, with no
+    exchange or broadcast, merged into a local result; ranking must be
+    identical to the oracle (this also exercises the incremental OR-kernel
+    accumulator on a wide expansion-like query)."""
+    from katta_spark.plans import audit_search_plan, jobs_started
     from katta_spark.query import _ISIN_MAX_TERMS
 
     terms = [f"w{i:05d}" for i in range(10, 10 + _ISIN_MAX_TERMS + 10)]
     q = " ".join(terms + ["hotalpha"])
-    hits = search(spark, index, q, k=15)
+    search(spark, index, q, k=15)  # warm the handle
+    with jobs_started(spark) as n_search:
+        hits = search(spark, index, q, k=15)
     audit = audit_search_plan(hits)
-    assert audit["single_stage"] and audit["n_exchanges"] == 0, audit["plan"]
+    assert n_search[0] == 1, n_search
+    assert audit["local_result"] and audit["n_exchanges"] == 0, audit["plan"]
     got = hits.collect()
     want = bm25_topk(docs, q, k=15, shard_col="shard_id").collect()
     assert [(r.doc_id, r.shard_id) for r in got] == [

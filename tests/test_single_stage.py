@@ -2,9 +2,11 @@
 shard-local single stage.
 
 Phase 1 (df, term strings, prefix and range rewrites) is a lookup in the
-handle's term dictionary, and phase 2 is one ``mapInPandas`` stage whose
-tasks read their own shard's postings. So on a warm handle every scoring
-entry point over these shapes runs exactly one Spark job. The dictionary
+handle's term dictionary, and phase 2 is one plain RDD job whose tasks read
+their own shard's postings, in the Python workers the pandas UDFs use. So
+on a warm handle every scoring entry point over these shapes runs exactly
+one Spark job; only the unbounded ``ordered=False`` search stays a lazy
+``mapInPandas`` frame. The dictionary
 must give the same results whether it is held in memory or read per query
 (past ``termdict.MAX_RESIDENT_TERMS``), and the paths that keep a Spark
 scan of the postings (filters and docvalue cogroups) must not depend on
@@ -14,14 +16,20 @@ how that scan is split.
 from __future__ import annotations
 
 import os
+import shutil
+import time
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import katta_spark.query as ksq
 import katta_spark.termdict as termdict
 from katta_spark.build import build_index
+from katta_spark.delete import delete_by_query
 from katta_spark.oracle import with_doc_ids
-from katta_spark.plans import jobs_started
+from katta_spark.plans import audit_search_plan, jobs_started
 from katta_spark.query import (
     IndexHandle,
     _read_shard,
@@ -247,3 +255,89 @@ def test_unreadable_postings_table_raises(spark, sidx, tmp_path):
     shutil.rmtree(os.path.join(d, "postings.parquet"))
     with pytest.raises(Exception, match="is not readable here"):
         search(spark, d, "hotalpha w00011", k=5).collect()
+
+
+def _children(ppid: int) -> set[int]:
+    """Pids of the live processes whose parent is ``ppid``."""
+    out = set()
+    for p in os.listdir("/proc"):
+        if not p.isdigit():
+            continue
+        try:
+            with open(f"/proc/{p}/stat") as fh:
+                stat = fh.read()
+        except OSError:
+            continue
+        # fields after "(comm)": state, ppid, ...
+        if int(stat.rsplit(")", 1)[1].split()[1]) == ppid:
+            out.add(int(p))
+    return out
+
+
+def test_search_shares_the_worker_pool(spark, sidx, monkeypatch):
+    """A search's shard stage is an RDD job, and it must run in the Python
+    workers the pandas UDFs already started: not in a second pool (Spark
+    keys pools on the worker environment, to which its SQL runners add
+    SPARK_SIMPLIFIED_TRACEBACK) and not in a worker forked for the job (a
+    task that leaves its input undrained is not reused). A registered
+    kernel mode reports the pid and parent pid of each shard task."""
+
+    def pid_kernels(qw, n, a, k, prune, dt, wt):
+        def kernel(pdf):
+            return pd.DataFrame({
+                "shard_id": [np.int32(pdf["shard_id"].iloc[0])],
+                "doc_id": [os.getpid()],
+                "score": np.float32([os.getppid()]),
+            })
+
+        return kernel
+
+    monkeypatch.setitem(ksq.KERNEL_MODES, "pid", pid_kernels)
+
+    def pids(batches):
+        time.sleep(0.5)  # hold the worker: every task starts its own
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()], "ppid": [os.getppid()]})
+
+    n = spark.sparkContext.defaultParallelism
+    udf = spark.range(0, n, 1, n).mapInPandas(pids, "pid long, ppid long")
+    daemons = {r.ppid for r in udf.collect()}
+    assert len(daemons) == 1, daemons
+    daemon = next(iter(daemons))
+    h = IndexHandle.open(spark, sidx)
+    used = set()
+    for _ in range(2):
+        pool = _children(daemon)
+        hits = search(spark, h, "hotalpha", k=10, mode="pid").collect()
+        assert len(hits) == h.num_shards, hits
+        assert {int(r.score) for r in hits} == daemons, hits
+        assert {r.doc_id for r in hits} <= pool, (hits, pool)
+        used |= {r.doc_id for r in hits}
+    time.sleep(0.5)
+    # a worker that is not reused exits after its task
+    assert used <= _children(daemon), used
+
+
+def test_unbounded_search_is_lazy(spark, sidx, tmp_path):
+    """``ordered=False`` with a huge k (delete_by_query, the search_sorted
+    fallback) stays a lazy one-stage frame: calling it starts no job, so
+    no corpus-sized result reaches the driver. delete_by_query over it
+    still tombstones exactly the matched docs."""
+    h = IndexHandle.open(spark, sidx)
+    with jobs_started(spark) as n:
+        lazy = search(spark, h, "hotalpha", k=2**31 - 1, ordered=False)
+    assert n[0] == 0, n
+    audit = audit_search_plan(lazy)
+    assert audit["single_stage"] and not audit["local_result"], audit["plan"]
+    assert "MapInPandas" in audit["plan"], audit["plan"]
+    n_match = count_matches(spark, h, "hotalpha")
+    assert lazy.count() == n_match > 0
+
+    d = str(tmp_path / "idx")
+    shutil.copytree(sidx, d)
+    assert delete_by_query(spark, d, "hotalpha") == n_match
+    assert count_matches(spark, d, "hotalpha") == 0
+    assert count_matches(spark, d, "hotbeta") == count_matches(
+        spark, h, "hotbeta -hotalpha"
+    )

@@ -173,3 +173,75 @@ def test_search_from_any_working_directory(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "HITS 5" in out.stdout
+
+
+def test_long_tmpdir_falls_back_to_short_socket_dir(spark, tmp_path):
+    """The JVM reaches the workers over Unix-domain sockets named
+    ``<dir>/.<uuid4>.sock``, at most 107 characters. A session whose temp
+    dir is too long for that (a deep checkout's scratch dir) still runs a
+    search, from a short private socket directory that is gone once the
+    process exits."""
+    from katta_spark.build import build_index
+    from katta_spark.synth import synth_transcripts
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, synth_transcripts(spark, 200, seed=7), idx, num_shards=2)
+    long_tmp = str(tmp_path / "t")
+    long_tmp += "x" * (90 - len(long_tmp))
+    os.makedirs(long_tmp)
+    assert len(long_tmp) == 90
+    script = textwrap.dedent(
+        f"""
+        import os, sys
+        sys.path.insert(0, {ROOT!r})
+        from katta_spark.query import search
+        from katta_spark.session import get_spark
+
+        tmp = os.environ["TMPDIR"]
+        spark = get_spark(
+            "long_tmpdir", master="local[2]", shuffle_partitions=2,
+            extra_conf={{
+                "spark.local.dir": tmp,
+                "spark.driver.extraJavaOptions": "-Djava.io.tmpdir=" + tmp,
+            }},
+        )
+        print("SOCKDIR", spark.conf.get("spark.python.unix.domain.socket.dir"))
+        print("HITS", len(search(spark, {idx!r}, "hotalpha", k=5).collect()))
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=long_tmp)
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "HITS 5" in out.stdout
+    sock_dir = out.stdout.split("SOCKDIR ", 1)[1].split()[0]
+    assert len(sock_dir) <= 61, sock_dir
+    assert not os.path.exists(sock_dir)
+    left = [f for _, _, fs in os.walk(long_tmp) for f in fs if f.endswith(".sock")]
+    assert not left, left
+
+
+def test_socket_dir_within_spark_limit(tmp_path_factory, monkeypatch):
+    """Spark refuses a socket directory longer than 61 characters, so the
+    private one is made in the temp dir only while it fits there (a temp
+    dir of at most 42 characters), else in /tmp."""
+    import tempfile
+
+    from katta_spark import session
+
+    root = str(tmp_path_factory.getbasetemp())
+    if len(root) > 40:
+        pytest.skip(f"pytest's temp root {root!r} is too long to probe")
+    for n, fits in ((42, True), (43, False)):
+        base = os.path.join(root, "s")
+        base += "x" * (n - len(base))
+        os.makedirs(base, exist_ok=True)
+        monkeypatch.setattr(tempfile, "tempdir", base)
+        d = session._socket_dir()
+        assert len(d) <= 61 and os.path.isdir(d), d
+        assert os.path.dirname(d) == (base if fits else "/tmp"), d
+        os.rmdir(d)
