@@ -1528,6 +1528,21 @@ def _eval_tree_scores(
     return universe[m], s[m], int(m.sum())
 
 
+def _impact_order(wts: np.ndarray, tf_max: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(order, bounds) of a shard's scoring terms — MaxScore ordering:
+    each term's score upper bound qweight × idf × tf_norm(max_tf, min_dl)
+    (``wts`` = qweight × idf and ``tf_max`` = tf_norm(max_tf, min_dl) per
+    term), and the processing order that sorts the bounds descending.
+    The flat and clause kernels both sum a doc's per-term contributions
+    in this order, so they score it bit-identically (search_after
+    compares scores exactly). Ties fall as in a descending pandas
+    ``sort_values`` (an argsort of the reversed array, reversed), which
+    keeps scores bit-identical to the kernels that sorted with pandas."""
+    bounds = wts * tf_max
+    order = (bounds.size - 1 - bounds[::-1].argsort())[::-1]
+    return order, bounds[order]
+
+
 def _make_score_kernel(
     qweights: dict[str, float],
     n_docs: float,
@@ -1536,14 +1551,8 @@ def _make_score_kernel(
     prune: bool,
     score_dtype: str = "float32",
     with_total: bool = False,
-    must_terms: frozenset[str] = frozenset(),
-    not_terms: frozenset[str] = frozenset(),
-    phrases: tuple = (),
-    cursor: tuple | None = None,
-    min_should: int = 0,
-    syn_groups: tuple = (),
 ):
-    """Per-shard scoring kernel (applyInPandas over shard_id groups).
+    """Per-shard scoring kernel of a flat OR query (``KERNEL_MODES["or"]``).
 
     Input: the ≤len(query) postings rows of one shard, plus an optional
     per-shard array of allowed docIDs (the cogrouped filter — Katta's
@@ -1553,53 +1562,8 @@ def _make_score_kernel(
     (LuceneServer.java:664-679) — and, when ``with_total``, the shard's
     exact match count (totalHits partial, Hits.java:34-51).
 
-    Boolean clauses (parse_bool_query): ``must_terms`` docs must contain
-    every listed term (they score too — Lucene MUST clauses score);
-    ``not_terms`` docs are excluded and never score. Docs live wholly in
-    one shard, so both masks are exact per shard. Block pruning is forced
-    off with clauses present (the θ bound is over UNMASKED scores).
-
-    ``phrases`` — list of (tokens, slop) — are verified ENTIRELY in-index
-    against the positions blobs (Lucene executes PhraseQuery per shard
-    with no stored-text access, LuceneServer.java:682): candidates are
-    the must-intersection (every phrase token is a MUST), then
-    _phrase_match_mask applies Lucene's sloppy-span semantics. Surviving
-    docs keep their BM25 scores unchanged.
-
-    ``min_should`` — Lucene BooleanQuery.setMinimumNumberShouldMatch: a
-    doc matches only if it contains at least this many DISTINCT optional
-    (SHOULD) clauses; MUST clauses never count toward the minimum, and a
-    synonym group counts as ONE clause (it matches when any member does).
-    If the minimum exceeds the number of optional clauses the query
-    matches nothing (Lucene rewrites that case to MatchNoDocsQuery).
-
-    ``syn_groups`` — Lucene SynonymQuery blended scoring (what
-    QueryParser emits when the analyzer chain holds a SynonymGraphFilter):
-    each entry is ``(weight, group_df, members)``; the group scores as a
-    SINGLE pseudo-term with tf = Σ member tfs per doc and df = max member
-    GLOBAL df (SynonymQuery.java uses the max docFreq across terms), so
-    a doc matching two synonyms is scored like one term seen twice, not
-    twice over. group_df is resolved from global stats driver-side so
-    every shard scores with the same idf."""
-    # a searchAfter cursor masks candidates AFTER accumulation, so the
-    # θ prune bound (computed over masked candidates) cannot drive block
-    # skipping — prune off, like filters disable tree pruning
-    prune = (
-        prune and not must_terms and not not_terms and not phrases
-        and cursor is None and min_should <= 0 and not syn_groups
-    )
-    if cursor is not None and with_total:
-        raise ValueError("searchAfter does not combine with totals")
-    phrase_terms = {t for toks, _ in phrases for t in toks}
-    syn_members = {m for _, _, members in syn_groups for m in members}
-    # optional (SHOULD) clauses = scoring terms that are not MUST, minus
-    # synonym members (each group is ONE clause), plus the groups
-    should_terms = (
-        frozenset(qweights) - must_terms - phrase_terms - syn_members
-        if min_should > 0
-        else frozenset()
-    )
-    n_optional = len(should_terms) + len(syn_groups)
+    Clause forms (MUST/MUST_NOT, phrases, min_should_match, synonyms) and
+    cursor paging run in :func:`_make_clause_kernel`."""
 
     def kernel(
         pdf: pd.DataFrame, filter_docs: np.ndarray | None = None
@@ -1607,44 +1571,18 @@ def _make_score_kernel(
         if not len(pdf):
             return _empty_hits(score_dtype, with_total)
         shard_id = int(pdf["shard_id"].iloc[0])
-        excl_parts: list[np.ndarray] = []
-        if not_terms:
-            neg = pdf[pdf["term"].isin(not_terms)]
-            for row in neg.itertuples(index=False):
-                excl_parts.append(
-                    decode_posting_list(row.doc_ids, row.tfs, row.doclens)[0]
-                )
-            pdf = pdf[~pdf["term"].isin(not_terms)]
-            if not len(pdf):
-                return _empty_hits(score_dtype, with_total)
-        must_seen: dict[str, np.ndarray] = {}
-        phrase_data: dict[str, tuple] = {}
-        # synonym-member postings stashed for blended group scoring:
-        # term -> (docs, tfs, doclens), filter already applied
-        syn_data: dict[str, tuple] = {}
-        # per-optional-clause matched-doc arrays for min_should counting
-        should_seen: dict[str, np.ndarray] = {}
-        group_seen: list[np.ndarray] = []
         # idf from the per-row GLOBAL df (attached from the query's term
-        # dictionary slice in the task — no phase-1 job or join);
-        # then row-level impact bound from raw (max_tf, min_dl), and terms
-        # processed in descending max-impact order so the prune threshold
-        # grows as fast as possible (MaxScore ordering).
-        idf_col = scoring.idf_np(pdf["df_g"].to_numpy(np.float64), n_docs)
-        pdf = pdf.assign(
-            idf_row=idf_col,
-            _qimpact=[
-                qweights.get(t, 0.0)
-                * iv
-                * float(scoring.tf_norm_np(np.array([mt]), np.array([md]), avgdl)[0])
-                for t, iv, mt, md in zip(
-                    pdf["term"], idf_col, pdf["max_tf"], pdf["min_dl"]
-                )
-            ],
-        ).sort_values("_qimpact", ascending=False)
+        # dictionary slice in the task — no phase-1 job or join); terms
+        # run in descending impact-bound order so the prune threshold
+        # grows as fast as possible
+        wts = np.array([qweights[t] for t in pdf["term"]]) * scoring.idf_np(
+            pdf["df_g"].to_numpy(np.float64), n_docs
+        )
+        order, qimps = _impact_order(wts, scoring.tf_norm_np(
+            pdf["max_tf"].to_numpy(), pdf["min_dl"].to_numpy(), avgdl
+        ))
         # suffix[i] = Σ qimpact of terms AFTER position i — upper bound of
         # what a doc can still gain from the remaining (lower-impact) terms.
-        qimps = pdf["_qimpact"].to_numpy(np.float64)
         suffix = np.concatenate([np.cumsum(qimps[::-1])[::-1][1:], [0.0]])
         MARGIN = 1.0 + 1e-9  # guard float rounding of the bound arithmetic
 
@@ -1656,43 +1594,15 @@ def _make_score_kernel(
         # sorted order), so each term merges in O(|acc| + |postings|) —
         # no per-term np.unique re-sort of the whole accumulated set
         # (that re-sort was O(T·M log M) and quadratic-ish for a 500-term
-        # wildcard expansion). Sum order per doc is unchanged (term order),
-        # so scores are bit-identical to the previous accumulation.
+        # wildcard expansion). Per doc the sum runs in term order.
         acc_docs: np.ndarray | None = None  # int64, sorted ascending
         acc_scores: np.ndarray | None = None
 
-        def _merge(d: np.ndarray, contrib: np.ndarray) -> None:
-            # merge one clause's (sorted, unique-doc) contributions into
-            # the accumulator; clause processing order fixes the per-doc
-            # float sum order, so scores stay deterministic
-            nonlocal acc_docs, acc_scores
-            if acc_docs is None:
-                acc_docs = d.copy()
-                acc_scores = np.asarray(contrib, dtype=np.float64).copy()
-            elif d.size:
-                pos_in = np.searchsorted(acc_docs, d)
-                pos_c = np.minimum(pos_in, max(acc_docs.size - 1, 0))
-                hit = (
-                    acc_docs[pos_c] == d
-                    if acc_docs.size
-                    else np.zeros(d.size, dtype=bool)
-                )
-                # docs are unique within a posting list → indices unique
-                acc_scores[pos_c[hit]] += contrib[hit]
-                if not hit.all():
-                    new_d, new_c = d[~hit], contrib[~hit]
-                    ins = np.searchsorted(acc_docs, new_d)
-                    acc_docs = np.insert(acc_docs, ins, new_d)
-                    acc_scores = np.insert(acc_scores, ins, new_c)
-
-        for pos, row in enumerate(pdf.itertuples(index=False)):
+        rows = pdf.iloc[order].itertuples(index=False)
+        for pos, (row, w) in enumerate(zip(rows, wts[order])):
             # block-max bound: idf * tf_norm(block max_tf, block min_dl)
-            bmi = (
-                qweights.get(row.term, 0.0)
-                * row.idf_row
-                * scoring.tf_norm_np(
-                    vb_decode(row.block_max_tf), vb_decode(row.block_min_dl), avgdl
-                )
+            bmi = w * scoring.tf_norm_np(
+                vb_decode(row.block_max_tf), vb_decode(row.block_min_dl), avgdl
             )
             use_prune = prune and acc_docs is not None and acc_docs.size >= k
             if use_prune:
@@ -1719,108 +1629,36 @@ def _make_score_kernel(
             else:
                 d, t, l = decode_posting_list(row.doc_ids, row.tfs, row.doclens)
 
-            if row.term in phrase_terms:
-                # FULL per-doc positions (decoded before any filtering —
-                # phrase matching runs over final candidates only anyway)
-                phrase_data[row.term] = (d, t, decode_positions(row.positions, t))
             keep = _keep_mask(d, filter_docs)
             if keep is not None:
                 d, t, l = d[keep], t[keep], l[keep]
-            if row.term in syn_members:
-                # synonym members never accumulate individually — the
-                # group merges below as ONE blended pseudo-term
-                syn_data[row.term] = (d, t, l)
-                continue
-            contrib = (
-                qweights[row.term]
-                * row.idf_row
-                * scoring.tf_norm_np(t, l, avgdl)
-            )
-            if row.term in must_terms:
-                # prune is off with clauses → d is the FULL (filtered)
-                # posting list of this must term in this shard
-                must_seen[row.term] = d
-            if row.term in should_terms:
-                # prune off with min_should → d is this optional clause's
-                # full (filtered) matched set in this shard
-                should_seen[row.term] = d
-            _merge(d, contrib)
-            if acc_docs is not None and acc_docs.size >= k and k > 0:
+            contrib = w * scoring.tf_norm_np(t, l, avgdl)
+            if acc_docs is None:
+                acc_docs = d.copy()
+                acc_scores = np.asarray(contrib, dtype=np.float64).copy()
+            elif d.size:
+                pos_in = np.searchsorted(acc_docs, d)
+                pos_c = np.minimum(pos_in, max(acc_docs.size - 1, 0))
+                hit = (
+                    acc_docs[pos_c] == d
+                    if acc_docs.size
+                    else np.zeros(d.size, dtype=bool)
+                )
+                # docs are unique within a posting list → indices unique
+                acc_scores[pos_c[hit]] += contrib[hit]
+                if not hit.all():
+                    new_d, new_c = d[~hit], contrib[~hit]
+                    ins = np.searchsorted(acc_docs, new_d)
+                    acc_docs = np.insert(acc_docs, ins, new_d)
+                    acc_scores = np.insert(acc_scores, ins, new_c)
+            if acc_docs.size >= k and k > 0:
                 theta = np.partition(acc_scores, acc_scores.size - k)[
                     acc_scores.size - k
                 ]
 
-        # blended synonym groups (Lucene SynonymQuery): per group, union
-        # the member postings with per-doc tf SUMMED, score ONCE with
-        # idf(max member global df) — a doc matching two synonyms scores
-        # like one term seen twice, never twice over
-        for weight, group_df, members in syn_groups:
-            parts = [syn_data[m] for m in members if m in syn_data]
-            if not parts:
-                continue
-            gd = np.concatenate([p[0] for p in parts])
-            gt = np.concatenate([p[1] for p in parts]).astype(np.float64)
-            gl = np.concatenate([p[2] for p in parts]).astype(np.float64)
-            order = np.argsort(gd, kind="stable")
-            gd, gt, gl = gd[order], gt[order], gl[order]
-            starts = np.flatnonzero(
-                np.concatenate([[True], gd[1:] != gd[:-1]])
-            )
-            tf_sum = np.add.reduceat(gt, starts)
-            # doclen is a per-doc property — identical across members
-            gd, gl = gd[starts], gl[starts]
-            gidf = float(
-                scoring.idf_np(
-                    np.array([group_df], dtype=np.float64), n_docs
-                )[0]
-            )
-            contrib = weight * gidf * scoring.tf_norm_np(tf_sum, gl, avgdl)
-            group_seen.append(gd)
-            _merge(gd, contrib)
-
         if acc_docs is None or acc_docs.size == 0 or k <= 0:
             return _empty_hits(score_dtype, with_total)
-        if must_terms:
-            if len(must_seen) < len(must_terms):
-                # a must term has no postings in this shard ⇒ no matches
-                return _empty_hits(score_dtype, with_total)
-            msk: np.ndarray | None = None
-            for arr in must_seen.values():
-                msk = arr if msk is None else msk[np.isin(msk, arr)]
-                if msk.size == 0:
-                    return _empty_hits(score_dtype, with_total)
-            keep = np.isin(acc_docs, msk)
-            acc_docs, acc_scores = acc_docs[keep], acc_scores[keep]
-        if excl_parts:
-            excl = np.concatenate(excl_parts)
-            keep = ~np.isin(acc_docs, excl)
-            acc_docs, acc_scores = acc_docs[keep], acc_scores[keep]
-        if min_should > 0:
-            if min_should > n_optional:
-                # Lucene rewrites this case to MatchNoDocsQuery
-                return _empty_hits(score_dtype, with_total)
-            counts = np.zeros(acc_docs.size, dtype=np.int64)
-            for arr in should_seen.values():
-                counts += np.isin(acc_docs, arr)
-            for arr in group_seen:
-                counts += np.isin(acc_docs, arr)
-            keep = counts >= min_should
-            acc_docs, acc_scores = acc_docs[keep], acc_scores[keep]
-        for toks, slop in phrases:
-            if acc_docs.size == 0:
-                break
-            if any(t not in phrase_data for t in toks):
-                return _empty_hits(score_dtype, with_total)
-            pm = _phrase_match_mask(acc_docs, toks, slop, phrase_data)
-            acc_docs, acc_scores = acc_docs[pm], acc_scores[pm]
-        if acc_docs.size == 0:
-            return _empty_hits(score_dtype, with_total)
         scores32 = acc_scores.astype(score_dtype)
-        if cursor is not None:
-            cm = _cursor_mask(scores32, acc_docs, shard_id, cursor)
-            acc_docs, scores32 = acc_docs[cm], scores32[cm]
-            if acc_docs.size == 0:
-                return _empty_hits(score_dtype, with_total)
         # top-k with exact tie-break: score DESC, doc_id ASC
         kk = min(k, acc_docs.size)
         order = np.lexsort((acc_docs, -scores32))[:kk]
@@ -1833,6 +1671,211 @@ def _make_score_kernel(
         )
         if with_total:
             out["shard_total"] = np.int64(acc_docs.size)
+        return out
+
+    return kernel
+
+
+def _make_clause_kernel(
+    plans: "list[_Clauses]",
+    n_docs: float,
+    avgdl: float,
+    k: int,
+    score_dtype: str,
+    with_total: bool = False,
+    cursor: tuple | None = None,
+):
+    """Per-shard kernel of every clause form, over one or more lowered
+    queries (``plans``) at once — the single home of the clause
+    semantics, like Lucene's per-shard BooleanQuery scorer
+    (LuceneServer.java:682). It is a vectorized columnar evaluator: each
+    distinct term decodes ONCE per shard, then every plan scores with a
+    few numpy operators over those columns. :func:`search` runs it for
+    one plan (boolean queries and ``mode="or"`` cursor pages),
+    :func:`search_batch` for the whole batch.
+
+    Input: one shard's postings rows of the plans' terms, plus an optional
+    allow-array or DocFilter (the cogrouped filter and the tombstone
+    deny, applied through _keep_mask before anything scores). Output, per
+    plan: the shard's top-k (query_id, shard_id, doc_id, score) — plus,
+    when ``with_total``, the plan's exact shard match count before the
+    cap. A searchAfter ``cursor`` masks candidates before the cap.
+    Nothing is pruned: the clause masks apply after accumulation, so a θ
+    bound over unmasked scores could not drive block skipping. A plan's
+    terms accumulate in the flat kernel's order (_impact_order).
+
+    Boolean clauses (parse_bool_query): MUST docs must contain every
+    listed term (they score too — Lucene MUST clauses score); MUST_NOT
+    docs are excluded and never score. Docs live wholly in one shard, so
+    both masks are exact per shard.
+
+    Phrases — (tokens, slop) — are verified ENTIRELY in-index against the
+    positions blobs (Lucene executes PhraseQuery per shard with no
+    stored-text access, LuceneServer.java:682): every phrase token is a
+    MUST, so candidates are the must-intersection, then
+    _phrase_match_mask applies Lucene's sloppy-span semantics. Surviving
+    docs keep their BM25 scores unchanged.
+
+    ``min_should`` — Lucene BooleanQuery.setMinimumNumberShouldMatch: a
+    doc matches only if it contains at least this many DISTINCT optional
+    (SHOULD) clauses; MUST clauses never count toward the minimum, and a
+    synonym group counts as ONE clause (it matches when any member does).
+    If the minimum exceeds the number of optional clauses the query
+    matches nothing (Lucene rewrites that case to MatchNoDocsQuery).
+
+    ``syn_groups`` — Lucene SynonymQuery blended scoring (what
+    QueryParser emits when the analyzer chain holds a SynonymGraphFilter):
+    each entry is ``(weight, group_df, members)``; the group scores as a
+    SINGLE pseudo-term with tf = Σ member tfs per doc and df = max member
+    GLOBAL df (SynonymQuery.java uses the max docFreq across terms), so
+    a doc matching two synonyms is scored like one term seen twice, not
+    twice over. group_df is resolved from global stats driver-side so
+    every shard scores with the same idf.
+
+    AND/OR/NOT trees evaluate through _eval_tree_scores."""
+    phrase_terms = {t for p in plans for toks, _ in p.phrases for t in toks}
+
+    def kernel(
+        pdf: pd.DataFrame, filter_docs: np.ndarray | None = None
+    ) -> pd.DataFrame:
+        shard_id = int(pdf["shard_id"].iloc[0]) if len(pdf) else 0
+        idf = scoring.idf_np(pdf["df_g"].to_numpy(np.float64), n_docs)
+        tf_max = scoring.tf_norm_np(
+            pdf["max_tf"].to_numpy(), pdf["min_dl"].to_numpy(), avgdl
+        )
+        # term -> (row, docs, tfs, doclens, tf_norm), filter applied;
+        # phrase tokens also keep their FULL (docs, tfs, positions), taken
+        # before the mask (the verify runs over masked candidates only)
+        post: dict[str, tuple] = {}
+        pos_data: dict[str, tuple] = {}
+        for i, row in enumerate(pdf.itertuples(index=False)):
+            d, t, l = decode_posting_list(row.doc_ids, row.tfs, row.doclens)
+            if row.term in phrase_terms:
+                pos_data[row.term] = (d, t, decode_positions(row.positions, t))
+            keep = _keep_mask(d, filter_docs)
+            if keep is not None:
+                d, t, l = d[keep], t[keep], l[keep]
+            post[row.term] = (i, d, t, l, scoring.tf_norm_np(t, l, avgdl))
+
+        def clause_scores(p: _Clauses):
+            """(docs, float64 scores) of a plan without a tree."""
+            members = {m for _, _, mem in p.syn_groups for m in mem}
+            should = [
+                t for t in p.qweights if t not in p.must and t not in members
+            ]
+            if any(t not in post for t in p.must):
+                return None, None  # a MUST term without postings here
+            if p.min_should > len(should) + len(p.syn_groups):
+                return None, None  # Lucene's MatchNoDocsQuery rewrite
+            # in row order; members only take their place in the order:
+            # they blend into their group's pseudo-term below
+            terms = sorted(
+                (t for t in (set(p.qweights) | members) - p.must_not if t in post),
+                key=lambda t: post[t][0],
+            )
+            ix = np.array([post[t][0] for t in terms], dtype=np.int64)
+            wts = np.array([p.qweights.get(t, 0.0) for t in terms]) * idf[ix]
+            order, _ = _impact_order(wts, tf_max[ix])
+            parts = [
+                (post[terms[j]][1], wts[j] * post[terms[j]][4])
+                for j in order if terms[j] not in members
+            ]
+            # blended synonym groups: member postings unioned with per-doc
+            # tf SUMMED, scored ONCE with idf(max member global df)
+            group_docs = []
+            for weight, group_df, mem in p.syn_groups:
+                # members without postings here, or with every posting
+                # filtered or deleted, add nothing
+                got = [post[m] for m in mem if m in post and post[m][1].size]
+                if not got:
+                    continue
+                gd = np.concatenate([g[1] for g in got])
+                gt = np.concatenate([g[2] for g in got]).astype(np.float64)
+                gl = np.concatenate([g[3] for g in got]).astype(np.float64)
+                order = np.argsort(gd, kind="stable")
+                gd, gt, gl = gd[order], gt[order], gl[order]
+                starts = np.flatnonzero(
+                    np.concatenate([[True], gd[1:] != gd[:-1]])
+                )
+                tf_sum = np.add.reduceat(gt, starts)
+                # doclen is a per-doc property — identical across members
+                gd, gl = gd[starts], gl[starts]
+                gidf = scoring.idf_np(np.array([group_df], np.float64), n_docs)
+                parts.append(
+                    (gd, weight * float(gidf[0]) * scoring.tf_norm_np(
+                        tf_sum, gl, avgdl
+                    ))
+                )
+                group_docs.append(gd)
+            if not parts:
+                return None, None
+            # per doc, add.at sums the parts in list order
+            docs, inv = np.unique(
+                np.concatenate([d for d, _ in parts]), return_inverse=True
+            )
+            scores = np.zeros(docs.size, dtype=np.float64)
+            np.add.at(scores, inv, np.concatenate([c for _, c in parts]))
+            keep = np.ones(docs.size, dtype=bool)
+            for t in p.must:
+                keep &= np.isin(docs, post[t][1])
+            for t in p.must_not:
+                if t in post:
+                    keep &= ~np.isin(docs, post[t][1])
+            if p.min_should > 0:
+                seen = [post[t][1] for t in should if t in post] + group_docs
+                counts = np.zeros(docs.size, dtype=np.int64)
+                for arr in seen:
+                    counts += np.isin(docs, arr)
+                keep &= counts >= p.min_should
+            docs, scores = docs[keep], scores[keep]
+            for toks, slop in p.phrases:
+                if docs.size == 0:
+                    break
+                pm = _phrase_match_mask(docs, toks, slop, pos_data)
+                docs, scores = docs[pm], scores[pm]
+            return docs, scores
+
+        tree_terms = None
+        # one empty array per column keeps the dtypes when nothing matches
+        out_q, out_d = [np.empty(0, np.int32)], [np.empty(0, np.int64)]
+        out_s = [np.empty(0, score_dtype)]
+        out_t = [np.empty(0, np.int64)]
+        for qi, p in enumerate(plans):
+            if p.tree is None:
+                docs, s64 = clause_scores(p)
+            else:
+                if tree_terms is None:
+                    # UNWEIGHTED contributions: each leaf applies its boost
+                    tree_terms = {
+                        t: (v[1], idf[v[0]] * v[4]) for t, v in post.items()
+                    }
+                docs, s64, _ = _eval_tree_scores(p.tree, tree_terms)
+            if docs is None or docs.size == 0:
+                continue
+            sc = s64.astype(score_dtype)
+            total = docs.size
+            if cursor is not None:
+                cm = _cursor_mask(sc, docs, shard_id, cursor)
+                docs, sc = docs[cm], sc[cm]
+            if docs.size > k:
+                # top-k with exact tie-break: score DESC, doc_id ASC
+                order = np.lexsort((docs, -sc.astype(np.float64)))[:k]
+                docs, sc = docs[order], sc[order]
+            out_q.append(np.full(docs.size, qi, dtype=np.int32))
+            out_d.append(docs)
+            out_s.append(sc)
+            out_t.append(np.full(docs.size, total, dtype=np.int64))
+        qs = np.concatenate(out_q)
+        out = pd.DataFrame(
+            {
+                "query_id": qs,
+                "shard_id": np.full(qs.size, shard_id, dtype=np.int32),
+                "doc_id": np.concatenate(out_d),
+                "score": np.concatenate(out_s),
+            }
+        )
+        if with_total:
+            out["shard_total"] = np.concatenate(out_t)
         return out
 
     return kernel
@@ -2044,6 +2087,36 @@ def _deny_val(deny) -> "np.ndarray | None":
     return deny.value if hasattr(deny, "value") else deny
 
 
+def _denying(kernel, deny):
+    """``kernel`` over the shard-local stage's rows with the tombstone
+    deny (a broadcast handle or None) as its DocFilter."""
+    if deny is None:
+        return kernel
+    return lambda pdf: kernel(pdf, DocFilter(None, deny.value))
+
+
+def _cog_hits(kernel, left: pd.DataFrame, right: pd.DataFrame, filtered: bool,
+              deny) -> "tuple[pd.DataFrame | None, pd.DataFrame]":
+    """The shared front of the docvalue cogs: ``(hits, right)``, where
+    ``hits`` is the kernel's output over ``left`` (None when it is empty)
+    and ``right`` the docvalue rows. When ``filtered``, the _DV_FILTER_COL
+    pseudo-rows are split off ``right`` as the kernel's allowed set;
+    tombstones (``deny``) are denied either way."""
+    if not len(left):
+        return None, right
+    dny = _deny_val(deny)
+    if filtered:
+        fmask = (right["col"] == _DV_FILTER_COL).to_numpy()
+        allowed = np.unique(right["fdoc"].to_numpy(np.int64)[fmask])
+        right = right.loc[~fmask]
+        hits = kernel(left, DocFilter(allowed, dny))
+    elif dny is not None:
+        hits = kernel(left, DocFilter(None, dny))
+    else:
+        hits = kernel(left)
+    return (hits if len(hits) else None), right
+
+
 def _make_dv_sort_cog(
     kernel, specs: list, dv_k: int, score_dtype: str, filtered: bool = False,
     deny=None,
@@ -2074,21 +2147,8 @@ def _make_dv_sort_cog(
         return out
 
     def cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left):
-            return _empty()
-        dny = _deny_val(deny)
-        if filtered:
-            fmask = (right["col"] == _DV_FILTER_COL).to_numpy()
-            allowed = np.unique(
-                right["fdoc"].to_numpy(np.int64)[fmask]
-            )
-            right = right.loc[~fmask]
-            hits = kernel(left, DocFilter(allowed, dny))
-        elif dny is not None:
-            hits = kernel(left, DocFilter(None, dny))
-        else:
-            hits = kernel(left)
-        if not len(hits):
+        hits, right = _cog_hits(kernel, left, right, filtered, deny)
+        if hits is None:
             return _empty()
         docs = hits["doc_id"].to_numpy(np.int64)
         per_spec = []
@@ -2201,19 +2261,8 @@ def _make_dv_group_cog(
         return out
 
     def cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left):
-            return _empty()
-        dny = _deny_val(deny)
-        if filtered:
-            fmask = (right["col"] == _DV_FILTER_COL).to_numpy()
-            allowed = np.unique(right["fdoc"].to_numpy(np.int64)[fmask])
-            right = right.loc[~fmask]
-            hits = kernel(left, DocFilter(allowed, dny))
-        elif dny is not None:
-            hits = kernel(left, DocFilter(None, dny))
-        else:
-            hits = kernel(left)
-        if not len(hits):
+        hits, right = _cog_hits(kernel, left, right, filtered, deny)
+        if hits is None:
             return _empty()
         docs, scores, gkey, isnull = _group_lookup(hits, right, group_col)
         if mode == "pass2":
@@ -2318,19 +2367,8 @@ def _make_dv_agg_cog(kernel, col: str, spec: tuple, kind: str,
         })
 
     def cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left):
-            return _empty()
-        dny = _deny_val(deny)
-        if filtered:
-            fmask = (right["col"] == _DV_FILTER_COL).to_numpy()
-            allowed = np.unique(right["fdoc"].to_numpy(np.int64)[fmask])
-            right = right.loc[~fmask]
-            hits = kernel(left, DocFilter(allowed, dny))
-        elif dny is not None:
-            hits = kernel(left, DocFilter(None, dny))
-        else:
-            hits = kernel(left)
-        if not len(hits):
+        hits, right = _cog_hits(kernel, left, right, filtered, deny)
+        if hits is None:
             return _empty()
         docs, _scores, gkey, isnull = _group_lookup(hits, right, col)
         vals = gkey[~isnull]
@@ -2531,7 +2569,7 @@ class _Clauses(NamedTuple):
     @property
     def flat(self) -> bool:
         """Plain OR of terms (boosts and keyword terms included): what the
-        counting and faceting kernels evaluate on their own."""
+        match-only count and facet_counts evaluate."""
         return (
             self.tree is None
             and self.rewrite is None
@@ -3015,31 +3053,27 @@ def search(
             c.tree, c.qweights, n_docs, avgdl, k_eff, score_dtype, _with_total,
             prune=prune, cursor=_cursor,
         )
-    elif c.boolean:
-        kernel = _make_score_kernel(
-            c.qweights, n_docs, avgdl, k_eff, False, score_dtype,
-            _with_total, frozenset(c.must), frozenset(c.must_not),
-            tuple(c.phrases), cursor=_cursor,
-            min_should=c.min_should, syn_groups=tuple(c.syn_groups),
+    elif c.boolean or (_cursor is not None and mode == "or"):
+        # the clause kernel tags rows with their plan's query_id; one plan
+        # here, so the tag is dropped once and every wrapper sees hits
+        clauses = _make_clause_kernel(
+            [c], n_docs, avgdl, k_eff, score_dtype, _with_total, _cursor
         )
+
+        def kernel(pdf, filter_docs=None):
+            return clauses(pdf, filter_docs).drop(columns="query_id")
     elif _cursor is not None:
         # cursor paging needs score-ranked kernels — built directly
         # (the registry's factory signature has no cursor slot)
-        if mode == "or":
-            kernel = _make_score_kernel(
-                c.qweights, n_docs, avgdl, k_eff, False, score_dtype,
-                _with_total, cursor=_cursor,
-            )
-        elif mode == "and":
-            kernel = _make_and_kernel(
-                c.qweights, n_docs, avgdl, k_eff, score_dtype, _with_total,
-                cursor=_cursor,
-            )
-        else:
+        if mode != "and":
             raise ValueError(
                 "search_after requires a scoring mode ('or'/'and' or a "
                 f"boolean/tree query); got mode={mode!r}"
             )
+        kernel = _make_and_kernel(
+            c.qweights, n_docs, avgdl, k_eff, score_dtype, _with_total,
+            cursor=_cursor,
+        )
     else:
         if mode not in KERNEL_MODES:
             raise ValueError(
@@ -3137,9 +3171,7 @@ def search(
         return hits.select("doc_id", "shard_id", "score", *extra_cols)
     sel = ["doc_id", "shard_id", "score"] + (["shard_total"] if _with_total else [])
     if filter_df is None:
-        fn = kernel if deny is None else (
-            lambda pdf: kernel(pdf, DocFilter(None, deny.value))
-        )
+        fn = _denying(kernel, deny)
         if not ordered:
             # unbounded callers (k up to 2**31-1) get a lazy frame: their
             # matches never reach the driver
@@ -3753,9 +3785,11 @@ def search_batch(
     query, ordered by (query_id, score DESC, doc_id ASC, shard_id DESC).
 
     Plan: one shard-local stage (:meth:`_Fetch.run`) reads each shard's
-    rows of the UNION of all queries' terms → per-shard kernel decodes
-    each distinct term once and scores every query against it →
-    ≤ |queries|·k rows per shard → a driver-side merge per query_id.
+    rows of the UNION of all queries' terms → the clause kernel
+    (:func:`_make_clause_kernel`, the one search runs for boolean
+    queries) decodes each distinct term once and scores every query
+    against it → ≤ |queries|·k rows per shard → a driver-side merge per
+    query_id.
 
     The call is EAGER: it runs that one job before it returns, and the
     returned frame is a local one over the merged rows, not a lazy plan.
@@ -3796,162 +3830,19 @@ def search_batch(
         else:
             qstr, q_msm, q_syns = entry, 0, None
         plans.append(_lower_query(spark, handles, qstr, "or", q_msm, q_syns))
-    phrase_terms = {
-        t for plan in plans for toks, _ in plan.phrases for t in toks
-    }
     all_terms = sorted({t for plan in plans for t in plan.terms})
     if not all_terms or k <= 0:
         return _local_df(spark, [], None, out_schema)
-    bcols = _KERNEL_COLS + (["positions"] if phrase_terms else [])
+    bcols = _KERNEL_COLS + (
+        ["positions"] if any(plan.phrases for plan in plans) else []
+    )
     fetch = _fetch_postings(spark, handles, all_terms, bcols)
-    n_docs, avgdl = fetch.n_docs, fetch.avgdl
-
-    syn_member_terms = {
-        m for plan in plans for _, _, members in plan.syn_groups for m in members
-    }
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard_id = int(pdf["shard_id"].iloc[0])
-        dny = _deny_val(deny)
-        idf_col = scoring.idf_np(pdf["df_g"].to_numpy(np.float64), n_docs)
-        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        pos_data: dict[str, tuple] = {}
-        # raw (docs, tfs, doclens) kept for synonym members — blending
-        # sums tfs BEFORE the nonlinear tf_norm
-        raw_tfdl: dict[str, tuple] = {}
-        for row, idf in zip(pdf.itertuples(index=False), idf_col):
-            d, t, l = decode_posting_list(row.doc_ids, row.tfs, row.doclens)
-            if row.term in phrase_terms:
-                # FULL per-doc positions, captured pre-mask (phrase verify
-                # runs over already-masked candidates only)
-                pos_data[row.term] = (d, t, decode_positions(row.positions, t))
-            if dny is not None:
-                keep = ~np.isin(d, dny)
-                d, t, l = d[keep], t[keep], l[keep]
-            if row.term in syn_member_terms:
-                raw_tfdl[row.term] = (d, t, l)
-            decoded[row.term] = (
-                d,
-                idf * scoring.tf_norm_np(t, l, avgdl),
-            )
-        out_q, out_d, out_s = [], [], []
-        for qi, plan in enumerate(plans):
-            if plan.tree is not None:
-                docs_u, s64, _ = _eval_tree_scores(plan.tree, decoded)
-                if docs_u is None or docs_u.size == 0:
-                    continue
-                sc = s64.astype(score_dtype)
-            else:
-                qw, must, must_not, phrases, q_msm, groups = (
-                    plan.qweights, plan.must, plan.must_not, plan.phrases,
-                    plan.min_should, plan.syn_groups,
-                )
-                members_here = {
-                    m for _, _, mem in groups for m in mem
-                }
-                present = [
-                    t for t in qw
-                    if t in decoded and t not in members_here
-                ]
-                # blended synonym groups: member docs unioned, tfs SUMMED,
-                # one contribution with idf(max member global df)
-                gdocs_list: list[np.ndarray] = []
-                gcontrib_list: list[np.ndarray] = []
-                for weight, gdf, mem in groups:
-                    parts = [raw_tfdl[m] for m in mem if m in raw_tfdl]
-                    if not parts:
-                        continue
-                    gd = np.concatenate([p[0] for p in parts])
-                    gt = np.concatenate([p[1] for p in parts]).astype(
-                        np.float64
-                    )
-                    gl = np.concatenate([p[2] for p in parts]).astype(
-                        np.float64
-                    )
-                    order = np.argsort(gd, kind="stable")
-                    gd, gt, gl = gd[order], gt[order], gl[order]
-                    starts = np.flatnonzero(
-                        np.concatenate([[True], gd[1:] != gd[:-1]])
-                    )
-                    tf_sum = np.add.reduceat(gt, starts)
-                    gd, gl = gd[starts], gl[starts]
-                    gidf = float(
-                        scoring.idf_np(
-                            np.array([gdf], np.float64), n_docs
-                        )[0]
-                    )
-                    gdocs_list.append(gd)
-                    gcontrib_list.append(
-                        weight * gidf * scoring.tf_norm_np(tf_sum, gl, avgdl)
-                    )
-                if (
-                    not present
-                    and not gdocs_list
-                ) or any(t not in decoded for t in must):
-                    continue
-                docs_cat = np.concatenate(
-                    [decoded[t][0] for t in present] + gdocs_list
-                )
-                contribs = np.concatenate(
-                    [qw[t] * decoded[t][1] for t in present]
-                    + gcontrib_list
-                )
-                docs_u, inv = np.unique(docs_cat, return_inverse=True)
-                scores = np.zeros(docs_u.size, dtype=np.float64)
-                np.add.at(scores, inv, contribs)
-                keep = np.ones(docs_u.size, dtype=bool)
-                for t in must:
-                    keep &= np.isin(docs_u, decoded[t][0])
-                for t in must_not:
-                    if t in decoded:
-                        keep &= ~np.isin(docs_u, decoded[t][0])
-                if q_msm > 0:
-                    phr_toks = {t for toks, _ in phrases for t in toks}
-                    should = [
-                        t for t in qw
-                        if t not in must
-                        and t not in phr_toks
-                        and t not in members_here
-                    ]
-                    if q_msm > len(should) + len(groups):
-                        continue  # MatchNoDocsQuery rewrite
-                    cnt = np.zeros(docs_u.size, dtype=np.int64)
-                    for t in should:
-                        if t in decoded:
-                            cnt += np.isin(docs_u, decoded[t][0])
-                    for gd in gdocs_list:
-                        cnt += np.isin(docs_u, gd)
-                    keep &= cnt >= q_msm
-                docs_u, scores = docs_u[keep], scores[keep]
-                for toks, slop in phrases:
-                    if docs_u.size == 0:
-                        break
-                    pm = _phrase_match_mask(docs_u, toks, slop, pos_data)
-                    docs_u, scores = docs_u[pm], scores[pm]
-                if docs_u.size == 0:
-                    continue
-                sc = scores.astype(score_dtype)
-            if docs_u.size > k:
-                order = np.lexsort((docs_u, -sc.astype(np.float64)))[:k]
-                docs_u, sc = docs_u[order], sc[order]
-            out_q.append(np.full(docs_u.size, qi, dtype=np.int32))
-            out_d.append(docs_u)
-            out_s.append(sc)
-        if not out_q:
-            return pd.DataFrame()  # the shard-local stage emits nothing
-        qs = np.concatenate(out_q)
-        return pd.DataFrame(
-            {
-                "query_id": qs,
-                "shard_id": np.full(qs.size, shard_id, dtype=np.int32),
-                "doc_id": np.concatenate(out_d),
-                "score": pd.array(np.concatenate(out_s), dtype=score_dtype),
-            }
-        )
-
+    kernel = _make_clause_kernel(
+        plans, fetch.n_docs, fetch.avgdl, k, score_dtype
+    )
     # the ≤ |queries|·k rows per shard merge driver-side, per query, in
     # the reference tie-break (Katta's client merge)
-    hits = fetch.run(spark, kernel, out_schema).sort_values(
+    hits = fetch.run(spark, _denying(kernel, deny), out_schema).sort_values(
         ["query_id", "score", "doc_id", "shard_id"],
         ascending=[True, False, True, False],
     )
@@ -4009,20 +3900,18 @@ def count_matches(
     synonyms: "dict[str, list[str]] | None" = None,
 ) -> int:
     """Hit-count fast path (Katta getResultCount, LuceneServer.java:413-423):
-    number of docs matching the PARSED query — no scores materialized.
-    Flat queries count docs matching ≥1 term (OR); ``min_should_match``
-    raises that floor to ≥m distinct optional clauses and ``synonyms``
-    counts through the blended groups — both via the search kernels'
-    exact totals, so the counted set matches search() exactly.
+    number of docs matching the PARSED query: the exact total of
+    :func:`search_with_total` at k=1, so the counted set matches search()
+    exactly. Flat queries count docs matching ≥1 term through the
+    match-only kernel (no scores); ``min_should_match``, ``synonyms``,
+    boolean clauses (``+``/``-``, phrases, AND/OR/NOT grouping) and
+    rewrites count through the scoring kernels — Katta's count() likewise
+    counts the PARSED query's matches, not term-OR matches (phrases verify
+    in-index against the positional postings).
 
     A LIST of indexes counts across all of them (Katta's count() sums
     per-node results over every searched index, LuceneClient.java:225-251):
-    per-shard counts simply sum across the indexes' shards.
-
-    Queries with boolean clauses (``+``/``-``, phrases, AND/OR/NOT
-    grouping) delegate to the search kernels' exact shard totals — Katta's
-    count() likewise counts the PARSED query's matches, not term-OR
-    matches (phrases verify in-index against the positional postings)."""
+    per-shard counts simply sum across the indexes' shards."""
     handles = _open_handles(spark, index)
     c = _parse_clauses(
         handles, query, min_should_match=min_should_match, synonyms=synonyms
@@ -4043,35 +3932,15 @@ def count_matches(
             - _live_tombstone_count(spark, h, h.deleted_array(spark))
             for h in handles
         )
-    if (
-        not c.flat
-        or bool(synonyms)
-        # tombstones: the search kernels' totals already skip deleted
-        # docs (liveDocs), so a tombstoned index counts through them too
-        or any(h.has_tombstones() for h in handles)
-    ):
-        # non-flat query: the search kernels' exact totals ARE the count
-        # (rewrites expand against the dictionary there — per index when
-        # several are searched)
-        rows = search_with_total(
-            spark, handles, query, k=1,
-            min_should_match=min_should_match, synonyms=synonyms,
-        ).collect()
-        return int(rows[0]["total_hits"]) if rows else 0
-    terms = sorted(c.qweights)
-    if not terms:
-        return 0
-    fetch = _fetch_postings(
-        spark, handles, terms, ["shard_id", "th", "doc_ids", "tfs", "doclens"]
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        docs = [decode_posting_list(r.doc_ids, r.tfs, r.doclens)[0]
-                for r in pdf.itertuples(index=False)]
-        return pd.DataFrame({"n": [int(np.unique(np.concatenate(docs)).size)]})
-
-    # a doc lives in one shard: per-shard counts sum on the driver
-    return int(fetch.run(spark, kernel, "n long")["n"].sum())
+    # the search kernels' exact totals ARE the count: tombstones are
+    # denied there and rewrites expand against the dictionary (per index
+    # when several are searched); a flat query only needs the match set
+    rows = search_with_total(
+        spark, handles, query, k=1,
+        mode="match" if c.flat and not synonyms else "or",
+        min_should_match=min_should_match, synonyms=synonyms,
+    ).collect()
+    return int(rows[0]["total_hits"]) if rows else 0
 
 
 def facet_counts(

@@ -5,19 +5,26 @@ search_batch, count_matches, facet_counts and explain_score, so over a
 fixed list of query shapes they must agree: search hits == search_batch
 hits, search_with_total's total == count_matches, explain_score on the
 top hit reproduces its score, and for flat queries the per-value facet
-counts over ``role`` sum to the total.
+counts over ``role`` sum to the total. The first two checks also run
+over the clause-option dict entries search_batch takes, and over a
+tombstoned copy of the index (the deny mask inside the shared kernels).
 """
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 
+import katta_spark.query as ksq
 from katta_spark.build import build_index
+from katta_spark.delete import delete_docs
 from katta_spark.query import (
     count_matches,
     explain_score,
     facet_counts,
     search,
+    search_after,
     search_batch,
     search_with_total,
 )
@@ -38,6 +45,11 @@ SHAPES = [
     ("field_group", "role:(user system) hotbeta"),
     ("spaced_colon", "role: user hotalpha"),
     ("quoted_keyword", 'role:"user" hotalpha'),
+]
+# search_batch dict entries: the per-query clause options of search()
+OPTION_SHAPES = [
+    ("msm2", {"q": "hotalpha hotbeta w00011", "min_should_match": 2}),
+    ("synonyms", {"q": "hotalpha w00011", "synonyms": {"hotalpha": ["hotbeta"]}}),
 ]
 TREES = {"and_tree", "field_group"}
 FLAT = {"or", "boost", "role_term", "spaced_colon", "quoted_keyword"}
@@ -70,3 +82,63 @@ def test_entry_points_agree(spark, ridx):
         if name in FLAT:
             facets = facet_counts(spark, ridx, q, "role", k=100).collect()
             assert sum(r["count"] for r in facets) == total, name
+
+
+def _batch_and_counts_agree(spark, index, shapes, k=10):
+    """search hits == search_batch hits and search_with_total's total ==
+    count_matches for every (name, entry) of ``shapes``; an entry is a
+    query string or a search_batch dict entry."""
+    batch = search_batch(spark, index, [q for _, q in shapes], k=k).collect()
+    for qi, (name, entry) in enumerate(shapes):
+        opts = {} if isinstance(entry, str) else dict(entry)
+        q = opts.pop("q", entry)
+        hits = search(spark, index, q, k=k, **opts).collect()
+        got = [(r.doc_id, r.shard_id, r.score) for r in batch if r.query_id == qi]
+        assert got == [(r.doc_id, r.shard_id, r.score) for r in hits], name
+        tot = search_with_total(spark, index, q, k=1, **opts).collect()
+        total = tot[0].total_hits if tot else 0
+        assert count_matches(spark, index, q, **opts) == total, name
+
+
+def test_option_entries_agree(spark, ridx):
+    _batch_and_counts_agree(spark, ridx, OPTION_SHAPES)
+    # the options change the match set, so the entries exercise them
+    plain = count_matches(spark, ridx, "hotalpha hotbeta w00011")
+    msm = count_matches(spark, ridx, "hotalpha hotbeta w00011", min_should_match=2)
+    assert msm < plain
+    assert count_matches(
+        spark, ridx, "hotalpha w00011", synonyms={"hotalpha": ["hotbeta"]}
+    ) > count_matches(spark, ridx, "hotalpha w00011")
+
+
+def test_entry_points_agree_tombstoned(spark, ridx, tmp_path):
+    d = str(tmp_path / "tombstoned")
+    shutil.copytree(ridx, d)
+    dead = [r.doc_id for r in search(spark, d, "hotalpha hotbeta", k=40).collect()]
+    assert delete_docs(spark, d, dead[::2]) == len(dead[::2])
+    before = count_matches(spark, ridx, "hotalpha hotbeta")
+    assert count_matches(spark, d, "hotalpha hotbeta") == before - len(dead[::2])
+    _batch_and_counts_agree(spark, d, SHAPES + OPTION_SHAPES)
+
+
+def test_clause_kernel_is_the_one_home(spark, ridx, monkeypatch):
+    """Boolean search, or-mode search_after and search_batch build the
+    shared clause kernel; a flat search runs the registered "or" kernel."""
+    built = []
+    make = ksq._make_clause_kernel
+
+    def record(plans, *a, **kw):
+        built.append(len(plans))
+        return make(plans, *a, **kw)
+
+    monkeypatch.setattr(ksq, "_make_clause_kernel", record)
+    search(spark, ridx, "hotalpha w00011", k=5)
+    assert built == []
+    top = search(spark, ridx, "+hotalpha -hotbeta", k=5).collect()
+    assert built == [1] and top
+    first = search(spark, ridx, "hotalpha w00011", k=3).collect()[-1]
+    after = (first.score, first.doc_id, first.shard_id)
+    search_after(spark, ridx, "hotalpha w00011", after, k=3)
+    assert built == [1, 1]
+    search_batch(spark, ridx, ["hotalpha", "+hotalpha +hotbeta", "w00011"], k=3)
+    assert built == [1, 1, 3]

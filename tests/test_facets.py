@@ -109,7 +109,8 @@ def test_facet_counts_refusals(spark, facet_idx):
 def test_quoted_keyword_value_is_flat(spark, facet_idx, monkeypatch):
     """``source:"v"`` is one verbatim keyword term (KeywordAnalyzer), the
     same term as ``source:v``: facet_counts accepts it, and count_matches
-    counts it on its own flat path — both agree with the unquoted form."""
+    counts it on the flat (match-only) path — both agree with the
+    unquoted form."""
     d, docs = facet_idx
     v = docs.groupBy("source").count().orderBy(F.desc("count"), "source").first()[0]
     quoted, bare = f'source:"{v}" join', f"source:{v} join"
@@ -123,12 +124,17 @@ def test_quoted_keyword_value_is_flat(spark, facet_idx, monkeypatch):
     assert facets[0] and facets[0] == facets[1]
     total = ksq.search_with_total(spark, d, bare, k=1).first().total_hits
 
-    def _boom(*_a, **_k):
-        raise AssertionError("a flat count went through search_with_total")
+    modes = []
+    with_total = ksq.search_with_total
 
-    monkeypatch.setattr(ksq, "search_with_total", _boom)
+    def _record(*a, **kw):
+        modes.append(kw["mode"])
+        return with_total(*a, **kw)
+
+    monkeypatch.setattr(ksq, "search_with_total", _record)
     assert ksq.count_matches(spark, d, quoted) == total
     assert ksq.count_matches(spark, d, bare) == total
+    assert modes == ["match", "match"]
 
 
 def test_facet_counts_multi_index(spark, facet_idx, tmp_path):

@@ -205,6 +205,25 @@ def test_synonym_blended_scoring(spark, midx, docs):
     )
 
 
+def test_synonym_group_filtered_out_of_every_shard(spark, midx):
+    """A filter that removes every member posting leaves the group
+    without matches: it adds nothing, and the other clauses still score."""
+    w = {r.doc_id for r in search(spark, midx, "w00011", k=2000).collect()}
+    grp = {
+        r.doc_id
+        for r in search(spark, midx, "hotalpha hotbeta", k=2000).collect()
+    }
+    allowed = sorted(w - grp)
+    got = search(
+        spark, midx, "w00011 hotalpha", synonyms={"hotalpha": ["hotbeta"]},
+        k=10, filter_docs=allowed,
+    ).collect()
+    want = search(spark, midx, "w00011", k=10, filter_docs=allowed).collect()
+    assert [(r.doc_id, r.score) for r in got] == [
+        (r.doc_id, r.score) for r in want
+    ]
+
+
 def test_synonym_differs_from_plain_or(spark, midx):
     """Blending is NOT two independent clauses: df is the max (not each
     member's own) and tf sums before the saturating tf_norm."""
