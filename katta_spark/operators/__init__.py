@@ -8,7 +8,9 @@ example in the reference docs is a grep server
 
 The Spark-native translation: a "content server" is a per-partition kernel
 factory registered under a search mode. ``register_kernel`` adds one; the
-built-ins ("or", "and", "match") live in :mod:`katta_spark.query`. A
+built-ins ("or" and "match") live in :mod:`katta_spark.query`. Mode "and"
+is not a kernel but the default-AND operator: the query front end lowers
+every term to a MUST clause, which the clause kernel evaluates. A
 factory receives (qweights, n_docs, avgdl, k, prune, score_dtype,
 with_total) and returns ``kernel(pdf, filter_docs=None) -> pd.DataFrame``
 with columns (shard_id, doc_id, score[, shard_total]).

@@ -1217,140 +1217,103 @@ def _tree_leaves(node: tuple) -> list[tuple[str, float]]:
 
 def _make_tree_kernel(
     tree: tuple,
-    qweights: dict[str, float],
     n_docs: float,
     avgdl: float,
     k: int,
     score_dtype: str = "float32",
-    with_total: bool = False,
-    prune: bool = True,
     stats: dict | None = None,
-    cursor: tuple | None = None,
 ):
-    """Per-shard kernel for grouped boolean queries (parse_tree_query).
+    """Per-shard MaxScore kernel of a NOT-free grouped boolean query
+    (parse_tree_query) — the pruned tree path.
 
     Scoring is BooleanQuery's path-sum: a node's score sums the scores of
     its MATCHING children only — a failed AND group contributes nothing
     even when one of its terms is present.
 
-    NOT-free trees take the PRUNED path: the tree is viewed as an OR of
-    top-level children; children are evaluated in descending impact-bound
-    order (bound = Σ leaf boost × idf × tf_norm(max_tf, min_dl)), every
-    accumulated doc is known to MATCH (it entered via a matching child),
-    so θ = kth best accumulated score is a valid lower bound, and a child
-    whose bound + suffix cannot reach θ is evaluated RESTRICTED to the
-    accumulated docs — decoding only the postings blocks that contain
+    The tree is viewed as an OR of top-level children; children are
+    evaluated in descending impact-bound order (:func:`_tree_top_order`),
+    every accumulated doc is known to MATCH (it entered via a matching
+    child), so θ = kth best accumulated score is a valid lower bound, and
+    a child whose bound + suffix cannot reach θ is evaluated RESTRICTED to
+    the accumulated docs — decoding only the postings blocks that contain
     them (skip pointers). Because bounds are sorted descending, once one
     child is restricted every later child is too, so no doc is ever
     introduced after a restricted evaluation — scores stay exact (the
-    same argument as the flat MaxScore kernel; fuzz-tested pruned ==
-    unpruned). Inside AND groups the intersection narrows with skip-
-    pointer block decoding as in the conjunctive kernel.
+    same argument as the flat MaxScore kernel; fuzz-tested against the
+    clause kernel). Inside AND groups the intersection narrows with
+    skip-pointer block decoding.
 
-    Trees containing NOT (bounds don't compose through negation),
-    with_total (exact counts must visit every match), and filtered
-    searches fall back to the full-decode path (_eval_tree_scores).
+    :func:`search` builds it only for prunable trees; trees with NOT
+    (bounds don't compose through negation), totals (exact counts must
+    visit every match), cursors, filters, tombstones or docvalue cogs run
+    in :func:`_make_clause_kernel`.
 
     ``stats`` (tests): counts blocks_decoded / blocks_total."""
 
-    def kernel(
-        pdf: pd.DataFrame, filter_docs: np.ndarray | None = None
-    ) -> pd.DataFrame:
-        if not len(pdf):
-            return _empty_hits(score_dtype, with_total)
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         shard_id = int(pdf["shard_id"].iloc[0])
         idf_col = scoring.idf_np(pdf["df_g"].to_numpy(np.float64), n_docs)
-        rows_map = {
-            row.term: (row, idf)
-            for row, idf in zip(pdf.itertuples(index=False), idf_col)
-        }
-        use_prune = (
-            prune
-            and not with_total
-            and not _tree_has_not(tree)
-            and filter_docs is None
-            and cursor is None
-            and k > 0
+        tf_max = scoring.tf_norm_np(
+            pdf["max_tf"].to_numpy(), pdf["min_dl"].to_numpy(), avgdl
         )
+        rows_map = {
+            row.term: (row, idf, tfm)
+            for row, idf, tfm in zip(pdf.itertuples(index=False), idf_col, tf_max)
+        }
 
         def _count(decoded: int, total_b: int) -> None:
             if stats is not None:
                 stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + decoded
                 stats["blocks_total"] = stats.get("blocks_total", 0) + total_b
 
-        if not use_prune:
-            per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for term, (row, idf) in rows_map.items():
-                d, t, l = decode_posting_list(row.doc_ids, row.tfs, row.doclens)
-                nb = read_skips(row.skips).shape[0]
-                _count(nb, nb)
-                keep = _keep_mask(d, filter_docs)
-                if keep is not None:
-                    d, t, l = d[keep], t[keep], l[keep]
-                # UNWEIGHTED base contribution: each leaf multiplies by its
-                # own boost, so duplicate leaves sum to boost x occurrences
-                # (not (Σboost)² as a global additive weight would)
-                per_term[term] = (d, idf * scoring.tf_norm_np(t, l, avgdl))
-            docs, s64, total = _eval_tree_scores(tree, per_term)
-            if docs is None:
-                return _empty_hits(score_dtype, with_total)
-            sc = s64.astype(score_dtype)
-        else:
-            docs, sc, total = _pruned_tree_topk(
-                tree, rows_map, avgdl, k, _count
-            )
-            if docs is None:
-                return _empty_hits(score_dtype, with_total)
-            sc = sc.astype(score_dtype)
-        if cursor is not None:
-            cm = _cursor_mask(sc, docs, shard_id, cursor)
-            docs, sc = docs[cm], sc[cm]
-            if docs.size == 0:
-                return _empty_hits(score_dtype, with_total)
+        docs, sc = _pruned_tree_topk(tree, rows_map, avgdl, k, _count)
+        if docs is None:
+            return _empty_hits(score_dtype)
+        sc = sc.astype(score_dtype)
         if docs.size > k:
             order = np.lexsort((docs, -sc.astype(np.float64)))[:k]
             docs, sc = docs[order], sc[order]
-        out = pd.DataFrame(
+        return pd.DataFrame(
             {
                 "shard_id": np.full(docs.size, shard_id, dtype=np.int32),
                 "doc_id": docs,
                 "score": pd.array(sc, dtype=score_dtype),
             }
         )
-        if with_total:
-            out["shard_total"] = np.full(docs.size, total, dtype=np.int64)
-        return out
 
     return kernel
+
+
+def _tree_top_order(
+    tree: tuple, impact: dict[str, float]
+) -> tuple[list, list[float]]:
+    """The tree's top-level children (an OR's children, else the tree
+    itself) in descending impact-bound order, with their bounds: a
+    child's bound is Σ leaf boost × ``impact[term]``, where impact is the
+    term's idf × tf_norm(max_tf, min_dl) in this shard (0 without a row).
+    The pruned tree path evaluates the children in this order and the
+    clause kernel sums them in it, so both add a doc's child scores in
+    the same order and score it bit-identically."""
+    children = list(tree[1]) if tree[0] == "or" else [tree]
+    bounds = [
+        sum(b * impact.get(t, 0.0) for t, b in _tree_leaves(ch))
+        for ch in children
+    ]
+    order = np.argsort(bounds)[::-1]
+    return [children[i] for i in order], [bounds[i] for i in order]
 
 
 def _pruned_tree_topk(
     tree: tuple, rows_map: dict, avgdl: float, k: int, count
 ):
     """MaxScore-style evaluation of a NOT-free tree (see _make_tree_kernel
-    docstring for the soundness argument). Returns (docs, scores, total)
-    over every doc that matched a fully-evaluated child — a superset of
-    the exact top-k, each with its EXACT score."""
+    docstring for the soundness argument). Returns (docs, scores) over
+    every doc that matched a fully-evaluated child — a superset of the
+    exact top-k, each with its EXACT score."""
     MARGIN = 1.0 + 1e-9
-    children = list(tree[1]) if tree[0] == "or" else [tree]
-
-    def leaf_impact(t: str, boost: float) -> float:
-        if t not in rows_map:
-            return 0.0
-        row, idf = rows_map[t]
-        return boost * idf * float(
-            scoring.tf_norm_np(
-                np.array([row.max_tf]), np.array([row.min_dl]), avgdl
-            )[0]
-        )
-
-    bounds = [
-        sum(leaf_impact(t, b) for t, b in _tree_leaves(ch))
-        for ch in children
-    ]
-    order = np.argsort(bounds)[::-1]
-    children = [children[i] for i in order]
-    bounds = [bounds[i] for i in order]
+    children, bounds = _tree_top_order(
+        tree, {t: idf * tfm for t, (_, idf, tfm) in rows_map.items()}
+    )
     suffix = np.concatenate([np.cumsum(bounds[::-1])[::-1][1:], [0.0]])
 
     # Per-kernel decode cache: a term appearing as several leaves (or
@@ -1363,7 +1326,7 @@ def _pruned_tree_topk(
     requested: set[str] = set()
 
     def _term_decode(t: str, restrict: np.ndarray | None):
-        row, idf = rows_map[t]
+        row, idf, _ = rows_map[t]
         skips = read_skips(row.skips)
         nb = skips.shape[0]
         if t not in requested:
@@ -1406,7 +1369,8 @@ def _pruned_tree_topk(
             if restrict is not None:
                 keep = np.isin(d, restrict)
                 d, tf, dl = d[keep], tf[keep], dl[keep]
-            return d, boost * idf * scoring.tf_norm_np(tf, dl, avgdl)
+            # boost × (idf × tf_norm): the clause kernel's leaf product
+            return d, boost * (idf * scoring.tf_norm_np(tf, dl, avgdl))
         if kind == "and":
             docs, scores = ev(node[1][0], restrict)
             for ch in node[1][1:]:
@@ -1462,18 +1426,18 @@ def _pruned_tree_topk(
                 acc_scores.size - k
             ]
     if acc_docs is None or acc_docs.size == 0:
-        return None, None, 0
-    return acc_docs, acc_scores, int(acc_docs.size)
+        return None, None
+    return acc_docs, acc_scores
 
 
 def _eval_tree_scores(
     tree: tuple, per_term: dict
-) -> "tuple[np.ndarray | None, np.ndarray | None, int]":
+) -> "tuple[np.ndarray | None, np.ndarray | None]":
     """Evaluate a parse_tree_query tree over decoded postings.
 
     ``per_term``: term → (sorted docIDs, UNWEIGHTED BM25 contributions).
-    Returns (matched docs sorted, float64 scores, total matches) or
-    (None, None, 0) when no positive term has postings. Scoring is
+    Returns (matched docs sorted, float64 scores) or (None, None) when no
+    positive term has postings. Scoring is
     BooleanQuery's path-sum: a node's score sums the scores of its
     MATCHING children only; Lucene occur-flag NOT semantics ('a NOT b' ≡
     'a OR NOT b' ≡ (a) AND NOT (b); a level with only NOT children
@@ -1481,7 +1445,7 @@ def _eval_tree_scores(
     pos_terms, _ = tree_terms(tree)
     pos_arrays = [per_term[t][0] for t in sorted(pos_terms) if t in per_term]
     if not pos_arrays:
-        return None, None, 0
+        return None, None
     universe = np.unique(np.concatenate(pos_arrays))
     n = universe.size
 
@@ -1525,7 +1489,7 @@ def _eval_tree_scores(
         return m, s
 
     m, s = ev(tree)
-    return universe[m], s[m], int(m.sum())
+    return universe[m], s[m]
 
 
 def _impact_order(wts: np.ndarray, tf_max: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -1690,9 +1654,11 @@ def _make_clause_kernel(
     semantics, like Lucene's per-shard BooleanQuery scorer
     (LuceneServer.java:682). It is a vectorized columnar evaluator: each
     distinct term decodes ONCE per shard, then every plan scores with a
-    few numpy operators over those columns. :func:`search` runs it for
-    one plan (boolean queries and ``mode="or"`` cursor pages),
-    :func:`search_batch` for the whole batch.
+    few numpy operators over those columns. It is the one unpruned
+    evaluator: :func:`search` runs it for one plan (boolean queries,
+    ``mode="and"`` — every term a MUST —, cursor pages and the trees
+    :func:`_make_tree_kernel` cannot prune), :func:`explain_score` for
+    one allowed doc and :func:`search_batch` for the whole batch.
 
     Input: one shard's postings rows of the plans' terms, plus an optional
     allow-array or DocFilter (the cogrouped filter and the tombstone
@@ -1732,7 +1698,9 @@ def _make_clause_kernel(
     twice over. group_df is resolved from global stats driver-side so
     every shard scores with the same idf.
 
-    AND/OR/NOT trees evaluate through _eval_tree_scores."""
+    AND/OR/NOT trees evaluate through _eval_tree_scores, their top-level
+    OR children summed in the pruned tree path's order
+    (:func:`_tree_top_order`)."""
     phrase_terms = {t for p in plans for toks, _ in p.phrases for t in toks}
 
     def kernel(
@@ -1835,7 +1803,7 @@ def _make_clause_kernel(
                 docs, scores = docs[pm], scores[pm]
             return docs, scores
 
-        tree_terms = None
+        tree_terms = impact = None
         # one empty array per column keeps the dtypes when nothing matches
         out_q, out_d = [np.empty(0, np.int32)], [np.empty(0, np.int64)]
         out_s = [np.empty(0, score_dtype)]
@@ -1849,7 +1817,12 @@ def _make_clause_kernel(
                     tree_terms = {
                         t: (v[1], idf[v[0]] * v[4]) for t, v in post.items()
                     }
-                docs, s64, _ = _eval_tree_scores(p.tree, tree_terms)
+                    impact = {t: idf[v[0]] * tf_max[v[0]] for t, v in post.items()}
+                tree = p.tree
+                if tree[0] == "or":
+                    # the top-level children sum in the pruned path's order
+                    tree = ("or", _tree_top_order(tree, impact)[0])
+                docs, s64 = _eval_tree_scores(tree, tree_terms)
             if docs is None or docs.size == 0:
                 continue
             sc = s64.astype(score_dtype)
@@ -1876,95 +1849,6 @@ def _make_clause_kernel(
         )
         if with_total:
             out["shard_total"] = np.concatenate(out_t)
-        return out
-
-    return kernel
-
-
-def _make_and_kernel(
-    qweights: dict[str, float], n_docs: float, avgdl: float, k: int,
-    score_dtype: str = "float32",
-    with_total: bool = False,
-    cursor: tuple | None = None,
-):
-    """Conjunctive (AND) kernel: posting-list intersection with skip-pointer
-    galloping — SURVEY.md §2.3 J1, the operation Lucene's BooleanQuery runs
-    inside the reference (invoked at LuceneServer.java:682).
-
-    Smallest-df list drives; for each further term only the blocks that can
-    contain surviving candidates are decoded (skip pointers), and the
-    candidate set shrinks monotonically.
-    """
-    n_terms = len(qweights)
-
-    def kernel(
-        pdf: pd.DataFrame, filter_docs: np.ndarray | None = None
-    ) -> pd.DataFrame:
-        empty = _empty_hits(score_dtype, with_total)
-        if len(pdf) < n_terms or k <= 0:
-            return empty  # a term missing from this shard ⇒ no AND matches
-        shard_id = int(pdf["shard_id"].iloc[0])
-        pdf = pdf.sort_values("df")  # rarest term drives the intersection
-
-        rows = list(pdf.itertuples(index=False))
-        d0, t0, l0 = decode_posting_list(rows[0].doc_ids, rows[0].tfs, rows[0].doclens)
-        keep0 = _keep_mask(d0, filter_docs)
-        if keep0 is not None:
-            d0, t0, l0 = d0[keep0], t0[keep0], l0[keep0]
-        cand = d0
-        # dl is per (doc, FIELD): a keyword posting carries dl=1 while the
-        # text posting of the same doc carries its token count — each
-        # term's tf_norm must use its own posting's dl.
-        tfdl_by_term: list[tuple[str, np.ndarray, np.ndarray]] = [
-            (rows[0].term, t0, l0)
-        ]
-        for row in rows[1:]:
-            if cand.size == 0:
-                return empty
-            skips = read_skips(row.skips)
-            firsts = skips["first_doc"]
-            cand_u = i64_to_u64_order(cand)
-            idx = np.searchsorted(firsts, cand_u, side="right") - 1
-            needed = np.unique(np.clip(idx, 0, firsts.size - 1))
-            d, t, l = decode_blocks(
-                row.doc_ids, row.tfs, row.doclens, row.skips, needed, int(row.df)
-            )
-            if d.size == 0:
-                return empty
-            pos = np.searchsorted(d, cand)
-            pos_c = np.minimum(pos, d.size - 1)
-            keep = d[pos_c] == cand
-            cand = cand[keep]
-            tfdl_by_term = [
-                (term, tf[keep], dl[keep]) for term, tf, dl in tfdl_by_term
-            ]
-            tfdl_by_term.append((row.term, t[pos_c[keep]], l[pos_c[keep]]))
-        if cand.size == 0:
-            return empty
-        idf_of = {
-            t: float(scoring.idf_np(np.array([d], dtype=np.float64), n_docs)[0])
-            for t, d in zip(pdf["term"], pdf["df_g"])
-        }
-        scores = np.zeros(cand.size, dtype=np.float64)
-        for term, tf, dl in tfdl_by_term:
-            scores += qweights[term] * idf_of[term] * scoring.tf_norm_np(tf, dl, avgdl)
-        scores32 = scores.astype(score_dtype)
-        if cursor is not None:
-            cm = _cursor_mask(scores32, cand, shard_id, cursor)
-            cand, scores32 = cand[cm], scores32[cm]
-            if cand.size == 0:
-                return empty
-        kk = min(k, cand.size)
-        order = np.lexsort((cand, -scores32))[:kk]
-        out = pd.DataFrame(
-            {
-                "shard_id": np.full(kk, shard_id, dtype=np.int32),
-                "doc_id": cand[order],
-                "score": scores32[order],
-            }
-        )
-        if with_total:
-            out["shard_total"] = np.int64(cand.size)
         return out
 
     return kernel
@@ -2423,12 +2307,10 @@ def _make_dv_agg_cog(kernel, col: str, spec: tuple, kind: str,
 # §2.12; reference IContentServer, node/IContentServer.java:28-107):
 # registering a factory adds a new search mode. Factories share the
 # signature (qweights, n_docs, avgdl, k, prune, score_dtype, with_total).
+# mode="and" is no kernel: it lowers to MUST clauses (_parse_clauses).
 KERNEL_MODES: dict[str, object] = {
     "or": lambda qw, n, a, k, prune, dt, wt: _make_score_kernel(
         qw, n, a, k, prune, dt, wt
-    ),
-    "and": lambda qw, n, a, k, prune, dt, wt: _make_and_kernel(
-        qw, n, a, k, dt, wt
     ),
     "match": lambda qw, n, a, k, prune, dt, wt: _make_match_kernel(
         qw, n, a, k, dt, wt
@@ -2607,7 +2489,9 @@ def _parse_clauses(
     """The pure half of :func:`_lower_query`: fold, route, parse and refuse
     the clause combinations that have no semantics — no Spark job. A
     rewrite query comes back with its expansion pending (``rewrite``).
-    Keyword terms are those of any searched index's keyword fields."""
+    Keyword terms are those of any searched index's keyword fields.
+    ``mode="and"`` is the default-AND operator (Lucene's
+    ``setDefaultOperator(AND)``): every term lowers to a MUST clause."""
     keyword_fields = tuple(
         dict.fromkeys(f for h in handles for f in h.keyword_fields)
     )
@@ -2663,8 +2547,17 @@ def _parse_clauses(
     qweights, must, must_not, phrases = parse_bool_query(
         query, keyword_fields
     )
+    if mode != "or" and (
+        must or must_not or phrases or min_should_match or synonyms
+    ):
+        raise ValueError(
+            "boolean operators (+/-/phrase/min_should_match/synonyms) "
+            f"define their own clause semantics; mode={mode!r} is not "
+            "combinable with them"
+        )
     return _Clauses(
-        None, qweights, must, must_not, phrases, [], min_should_match, None
+        None, qweights, set(qweights) if mode == "and" else must, must_not,
+        phrases, [], min_should_match, None,
     )
 
 
@@ -2677,8 +2570,9 @@ def _lower_query(
     synonyms: "dict[str, list[str]] | None" = None,
 ) -> _Clauses:
     """Lower ``query`` once for every entry point: :func:`_parse_clauses`,
-    then the steps that read the indexes — rewrite expansion, the
-    positions check and synonym-group resolution."""
+    then the steps that read the indexes — rewrite expansion (under
+    ``mode="and"`` every expanded term becomes a MUST), the positions
+    check and synonym-group resolution."""
     c = _parse_clauses(handles, query, mode, min_should_match, synonyms)
     if c.rewrite is not None:
         # Over several indexes the rewrites expand PER INDEX (Lucene
@@ -2689,7 +2583,10 @@ def _lower_query(
         for h in handles:
             for t, w in expand_ranges(spark, h, c.rewrite).items():
                 qweights[t] = max(qweights.get(t, 0.0), w)
-        c = c._replace(qweights=qweights, rewrite=None)
+        c = c._replace(
+            qweights=qweights, rewrite=None,
+            must=set(qweights) if mode == "and" else set(),
+        )
     for h in handles if c.phrases else ():
         if not h.positions:
             raise ValueError(
@@ -2697,14 +2594,9 @@ def _lower_query(
                 "positions=False (omitted term positions) — rebuild with "
                 "positions=True to run phrase/slop queries"
             )
-    c = c._replace(syn_groups=_resolve_syn_groups(spark, handles, synonyms, c))
-    if c.boolean and mode != "or":
-        raise ValueError(
-            "boolean operators (+/-/phrase/min_should_match/synonyms) "
-            f"define their own clause semantics; mode={mode!r} is not "
-            "combinable with them"
-        )
-    return c
+    return c._replace(
+        syn_groups=_resolve_syn_groups(spark, handles, synonyms, c)
+    )
 
 
 def _read_shard(index_dir: str, shard: int, cols: list[str], hashes) -> pd.DataFrame:
@@ -2928,7 +2820,10 @@ def search(
     (LuceneServer.java:682) — over the must-intersection candidates only.
     ``source``/``source_*`` are accepted for backward compatibility but
     no longer consulted (v8 indexes store positions). ``mode`` must be
-    'or' when boolean operators are present.
+    'or' when boolean operators are present. ``mode="and"`` is the
+    default-AND operator (Lucene's ``setDefaultOperator(AND)``): every
+    term — every expansion of a rewrite — lowers to a MUST clause, so
+    ``search("a b", mode="and")`` is ``search("+a +b")``.
 
     Plan at scale: one job of per-shard tasks, each reading its shard's
     rows of the query's terms (row-group skipping via the term-sorted
@@ -3048,12 +2943,15 @@ def search(
         # the baked block maxima assume corpus stats
         prune = False
 
-    if c.tree is not None:
-        kernel = _make_tree_kernel(
-            c.tree, c.qweights, n_docs, avgdl, k_eff, score_dtype, _with_total,
-            prune=prune, cursor=_cursor,
-        )
-    elif c.boolean or (_cursor is not None and mode == "or"):
+    dv = _dv_sort is not None or _dv_group is not None or _dv_agg is not None
+    if (
+        c.tree is not None and prune and not _tree_has_not(c.tree)
+        and not (_with_total or dv) and filter_df is None
+        and filter_docs is None and deny is None
+    ):
+        # a prunable tree (a cursor turned prune off above): MaxScore
+        kernel = _make_tree_kernel(c.tree, n_docs, avgdl, k_eff, score_dtype)
+    elif c.tree is not None or c.boolean or (_cursor is not None and mode == "or"):
         # the clause kernel tags rows with their plan's query_id; one plan
         # here, so the tag is dropped once and every wrapper sees hits
         clauses = _make_clause_kernel(
@@ -3063,21 +2961,16 @@ def search(
         def kernel(pdf, filter_docs=None):
             return clauses(pdf, filter_docs).drop(columns="query_id")
     elif _cursor is not None:
-        # cursor paging needs score-ranked kernels — built directly
-        # (the registry's factory signature has no cursor slot)
-        if mode != "and":
-            raise ValueError(
-                "search_after requires a scoring mode ('or'/'and' or a "
-                f"boolean/tree query); got mode={mode!r}"
-            )
-        kernel = _make_and_kernel(
-            c.qweights, n_docs, avgdl, k_eff, score_dtype, _with_total,
-            cursor=_cursor,
+        # the registry's factory signature has no cursor slot
+        raise ValueError(
+            "search_after requires a scoring mode ('or'/'and' or a "
+            f"boolean/tree query); got mode={mode!r}"
         )
     else:
         if mode not in KERNEL_MODES:
             raise ValueError(
-                f"unknown search mode {mode!r}; registered: {sorted(KERNEL_MODES)}"
+                f"unknown search mode {mode!r}; registered: "
+                f"{sorted(['and', *KERNEL_MODES])}"
             )
         kernel = KERNEL_MODES[mode](
             c.qweights, n_docs, avgdl, k_eff, prune, score_dtype, _with_total
@@ -3099,7 +2992,6 @@ def search(
         )
         if shard_ids is not None:
             fdf = fdf.where(F.col("shard_id").isin(shard_ids))
-    dv = _dv_sort is not None or _dv_group is not None or _dv_agg is not None
     if fdf is not None or dv:
         # a user frame or docvalue sidecar cogroups with the scanned
         # postings by shard
@@ -4004,7 +3896,11 @@ def facet_counts(
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     c = _parse_clauses([h], query, mode)
-    if not c.flat:
+    # mode="and" lowered every term to a MUST: the shard's match set is
+    # the intersection of the terms' doc sets (an explicit +a +b stays
+    # refused, like every other boolean clause)
+    conj = mode == "and"
+    if not (c.flat or conj and c._replace(must=set()).flat):
         raise ValueError(
             "facet_counts supports flat term queries; for boolean/"
             "phrase/rewrite queries compose search() + get_details() and "
@@ -4033,7 +3929,6 @@ def facet_counts(
     if shard_ids is not None:
         left = left.where(F.col("shard_id").isin(list(shard_ids)))
         right = right.where(F.col("shard_id").isin(list(shard_ids)))
-    conj = mode == "and"
 
     def kernel(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if not len(lpdf) or not len(rpdf):
@@ -4648,7 +4543,8 @@ def explain_score(
     Returns one row per clause, ordered contribution DESC then term ASC:
 
       term          the clause (a scoring/excluded term, or the phrase text)
-      clause        'should' | 'must' | 'must_not' | 'phrase'
+      clause        'should' | 'must' | 'must_not' | 'phrase' | 'synonym'
+                    (under mode='and' every term is a MUST: 'must')
       qweight       query-side weight (occurrences x boost; 0 for must_not)
       tf, dl        this doc's term frequency and field length in the
                     clause's OWN posting (keyword postings carry dl=1)
@@ -4662,30 +4558,27 @@ def explain_score(
                     phrase row when the positional match succeeds)
       matches       doc-level verdict, repeated on every row
       total_score   the engine score (score_dtype, same float32 cast as
-                    Hit.java:39) when matches, else 0.0 — bit-comparable
-                    to the ``score`` column search() returns for this doc
+                    Hit.java:39) when matches, else 0.0 — equal to the
+                    ``score`` column search() returns for this doc
 
-    Semantics replicate the search kernels exactly: flat OR needs >= 1
-    scoring term present; mode='and' needs ALL terms; boolean queries need
-    every MUST term + every phrase positionally verified + no MUST_NOT
-    term; dictionary rewrites (wildcard/fuzzy/range) explain the expanded
-    OR, each expansion scoring with its own df. ``synonyms`` groups
-    explain as ONE blended row (clause='synonym', term='Synonym(a b)',
-    tf = Σ member tfs, df = max member df — Lucene's explain prints
-    SynonymQuery the same collapsed way); ``min_should_match`` gates the
-    doc-level ``matches`` verdict on the count of satisfied optional
-    clauses, a group counting as one. Tombstoned (deleted) docs
-    never match — the liveDocs skip, while the reported stats stay stale
-    until expunge, exactly like Lucene. AND/OR/NOT tree grouping is
-    refused (a tree's match condition is not a flat clause list — run
-    search() and read the tree kernel's verdict instead).
+    ``matches`` and ``total_score`` are the verdict of the search's own
+    clause kernel (:func:`_make_clause_kernel`), run over the doc's shard
+    with only this doc allowed and the tombstones denied: the doc matches
+    exactly when search() would return it. Dictionary rewrites
+    (wildcard/fuzzy/range) explain the expanded OR, each expansion
+    scoring with its own df. ``synonyms`` groups explain as ONE blended
+    row (clause='synonym', term='Synonym(a b)', tf = Σ member tfs, df =
+    max member df — Lucene's explain prints SynonymQuery the same
+    collapsed way). Tombstoned (deleted) docs never match — the liveDocs
+    skip, while the reported stats stay stale until expunge, exactly like
+    Lucene. AND/OR/NOT tree grouping is refused (a tree's match condition
+    is not a flat clause list — run search() for tree queries).
 
-    Dataflow: the postings scan prunes to the query's terms (pushed
-    ``In(th, ...)``) and — under pmod sharding — to the ONE shard that can
-    hold the doc; per-shard kernels emit <= |terms| + |phrases| tiny rows
-    (the doc's tf/dl per clause), never a per-doc result set. The BM25
-    arithmetic over that bounded clause list runs driver-side, the same
-    bounded-metadata budget as the k.shards client merge.
+    Dataflow: the postings read prunes to the query's terms and — under
+    pmod sharding — to the ONE shard that can hold the doc; each shard
+    task emits <= |terms| + |phrases| tiny rows (the doc's tf/dl per
+    clause) plus the kernel's one hit row, never a per-doc result set.
+    The per-clause BM25 arithmetic runs driver-side.
     """
     handles = _open_handles(spark, index)
     if len(handles) > 1:
@@ -4725,13 +4618,15 @@ def explain_score(
     phrase_tokens = {t for toks, _ in phrases for t in toks}
     # (skips/block maxima are pruning state — a single-doc probe never
     # needs them)
-    kcols = ["shard_id", "th", "doc_ids", "tfs", "doclens"] + (
+    kcols = ["shard_id", "th", "doc_ids", "tfs", "doclens", "max_tf", "min_dl"] + (
         ["positions"] if phrases else []
     )
     fetch = _fetch_postings(spark, handles, c.terms, kcols)
     n_docs, avgdl = fetch.n_docs, fetch.avgdl
     phrase_specs = [(tuple(toks), int(slop)) for toks, slop in phrases]
     want_pos = bool(phrase_specs)
+    verdict = _make_clause_kernel([c], n_docs, avgdl, 1, score_dtype)
+    deny = _deny_handle(spark, index)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         rows_out: list[tuple] = []
@@ -4748,7 +4643,7 @@ def explain_score(
             if want_pos and r.term in phrase_tokens and hit:
                 pdata[r.term] = (docs, tfs, decode_positions(r.positions, tfs))
         for t, tf in tf_of.items():
-            rows_out.append((t, tf, dl_of[t], False))
+            rows_out.append((t, tf, dl_of[t], False, 0.0))
         cand = np.array([target], dtype=np.int64)
         for toks, slop in phrase_specs:
             if all(t in pdata for t in toks):
@@ -4757,13 +4652,18 @@ def explain_score(
                 )
             else:
                 ok = False
-            rows_out.append((" ".join(toks), 0, 0, ok))
+            rows_out.append((" ".join(toks), 0, 0, ok, 0.0))
+        # the doc's hit row, term None: the search kernel's verdict
+        hits = verdict(pdf, DocFilter(cand, _deny_val(deny)))
+        for sc in hits["score"]:
+            rows_out.append((None, 0, 0, False, float(sc)))
         return pd.DataFrame(
-            rows_out, columns=["term", "tf", "dl", "phrase_ok"]
+            rows_out, columns=["term", "tf", "dl", "phrase_ok", "score"]
         )
 
     probe = fetch.run(
-        spark, kernel, "term string, tf long, dl long, phrase_ok boolean",
+        spark, kernel,
+        "term string, tf long, dl long, phrase_ok boolean, score double",
         # under pmod sharding only the ONE shard that can hold the doc
         only=[target % index.num_shards]
         if index.sharding == "pmod_doc_id" else None,
@@ -4774,19 +4674,20 @@ def explain_score(
     # a term row always carries the doc's dl >= 1; phrase verdict rows
     # carry tf=dl=0, so the two never collide even for one-token phrases
     pnames = {" ".join(toks) for toks, _ in phrase_specs}
+    scores = []
     for r in probe.itertuples(index=False):
-        if r.term in pnames and (r.tf == 0 and r.dl == 0):
+        if pd.isna(r.term):
+            scores.append(r.score)
+        elif r.term in pnames and (r.tf == 0 and r.dl == 0):
             phrase_ok[r.term] = phrase_ok.get(r.term, False) or bool(
                 r.phrase_ok
             )
         else:
             tf_of[r.term] = int(r.tf)
             dl_of[r.term] = int(r.dl)
+    matches = bool(scores)
+    total = float(scores[0]) if matches else 0.0
     dfm = index.df_of_terms(spark, sorted(set(qweights)))
-    deleted = index.deleted_array(spark)
-    is_deleted = deleted is not None and bool(
-        np.any(deleted == np.int64(target))
-    )
 
     def _factors(df: int, tf: int, dl: int) -> tuple[float, float]:
         """(idf, tf_norm) of one clause for this doc, scoring.py formulas;
@@ -4800,14 +4701,6 @@ def explain_score(
         return idf, float(tfn[0])
 
     out_rows: list[tuple] = []
-    contributions: list[float] = []
-    any_should = False
-    should_sat = 0  # satisfied optional clauses (a group counts as one)
-    must_ok, not_ok = True, True
-    n_optional = (
-        len(set(qweights) - must - phrase_tokens - syn_members)
-        + len(syn_groups)
-    )
     for t in sorted(qweights):
         if t in syn_members:
             # the key term explains inside its group's blended row
@@ -4819,15 +4712,8 @@ def explain_score(
         idf, tfn = _factors(dfv, tf, dl)
         contrib = qw * idf * tfn if tf > 0 else 0.0
         clause = "must" if t in must else "should"
-        sat = tf > 0
-        if t in must and not sat:
-            must_ok = False
-        if clause == "should" and sat:
-            any_should = True
-            should_sat += 1
-        contributions.append(contrib)
         out_rows.append(
-            (t, clause, qw, tf, dl, dfv, idf, tfn, contrib, sat)
+            (t, clause, qw, tf, dl, dfv, idf, tfn, contrib, tf > 0)
         )
     for weight, gdf, members in syn_groups:
         # one blended row per group — Lucene's explain collapses
@@ -4838,55 +4724,22 @@ def explain_score(
         )
         gidf, gtfn = _factors(gdf, tf_sum, dl)
         contrib = float(weight) * gidf * gtfn if tf_sum > 0 else 0.0
-        sat = tf_sum > 0
-        if sat:
-            any_should = True
-            should_sat += 1
-        contributions.append(contrib)
         out_rows.append(
             (f"Synonym({' '.join(members)})", "synonym", float(weight),
-             tf_sum, dl, int(gdf), gidf, gtfn, contrib, sat)
+             tf_sum, dl, int(gdf), gidf, gtfn, contrib, tf_sum > 0)
         )
     for t in sorted(must_not):
         tf = tf_of.get(t, 0)
-        sat = tf == 0
-        if not sat:
-            not_ok = False
         out_rows.append(
-            (t, "must_not", 0.0, tf, dl_of.get(t, 0), 0, 0.0, 0.0, 0.0, sat)
+            (t, "must_not", 0.0, tf, dl_of.get(t, 0), 0, 0.0, 0.0, 0.0, tf == 0)
         )
-    phrases_sat = True
     for toks, slop in phrase_specs:
         name = " ".join(toks)
-        ok = phrase_ok.get(name, False)
-        phrases_sat = phrases_sat and ok
         label = name if slop == 0 else f'"{name}"~{slop}'
         out_rows.append(
-            (label, "phrase", 0.0, 0, 0, 0, 0.0, 0.0, 0.0, ok)
+            (label, "phrase", 0.0, 0, 0, 0, 0.0, 0.0, 0.0,
+             phrase_ok.get(name, False))
         )
-    if mode == "and":
-        matches = all(tf_of.get(t, 0) > 0 for t in qweights)
-    elif c.boolean:
-        matches = (
-            must_ok
-            and not_ok
-            and phrases_sat
-            and (bool(must) or bool(phrase_specs) or any_should)
-        )
-        if min_should_match > 0:
-            # the kernel's exact rule: a group counts as ONE clause;
-            # m beyond the optional-clause count matches nothing
-            matches = matches and (
-                min_should_match <= n_optional
-                and should_sat >= min_should_match
-            )
-    else:
-        matches = any_should
-    if is_deleted:
-        matches = False
-    total = float(
-        np.float64(sum(contributions)).astype(score_dtype)
-    ) if matches else 0.0
     out_rows = [
         r + (matches, total)
         for r in sorted(out_rows, key=lambda r: (-r[8], r[0]))

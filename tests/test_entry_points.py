@@ -4,10 +4,12 @@ One lowering step parses, routes and validates a query for search,
 search_batch, count_matches, facet_counts and explain_score, so over a
 fixed list of query shapes they must agree: search hits == search_batch
 hits, search_with_total's total == count_matches, explain_score on the
-top hit reproduces its score, and for flat queries the per-value facet
-counts over ``role`` sum to the total. The first two checks also run
-over the clause-option dict entries search_batch takes, and over a
+top hit reproduces its score exactly, and for flat queries the per-value
+facet counts over ``role`` sum to the total. The first two checks also
+run over the clause-option dict entries search_batch takes, and over a
 tombstoned copy of the index (the deny mask inside the shared kernels).
+Default-AND (``mode="and"``) lowers to MUST clauses, so it equals the
+``+a +b`` form bit for bit.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ import shutil
 import pytest
 
 import katta_spark.query as ksq
+from katta_spark import operators
 from katta_spark.build import build_index
 from katta_spark.delete import delete_docs
 from katta_spark.query import (
@@ -72,13 +75,6 @@ def test_entry_points_agree(spark, ridx):
         tot = search_with_total(spark, ridx, q, k=1).collect()
         total = tot[0].total_hits if tot else 0
         assert count_matches(spark, ridx, q) == total, name
-        if hits and name not in TREES:
-            top = hits[0]
-            exp = explain_score(spark, ridx, q, top.doc_id).toPandas()
-            assert bool(exp["matches"].iloc[0]), name
-            assert float(exp["total_score"].iloc[0]) == pytest.approx(
-                float(top.score), rel=1e-6
-            ), name
         if name in FLAT:
             facets = facet_counts(spark, ridx, q, "role", k=100).collect()
             assert sum(r["count"] for r in facets) == total, name
@@ -121,9 +117,73 @@ def test_entry_points_agree_tombstoned(spark, ridx, tmp_path):
     _batch_and_counts_agree(spark, d, SHAPES + OPTION_SHAPES)
 
 
+def test_explain_total_is_search_score(spark, ridx, tmp_path):
+    """explain_score's verdict is the search kernel's own: for every
+    non-tree shape, and for mode="and", at both score dtypes, the top
+    hit explains to matches=True with total_score == its search score
+    exactly; once tombstoned it explains to matches=False."""
+    shapes = [(q, "or") for name, q in SHAPES if name not in TREES]
+    shapes.append(("hotalpha w00011", "and"))
+    for dtype in ("float32", "float64"):
+        for q, mode in shapes:
+            hits = search(spark, ridx, q, k=1, mode=mode,
+                          score_dtype=dtype).collect()
+            if not hits:
+                continue
+            exp = explain_score(spark, ridx, q, hits[0].doc_id, mode=mode,
+                                score_dtype=dtype).toPandas()
+            assert bool(exp["matches"].iloc[0]), (q, mode, dtype)
+            assert float(exp["total_score"].iloc[0]) == hits[0].score, (
+                q, mode, dtype
+            )
+    d = str(tmp_path / "tombstoned")
+    shutil.copytree(ridx, d)
+    top = search(spark, d, "hotalpha w00011", k=1).collect()[0]
+    assert delete_docs(spark, d, [top.doc_id]) == 1
+    exp = explain_score(spark, d, "hotalpha w00011", top.doc_id).toPandas()
+    assert not bool(exp["matches"].iloc[0])
+    assert float(exp["total_score"].iloc[0]) == 0.0
+
+
+def test_and_mode_is_all_must(spark, ridx):
+    """search("a b", mode="and") is search("+a +b") bit for bit at
+    float64: hits, totals, an offset page and two search_after pages."""
+    opts = {"score_dtype": "float64"}
+
+    def rows(frame):
+        return [tuple(r) for r in frame.collect()]
+
+    for terms in (["hotalpha", "w00011"], ["hotalpha", "hotbeta", "w00013"],
+                  ["role:user", "hotgamma"]):
+        plain, must = " ".join(terms), " ".join("+" + t for t in terms)
+        got = rows(search(spark, ridx, plain, k=10, mode="and", **opts))
+        assert got, plain
+        assert got == rows(search(spark, ridx, must, k=10, **opts)), plain
+        assert rows(
+            search_with_total(spark, ridx, plain, k=5, mode="and", **opts)
+        ) == rows(search_with_total(spark, ridx, must, k=5, **opts)), plain
+        assert rows(
+            search(spark, ridx, plain, k=3, offset=3, mode="and", **opts)
+        ) == rows(search(spark, ridx, must, k=3, offset=3, **opts)), plain
+        after = got[1][2], got[1][0], got[1][1]  # (score, doc_id, shard_id)
+        for _ in range(2):
+            page = rows(search_after(spark, ridx, plain, after, k=2,
+                                     mode="and", **opts))
+            assert page == rows(
+                search_after(spark, ridx, must, after, k=2, **opts)
+            ), plain
+            if not page:
+                break
+            after = page[-1][2], page[-1][0], page[-1][1]
+
+
 def test_clause_kernel_is_the_one_home(spark, ridx, monkeypatch):
-    """Boolean search, or-mode search_after and search_batch build the
-    shared clause kernel; a flat search runs the registered "or" kernel."""
+    """Boolean search, mode="and" (search, search_after, totals), or-mode
+    search_after, trees that cannot prune (NOT, totals) and search_batch
+    build the shared clause kernel; a flat search runs the registered
+    "or" kernel and a NOT-free tree with pruning on the tree kernel."""
+    assert set(ksq.KERNEL_MODES) == {"or", "match"}
+    assert operators.kernel_modes() == ["match", "or"]
     built = []
     make = ksq._make_clause_kernel
 
@@ -142,3 +202,14 @@ def test_clause_kernel_is_the_one_home(spark, ridx, monkeypatch):
     assert built == [1, 1]
     search_batch(spark, ridx, ["hotalpha", "+hotalpha +hotbeta", "w00011"], k=3)
     assert built == [1, 1, 3]
+    del built[:]
+    first = search(spark, ridx, "hotalpha w00011", k=3, mode="and").collect()[-1]
+    after = (first.score, first.doc_id, first.shard_id)
+    search_after(spark, ridx, "hotalpha w00011", after, k=3, mode="and")
+    search_with_total(spark, ridx, "hotalpha w00011", k=3, mode="and")
+    assert built == [1, 1, 1]
+    search(spark, ridx, "hotalpha OR hotbeta NOT w00011", k=3)
+    search_with_total(spark, ridx, "hotalpha OR hotbeta", k=3)
+    assert built == [1, 1, 1, 1, 1]
+    search(spark, ridx, "hotalpha OR hotbeta", k=3)
+    assert built == [1, 1, 1, 1, 1]
