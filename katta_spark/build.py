@@ -24,8 +24,10 @@ second hash exchange it saved):
             → ONE mapInPandas kernel per partition: numpy lexsort
             (measured ~2x cheaper than the JVM row sort it replaces) +
             vectorized run-length tf + posting-list encode → one
-            postings-sized hash exchange by shard → write ONE th-sorted
-            file per shard (parquet min/max row-group skipping on th)
+            postings-sized hash exchange by (shard_id, th % 16) → each
+            task writes one th-sorted file per shard it holds; every file
+            holds whole th % 16 slices, so its th range spans the whole
+            hash range and parquet min/max never skips a row group on th
     dictionary (vocab-sized): (th → term) map + hash-collision check;
             postings store only the 8-byte th, never strings
     phase 3 (vocab-sized):  ONE job — term stats (df, cf) aggregated FROM
@@ -648,10 +650,11 @@ def build_index(
             # job re-executes the tokenize lineage. The kernel lexsorts in
             # numpy (measured ~2x cheaper than the JVM sortWithinPartitions it
             # replaces) and encodes. The second, postings-sized hash exchange
-            # groups each shard into one task so the write is ONE th-sorted
-            # file per shard — parquet min/max row-group skipping on th, file
-            # count O(num_shards); hash (not range) so nothing is sampled and
-            # the kernel runs exactly once.
+            # by (shard_id, th % 16) writes one file per (shard, task), at
+            # most min(16, shards) per shard; hash (not range) so
+            # nothing is sampled and the kernel runs exactly once. A file is
+            # th-sorted but holds whole th % 16 slices, so its th range spans
+            # the whole hash range: no row group can be skipped on th.
             n_encode_parts = encode_partitions or int(
                 spark.conf.get("spark.sql.shuffle.partitions")
             )
@@ -665,8 +668,8 @@ def build_index(
                 # keys = (shard, th%16 slice) >> partitions: hashing bare
                 # shard ids into as many partitions collides (Poisson max
                 # bucket 2-3x mean = a write-stage straggler, measured ~20%);
-                # files stay th-sorted so row-group min/max skipping holds,
-                # ≤16 files per shard.
+                # ≤16 th-sorted files per shard, each spanning the whole th
+                # range (th % 16 slices are interleaved in every file).
                 .repartition(
                     len(shard_ids), F.col("shard_id"), F.pmod(F.col("th"), F.lit(16))
                 )

@@ -627,8 +627,9 @@ def compact(
         # ---- marker-derived scalars read back from the WRITTEN postings
         # (deliberately not derived from the inputs: comparing against
         # the input handles' sums below verifies the merge preserved the
-        # doc accounting). Pushed In(th) over the 256 sentinel hashes +
-        # th-sorted row groups keep this scan tiny.
+        # doc accounting). Pushed In(th) over the 256 sentinel hashes keeps
+        # the rows it returns tiny; every row group spans the whole th range,
+        # so none is skipped.
         post = spark.read.parquet(os.path.join(out_dir, "postings.parquet"))
         marker = F.col("th").isin(list(SENTINEL_HASHES))
         mrows = (

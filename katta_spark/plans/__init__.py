@@ -31,7 +31,8 @@ def audit_search_plan(hits: DataFrame) -> dict:
 
     - ``local_result``: the plan is one LocalTableScan — the shard stage
       already ran inside search() as a plain job, and the driver merged
-      its ≤ k·shards rows (Katta's client merge);
+      its ≤ k·shards rows (Katta's client merge) into a ``Hits`` frame,
+      whose relation is built here, on first use;
     - ``single_stage``: for the lazy ``ordered=False`` frame, phase 2 is
       one shard-local ``MapInPandas`` over a ``Range`` of shard ids;
     - either way the tasks read their shard's postings themselves (no

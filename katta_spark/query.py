@@ -24,16 +24,22 @@ from __future__ import annotations
 
 import functools
 import os
+import threading
 import time
+import weakref
+from collections import OrderedDict
 from collections.abc import Iterator
 from dataclasses import dataclass
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark import RDD
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import _parse_datatype_string
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from katta_spark import scoring
 from katta_spark.codec import (
@@ -1044,9 +1050,71 @@ def _local_df(
     )
 
 
-# a DDL parse is a JVM round trip (~4 ms), paid by every search's local
-# result frame: each schema string is parsed once
+# a DDL parse is a JVM round trip (~4 ms): each schema string is parsed once
 _ddl_schema = functools.lru_cache(maxsize=256)(_parse_datatype_string)
+
+# the numpy dtype Spark's Arrow path gives each column type in toPandas
+_NP_TYPES = {
+    "long": np.int64, "integer": np.int32, "float": np.float32,
+    "double": np.float64, "boolean": np.bool_,
+}
+
+
+class Hits(ClassicDataFrame):
+    """A result merged on the driver — Katta's client ``Hits``
+    (Hits.java:34-51): the rows as pandas plus their DDL schema.
+
+    ``collect``, ``toPandas``, ``count``, ``take``, ``head``, ``first``,
+    ``isEmpty``, ``schema`` and ``columns`` answer from those rows with
+    no JVM call, as a :func:`_local_df` frame of the same rows would. The
+    Spark relation is that frame, built the first time a Spark operator
+    or ``_jdf`` needs it."""
+
+    def __new__(cls, *args, **kwargs):
+        # the classic DataFrame.__new__ calls __init__(jdf, session) itself
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, rows, schema: str) -> None:
+        struct = _ddl_schema(schema)
+        if not isinstance(rows, pd.DataFrame):
+            rows = pd.DataFrame(rows, columns=struct.names)
+        self._pdf = pd.DataFrame({
+            f.name: rows[f.name].to_numpy(_NP_TYPES.get(f.dataType.typeName(), object))
+            for f in struct.fields
+        })
+        self._ddl = schema
+        self._rel = None
+        self._session = spark
+        self._sc = spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+
+    @property
+    def _jdf(self):
+        if self._rel is None:
+            self._rel = _local_df(self._session, self._pdf, None, self._ddl)._jdf
+        return self._rel
+
+    @functools.cached_property
+    def schema(self) -> StructType:
+        return StructType.fromJson(_ddl_schema(self._ddl).jsonValue())
+
+    def collect(self) -> list[Row]:
+        row = Row(*self.columns)
+        cols = (c.tolist() for _, c in self._pdf.items())
+        return [row(*vals) for vals in zip(*cols)]
+
+    def toPandas(self) -> pd.DataFrame:
+        return self._pdf.copy()
+
+    def count(self) -> int:
+        return len(self._pdf)
+
+    def isEmpty(self) -> bool:
+        return self._pdf.empty
+
+    def take(self, num: int) -> list[Row]:
+        return self.collect()[:num]
 
 
 # Positions arithmetic packs (candidate doc index, adjusted position) into
@@ -2599,11 +2667,79 @@ def _lower_query(
     )
 
 
+# Decoded postings bytes one process keeps open — Katta's node opens a
+# shard's IndexSearcher once and keeps it (LuceneServer.java:184-193).
+OPEN_SHARD_BYTES = 64 << 20
+
+
+class _OpenShard(NamedTuple):
+    """One shard's decoded postings columns, in file-then-row order, with
+    a th-sorted permutation of its rows."""
+
+    table: pa.Table
+    th: np.ndarray
+    perm: np.ndarray
+
+    @classmethod
+    def of(cls, table: pa.Table) -> "_OpenShard":
+        th = table["th"].to_numpy()
+        perm = np.argsort(th, kind="stable")
+        return cls(table, th[perm], perm)
+
+    def rows(self, hashes) -> pd.DataFrame:
+        """The rows whose th is in ``hashes``, in file-then-row order (the
+        order a th-filtered read of the files returns)."""
+        h = np.unique(np.asarray(hashes, np.int64))
+        lo = np.searchsorted(self.th, h, "left")
+        n = np.searchsorted(self.th, h, "right") - lo
+        at = np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())
+        # a few rows: a conversion thread pool costs more than it saves
+        return self.table.take(np.sort(self.perm[at])).to_pandas(use_threads=False)
+
+
+class _OpenShards:
+    """A per-process LRU of :class:`_OpenShard`, bounded by
+    ``OPEN_SHARD_BYTES`` of decoded columns. Keys are a shard's files,
+    each with (path, st_mtime_ns, st_size), plus the column set: a
+    rewritten file is a new key, and the stale entry ages out."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._held: OrderedDict = OrderedDict()
+        self._bytes = 0
+
+    def get(self, key) -> "_OpenShard | None":
+        with self._lock:
+            shard = self._held.get(key)
+            if shard is not None:
+                self._held.move_to_end(key)
+            return shard
+
+    def put(self, key, shard: _OpenShard) -> None:
+        with self._lock:
+            if key in self._held:
+                return
+            self._held[key] = shard
+            self._bytes += shard.table.nbytes
+            while self._bytes > OPEN_SHARD_BYTES:
+                _, old = self._held.popitem(last=False)
+                self._bytes -= old.table.nbytes
+
+
+_OPEN_SHARDS = _OpenShards()
+
+
 def _read_shard(index_dir: str, shard: int, cols: list[str], hashes) -> pd.DataFrame:
     """The ``cols`` of one shard's postings rows whose th is in ``hashes``,
-    read with pyarrow (the th-sorted files skip by row group); a shard
-    with no directory (no documents) reads as no rows, a postings table
-    this process cannot see raises."""
+    in file-then-row order; a shard with no directory (no documents)
+    reads as no rows, a postings table this process cannot see raises.
+
+    Every file of a shard spans the whole th range (the writers
+    repartition by ``(shard_id, th % 16)``), so a th-filtered read decodes
+    every row group. The shard is therefore read once in full and served
+    from :data:`_OPEN_SHARDS`; a shard whose files exceed
+    ``OPEN_SHARD_BYTES`` on disk is read with the th filter on every
+    call, and one whose decoded columns exceed it is not kept."""
     import pyarrow.dataset as pads
 
     fcols = [c for c in cols if c != "shard_id"]
@@ -2613,11 +2749,37 @@ def _read_shard(index_dir: str, shard: int, cols: list[str], hashes) -> pd.DataF
         raise FileNotFoundError(f"postings table {root!r} is not readable here")
     if not files:
         return pd.DataFrame(columns=fcols)
-    return (
-        pads.dataset(files, format="parquet")
-        .to_table(columns=fcols, filter=pads.field("th").isin(hashes))
-        .to_pandas()
+    stats = [os.stat(f) for f in files]
+    key = (
+        tuple((f, st.st_mtime_ns, st.st_size) for f, st in zip(files, stats)),
+        tuple(fcols),
     )
+    held = _OPEN_SHARDS.get(key)
+    if held is None:
+        data = pads.dataset(files, format="parquet")
+        if sum(st.st_size for st in stats) > OPEN_SHARD_BYTES:
+            return data.to_table(
+                columns=fcols, filter=pads.field("th").isin(hashes)
+            ).to_pandas()
+        held = _OpenShard.of(data.to_table(columns=fcols))
+        if held.table.nbytes <= OPEN_SHARD_BYTES:
+            _OPEN_SHARDS.put(key, held)
+    return held.rows(hashes)
+
+
+# One empty n-partition RDD per SparkContext and n: parallelize writes a
+# temp file on every call. Only its JVM handle is held, so a stopped
+# context is not pinned.
+_SHARD_TARGETS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _shard_targets(sc, n: int) -> RDD:
+    """An RDD of ``n`` empty partitions: partition i runs shard target i."""
+    held = _SHARD_TARGETS.setdefault(sc, {})
+    if n not in held:
+        base = sc.parallelize([], n)
+        held[n] = (base._jrdd, base._jrdd_deserializer)
+    return RDD(held[n][0], sc, held[n][1])
 
 
 class _Fetch(NamedTuple):
@@ -2669,8 +2831,15 @@ class _Fetch(NamedTuple):
         broadcast) whose per-shard frames concatenate on the driver; for
         kernels that emit at most k rows (or a count) per shard."""
         task, n = self._task(fn, only)
-        sc = spark.sparkContext
-        parts = sc.parallelize(range(n), n).mapPartitions(task).collect() if n else []
+
+        def part(i, rows):
+            for _ in rows:  # a worker is reused only if it drains its input
+                pass
+            return task([i])
+
+        parts = _shard_targets(spark.sparkContext, n).mapPartitionsWithIndex(
+            part
+        ).collect() if n else []
         return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
             columns=_ddl_schema(schema).names
         )
@@ -2749,6 +2918,21 @@ def _fetch_postings(
     )
 
 
+def _merge_order(pdf: pd.DataFrame, lead: str | None = None) -> np.ndarray:
+    """Row order of Katta's client merge (LuceneClient.java:180-198):
+    the reference tie-break score DESC, doc_id ASC, shard_id DESC, after
+    the ``lead`` column ascending when one is given."""
+    keys = [
+        -pdf["shard_id"].to_numpy(np.int64),
+        pdf["doc_id"].to_numpy(np.int64),
+        -pdf["score"].to_numpy(np.float64),
+    ]
+    if lead is not None:
+        keys.append(pdf[lead].to_numpy(np.int64))
+    # np.lexsort's LAST key is the primary one
+    return np.lexsort(keys)
+
+
 def search(
     spark: SparkSession,
     index: "IndexHandle | str | list[IndexHandle | str]",
@@ -2765,9 +2949,6 @@ def search(
     filter_df: DataFrame | None = None,
     filter_doc_col: str = "doc_id",
     source: DataFrame | None = None,
-    source_text_col: str = "text",
-    source_id_cols: tuple[str, str] = ("conv_id", "turn_idx"),
-    source_doc_id_col: str | None = None,
     offset: int = 0,
     _with_total: bool = False,
     _dv_sort: tuple | None = None,
@@ -2818,21 +2999,22 @@ def search(
     job, no extra shuffles): phrases execute against the index's
     positional postings alone — like Lucene running PhraseQuery per shard
     (LuceneServer.java:682) — over the must-intersection candidates only.
-    ``source``/``source_*`` are accepted for backward compatibility but
-    no longer consulted (v8 indexes store positions). ``mode`` must be
+    ``source`` is accepted for backward compatibility but no longer
+    consulted (v8 indexes store positions). ``mode`` must be
     'or' when boolean operators are present. ``mode="and"`` is the
     default-AND operator (Lucene's ``setDefaultOperator(AND)``): every
     term — every expansion of a rewrite — lowers to a MUST clause, so
     ``search("a b", mode="and")`` is ``search("+a +b")``.
 
-    Plan at scale: one job of per-shard tasks, each reading its shard's
-    rows of the query's terms (row-group skipping via the term-sorted
-    layout) into the kernel → ≤ k·shards rows → Katta's client merge on
-    the driver. Nothing is shuffled or broadcast
-    and no SQL plan is built (:meth:`_Fetch.run`). So the call is EAGER:
-    the job runs before it returns and the result is a local frame.
-    ``ordered=False`` (every match, unsorted, for callers that pass a
-    huge k) and ``filter_df`` searches stay lazy Spark plans.
+    Plan at scale: one job of per-shard tasks, each taking its shard's
+    rows of the query's terms from the worker's open copy of the shard
+    (:func:`_read_shard`) into the kernel → ≤ k·shards rows → Katta's
+    client merge on the driver. Nothing is shuffled or broadcast and no
+    SQL plan is built (:meth:`_Fetch.run`). So the call is EAGER: the job
+    runs before it returns and the result is :class:`Hits`, the merged
+    rows held on the driver. ``ordered=False`` (every match, unsorted,
+    for callers that pass a huge k), docvalue and ``filter_df`` searches
+    stay lazy Spark plans.
 
     Filtered search (Katta's Filter, ILuceneServer.java:84-101, applied at
     LuceneServer.java:334-345: restricts the matched set WITHOUT changing
@@ -2933,8 +3115,8 @@ def search(
     )
     if not c.qweights or k <= 0:
         if _dv_agg is not None:
-            return _local_df(spark, [], None, _dv_agg[3])
-        return _local_df(spark, [], None, result_schema)
+            return Hits(spark, [], _dv_agg[3])
+        return Hits(spark, [], result_schema)
     # only phrase queries fetch the positions blobs
     kcols = _KERNEL_COLS + (["positions"] if c.phrases else [])
     fetch = _fetch_postings(spark, handles, c.terms, kcols, shard_ids)
@@ -3094,20 +3276,17 @@ def search(
                 F.col("shard_id").desc(),
             ).limit(k_eff).offset(offset)
         pdf = hits.toPandas()
-    # Katta's client merge (LuceneClient.java:180-198) of the ≤ k·shards
-    # per-shard hits in the reference tie-break; totals sum every answering
-    # shard's match count first (Hits.java:34-51), whatever the page
-    pdf = pdf.sort_values(
-        ["score", "doc_id", "shard_id"], ascending=[False, True, False]
-    )
-    top = pdf.iloc[offset:k_eff]
+    # Katta's client merge of the ≤ k·shards per-shard hits; totals sum
+    # every answering shard's match count first (Hits.java:34-51),
+    # whatever the page
+    top = pdf.iloc[_merge_order(pdf)[offset:k_eff]]
     if _with_total:
         per_shard = pdf.groupby("shard_id")["shard_total"].first()
         top = top.assign(
             total_hits=int(per_shard.sum()), shards_hit=len(per_shard),
             shards_total=sum(h.num_shards for h in handles),
         )
-    return _local_df(spark, top, None, result_schema)
+    return Hits(spark, top, result_schema)
 
 
 # Katta's multi-index search is search() over a list of indexes; the
@@ -3572,7 +3751,7 @@ def search_grouped(
         "shard_id int, score double"
     )
     if not order_of:
-        return _local_df(spark, [], None, out_schema)
+        return Hits(spark, [], out_schema)
     hits = search(
         spark, index, query,
         _dv_group=(
@@ -3724,7 +3903,7 @@ def search_batch(
         plans.append(_lower_query(spark, handles, qstr, "or", q_msm, q_syns))
     all_terms = sorted({t for plan in plans for t in plan.terms})
     if not all_terms or k <= 0:
-        return _local_df(spark, [], None, out_schema)
+        return Hits(spark, [], out_schema)
     bcols = _KERNEL_COLS + (
         ["positions"] if any(plan.phrases for plan in plans) else []
     )
@@ -3734,11 +3913,9 @@ def search_batch(
     )
     # the ≤ |queries|·k rows per shard merge driver-side, per query, in
     # the reference tie-break (Katta's client merge)
-    hits = fetch.run(spark, _denying(kernel, deny), out_schema).sort_values(
-        ["query_id", "score", "doc_id", "shard_id"],
-        ascending=[True, False, True, False],
-    )
-    return _local_df(spark, hits.groupby("query_id").head(k), None, out_schema)
+    hits = fetch.run(spark, _denying(kernel, deny), out_schema)
+    hits = hits.iloc[_merge_order(hits, "query_id")]
+    return Hits(spark, hits.groupby("query_id").head(k), out_schema)
 
 
 def _live_tombstone_count(
@@ -3827,12 +4004,12 @@ def count_matches(
     # the search kernels' exact totals ARE the count: tombstones are
     # denied there and rewrites expand against the dictionary (per index
     # when several are searched); a flat query only needs the match set
-    rows = search_with_total(
+    hits = search_with_total(
         spark, handles, query, k=1,
         mode="match" if c.flat and not synonyms else "or",
         min_should_match=min_should_match, synonyms=synonyms,
-    ).collect()
-    return int(rows[0]["total_hits"]) if rows else 0
+    ).toPandas()
+    return int(hits["total_hits"].iloc[0]) if len(hits) else 0
 
 
 def facet_counts(
@@ -4613,7 +4790,7 @@ def explain_score(
         "satisfied boolean, matches boolean, total_score double"
     )
     if not qweights and not must_not:
-        return _local_df(spark, [], None, out_schema)
+        return Hits(spark, [], out_schema)
 
     phrase_tokens = {t for toks, _ in phrases for t in toks}
     # (skips/block maxima are pruning state — a single-doc probe never
@@ -4744,4 +4921,4 @@ def explain_score(
         r + (matches, total)
         for r in sorted(out_rows, key=lambda r: (-r[8], r[0]))
     ]
-    return _local_df(spark, out_rows, None, out_schema)
+    return Hits(spark, out_rows, out_schema)

@@ -21,7 +21,10 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute  # noqa: F401 — pa.compute
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 import katta_spark.query as ksq
@@ -104,6 +107,70 @@ def test_one_job_index_list_and_count(spark, sidx, sidx_b):
     assert _one_job(spark, lambda: count_matches(spark, ha, q)) == n
     tot = search_with_total(spark, ha, q, k=1).collect()
     assert n == tot[0].total_hits
+
+
+def _bits(rows) -> list[str]:
+    """Rows as reprs: floats compare bit for bit, and types show."""
+    return [repr([(type(v).__name__, v) for v in r]) for r in rows]
+
+
+def _same_frame(got, want) -> None:
+    """``got`` answers every driver-side read as ``want`` does."""
+    assert _bits(got.collect()) == _bits(want.collect())
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+    assert [r.asDict() for r in got.collect()] == [r.asDict() for r in want.collect()]
+    pd.testing.assert_frame_equal(got.toPandas(), want.toPandas(), check_exact=True)
+    assert got.count() == want.count()
+    assert _bits(got.take(3)) == _bits(want.take(3))
+    assert _bits(got.head(2)) == _bits(want.head(2))
+    assert repr(got.head()) == repr(want.head())
+    assert repr(got.first()) == repr(want.first())
+    assert got.isEmpty() == want.isEmpty()
+    assert got.schema == want.schema
+    assert got.columns == want.columns
+
+
+@pytest.mark.parametrize("dtype", ["float32", "float64"])
+def test_hits_frame_answers_from_the_driver(spark, sidx, dtype, monkeypatch):
+    """A search returns its merged rows as a driver-resident frame: every
+    read of the rows equals the local Spark frame of the same rows, bit
+    for bit, with no createDataFrame; Spark operators and ``_jdf`` build
+    that frame on first use."""
+    h = IndexHandle.open(spark, sidx)
+    sql_t = "float" if dtype == "float32" else "double"
+    base = f"doc_id long, shard_id int, score {sql_t}"
+    total = base + ", total_hits long, shards_hit int, shards_total int"
+    batch = f"query_id int, shard_id int, doc_id long, score {sql_t}"
+    calls = []
+    real = type(spark).createDataFrame
+
+    def spy(self, *a, **kw):
+        calls.append(1)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(type(spark), "createDataFrame", spy)
+    for q in SHAPES + ["nosuchterm"]:
+        calls.clear()
+        r = search(spark, h, q, k=10, score_dtype=dtype)
+        rows = r.collect()
+        assert calls == [], q
+        assert isinstance(r, DataFrame)
+        assert bool(rows) == (q != "nosuchterm"), q
+        refs = []
+        for got, ddl in [
+            (r, base),
+            (search_with_total(spark, h, q, k=10, score_dtype=dtype), total),
+            (search_batch(spark, h, [q, "hotbeta"], k=3, score_dtype=dtype), batch),
+        ]:
+            refs.append(ksq._local_df(spark, [tuple(x) for x in got.collect()], None, ddl))
+            _same_frame(got, refs[-1])
+        calls.clear()
+        assert r._jdf is not None and r._jdf is r._jdf
+        assert calls == [1]
+        assert [x.doc_id for x in r.orderBy("doc_id").collect()] == sorted(
+            x.doc_id for x in rows
+        )
+        assert r.join(refs[0], "doc_id").count() == len(rows)
 
 
 def _reload_dictionaries(*dirs) -> None:
@@ -207,6 +274,80 @@ def test_read_shard_columns_and_terms(sidx):
     assert seen == set(hashes)
     none = _read_shard(sidx, 99, flat, hashes)
     assert none.empty and list(none.columns) == flat[1:]
+
+
+def _filtered_read(d, s, cols, hashes) -> pd.DataFrame:
+    """The shard's rows of ``hashes`` as a th-filtered pyarrow read."""
+    import pyarrow.dataset as pads
+
+    files = termdict.parquet_files(os.path.join(d, "postings.parquet", f"shard_id={s}"))
+    return pads.dataset(files, format="parquet").to_table(
+        columns=cols, filter=pads.field("th").isin(hashes)
+    ).to_pandas()
+
+
+def test_open_shard_reader(sidx, tmp_path, monkeypatch):
+    """The reader serves a shard from its process's open copy: the same
+    rows in the same order as a th-filtered read of the files, a
+    rewritten file seen by the next read, and a shard over the byte bound
+    not kept."""
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "idx")
+    shutil.copytree(sidx, d)
+    monkeypatch.setattr(ksq, "_OPEN_SHARDS", ksq._OpenShards())
+    cols = ["th", "df", "doc_ids", "tfs", "max_tf", "positions"]
+    full = pq.read_table(os.path.join(d, "postings.parquet")).to_pandas()
+    sets = [
+        [term_hash(t) for t in ("hotalpha", "w00011", "nosuchterm")],
+        [int(x) for x in full["th"].unique()[::3]],
+        [],
+    ]
+    for s in range(4):
+        for hashes in sets * 2:  # the second pass is served open
+            pd.testing.assert_frame_equal(
+                _read_shard(d, s, ["shard_id"] + cols, hashes),
+                _filtered_read(d, s, cols, hashes), check_exact=True,
+            )
+    assert len(ksq._OPEN_SHARDS._held) == 4
+
+    # rewrite one file of shard 0 without the hotalpha rows
+    alpha = [term_hash("hotalpha")]
+    shard0 = os.path.join(d, "postings.parquet", "shard_id=0")
+    f = next(
+        f for f in termdict.parquet_files(shard0)
+        if len(_filtered_read(d, 0, ["th"], alpha).index)
+        and alpha[0] in set(pq.read_table(f, columns=["th"])["th"].to_pylist())
+    )
+    t = pq.read_table(f)
+    pq.write_table(t.filter(pa.compute.not_equal(t["th"], alpha[0])), f)
+    st = os.stat(f)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    got = _read_shard(d, 0, cols, alpha)
+    pd.testing.assert_frame_equal(got, _filtered_read(d, 0, cols, alpha), check_exact=True)
+    assert len(got) == 0
+
+    # a bound below one shard keeps nothing; one shard's worth keeps one
+    monkeypatch.setattr(ksq, "_OPEN_SHARDS", ksq._OpenShards())
+    monkeypatch.setattr(ksq, "OPEN_SHARD_BYTES", 1024)
+    for s in range(4):
+        pd.testing.assert_frame_equal(
+            _read_shard(d, s, cols, sets[0]), _filtered_read(d, s, cols, sets[0]),
+            check_exact=True,
+        )
+    assert not ksq._OPEN_SHARDS._held
+    sizes = []
+    for s in range(4):
+        root = os.path.join(d, "postings.parquet", f"shard_id={s}")
+        sizes += [
+            pq.read_table(root, columns=cols).nbytes,
+            sum(os.stat(f).st_size for f in termdict.parquet_files(root)),
+        ]
+    monkeypatch.setattr(ksq, "OPEN_SHARD_BYTES", max(sizes) * 3 // 2)
+    for s in range(4):
+        _read_shard(d, s, cols, sets[0])
+    held = [key[0][0][0] for key in ksq._OPEN_SHARDS._held]
+    assert len(held) == 1 and "shard_id=3" in held[0], held
 
 
 def test_small_scan_splits(spark, sidx, tiny_transcripts):
