@@ -401,8 +401,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def filtered_search(spark, sf):
         """P2: predicate-shaped filter (Katta's Filter, LuceneServer.java:
-        334-345) — allowed docIDs cogrouped into the shard kernels; the
-        surviving docs' scores are unchanged; nothing goes via the driver."""
+        334-345) — each shard's group of allowed docIDs runs that shard's
+        task as the kernel's allowed set; the surviving docs' scores are
+        unchanged; no id goes via the driver."""
         docs = _docs(spark, sf)
         allowed = docs.where(F.pmod(F.col("n_chars"), F.lit(2)) == 0)
         hits = ksq.search(
@@ -713,7 +714,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         to the source for display columns. leg='filtered': T2 + P2
         composed — Katta's search(query, sort, filter) in ONE call
         (ILuceneServer.java:84-101; filtered-sort test
-        LuceneClientTest.java:562-617): the allowed set cogroups into the
+        LuceneClientTest.java:562-617): the allowed set reaches the
         kernels AHEAD of the per-shard dv cap, so filtered sorted queries
         keep the ≤ k·shards emission too."""
         docs = _docs(spark, sf)
@@ -813,8 +814,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def count_q(spark, sf):
         """Tagged union (50-gate cap): variant='total' = A3 hit-count fast
         path (value=''); variant='facet' = faceted search — per-value
-        matching-doc counts over the lang keyword field (in-index shard
-        cogroup of query postings x facet-value postings; |values| x
+        matching-doc counts over the lang keyword field (one shard job
+        reads query postings with facet-value postings; |values| x
         shards rows, never per-doc); variant='range' = numeric range
         facets (Lucene LongRangeFacetCounts analog) over the n_chars
         docvalue sidecar — per-shard constant-size partials, declared

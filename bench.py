@@ -6,8 +6,9 @@ Runs the headline operators at $SPARK_GRAFT_SF_DIR (default
 
 Also reports the north-star index-build throughput (turns/sec) over a
 deterministic synthetic transcripts corpus. The two-parallelism scaling
-evidence (local[8] vs local[32] via spark-submit --py-files) lives in
-scripts/bench_scaling.py → BENCH/BASELINE.md.
+evidence (local[8] vs local[32] via spark-submit --py-files) is archived
+in BENCH/BASELINE.md; its harness, scripts/bench_scaling.py, is in the
+git history (last in commit 55f2b83).
 """
 
 from __future__ import annotations

@@ -69,10 +69,9 @@ def _tomb_write(
             new_rows.write.mode("append").parquet(path)
     finally:
         new_rows.unpersist()
-    # drop the handle's memoized deny array/broadcast (signature changes
-    # with the file set, but clear eagerly for same-session visibility)
+    # drop the handle's memoized deny array (its signature changes with
+    # the file set, but clear eagerly for same-session visibility)
     h.__dict__.pop("_tomb_cache", None)
-    h.__dict__.pop("_tomb_bc", None)
     return int(n)
 
 

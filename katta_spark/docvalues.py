@@ -6,18 +6,21 @@ sort field types WritableType.java:33-35), so a field-sorted search never
 touches stored documents until the final merged top-k. This sidecar gives
 katta_spark the same property: at build time each declared column is
 written per shard as compact (doc_ids, values) blob buckets, and
-search_sorted's shard kernels look sort keys up by docID and emit ONLY
-their k best rows — ≤ k·shards rows leave the kernels regardless of how
-many documents match (the r3 path emitted EVERY match into a join).
+search_sorted's shard tasks read their shard's rows with pyarrow, look
+sort keys up by docID and keep ONLY their k best rows — ≤ k·shards rows
+leave the tasks regardless of how many documents match (the r3 path
+emitted EVERY match into a join). search_grouped, facet_ranges and
+match_stats read the same rows in the same tasks.
 
 Layout: ``docvalues.parquet`` partitioned by shard_id, one row per
 (col, bucket of ≤65536 docs): doc_ids = varbyte(deltas of u64-ordered
 docIDs, ascending), vals = varbyte(order-preserving u64-mapped values),
 nulls = varbyte(bucket-local ordinals of NULL docs). Value mapping is
 monotonic (codec.i64_to_u64_order for integral kinds,
-codec.f64_to_u64_order for floats), so kernels and the global merge sort
-the MAPPED keys and never need the original values — the display columns
-come from a final broadcast join of just the merged top-k.
+codec.f64_to_u64_order for floats), so the shard tasks and the driver
+merge sort the MAPPED keys and never need the original values — the
+display columns come from a final broadcast join of just the merged
+top-k.
 
 STRING columns — Katta's FIRST-listed sort type (WritableType.java:33-35
 opens with TEXT; text-field sort test LuceneClientTest.java:330) — map
@@ -33,8 +36,8 @@ an ORDER BY on the original column exactly.
 
 Scale shape: the build is one column-pruned scan of (id, sort cols) + one
 shuffle of ~16-24 byte rows per (doc, col) — ~1/avgdl of the token
-shuffle; queries read only the searched shards' dv rows for the named
-columns (partition-pruned, predicate on col).
+shuffle; a query's shard task reads only its shard's partition
+(``shard_id=<s>``) and the named columns' rows (a pyarrow filter on col).
 """
 
 from __future__ import annotations
@@ -310,7 +313,7 @@ def read_meta(index_dir: str) -> dict[str, str]:
 
 def decode_shard_column(dv_pdf: pd.DataFrame, col: str):
     """(sorted doc_ids int64, mapped u64 values, null mask) for one shard's
-    column from its cogrouped sidecar rows."""
+    column from its sidecar rows."""
     from katta_spark.codec import u64_to_i64_order
 
     rows = dv_pdf[dv_pdf["col"] == col].sort_values("bucket")

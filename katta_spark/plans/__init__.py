@@ -4,8 +4,9 @@ The engine adds no custom Catalyst rules (SURVEY.md §4: everything novel
 lives in kernels and orchestration) — this package asserts that the plans
 Catalyst DOES produce have the shapes we designed for: a search result that
 is the client-merged top-k as a local relation (its shard stage ran as one
-job with no SQL plan), one shard-local stage for the lazy unbounded path,
-no corpus-sized shuffles on the query path.
+job with no SQL plan — filtered, docvalue and faceted searches included),
+one shard-local stage for the lazy unbounded path, no corpus-sized shuffles
+on the query path.
 """
 
 from __future__ import annotations
@@ -73,7 +74,8 @@ def audit_details_plan(details) -> dict:
     """get_details must broadcast the TOP-K, not the corpus: the plan is a
     BroadcastHashJoin whose BroadcastExchange subtree holds the hits (the
     LocalTableScan of a merged search, or the FlatMapGroupsInPandas
-    kernel of a cogrouped one), and no sort-merge join of the corpus."""
+    shard stage of a lazy filtered one), and no sort-merge join of the
+    corpus."""
     plan = physical_plan(details, mode="simple")
     bcast_sub = "\n".join(_subtree_lines(plan, "BroadcastExchange"))
     return {

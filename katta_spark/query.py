@@ -5,9 +5,10 @@ Reference lifecycle (SURVEY.md §3.1, LuceneClient.java:149-203):
   phase 1: gather global df per term  → PRECOMPUTED at build time and read
            from the driver-resident term dictionary (termdict.py) — the
            invariant Katta exploits via CachedDfSource, LuceneServer.java:441
-  phase 2: scatter per-shard top-k    → one mapInPandas task per shard that
-           reads its own postings (a cogroup when a user frame joins in)
-  merge  : node + client k-way merges → TakeOrderedAndProject (orderBy+limit)
+  phase 2: scatter per-shard top-k    → one task per shard that reads its
+           own postings (and docvalues) and runs the kernel and collector;
+           a filter frame's shard groups drive the tasks
+  merge  : node + client k-way merges → the client merge on the driver
 
 Tie-break replicated exactly from Hit.java:150-162: score DESC, doc_id ASC,
 shard_id DESC.
@@ -23,6 +24,7 @@ against the unpruned path and the brute-force oracle.
 from __future__ import annotations
 
 import functools
+import math
 import os
 import threading
 import time
@@ -83,9 +85,9 @@ class CachedFilter:
     :func:`prepare_filter` derives the (doc_id, shard_id) frame ONCE,
     hash-partitions it by shard_id with the session's shuffle
     parallelism and persists it — so every subsequent
-    ``search(filter_df=<CachedFilter>)`` reuses the materialized
-    partitions and the cogroup re-shuffles only the postings side (the
-    filter side's exchange is satisfied by the cached partitioning).
+    ``search(filter_df=<CachedFilter>)`` groups the materialized
+    partitions by shard with no exchange, and each group drives its
+    shard's task (:meth:`_Fetch.by_filter`).
     Valid for any index sharing the sharding config it was prepared
     under (shard assignment is a pure function of doc_id, num_shards
     and the sharding fn); mismatches refuse. Single-index paths only —
@@ -124,9 +126,10 @@ def prepare_filter(
 
 
 def _filter_frame(index, filter_df, filter_doc_col: str):
-    """The shard-keyed (doc_id, shard_id) frame for the cogroup: derive
-    it from a raw DataFrame, or reuse a CachedFilter's materialization
-    (after checking it was prepared under the same sharding config)."""
+    """The shard-keyed (doc_id, shard_id) frame whose groups drive the
+    shard tasks: derive it from a raw DataFrame, or reuse a CachedFilter's
+    materialization (after checking it was prepared under the same
+    sharding config)."""
     if isinstance(filter_df, CachedFilter):
         if (
             filter_df.num_shards != index.num_shards
@@ -267,9 +270,7 @@ class IndexHandle:
             return F.pmod(F.xxhash64(doc_col), F.lit(self.num_shards)).cast("int")
         return F.pmod(doc_col, F.lit(self.num_shards)).cast("int")
 
-    def _rel(
-        self, spark: SparkSession, path: str, fresh: bool = False
-    ) -> DataFrame:
+    def _rel(self, spark: SparkSession, path: str) -> DataFrame:
         """``spark.read.parquet(path)`` memoized per (path, session,
         directory mtime_ns). Every ``read.parquet`` pays a driver file
         listing + footer fetch over py4j (~60 ms measured) that repeated
@@ -278,22 +279,13 @@ class IndexHandle:
         memo keys on. An in-place rewrite (expunge/compact/delete into
         the same directory) bumps the directory mtime and invalidates;
         the session is part of the key so a handle that outlives a
-        stopped SparkSession never serves a frame bound to it.
-
-        ``fresh=True`` bypasses the memo and re-reads: a plan that joins
-        or cogroups the relation WITH ITSELF needs distinct attribute
-        ids on the two sides (Spark's ambiguous-self-join check rejects
-        one Dataset on both sides of a cogroup), so the second side
-        takes a fresh frame."""
-        return self._memo(
-            path, None if fresh else (path, spark),
-            lambda: spark.read.parquet(path),
-        )
+        stopped SparkSession never serves a frame bound to it."""
+        return self._memo(path, (path, spark), lambda: spark.read.parquet(path))
 
     def _memo(self, path: str, key, build):
         """``build()`` memoized per (``key``, directory mtime_ns of
-        ``path``), or built afresh for key None; a missing ``path`` raises
-        naming the index and the sidecar."""
+        ``path``); a missing ``path`` raises naming the index and the
+        sidecar."""
         try:
             mt = os.stat(path).st_mtime_ns
         except FileNotFoundError as e:
@@ -301,8 +293,6 @@ class IndexHandle:
                 f"index at {self.index_dir!r} is missing its "
                 f"{os.path.basename(path)} sidecar ({path})"
             ) from e
-        if key is None:
-            return build()
         cache = self.__dict__.setdefault("_rel_cache", {})
         hit = cache.get(key)
         if hit is None or hit[0] != mt:
@@ -316,14 +306,8 @@ class IndexHandle:
         path = os.path.join(self.index_dir, "stats.parquet")
         return self._memo(path, "term_dict", lambda: TermDict(path))
 
-    def postings(
-        self, spark: SparkSession, fresh: bool = False
-    ) -> DataFrame:
-        return self._rel(
-            spark,
-            os.path.join(self.index_dir, "postings.parquet"),
-            fresh=fresh,
-        )
+    def postings(self, spark: SparkSession) -> DataFrame:
+        return self._rel(spark, os.path.join(self.index_dir, "postings.parquet"))
 
     def stats(self, spark: SparkSession) -> DataFrame:
         return self._rel(spark, os.path.join(self.index_dir, "stats.parquet"))
@@ -773,10 +757,6 @@ def tree_terms(tree: tuple, positive: bool = True) -> tuple[set, set]:
 # million-clause query. Same analog here.
 MAX_WILDCARD_EXPANSIONS = 1024
 
-# Past this many query terms, a postings scan filters by a broadcast
-# semi-join instead of a pushed In(th, …) predicate (see _Fetch.scan).
-_ISIN_MAX_TERMS = 64
-
 
 def _capped_terms(terms: list[str], cap: int, clause: str, hint: str) -> list[str]:
     """One rewrite clause's expansion, refusing more than ``cap`` terms
@@ -1022,9 +1002,9 @@ def expand_ranges(
     return qw
 
 
-# Columns the scoring kernels actually read — the shard reader and the
-# cogroup scans fetch nothing else (notably not the positions blobs, which
-# only phrase queries fetch, nor cf/sum_dl, which only build stats read).
+# Columns the scoring kernels actually read — the shard reader fetches
+# nothing else (notably not the positions blobs, which only phrase
+# queries fetch, nor cf/sum_dl, which only build stats read).
 _KERNEL_COLS = [
     "shard_id", "th", "df", "doc_ids", "tfs", "doclens", "skips",
     "max_tf", "min_dl", "block_max_tf", "block_min_dl",
@@ -1066,7 +1046,8 @@ class Hits(ClassicDataFrame):
 
     ``collect``, ``toPandas``, ``count``, ``take``, ``head``, ``first``,
     ``isEmpty``, ``schema`` and ``columns`` answer from those rows with
-    no JVM call, as a :func:`_local_df` frame of the same rows would. The
+    no JVM call, as a :func:`_local_df` frame of the same rows would; a
+    column that holds NULLs keeps them as ``None``. The
     Spark relation is that frame, built the first time a Spark operator
     or ``_jdf`` needs it."""
 
@@ -1077,11 +1058,15 @@ class Hits(ClassicDataFrame):
     def __init__(self, spark: SparkSession, rows, schema: str) -> None:
         struct = _ddl_schema(schema)
         if not isinstance(rows, pd.DataFrame):
-            rows = pd.DataFrame(rows, columns=struct.names)
-        self._pdf = pd.DataFrame({
-            f.name: rows[f.name].to_numpy(_NP_TYPES.get(f.dataType.typeName(), object))
-            for f in struct.fields
-        })
+            rows = pd.DataFrame(rows, columns=struct.names, dtype=object)
+
+        def column(f) -> np.ndarray:
+            col = rows[f.name]
+            if col.dtype == object and any(v is None for v in col):
+                return col.to_numpy(object)  # NULLs stay None, as collect returns them
+            return col.to_numpy(_NP_TYPES.get(f.dataType.typeName(), object))
+
+        self._pdf = pd.DataFrame({f.name: column(f) for f in struct.fields})
         self._ddl = schema
         self._rel = None
         self._session = spark
@@ -1311,14 +1296,19 @@ def _make_tree_kernel(
     clause kernel). Inside AND groups the intersection narrows with
     skip-pointer block decoding.
 
+    A filter or tombstone set (the DocFilter second argument) masks each
+    leaf's decoded docs, so every accumulated doc is an allowed match and
+    θ stays a valid bound — pruning carries on under deletions, as
+    Lucene's scorers skip blocks under ``acceptDocs``.
+
     :func:`search` builds it only for prunable trees; trees with NOT
     (bounds don't compose through negation), totals (exact counts must
-    visit every match), cursors, filters, tombstones or docvalue cogs run
-    in :func:`_make_clause_kernel`.
+    visit every match), cursors or docvalue collectors run in
+    :func:`_make_clause_kernel`.
 
     ``stats`` (tests): counts blocks_decoded / blocks_total."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(pdf: pd.DataFrame, filter_docs=None) -> pd.DataFrame:
         shard_id = int(pdf["shard_id"].iloc[0])
         idf_col = scoring.idf_np(pdf["df_g"].to_numpy(np.float64), n_docs)
         tf_max = scoring.tf_norm_np(
@@ -1334,7 +1324,7 @@ def _make_tree_kernel(
                 stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + decoded
                 stats["blocks_total"] = stats.get("blocks_total", 0) + total_b
 
-        docs, sc = _pruned_tree_topk(tree, rows_map, avgdl, k, _count)
+        docs, sc = _pruned_tree_topk(tree, rows_map, avgdl, k, _count, filter_docs)
         if docs is None:
             return _empty_hits(score_dtype)
         sc = sc.astype(score_dtype)
@@ -1372,12 +1362,13 @@ def _tree_top_order(
 
 
 def _pruned_tree_topk(
-    tree: tuple, rows_map: dict, avgdl: float, k: int, count
+    tree: tuple, rows_map: dict, avgdl: float, k: int, count, flt=None
 ):
     """MaxScore-style evaluation of a NOT-free tree (see _make_tree_kernel
-    docstring for the soundness argument). Returns (docs, scores) over
-    every doc that matched a fully-evaluated child — a superset of the
-    exact top-k, each with its EXACT score."""
+    docstring for the soundness argument) over the docs ``flt`` keeps.
+    Returns (docs, scores) over every allowed doc that matched a
+    fully-evaluated child — a superset of the exact top-k, each with its
+    EXACT score."""
     MARGIN = 1.0 + 1e-9
     children, bounds = _tree_top_order(
         tree, {t: idf * tfm for t, (_, idf, tfm) in rows_map.items()}
@@ -1434,8 +1425,9 @@ def _pruned_tree_topk(
             if t not in rows_map:
                 return np.empty(0, np.int64), np.empty(0, np.float64)
             d, tf, dl, idf = _term_decode(t, restrict)
-            if restrict is not None:
-                keep = np.isin(d, restrict)
+            # restrict's docs were masked when they accumulated
+            keep = _keep_mask(d, flt) if restrict is None else np.isin(d, restrict)
+            if keep is not None:
                 d, tf, dl = d[keep], tf[keep], dl[keep]
             # boost × (idf × tf_norm): the clause kernel's leaf product
             return d, boost * (idf * scoring.tf_norm_np(tf, dl, avgdl))
@@ -1587,7 +1579,7 @@ def _make_score_kernel(
     """Per-shard scoring kernel of a flat OR query (``KERNEL_MODES["or"]``).
 
     Input: the ≤len(query) postings rows of one shard, plus an optional
-    per-shard array of allowed docIDs (the cogrouped filter — Katta's
+    per-shard array of allowed docIDs (the filter — Katta's
     Filter restricts the matched set without affecting scores, P2).
     Output: that shard's top-k (shard_id, doc_id, score) — the analog of
     Katta's per-shard TopScoreDocCollector capped at min(limit, maxDoc)
@@ -1729,7 +1721,7 @@ def _make_clause_kernel(
     one allowed doc and :func:`search_batch` for the whole batch.
 
     Input: one shard's postings rows of the plans' terms, plus an optional
-    allow-array or DocFilter (the cogrouped filter and the tombstone
+    allow-array or DocFilter (the filter and the tombstone
     deny, applied through _keep_mask before anything scores). Output, per
     plan: the shard's top-k (query_id, shard_id, doc_id, score) — plus,
     when ``with_total``, the plan's exact shard match count before the
@@ -1961,219 +1953,118 @@ def _make_match_kernel(
     return kernel
 
 
-_DV_FILTER_COL = "\x00filter"
+# The deny broadcasts of each SparkContext, keyed on (index dirs, tombstone
+# signatures): a broadcast is bound to the context that made it, and a
+# handle memoized across sessions (_OPEN_HANDLE_CACHE) must not carry one
+# into the next session. A broadcast refers back to its context, so the
+# entry of a stopped context lives as long as the process; it holds
+# broadcast handles, not the id arrays.
+_DENY_BROADCASTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
-def _dv_with_filter(dvdf: DataFrame, fdf: DataFrame) -> DataFrame:
-    """Union the co-sharded filter docIDs INTO the docvalue side of the
-    dv-sort cogroup (applyInPandas cogroup takes exactly two sides):
-    filter rows travel as pseudo-docvalue rows with col=_DV_FILTER_COL
-    and the docID in an extra ``fdoc`` long column; real dv rows carry
-    fdoc=0. ``fdoc`` is non-null EVERYWHERE so the Arrow→pandas transfer
-    keeps exact int64 (a nullable column would round-trip through float64
-    and corrupt 64-bit hash docIDs). '\\x00' cannot start a user column
-    name coming out of build_index's docvalue_cols, so the marker never
-    collides with a real sidecar column."""
-    dvdf = dvdf.withColumn("fdoc", F.lit(0).cast("long"))
-    frows = fdf.select(
-        "shard_id",
-        F.lit(_DV_FILTER_COL).alias("col"),
-        F.lit(0).alias("bucket"),
-        F.lit(None).cast("binary").alias("doc_ids"),
-        F.lit(None).cast("binary").alias("vals"),
-        F.lit(None).cast("binary").alias("nulls"),
-        F.col("doc_id").alias("fdoc"),
-    )
-    return dvdf.unionByName(frows)
-
-
-def _deny_handle(spark: SparkSession, index: IndexHandle):
-    """Broadcast handle of the index's deleted-id array (the in-RAM
-    liveDocs analog, torrent-distributed to executors once) — memoized
-    per handle per tombstone-file signature; None without tombstones."""
-    arr = index.deleted_array(spark)
-    if arr is None or arr.size == 0:
-        return None
-    sig = index.__dict__["_tomb_cache"][0]
-    cached = index.__dict__.get("_tomb_bc")
-    if cached is not None and cached[0] == sig:
-        return cached[1]
-    bc = spark.sparkContext.broadcast(arr)
-    index.__dict__["_tomb_bc"] = (sig, bc)
-    return bc
-
-
-_MULTI_DENY_CACHE: dict = {}
-
-
-def _deny_handle_multi(spark: SparkSession, handles: list):
-    """Combined deny broadcast across several searched indexes. DocIDs are
-    globally unique over doc-disjoint indexes, so one sorted union array
-    is exact. Memoized per (dir, tombstone-signature) tuple."""
-    tagged = [
-        (h, h.deleted_array(spark)) for h in handles if h.has_tombstones()
-    ]
+def _deny_handle(spark: SparkSession, handles: list):
+    """Broadcast of the searched indexes' deleted-id array (the in-RAM
+    liveDocs analog, torrent-distributed to executors once); None without
+    tombstones. DocIDs are globally unique over doc-disjoint indexes, so
+    one sorted union array is exact."""
+    tagged = [(h, h.deleted_array(spark)) for h in handles]
     tagged = [(h, a) for h, a in tagged if a is not None and a.size]
     if not tagged:
         return None
-    if len(tagged) == 1:
-        return _deny_handle(spark, tagged[0][0])
-    key = tuple(
-        (h.index_dir, h.__dict__["_tomb_cache"][0]) for h, _ in tagged
-    )
-    cached = _MULTI_DENY_CACHE.get(key)
-    if cached is not None:
-        return cached
-    bc = spark.sparkContext.broadcast(
-        np.sort(np.concatenate([a for _, a in tagged]))
-    )
-    _MULTI_DENY_CACHE[key] = bc
-    return bc
+    key = tuple((h.index_dir, h.__dict__["_tomb_cache"][0]) for h, _ in tagged)
+    sc = spark.sparkContext
+    held = _DENY_BROADCASTS.setdefault(sc, {})
+    if key not in held:
+        held[key] = sc.broadcast(np.sort(np.concatenate([a for _, a in tagged])))
+    return held[key]
 
 
 def _deny_val(deny) -> "np.ndarray | None":
-    """Resolve a deny handle (pyspark Broadcast or ndarray) inside a
-    kernel closure."""
-    if deny is None:
-        return None
-    return deny.value if hasattr(deny, "value") else deny
+    """A deny broadcast's id array, inside a task (None stays None)."""
+    return None if deny is None else deny.value
 
 
-def _denying(kernel, deny):
-    """``kernel`` over the shard-local stage's rows with the tombstone
-    deny (a broadcast handle or None) as its DocFilter."""
-    if deny is None:
-        return kernel
-    return lambda pdf: kernel(pdf, DocFilter(None, deny.value))
+def _shard_fn(kernel, deny, allow=None, collect=None, dv_cols=()):
+    """A search's per-shard function for :meth:`_Fetch._task`: ``kernel``
+    over the shard's rows under DocFilter(allow, deny) — a filter frame's
+    group ids replace ``allow`` when the task passes them — then, with a
+    collector (Lucene's Collector: per-shard code that consumes the
+    kernel's matches and keeps a bounded result), ``collect(hits, dv)``
+    over the shard's docvalue rows of ``dv_cols``."""
+
+    def fn(pdf, where, group_allow=None):
+        ids = allow if group_allow is None else group_allow
+        if ids is None and deny is None:
+            hits = kernel(pdf)
+        else:
+            hits = kernel(pdf, DocFilter(ids, _deny_val(deny)))
+        if collect is None or not len(hits):
+            return hits
+        return collect(hits, _read_dv(*where, dv_cols))
+
+    return fn
 
 
-def _cog_hits(kernel, left: pd.DataFrame, right: pd.DataFrame, filtered: bool,
-              deny) -> "tuple[pd.DataFrame | None, pd.DataFrame]":
-    """The shared front of the docvalue cogs: ``(hits, right)``, where
-    ``hits`` is the kernel's output over ``left`` (None when it is empty)
-    and ``right`` the docvalue rows. When ``filtered``, the _DV_FILTER_COL
-    pseudo-rows are split off ``right`` as the kernel's allowed set;
-    tombstones (``deny``) are denied either way."""
-    if not len(left):
-        return None, right
-    dny = _deny_val(deny)
-    if filtered:
-        fmask = (right["col"] == _DV_FILTER_COL).to_numpy()
-        allowed = np.unique(right["fdoc"].to_numpy(np.int64)[fmask])
-        right = right.loc[~fmask]
-        hits = kernel(left, DocFilter(allowed, dny))
-    elif dny is not None:
-        hits = kernel(left, DocFilter(None, dny))
-    else:
-        hits = kernel(left)
-    return (hits if len(hits) else None), right
-
-
-def _make_dv_sort_cog(
-    kernel, specs: list, dv_k: int, score_dtype: str, filtered: bool = False,
-    deny=None,
-):
-    """Wrap a match/score kernel with the in-index field-sort cap — the
-    TopFieldCollector analog (LuceneServer.java:672-677): the wrapped
-    kernel emits EVERY shard match (k=maxint upstream), this stage looks
-    each match's sort keys up in the shard's docvalue sidecar (cogrouped —
-    nothing shuffles) and keeps only the dv_k best by
-    (spec order, doc_id asc), emitting order-preserving mapped keys
-    ``__sv<i>`` (nullable long; NULL ordering matches Spark's
-    asc_nulls_first / desc_nulls_last) for the global merge.
-
-    ``filtered``: the right side additionally carries the shard's allowed
-    docIDs as _DV_FILTER_COL pseudo-rows (_dv_with_filter) — they are
-    split off and passed to the kernel as its filter set, so Katta's
-    search(query, sort, filter) composition (ILuceneServer.java:84-101)
-    keeps the per-shard k cap."""
-    from katta_spark.codec import u64_to_i64_order
+def _dv_lookup(docs: np.ndarray, dv: pd.DataFrame, col: str):
+    """(mapped u64 value, NULL flag) of docvalue column ``col`` for each of
+    ``docs``, from one shard's sidecar rows; a doc missing from the sidecar
+    is NULL, and NULL rows carry value 0."""
     from katta_spark.docvalues import decode_shard_column
 
-    n_specs = len(specs)
+    dv_docs, dv_vals, dv_null = decode_shard_column(dv, col)
+    if not dv_docs.size:
+        return np.zeros(docs.size, np.uint64), np.ones(docs.size, bool)
+    ix = np.minimum(np.searchsorted(dv_docs, docs), dv_docs.size - 1)
+    isnull = (dv_docs[ix] != docs) | dv_null[ix]
+    return np.where(isnull, np.uint64(0), dv_vals[ix]), isnull
 
-    def _empty() -> pd.DataFrame:
-        out = _empty_hits(score_dtype)
-        for i in range(n_specs):
-            out[f"__sv{i}"] = pd.array([], dtype="Int64")
-        return out
 
-    def cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        hits, right = _cog_hits(kernel, left, right, filtered, deny)
-        if hits is None:
-            return _empty()
+def _field_order(
+    keys: list, docs: np.ndarray, shard: "np.ndarray | None" = None
+) -> np.ndarray:
+    """Row order of a field sort over ``keys``, one ``(u64 value, NULL
+    flag, 'asc'|'desc')`` per sort spec: ascending puts NULLs first,
+    descending puts them last (Spark's asc_nulls_first /
+    desc_nulls_last); doc_id ascending, then ``shard`` descending (the
+    reference tie-break), break ties."""
+    # np.lexsort's LAST key is the primary one
+    lex = [docs] if shard is None else [-shard, docs]
+    for vals, isnull, direction in reversed(keys):
+        vkey = vals if direction == "asc" else ~vals
+        lex.append(np.where(isnull, np.uint64(0), vkey))
+        lex.append((~isnull if direction == "asc" else isnull).astype(np.uint8))
+    return np.lexsort(tuple(lex))
+
+
+def _dv_sort_collector(specs: list, dv_k: int):
+    """The field-sort collector — Lucene's TopFieldCollector
+    (LuceneServer.java:672-677): the kernel emits every shard match, and
+    the collector keeps the ``dv_k`` best by ``specs`` [(col,
+    'asc'|'desc'), ...] over the shard's docvalue sidecar, each tagged
+    with its order-preserving mapped key ``__sv<i>`` and NULL flag
+    ``__sn<i>`` for the driver merge. Returns (collect, docvalue columns,
+    the columns it adds as DDL)."""
+
+    def collect(hits: pd.DataFrame, dv: pd.DataFrame) -> pd.DataFrame:
         docs = hits["doc_id"].to_numpy(np.int64)
-        per_spec = []
-        for name, direction in specs:
-            dv_docs, dv_vals, dv_null = decode_shard_column(right, name)
-            if dv_docs.size:
-                ix = np.minimum(
-                    np.searchsorted(dv_docs, docs), dv_docs.size - 1
-                )
-                found = dv_docs[ix] == docs
-                vals = np.where(found, dv_vals[ix], np.uint64(0))
-                isnull = ~found | dv_null[ix]
-            else:
-                vals = np.zeros(docs.size, dtype=np.uint64)
-                isnull = np.ones(docs.size, dtype=bool)
-            per_spec.append((vals, isnull, direction))
-        # lexsort keys, innermost first: doc asc tiebreak, then specs from
-        # last to first as (value key, null-rank key) pairs
-        lex: list[np.ndarray] = [docs]
-        for vals, isnull, direction in reversed(per_spec):
-            vkey = vals if direction == "asc" else ~vals
-            vkey = np.where(isnull, np.uint64(0), vkey)
-            # asc_nulls_first: null rank 0 < non-null 1;
-            # desc_nulls_last: non-null 0 < null 1
-            nkey = (
-                (~isnull if direction == "asc" else isnull)
-            ).astype(np.uint8)
-            lex.append(vkey)
-            lex.append(nkey)
-        order = np.lexsort(tuple(lex))[:dv_k]
+        keys = [(*_dv_lookup(docs, dv, name), d) for name, d in specs]
+        order = _field_order(keys, docs)[:dv_k]
         out = hits.iloc[order].reset_index(drop=True)
-        for i, (vals, isnull, _) in enumerate(per_spec):
-            col = pd.array(
-                u64_to_i64_order(vals[order]), dtype="Int64"
-            )
-            col[isnull[order]] = pd.NA
-            out[f"__sv{i}"] = col
+        for i, (vals, isnull, _) in enumerate(keys):
+            out[f"__sv{i}"] = u64_to_i64_order(vals[order])
+            out[f"__sn{i}"] = isnull[order]
         return out
 
-    return cog
+    extra = ", ".join(f"__sv{i} long, __sn{i} boolean" for i in range(len(specs)))
+    return collect, [n for n, _ in specs], extra
 
 
-def _group_lookup(hits: pd.DataFrame, right: pd.DataFrame, group_col: str):
-    """(docs int64, scores f64, gkey int64, isnull bool) — each hit's group
-    key looked up in the shard's docvalue sidecar (order-preserving mapped
-    key, i64-ordered); docs missing from the sidecar group with NULL.
-    NULL rows carry gkey=0 so (isnull, gkey) is a canonical composite."""
-    from katta_spark.codec import u64_to_i64_order
-    from katta_spark.docvalues import decode_shard_column
-
-    docs = hits["doc_id"].to_numpy(np.int64)
-    dv_docs, dv_vals, dv_null = decode_shard_column(right, group_col)
-    if dv_docs.size:
-        ix = np.minimum(np.searchsorted(dv_docs, docs), dv_docs.size - 1)
-        found = dv_docs[ix] == docs
-        vals = np.where(found, dv_vals[ix], np.uint64(0))
-        isnull = ~found | dv_null[ix]
-    else:
-        vals = np.zeros(docs.size, dtype=np.uint64)
-        isnull = np.ones(docs.size, dtype=bool)
-    gkey = u64_to_i64_order(vals)
-    gkey = np.where(isnull, np.int64(0), gkey)
-    return docs, hits["score"].to_numpy(np.float64), gkey, isnull
-
-
-def _make_dv_group_cog(
-    kernel, group_col: str, pass_spec: tuple, score_dtype: str,
-    filtered: bool = False,
-    deny=None,
-):
-    """Wrap a score kernel with one pass of two-pass grouped search — the
-    Lucene grouping-module analog (TermFirstPassGroupingCollector /
-    TermSecondPassGroupingCollector), distributed with per-shard caps:
+def _dv_group_collector(group_col: str, pass_spec: tuple):
+    """One pass of two-pass grouped search as a collector — the Lucene
+    grouping-module analog (TermFirstPassGroupingCollector /
+    TermSecondPassGroupingCollector), distributed with per-shard caps.
+    Each hit's group key is its mapped ``group_col`` docvalue (i64
+    order, 0 for the NULL group, which carries ``gnull``).
 
     pass_spec = ('pass1', k_groups, order): emit each shard's top-k_groups
     GROUP HEADS. order='score' (Lucene's relevance groupSort) ranks
@@ -2190,13 +2081,11 @@ def _make_dv_group_cog(
     pass_spec = ('pass2', k_docs, selected_keys, null_selected): restrict
     matches to the selected groups (tiny tuple, travels in the closure)
     and emit each shard's top-k_docs docs PER GROUP plus the shard's exact
-    per-group match count — ≤ |selected|·k_docs rows per shard; the driver
-    merge (Katta's client merge shape) sums counts and takes the global
-    per-group top-k_docs.
+    per-group match count ``gtotal`` — ≤ |selected|·k_docs rows per
+    shard; the driver merge (Katta's client merge shape) sums counts and
+    takes the global per-group top-k_docs.
 
-    ``filtered``: the right side carries _DV_FILTER_COL pseudo-rows
-    (_dv_with_filter) split off as the kernel's allowed set — Katta's
-    filter composes with grouping like with sorting."""
+    Returns (collect, docvalue columns, the columns it adds as DDL)."""
     mode = pass_spec[0]
     if mode == "pass2":
         _, k_docs, selected_keys, null_selected = pass_spec
@@ -2204,23 +2093,13 @@ def _make_dv_group_cog(
     else:
         _, k_groups, g_order = pass_spec
 
-    def _empty() -> pd.DataFrame:
-        out = _empty_hits(score_dtype)
-        out["gkey"] = pd.array([], dtype="int64")
-        out["gnull"] = pd.array([], dtype="bool")
-        if mode == "pass2":
-            out["gtotal"] = pd.array([], dtype="int64")
-        return out
-
-    def cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        hits, right = _cog_hits(kernel, left, right, filtered, deny)
-        if hits is None:
-            return _empty()
-        docs, scores, gkey, isnull = _group_lookup(hits, right, group_col)
+    def collect(hits: pd.DataFrame, dv: pd.DataFrame) -> pd.DataFrame:
+        docs = hits["doc_id"].to_numpy(np.int64)
+        scores = hits["score"].to_numpy(np.float64)
+        vals, isnull = _dv_lookup(docs, dv, group_col)
+        gkey = np.where(isnull, np.int64(0), u64_to_i64_order(vals))
         if mode == "pass2":
             m = (~isnull & np.isin(gkey, sel)) | (isnull & null_selected)
-            if not m.any():
-                return _empty()
             hits = hits.loc[m]
             docs, scores, gkey, isnull = docs[m], scores[m], gkey[m], isnull[m]
         # one sort groups runs contiguously AND orders docs within each run
@@ -2259,28 +2138,19 @@ def _make_dv_group_cog(
         out["gtotal"] = np.repeat(run_lens, run_lens)[keep]
         return out
 
-    return cog
+    extra = "gkey long, gnull boolean" + (", gtotal long" if mode == "pass2" else "")
+    return collect, [group_col], extra
 
 
-_DV_RANGES_SCHEMA = "ridx int, n long"
-_DV_STATS_SCHEMA = (
-    "n long, missing long, kmin long, kmax long, sum_l long, sum_d double, "
-    "sumsq double"
-)
-
-
-def _make_dv_agg_cog(kernel, col: str, spec: tuple, kind: str,
-                     filtered: bool = False, deny=None):
-    """Wrap a match/score kernel with an in-index AGGREGATE over the
-    matched docs' docvalue column — the Lucene facet-module range-count
-    (LongRangeFacetCounts / DoubleRangeFacetCounts) and Solr
-    StatsComponent analog. The kernel emits every shard match (k=maxint,
-    prune=False upstream — MaxScore pruning would drop low-scoring
-    matches the aggregate must count); this stage looks each match's
-    value up in the shard's cogrouped docvalue sidecar and collapses to
-    a CONSTANT-size partial per shard — nothing per-doc ever leaves the
-    kernels, so the operator costs one postings+sidecar scan at any
-    corpus size.
+def _dv_agg_collector(col: str, spec: tuple, kind: str):
+    """An AGGREGATE of the matched docs' docvalue column ``col`` as a
+    collector — the Lucene facet-module range-count (LongRangeFacetCounts
+    / DoubleRangeFacetCounts) and Solr StatsComponent analog. The kernel
+    emits every shard match (k=maxint, prune=False upstream — MaxScore
+    pruning would drop low-scoring matches the aggregate must count);
+    the collector looks each match's value up in the shard's docvalue
+    sidecar and collapses to a CONSTANT-size partial per shard — nothing
+    per-doc leaves the task.
 
     spec = ('ranges', ((ge, le), ...)): closed intervals in MAPPED i64
     key space (resolved driver-side — mapped keys are integers under a
@@ -2292,83 +2162,53 @@ def _make_dv_agg_cog(kernel, col: str, spec: tuple, kind: str,
 
     spec = ('stats',): emits one partial row per shard — n (matched docs
     with a value), missing (matched docs without), kmin/kmax (mapped
-    keys, nullable), sum_l (exact int64 sum for the 'long' kind),
+    keys; 0 when n is 0), sum_l (exact int64 sum for the 'long' kind),
     sum_d/sumsq (float64 sums of the ORIGINAL values, for mean/stddev).
 
-    ``filtered``/``deny`` compose exactly like the sort/group cogs:
-    Katta's Filter and the deletion tombstones restrict the match set
-    before anything is counted."""
+    Returns (collect, docvalue columns, the partial rows' DDL)."""
     mode = spec[0]
     if mode == "ranges":
         bounds = np.asarray(spec[1], dtype=np.int64).reshape(-1, 2)
 
-    def _empty() -> pd.DataFrame:
+    def collect(hits: pd.DataFrame, dv: pd.DataFrame) -> pd.DataFrame:
+        vals, isnull = _dv_lookup(hits["doc_id"].to_numpy(np.int64), dv, col)
+        keys = u64_to_i64_order(vals[~isnull])
         if mode == "ranges":
+            ns = [
+                int(np.count_nonzero((keys >= lo) & (keys <= hi)))
+                for lo, hi in bounds
+            ]
+            ridx = np.flatnonzero(ns)
             return pd.DataFrame({
-                "ridx": pd.array([], dtype="int32"),
-                "n": pd.array([], dtype="int64"),
+                "ridx": ridx.astype(np.int32),
+                "n": np.asarray(ns, dtype=np.int64)[ridx],
             })
-        return pd.DataFrame({
-            "n": pd.array([], dtype="int64"),
-            "missing": pd.array([], dtype="int64"),
-            "kmin": pd.array([], dtype="Int64"),
-            "kmax": pd.array([], dtype="Int64"),
-            "sum_l": pd.array([], dtype="int64"),
-            "sum_d": pd.array([], dtype="float64"),
-            "sumsq": pd.array([], dtype="float64"),
-        })
-
-    def cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        hits, right = _cog_hits(kernel, left, right, filtered, deny)
-        if hits is None:
-            return _empty()
-        docs, _scores, gkey, isnull = _group_lookup(hits, right, col)
-        vals = gkey[~isnull]
-        if mode == "ranges":
-            ridx: list[int] = []
-            ns: list[int] = []
-            for i in range(bounds.shape[0]):
-                c = int(np.count_nonzero(
-                    (vals >= bounds[i, 0]) & (vals <= bounds[i, 1])
-                ))
-                if c:
-                    ridx.append(i)
-                    ns.append(c)
-            return pd.DataFrame({
-                "ridx": np.asarray(ridx, dtype=np.int32),
-                "n": np.asarray(ns, dtype=np.int64),
-            })
-        n = int(vals.size)
-        missing = int(docs.size - n)
+        n = int(keys.size)
+        kmin = kmax = sum_l = 0
+        sum_d = sumsq = 0.0
         if n:
-            kmin = pd.array([int(vals.min())], dtype="Int64")
-            kmax = pd.array([int(vals.max())], dtype="Int64")
+            kmin, kmax = int(keys.min()), int(keys.max())
             if kind == "double":
-                orig = u64_to_f64_order(i64_to_u64_order(vals))
-                sum_l = 0
+                orig = u64_to_f64_order(i64_to_u64_order(keys))
                 sum_d = float(orig.sum())
                 sumsq = float((orig * orig).sum())
             else:
                 # exact int64 sum (overflow needs ~9e18 — a shard would
                 # have to hold 1e14 docs of 1e4-valued keys)
-                sum_l = int(vals.sum(dtype=np.int64))
+                sum_l = int(keys.sum(dtype=np.int64))
                 sum_d = float(sum_l)
-                sumsq = float((vals.astype(np.float64) ** 2).sum())
-        else:
-            kmin = pd.array([pd.NA], dtype="Int64")
-            kmax = pd.array([pd.NA], dtype="Int64")
-            sum_l, sum_d, sumsq = 0, 0.0, 0.0
+                sumsq = float((keys.astype(np.float64) ** 2).sum())
         return pd.DataFrame({
-            "n": np.asarray([n], dtype=np.int64),
-            "missing": np.asarray([missing], dtype=np.int64),
-            "kmin": kmin,
-            "kmax": kmax,
-            "sum_l": np.asarray([sum_l], dtype=np.int64),
-            "sum_d": np.asarray([sum_d], dtype=np.float64),
-            "sumsq": np.asarray([sumsq], dtype=np.float64),
+            "n": [n], "missing": [int(isnull.sum())], "kmin": [kmin],
+            "kmax": [kmax], "sum_l": [sum_l], "sum_d": [sum_d],
+            "sumsq": [sumsq],
         })
 
-    return cog
+    schema = "ridx int, n long" if mode == "ranges" else (
+        "n long, missing long, kmin long, kmax long, sum_l long, "
+        "sum_d double, sumsq double"
+    )
+    return collect, [col], schema
 
 
 # Kernel-mode registry — the content-server extension point (SURVEY.md
@@ -2729,6 +2569,33 @@ class _OpenShards:
 _OPEN_SHARDS = _OpenShards()
 
 
+def _shard_files(root: str, shard: int) -> list[str]:
+    """The data files of table ``root``'s partition ``shard_id=<shard>``:
+    none for a shard with no directory (no documents), while a table this
+    process cannot see at all raises."""
+    files = parquet_files(os.path.join(root, f"shard_id={shard}"))
+    if not files and not os.path.isdir(root):
+        raise FileNotFoundError(f"table {root!r} is not readable here")
+    return files
+
+
+def _read_dv(index_dir: str, shard: int, cols) -> pd.DataFrame:
+    """One shard's docvalue sidecar rows of ``cols`` (``docvalues.parquet``
+    is partitioned by shard_id, docvalues.py), read with pyarrow like
+    :func:`_read_shard` reads the postings."""
+    import pyarrow.dataset as pads
+
+    from katta_spark.docvalues import dv_path
+
+    fcols = ["col", "bucket", "doc_ids", "vals", "nulls"]
+    files = _shard_files(dv_path(index_dir), shard)
+    if not files:
+        return pd.DataFrame(columns=fcols)
+    return pads.dataset(files, format="parquet").to_table(
+        columns=fcols, filter=pads.field("col").isin(list(cols))
+    ).to_pandas()
+
+
 def _read_shard(index_dir: str, shard: int, cols: list[str], hashes) -> pd.DataFrame:
     """The ``cols`` of one shard's postings rows whose th is in ``hashes``,
     in file-then-row order; a shard with no directory (no documents)
@@ -2743,10 +2610,7 @@ def _read_shard(index_dir: str, shard: int, cols: list[str], hashes) -> pd.DataF
     import pyarrow.dataset as pads
 
     fcols = [c for c in cols if c != "shard_id"]
-    root = os.path.join(index_dir, "postings.parquet")
-    files = parquet_files(os.path.join(root, f"shard_id={shard}"))
-    if not files and not os.path.isdir(root):
-        raise FileNotFoundError(f"postings table {root!r} is not readable here")
+    files = _shard_files(os.path.join(index_dir, "postings.parquet"), shard)
     if not files:
         return pd.DataFrame(columns=fcols)
     stats = [os.stat(f) for f in files]
@@ -2795,13 +2659,14 @@ class _Fetch(NamedTuple):
     shard_ids: "list[int] | None"
 
     def _task(self, fn, only: "list[int] | None" = None):
-        """``(task, n)``: ``task(ids)`` runs phase 2 for shard targets
-        ``ids`` of ``range(n)`` — Katta's node-local IndexSearcher
-        (LuceneServer.java:184-193): target i reads its shard's rows of
-        the query's terms, attaches term/df_g and yields ``fn(pdf)``; a
-        shard without such rows calls nothing. Shard ids are offset per
-        index as in :func:`_union_shards`; ``only`` or ``shard_ids`` keeps
-        a subset."""
+        """``(task, targets)``: ``task(ids, allow=None)`` runs phase 2 for
+        the shard targets ``ids`` — Katta's node-local IndexSearcher
+        (LuceneServer.java:184-193): target i, an (index dir, shard,
+        offset shard id) triple, reads its shard's rows of the query's
+        terms, attaches term/df_g and yields ``fn(pdf, (dir, shard),
+        allow)``; a shard without such rows calls nothing. Shard ids are
+        offset per index as in :func:`_union_shards`; ``only`` or
+        ``shard_ids`` keeps a subset."""
         keep = only if only is not None else self.shard_ids
         targets, off = [], 0
         for h in self.handles:
@@ -2813,24 +2678,26 @@ class _Fetch(NamedTuple):
             off += h.num_shards
         cols, terms = self.cols, self.terms
 
-        def task(ids):
+        def task(ids, allow=None):
             for i in ids:
                 d, s, g = targets[i]
                 pdf = terms.attach(_read_shard(d, s, cols, terms.th))
                 if len(pdf):
-                    out = fn(pdf.assign(shard_id=np.int32(g)))
+                    out = fn(pdf.assign(shard_id=np.int32(g)), (d, s), allow)
                     if len(out):
                         yield out
 
-        return task, len(targets)
+        return task, targets
 
     def run(
         self, spark: SparkSession, fn, schema: str, only: "list[int] | None" = None
     ) -> pd.DataFrame:
         """Phase 2 as ONE eager RDD job (no SQL plan, scan, exchange or
         broadcast) whose per-shard frames concatenate on the driver; for
-        kernels that emit at most k rows (or a count) per shard."""
-        task, n = self._task(fn, only)
+        kernels and collectors that emit a bounded number of rows per
+        shard."""
+        task, targets = self._task(fn, only)
+        n = len(targets)
 
         def part(i, rows):
             for _ in rows:  # a worker is reused only if it drains its input
@@ -2847,37 +2714,35 @@ class _Fetch(NamedTuple):
     def frame(self, spark: SparkSession, fn, schema: str) -> DataFrame:
         """Phase 2 as a LAZY ``mapInPandas`` stage over a ``Range`` of shard
         targets, for unbounded callers: no match reaches the driver."""
-        task, n = self._task(fn)
+        task, targets = self._task(fn)
+        n = len(targets)
         return spark.range(0, n, 1, max(n, 1)).mapInPandas(
             lambda batches: (out for b in batches for out in task(b["id"])),
             schema,
         )
 
-    def scan(self, spark: SparkSession) -> DataFrame:
-        """The query's postings rows as a Spark scan, for the paths that
-        cogroup them with a user frame by shard: a pushed In(th, ...)
-        predicate, or past _ISIN_MAX_TERMS a broadcast semi-join (no
-        thousand-literal plans)."""
-        hashes = [int(x) for x in self.terms.th]
-        th_df = F.broadcast(
-            _local_df(spark, [(x,) for x in hashes], ["th"], "th long")
-        ) if len(hashes) > _ISIN_MAX_TERMS else None
+    def by_filter(self, fdf: DataFrame, fn, schema: str) -> DataFrame:
+        """Phase 2 driven by a shard-keyed (doc_id, shard_id) filter frame
+        — Katta's Filter applied inside the node's searcher
+        (ILuceneServer.java:84-101, LuceneServer.java:334-345): each
+        shard's group runs that shard's target with the group's docIDs
+        allowed, so the ids never reach the driver. A lazy frame; a
+        filter already partitioned by shard_id (a CachedFilter) groups
+        with no exchange."""
+        task, targets = self._task(fn)
+        at = {g: i for i, (_, _, g) in enumerate(targets)}
+        names = _ddl_schema(schema).names
 
-        def frame(h):
-            p = h.postings(spark)
-            if th_df is None:
-                return p.where(F.col("th").isin(hashes)).select(*self.cols)
-            return p.select(*self.cols).join(th_df, "th", "left_semi")
+        def group(f: pd.DataFrame) -> pd.DataFrame:
+            i = at.get(f["shard_id"].iloc[0])  # None for a NULL doc_id
+            outs = [] if i is None else list(
+                task([i], np.unique(f["doc_id"].to_numpy(np.int64)))
+            )
+            if not outs:
+                return pd.DataFrame(columns=names)
+            return pd.concat(outs, ignore_index=True)
 
-        out = _union_shards(self.handles, frame)
-        if self.shard_ids is not None:
-            out = out.where(F.col("shard_id").isin(self.shard_ids))
-        return out
-
-    def wrap(self, kernel):
-        """``kernel`` over scanned rows: attaches term/df_g first."""
-        terms = self.terms
-        return lambda pdf, *a: kernel(terms.attach(pdf), *a)
+        return fdf.groupBy("shard_id").applyInPandas(group, schema)
 
 
 def _fetch_postings(
@@ -2975,11 +2840,16 @@ def search(
     combined stats — the analog of deploying an additional index version
     in Katta.
 
-    ``_dv_sort`` (internal, used by :func:`search_sorted`): a tuple
-    ``(specs, dv_k)`` with specs = [(col, 'asc'|'desc'), ...] over the
-    index's docvalue sidecar — the shard kernels then look sort keys up
-    in-index (TopFieldCollector analog) and emit only their dv_k best
-    rows, tagged with order-preserving mapped keys ``__sv<i>``.
+    ``_dv_sort`` / ``_dv_group`` / ``_dv_agg`` (internal, used by
+    :func:`search_sorted`, :func:`search_grouped`, :func:`facet_ranges`
+    and :func:`match_stats`): the arguments of a docvalue collector
+    (:func:`_dv_sort_collector`, :func:`_dv_group_collector`,
+    :func:`_dv_agg_collector`) that each shard task runs over the
+    kernel's matches and its shard's docvalue rows — e.g. ``(specs,
+    dv_k)`` with specs = [(col, 'asc'|'desc'), ...] keeps each shard's
+    dv_k best rows (TopFieldCollector analog), tagged with
+    order-preserving mapped keys ``__sv<i>``. The result is the
+    collectors' unmerged per-shard rows, held on the driver.
 
     Query syntax (the Lucene QueryParser surface Katta exposes verbatim,
     Katta.java:825-826): plain terms (default OR), ``field:value``
@@ -3012,18 +2882,19 @@ def search(
     client merge on the driver. Nothing is shuffled or broadcast and no
     SQL plan is built (:meth:`_Fetch.run`). So the call is EAGER: the job
     runs before it returns and the result is :class:`Hits`, the merged
-    rows held on the driver. ``ordered=False`` (every match, unsorted,
-    for callers that pass a huge k), docvalue and ``filter_df`` searches
-    stay lazy Spark plans.
+    rows held on the driver. Only ``ordered=False`` (every match,
+    unsorted, for callers that pass a huge k) stays a lazy Spark plan.
 
     Filtered search (Katta's Filter, ILuceneServer.java:84-101, applied at
     LuceneServer.java:334-345: restricts the matched set WITHOUT changing
     surviving docs' scores): pass ``filter_df`` — any DataFrame whose
-    ``filter_doc_col`` holds allowed docIDs. It is shuffled by each
-    index's own sharding function and COGROUPED with the postings, so each
-    shard kernel sees exactly its own allowed set — fully distributed,
-    nothing travels through the driver (``filter_docs`` list remains as a
-    convenience wrapper for tiny driver-side sets).
+    ``filter_doc_col`` holds allowed docIDs. It is keyed by each index's
+    own sharding function and grouped by shard, and each shard's group
+    runs that shard's task with the group's ids as the kernel's allowed
+    set (:meth:`_Fetch.by_filter`) — fully distributed, no id travels
+    through the driver; a CachedFilter is grouped with no exchange. A
+    ``filter_docs`` list (tiny driver-side sets) rides in the task
+    closure as the allowed set instead, with no extra job.
 
     Paging: ``offset=N`` returns ranks N..N+k of the merged ranking —
     Lucene's shallow paging (a TopScoreDocCollector over offset+k, then
@@ -3099,11 +2970,29 @@ def search(
     # tombstoned (deleted) docs are denied inside the kernels before any
     # cap — Lucene's liveDocs skip at collection time; df/N/avgdl stay
     # STALE until expunge, exactly like Lucene pre-merge
-    deny = _deny_handle_multi(spark, handles)
+    deny = _deny_handle(spark, handles)
     sql_t = "float" if score_dtype == "float32" else "double"
     result_schema = f"doc_id long, shard_id int, score {sql_t}"
     if _with_total:
         result_schema += ", total_hits long, shards_hit int, shards_total int"
+    out_schema = f"shard_id int, doc_id long, score {sql_t}"
+    if _with_total:
+        out_schema += ", shard_total long"
+    # a collector keeps each shard's bounded share of the matches in the
+    # shard task; the rows it returns are the result, merged by the caller
+    collect, dv_cols = None, ()
+    if _dv_agg is not None:
+        collect, dv_cols, out_schema = _dv_agg_collector(*_dv_agg)
+    elif _dv_group is not None or _dv_sort is not None:
+        collect, dv_cols, extra = (
+            _dv_group_collector(*_dv_group) if _dv_group is not None
+            else _dv_sort_collector(*_dv_sort)
+        )
+        out_schema = f"{result_schema}, {extra}"
+    if collect is not None and _with_total:
+        raise ValueError(
+            "_dv_sort/_dv_group/_dv_agg do not combine with _with_total"
+        )
     if synonyms and shard_ids is not None:
         raise ValueError(
             "synonyms resolve the blended group df from GLOBAL stats; "
@@ -3114,9 +3003,7 @@ def search(
         spark, handles, query, mode, min_should_match, synonyms
     )
     if not c.qweights or k <= 0:
-        if _dv_agg is not None:
-            return Hits(spark, [], _dv_agg[3])
-        return Hits(spark, [], result_schema)
+        return Hits(spark, [], result_schema if collect is None else out_schema)
     # only phrase queries fetch the positions blobs
     kcols = _KERNEL_COLS + (["positions"] if c.phrases else [])
     fetch = _fetch_postings(spark, handles, c.terms, kcols, shard_ids)
@@ -3125,17 +3012,15 @@ def search(
         # the baked block maxima assume corpus stats
         prune = False
 
-    dv = _dv_sort is not None or _dv_group is not None or _dv_agg is not None
     if (
         c.tree is not None and prune and not _tree_has_not(c.tree)
-        and not (_with_total or dv) and filter_df is None
-        and filter_docs is None and deny is None
+        and not _with_total and collect is None
     ):
         # a prunable tree (a cursor turned prune off above): MaxScore
         kernel = _make_tree_kernel(c.tree, n_docs, avgdl, k_eff, score_dtype)
     elif c.tree is not None or c.boolean or (_cursor is not None and mode == "or"):
         # the clause kernel tags rows with their plan's query_id; one plan
-        # here, so the tag is dropped once and every wrapper sees hits
+        # here, so the tag is dropped once and every collector sees hits
         clauses = _make_clause_kernel(
             [c], n_docs, avgdl, k_eff, score_dtype, _with_total, _cursor
         )
@@ -3157,125 +3042,29 @@ def search(
         kernel = KERNEL_MODES[mode](
             c.qweights, n_docs, avgdl, k_eff, prune, score_dtype, _with_total
         )
-    out_schema = f"shard_id int, doc_id long, score {sql_t}"
-    if _with_total:
-        out_schema += ", shard_total long"
+    allow = None
     if filter_docs is not None and filter_df is None:
-        filter_df = _local_df(
-            spark, [(int(x),) for x in filter_docs], ["doc_id"],
-            "doc_id long",
-        )
-        filter_doc_col = "doc_id"
+        allow = np.unique(np.asarray(list(filter_docs), dtype=np.int64))
+    fn = _shard_fn(kernel, deny, allow, collect, dv_cols)
     fdf = None
     if filter_df is not None:
         # the allowed set keyed by each index's own sharding function
         fdf = _union_shards(
             handles, lambda h: _filter_frame(h, filter_df, filter_doc_col)
         )
-        if shard_ids is not None:
-            fdf = fdf.where(F.col("shard_id").isin(shard_ids))
-    if fdf is not None or dv:
-        # a user frame or docvalue sidecar cogroups with the scanned
-        # postings by shard
-        postings = fetch.scan(spark)
-        kernel = fetch.wrap(kernel)
-    if dv:
-        if _with_total:
-            raise ValueError(
-                "_dv_sort/_dv_group/_dv_agg do not combine with _with_total"
-            )
-        if _dv_agg is not None:
-            agg_col, agg_spec, agg_kind, agg_schema = _dv_agg
-            dv_cols = [agg_col]
-            dv_cog = _make_dv_agg_cog(
-                kernel, agg_col, agg_spec, agg_kind,
-                filtered=filter_df is not None, deny=deny,
-            )
-            extra_schema = None
-            extra_cols = []
-        elif _dv_group is not None:
-            group_col, pass_spec = _dv_group
-            dv_cols = [group_col]
-            dv_cog = _make_dv_group_cog(
-                kernel, group_col, pass_spec, score_dtype,
-                filtered=filter_df is not None, deny=deny,
-            )
-            extra_schema = "gkey long, gnull boolean"
-            extra_cols = ["gkey", "gnull"]
-            if pass_spec[0] == "pass2":
-                extra_schema += ", gtotal long"
-                extra_cols.append("gtotal")
-        else:
-            specs, dv_k = _dv_sort
-            dv_cols = [n for n, _ in specs]
-            dv_cog = _make_dv_sort_cog(
-                kernel, specs, dv_k, score_dtype,
-                filtered=filter_df is not None, deny=deny,
-            )
-            extra_schema = ", ".join(
-                f"__sv{i} long" for i in range(len(specs))
-            )
-            extra_cols = [f"__sv{i}" for i in range(len(specs))]
-        from katta_spark.docvalues import dv_path as _dvp
-
-        # per-index sidecars, shard ids offset like the postings
-        dvdf = _union_shards(
-            handles,
-            lambda h: h._rel(spark, _dvp(h.index_dir)).where(
-                F.col("col").isin(dv_cols)
-            ),
-        )
-        if shard_ids is not None:
-            dvdf = dvdf.where(F.col("shard_id").isin(shard_ids))
-        if filter_df is not None:
-            dvdf = _dv_with_filter(dvdf, fdf)
-        if _dv_agg is not None:
-            # aggregate cogs collapse to constant-size per-shard partials
-            # with their own schema — no per-doc columns to select
-            return (
-                postings.groupBy("shard_id")
-                .cogroup(dvdf.groupBy("shard_id"))
-                .applyInPandas(dv_cog, agg_schema)
-            )
-        hits = (
-            postings.groupBy("shard_id")
-            .cogroup(dvdf.groupBy("shard_id"))
-            .applyInPandas(dv_cog, out_schema + ", " + extra_schema)
-        )
-        return hits.select("doc_id", "shard_id", "score", *extra_cols)
     sel = ["doc_id", "shard_id", "score"] + (["shard_total"] if _with_total else [])
-    if filter_df is None:
-        fn = _denying(kernel, deny)
-        if not ordered:
-            # unbounded callers (k up to 2**31-1) get a lazy frame: their
-            # matches never reach the driver
+    if not ordered and collect is None:
+        # unbounded callers (k up to 2**31-1) get a lazy frame: their
+        # matches never reach the driver
+        if fdf is None:
             return fetch.frame(spark, fn, out_schema).select(*sel)
+        return fetch.by_filter(fdf, fn, out_schema).select(*sel)
+    if fdf is None:
         pdf = fetch.run(spark, fn, out_schema)
     else:
-        def cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if not len(left):
-                return _empty_hits(score_dtype, _with_total)
-            allowed = np.unique(right["doc_id"].to_numpy(np.int64))
-            return kernel(left, DocFilter(allowed, _deny_val(deny)))
-
-        hits = (
-            postings.groupBy("shard_id")
-            .cogroup(fdf.groupBy("shard_id"))
-            .applyInPandas(cog, out_schema)
-            .select(*sel)
-        )
-        if not ordered:
-            # Caller does its own ordering (e.g. field sort) — returning the
-            # per-shard union unsorted avoids a global score sort that would
-            # funnel every matching doc through one partition.
-            return hits
-        if not _with_total:
-            # the caller's filter frame keeps its search a lazy plan
-            return hits.orderBy(
-                F.col("score").desc(), F.col("doc_id").asc(),
-                F.col("shard_id").desc(),
-            ).limit(k_eff).offset(offset)
-        pdf = hits.toPandas()
+        pdf = fetch.by_filter(fdf, fn, out_schema).toPandas()
+    if collect is not None:
+        return Hits(spark, pdf, out_schema)
     # Katta's client merge of the ≤ k·shards per-shard hits; totals sum
     # every answering shard's match count first (Hits.java:34-51),
     # whatever the page
@@ -3401,13 +3190,14 @@ def search_sorted(
     ``sort_cols`` entries may be column names, ``(name, 'asc'|'desc')``
     tuples, or arbitrary Columns. When every entry names a column the
     index carries in its docvalue sidecar (build_index docvalue_cols),
-    the FAST path runs: each shard kernel looks the sort keys up IN-INDEX
-    and emits only its k best rows — ≤ k·shards rows total leave the
-    kernels, exactly Katta's per-shard TopFieldCollector cap at
-    min(limit, maxDoc), and only the merged top-k joins back to
-    ``source`` for the display columns. ``filter_df`` composes with the
-    fast path (Katta's search(query, sort, filter) one-call surface,
-    ILuceneServer.java:84-101): the allowed set cogroups into the kernels
+    the FAST path runs: one shard job in which each shard task looks the
+    sort keys up IN-INDEX and keeps only its k best rows — ≤ k·shards
+    rows total leave the tasks, exactly Katta's per-shard
+    TopFieldCollector cap at min(limit, maxDoc) — then the client merge
+    on the driver, and only the merged top-k joins back to ``source``
+    for the display columns. ``filter_df`` composes with the fast path
+    (Katta's search(query, sort, filter) one-call surface,
+    ILuceneServer.java:84-101): the allowed set reaches the kernels
     ahead of the per-shard dv cap. Otherwise every match joins to its
     stored fields and the distributed TakeOrderedAndProject does the
     k-way merge (correct, but a high-df query shuffles |matches| rows).
@@ -3518,120 +3308,90 @@ def _search_sorted_dv(
     filter_doc_col: str = "doc_id",
     offset: int = 0,
 ) -> DataFrame:
-    """Docvalue fast path: per-shard in-index field-sort cap (≤ k·shards
-    rows leave the kernels), global merge on the mapped keys, then ONE
-    broadcast join of the merged top-k to ``source`` for display columns.
-    Several dv-carrying handles search with combined stats, their
-    sidecars cogrouped per offset shard.
-    ``filter_df`` composes with the cap: the allowed docIDs cogroup into
+    """Docvalue fast path: ONE shard job in which each shard's field-sort
+    collector keeps its k+offset best hits (:func:`_dv_sort_collector`),
+    the client merge of those ≤ (k+offset)·shards rows on the driver,
+    then ONE broadcast join of the merged page to ``source`` for the
+    display columns. Several dv-carrying handles search with combined
+    stats. ``filter_df`` composes with the cap: the allowed docIDs reach
     the kernels ahead of the per-shard dv selection — Katta's
     search(query, sort, filter) in one call (ILuceneServer.java:84-101,
     LuceneClientTest.java:562-617)."""
-    dv_k = k + offset  # TopFieldCollector pages at offset+k per shard
     hits = search(
         spark, handles, query, k=2**31 - 1, prune=False,
         score_dtype="float64", ordered=False,
         mode="or" if track_scores else "match",
-        _dv_sort=(specs, dv_k),
+        # TopFieldCollector pages at offset+k per shard
+        _dv_sort=(specs, k + offset),
         filter_df=filter_df, filter_doc_col=filter_doc_col,
+    ).toPandas()
+    shard = hits["shard_id"].to_numpy(np.int64)
+    keys = []
+    for i, (name, direction) in enumerate(specs):
+        sv = hits[f"__sv{i}"].to_numpy(np.int64)
+        isnull = hits[f"__sn{i}"].to_numpy(bool)
+        if len(handles) > 1 and handles[0].docvalue_kinds()[name] == "string":
+            vals = _string_keys(handles, name, shard, sv, isnull)
+        else:
+            vals = i64_to_u64_order(sv)
+        keys.append((vals, isnull, direction))
+    order = _field_order(keys, hits["doc_id"].to_numpy(np.int64), shard)
+    top = hits.iloc[order[offset:offset + k]][["doc_id", "shard_id", "score"]]
+    page = Hits(
+        spark, top.assign(__rank=np.arange(len(top), dtype=np.int32)),
+        "doc_id long, shard_id int, score double, __rank int",
     )
-    # Across MULTIPLE indexes a STRING column's mapped keys are per-index
-    # dictionary RANKS — internally consistent (the per-shard cap above is
-    # sound) but NOT comparable between indexes. For the global merge,
-    # resolve the ≤ k·shards surviving candidates' ranks to their actual
-    # string values through each index's persisted dictionary: one
-    # column-pruned dictionary scan per string spec, cut to the candidate
-    # ranks by a broadcast semi-join (the candidate set is tiny), then a
-    # broadcast join decorates the candidates — nothing corpus-sized
-    # shuffles. Single-index string sorts keep the pure-rank merge (one
-    # dictionary ⇒ ranks ARE the global order).
-    str_ix = [
-        i for i, (n, _) in enumerate(specs)
-        if handles[0].docvalue_kinds().get(n) == "string"
-    ] if len(handles) > 1 else []
-    sort_key = {i: f"__sv{i}" for i in range(len(specs))}
-    if str_ix:
-        from katta_spark.docvalues import strings_path as _dv_strings
-
-        iid_expr = None
-        sh_off = 0
-        for hi_, h in enumerate(handles):
-            cond = (F.col("shard_id") >= sh_off) & (
-                F.col("shard_id") < sh_off + h.num_shards
-            )
-            iid_expr = (
-                F.when(cond, F.lit(hi_))
-                if iid_expr is None
-                else iid_expr.when(cond, F.lit(hi_))
-            )
-            sh_off += h.num_shards
-        hits = hits.withColumn("__iid", iid_expr)
-        for i in str_ix:
-            name = specs[i][0]
-            ddf = None
-            for hi_, h in enumerate(handles):
-                part = (
-                    h._rel(
-                        spark,
-                        os.path.join(_dv_strings(h.index_dir), f"col={name}"),
-                    ).select(
-                        F.lit(hi_).alias("__iid"),
-                        F.col("rank").alias(f"__sv{i}"),
-                        F.col("value").alias(f"__svv{i}"),
-                    )
-                )
-                ddf = part if ddf is None else ddf.unionByName(part)
-            wanted = ddf.join(
-                F.broadcast(
-                    hits.select("__iid", f"__sv{i}").distinct()
-                ),
-                ["__iid", f"__sv{i}"],
-                "leftsemi",
-            )
-            # left join: NULL-valued docs carry a NULL rank and keep a
-            # NULL value — the nulls_first/nulls_last ordering below is
-            # unchanged from the rank merge
-            hits = hits.join(
-                F.broadcast(wanted), ["__iid", f"__sv{i}"], "left"
-            )
-            sort_key[i] = f"__svv{i}"
-        hits = hits.drop("__iid")
-    order_cols = [
-        (
-            F.col(sort_key[i]).asc_nulls_first()
-            if d == "asc"
-            else F.col(sort_key[i]).desc_nulls_last()
-        )
-        for i, (_, d) in enumerate(specs)
-    ]
-    top = hits.orderBy(*order_cols, F.col("doc_id").asc()).limit(k + offset)
-    if offset:
-        # slice the merged ranking past the page boundary (≤ offset+k
-        # rows in the window — the client-merge analog)
-        from pyspark.sql import Window
-
-        w = Window.orderBy(*order_cols, F.col("doc_id").asc())
-        top = (
-            top.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") > offset)
-            .drop("__rn")
-        )
     if doc_id_col is None:
         src = source.withColumn(
             "doc_id", F.xxhash64(*[F.col(c) for c in id_cols])
         )
     else:
         src = source.withColumn("doc_id", F.col(doc_id_col).cast("long"))
-    src = _join_safe_source(src, top.columns)
-    out = src.join(F.broadcast(top), "doc_id").orderBy(
-        *order_cols, F.col("doc_id").asc()
-    )
-    out = out.drop(*[f"__sv{i}" for i in range(len(specs))])
-    out = out.drop(*[f"__svv{i}" for i in str_ix])
+    src = _join_safe_source(src, page.columns)
+    out = src.join(F.broadcast(page), "doc_id").orderBy("__rank")
     # column shape matches the join path: doc_id, shard_id, [score], source
     lead = ["doc_id", "shard_id"] + (["score"] if track_scores else [])
-    rest = [c for c in out.columns if c not in lead + ["score"]]
+    rest = [c for c in out.columns if c not in lead + ["score", "__rank"]]
     return out.select(*lead, *rest)
+
+
+def _rank_values(h: IndexHandle, col: str, ranks) -> dict:
+    """rank → value of string docvalue column ``col`` for ``ranks``: a
+    pyarrow read of the index's rank dictionary
+    (``dv_strings.parquet/col=<col>``), cut to those ranks."""
+    import pyarrow.dataset as pads
+
+    from katta_spark.docvalues import strings_path
+
+    files = parquet_files(os.path.join(strings_path(h.index_dir), f"col={col}"))
+    t = pads.dataset(files, format="parquet").to_table(
+        columns=["rank", "value"],
+        filter=pads.field("rank").isin([int(r) for r in ranks]),
+    )
+    return dict(zip(t["rank"].to_pylist(), t["value"].to_pylist()))
+
+
+def _string_keys(
+    handles: list, col: str, shard: np.ndarray, ranks: np.ndarray,
+    isnull: np.ndarray,
+) -> np.ndarray:
+    """u64 sort keys of string docvalue ranks from several indexes. Each
+    index's ranks order only its own dictionary, so the candidates' ranks
+    resolve to their values through each index's dictionary
+    (:func:`_rank_values`; offset shard ids tell the index) and the keys
+    are the values' order among the candidates."""
+    vals = np.empty(ranks.size, dtype=object)
+    off = 0
+    for h in handles:
+        m = (shard >= off) & (shard < off + h.num_shards) & ~isnull
+        if m.any():
+            got = _rank_values(h, col, np.unique(ranks[m]))
+            vals[m] = [got[r] for r in ranks[m].tolist()]
+        off += h.num_shards
+    keys = np.zeros(ranks.size, dtype=np.uint64)
+    if (~isnull).any():
+        keys[~isnull] = np.unique(vals[~isnull], return_inverse=True)[1]
+    return keys
 
 
 def search_grouped(
@@ -3673,12 +3433,16 @@ def search_grouped(
        shard-bests beat it); the driver merge dedups to the selected
        group set (the Katta client-merge analog, ≤ k_groups·shards rows);
     2. every shard emits its top-``k_docs`` docs PER SELECTED GROUP plus
-       its exact per-group count (≤ k_groups·k_docs rows/shard); totals
-       sum and a window takes the global per-group top-k_docs — all over
-       ≤ k_groups·k_docs·shards rows, never corpus-sized.
+       its exact per-group count (≤ k_groups·k_docs rows/shard); the
+       driver sums the totals, takes the global per-group top-k_docs and
+       decodes the group values — all over ≤ k_groups·k_docs·shards
+       rows, never corpus-sized.
 
-    ``filter_df`` composes like in :func:`search_sorted`: the allowed set
-    cogroups into the kernels ahead of both passes' caps.
+    Each pass is one shard job whose tasks run the kernel and the group
+    collector (:func:`_dv_group_collector`) over the shard's docvalue
+    rows; the result is held on the driver (:class:`Hits`).
+    ``filter_df`` composes like in :func:`search_sorted`: the allowed
+    set reaches the kernels ahead of both passes' caps.
 
     Single-index only: string group keys are per-index dictionary ranks
     (not comparable across indexes) and the two-pass cap proof assumes
@@ -3758,84 +3522,41 @@ def search_grouped(
             group_col, ("pass2", k_docs, tuple(selected), null_selected),
         ),
         **common,
-    )
-    # per-(group, shard) the exact count rides every emitted row (and a
-    # shard with ≥1 match emits ≥1 row). The totals and the per-group
-    # top-k both derive from the kernel output — as two JOINED branches
-    # of one plan the pass-2 kernel would execute once PER BRANCH (no
-    # exchange reuse under different aggregations of a cogroup kernel;
-    # measured 4 kernel instances in the physical plan), so the total
-    # rides the rows as a window aggregate instead: gtotal is CONSTANT
-    # within a (group, shard), and summing the first row per shard is
-    # exactly the old max-per-shard-then-sum, with zero extra kernel
-    # passes. The windows run over ≤ k_groups·k_docs·shards rows.
-    from pyspark.sql import Window
-
-    w_sh = Window.partitionBy("gnull", "gkey", "shard_id").orderBy(
-        F.col("doc_id").asc()
-    )
-    w_g = Window.partitionBy("gnull", "gkey")
-    w = Window.partitionBy("gnull", "gkey").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc(), F.col("shard_id").desc()
-    )
-    gorder = _local_df(
-        spark,
-        [(gn, gk, i) for (gn, gk), i in order_of.items()],
-        ["gnull", "gkey", "__grank"],
-        "gnull boolean, gkey long, __grank int",
-    )
-    out = (
-        hits.withColumn("__shrn", F.row_number().over(w_sh))
-        .withColumn(
-            "group_total",
-            F.sum(F.when(F.col("__shrn") == 1, F.col("gtotal"))).over(w_g),
-        )
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k_docs)
-        .join(F.broadcast(gorder), ["gnull", "gkey"])
-    )
-    if kind == "long":
-        gval = F.when(F.col("gnull"), F.lit(None).cast("long")).otherwise(
-            F.col("gkey")
-        )
+    ).toPandas()
+    # the client merge of ≤ k_groups·k_docs·shards rows: gtotal is the
+    # exact count of a (group, shard) on each of its rows, so a group's
+    # total sums one row per shard; then each group's top-k_docs by the
+    # reference tie-break, groups in pass-1 order
+    gnull, gkey = hits["gnull"].to_numpy(bool), hits["gkey"].to_numpy(np.int64)
+    first = ~hits.duplicated(["gnull", "gkey", "shard_id"])
+    total = hits["gtotal"].where(first, 0).groupby([gnull, gkey]).transform("sum")
+    rank = np.array([order_of[g] for g in zip(gnull.tolist(), gkey.tolist())])
+    order = np.lexsort((
+        -hits["shard_id"].to_numpy(np.int64), hits["doc_id"].to_numpy(np.int64),
+        -hits["score"].to_numpy(np.float64), rank,
+    ))
+    order = order[pd.Series(rank[order]).groupby(rank[order]).cumcount().to_numpy() < k_docs]
+    if kind == "string":
+        # the selected ranks are known from pass 1: the dictionary read is
+        # cut to them
+        values = list(map(_rank_values(index, group_col, selected).get, gkey.tolist()))
     elif kind == "double":
-        from katta_spark.codec import i64_to_u64_order, u64_to_f64_order
-
-        def _inv(s: pd.Series) -> pd.Series:
-            return pd.Series(
-                u64_to_f64_order(i64_to_u64_order(s.to_numpy(np.int64)))
-            )
-
-        inv = F.pandas_udf(_inv, "double")
-        gval = F.when(F.col("gnull"), F.lit(None).cast("double")).otherwise(
-            inv(F.col("gkey"))
-        )
-    else:  # string: rank → value through the persisted dictionary; the
-        # selected ranks are already known DRIVER-SIDE from the pass-1
-        # merge, so they prune the dictionary scan as a pushed isin
-        # predicate — deriving them from `out` instead (the old
-        # semi-join) re-executed the whole pass-2 kernel under the
-        # broadcast, and pass 2 only ever emits the selected groups, so
-        # the two row sets are identical
-        from katta_spark.docvalues import strings_path as _dv_strings
-
-        ddf = index._rel(
-            spark, os.path.join(_dv_strings(index.index_dir), f"col={group_col}")
-        ).select(F.col("rank").alias("gkey"), F.col("value").alias("__gv"))
-        wanted = ddf.where(F.col("gkey").isin(selected))
-        out = out.join(F.broadcast(wanted), "gkey", "left")
-        gval = F.when(F.col("gnull"), F.lit(None).cast("string")).otherwise(
-            F.col("__gv")
-        )
-    return (
-        out.withColumn(group_col, gval)
-        .orderBy(
-            "__grank",
-            F.col("score").desc(),
-            F.col("doc_id").asc(),
-            F.col("shard_id").desc(),
-        )
-        .select(group_col, "group_total", "doc_id", "shard_id", "score")
+        values = u64_to_f64_order(i64_to_u64_order(gkey)).tolist()
+    else:
+        values = gkey.tolist()
+    return Hits(
+        spark,
+        pd.DataFrame({
+            group_col: pd.Series(
+                [None if gnull[i] else values[i] for i in order.tolist()],
+                dtype=object,
+            ),
+            "group_total": total.to_numpy(np.int64)[order],
+            "doc_id": hits["doc_id"].to_numpy(np.int64)[order],
+            "shard_id": hits["shard_id"].to_numpy(np.int32)[order],
+            "score": hits["score"].to_numpy(np.float64)[order],
+        }),
+        out_schema,
     )
 
 
@@ -3889,7 +3610,7 @@ def search_batch(
         h._record_query()
     # tombstoned docs masked at decode time for every batched query
     # (liveDocs; see search())
-    deny = _deny_handle_multi(spark, handles)
+    deny = _deny_handle(spark, handles)
     sql_t = "float" if score_dtype == "float32" else "double"
     out_schema = f"query_id int, shard_id int, doc_id long, score {sql_t}"
     plans: list[_Clauses] = []
@@ -3913,7 +3634,7 @@ def search_batch(
     )
     # the ≤ |queries|·k rows per shard merge driver-side, per query, in
     # the reference tie-break (Katta's client merge)
-    hits = fetch.run(spark, _denying(kernel, deny), out_schema)
+    hits = fetch.run(spark, _shard_fn(kernel, deny), out_schema)
     hits = hits.iloc[_merge_order(hits, "query_id")]
     return Hits(spark, hits.groupby("query_id").head(k), out_schema)
 
@@ -3929,8 +3650,8 @@ def _live_tombstone_count(
     by |touched slices| x slice size (<= min(|dead|, SENTINEL_SALT)
     slices of ~n_docs/SENTINEL_SALT ids per shard), never a full-corpus
     postings scan; an empty tombstone set costs zero jobs. The dead-id
-    array rides the handle's memoized deny broadcast (_deny_handle), so
-    repeated counts on a tombstoned index never re-ship it."""
+    array rides the memoized deny broadcast (_deny_handle), so repeated
+    counts on a tombstoned index never re-ship it."""
     if dead is None or dead.size == 0:
         return 0
     from katta_spark.build import SENTINEL_HASHES, SENTINEL_SALT
@@ -3942,7 +3663,7 @@ def _live_tombstone_count(
         .where(F.col("th").isin(hashes))
         .select("doc_ids", "tfs", "doclens")
     )
-    bc = _deny_handle(spark, h)
+    bc = _deny_handle(spark, [h])
 
     def kern(batches):
         dny = _deny_val(bc)
@@ -4030,51 +3751,32 @@ def facet_counts(
     value ASC); values with zero matching docs are omitted (Lucene facet
     convention). A LIST of indexes (base + streaming deltas, Katta's
     multi-index search surface) facets across all of them: the inputs are
-    doc-disjoint, so per-index counts simply sum per value.
+    doc-disjoint, so per-shard counts simply sum per value.
 
-    In-index dataflow: the query terms' postings and the facet field's
-    value postings (a stats-table slice scoped by the ``field:`` term
-    prefix) cogroup PER SHARD; each kernel builds the shard's matching
-    doc set (union for mode='or', intersection for 'and') and intersects
-    it with every value's sorted doc list (np.intersect1d on unique
-    sorted arrays), emitting one (value, n) row per value per shard —
-    output is |values| x shards rows, never per-doc. Per-shard counts sum
-    (a doc lives in exactly one shard) and TakeOrderedAndProject merges
-    the top-k. Flat term queries only (a quoted keyword value
-    ``field:"v"`` is one term) — rewrites/phrases/+/-/trees are refused
-    (their match sets live in the scoring kernels; compose via search +
-    get_details groupBy for those).
+    In-index dataflow: ONE shard job (:meth:`_Fetch.run`) fetches the
+    query terms' postings together with the field's value terms (the
+    ``field:`` terms of the term dictionary). Each shard task takes its
+    match set from the kernel :func:`search` runs — the match kernel for
+    mode='or', the all-MUST clause kernel for 'and', tombstones denied —
+    and intersects it with every value's sorted doc list, emitting one
+    (value, n) row per value it meets: |values| rows per shard, never
+    per-doc. The driver sums the counts per value and takes the top-k.
+    Flat term queries only (a quoted keyword value ``field:"v"`` is one
+    term) — rewrites/phrases/+/-/trees are refused (compose via search +
+    get_details groupBy for those); the returned frame holds the counts
+    on the driver (:class:`Hits`).
     """
     handles = _open_handles(spark, index)
-    if len(handles) > 1:
-        parts = [
-            facet_counts(spark, h, query, field, k=2**31 - 1,
-                         mode=mode, shard_ids=shard_ids)
-            for h in handles
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return (
-            out.groupBy("value")
-            .agg(F.sum("count").alias("count"))
-            .orderBy(F.desc("count"), F.asc("value"))
-            .limit(k)
-        )
-    h = handles[0]
-    # tombstoned docs never count toward a facet value (Lucene facets
-    # consult liveDocs); counts use the live match set
-    deny = _deny_handle(spark, h)
-    if field not in h.keyword_fields:
-        raise ValueError(
-            f"field {field!r} is not a keyword field of this index "
-            f"(declared: {sorted(h.keyword_fields)})"
-        )
+    for h in handles:
+        if field not in h.keyword_fields:
+            raise ValueError(
+                f"field {field!r} is not a keyword field of this index "
+                f"(declared: {sorted(h.keyword_fields)})"
+            )
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    c = _parse_clauses([h], query, mode)
-    # mode="and" lowered every term to a MUST: the shard's match set is
-    # the intersection of the terms' doc sets (an explicit +a +b stays
+    c = _parse_clauses(handles, query, mode)
+    # mode="and" lowered every term to a MUST (an explicit +a +b stays
     # refused, like every other boolean clause)
     conj = mode == "and"
     if not (c.flat or conj and c._replace(must=set()).flat):
@@ -4083,101 +3785,69 @@ def facet_counts(
             "phrase/rewrite queries compose search() + get_details() and "
             "group client-side"
         )
-    terms = sorted(c.qweights)
     out_schema = "value string, count long"
+    terms = set(c.qweights)
     if not terms:
-        return spark.createDataFrame([], out_schema)
-    q_hashes = [term_hash(t) for t in terms]
-    n_terms = len(q_hashes)
+        return Hits(spark, [], out_schema)
     prefix = field + ":"  # build.FIELD_SEP — keyword terms are "field:value"
-    facet_terms = (
-        h.stats(spark)
-        .where(F.col("term").startswith(prefix))
-        .select("th", F.expr(f"substring(term, {len(prefix) + 1})").alias("value"))
-    )
-    cols = ["shard_id", "th", "doc_ids", "tfs", "doclens"]
-    left = h.postings(spark).where(F.col("th").isin(q_hashes)).select(*cols)
-    # fresh=True: left and right are the SAME relation on two sides of a
-    # cogroup — the memoized frame would carry identical attribute ids
-    # into both and trip Spark's ambiguous-self-join check
-    right = h.postings(spark, fresh=True).join(
-        F.broadcast(facet_terms.select("th")), "th"
-    ).select(*cols)
-    if shard_ids is not None:
-        left = left.where(F.col("shard_id").isin(list(shard_ids)))
-        right = right.where(F.col("shard_id").isin(list(shard_ids)))
+    values = {t for h in handles for t in h.term_dict().match(prefix)}
+    fetch = _fetch_postings(spark, handles, sorted(terms | values), _KERNEL_COLS)
+    k_all = sum(h.n_docs for h in handles)
+    if conj:
+        matcher = _make_clause_kernel([c], fetch.n_docs, fetch.avgdl, k_all, "float64")
+    else:
+        matcher = _make_match_kernel(c.qweights, fetch.n_docs, fetch.avgdl, k_all)
+    matched = _shard_fn(matcher, _deny_handle(spark, handles))
 
-    def kernel(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame({"th": [], "n": []})
-        per_term: dict[int, list[np.ndarray]] = {}
-        for r in lpdf.itertuples(index=False):
-            per_term.setdefault(int(r.th), []).append(
-                decode_posting_list(r.doc_ids, r.tfs, r.doclens)[0]
-            )
-        if conj:
-            if len(per_term) < n_terms:
-                return pd.DataFrame({"th": [], "n": []})
-            matches = None
-            for arrs in per_term.values():
-                docs = np.unique(np.concatenate(arrs))
-                matches = docs if matches is None else np.intersect1d(
-                    matches, docs, assume_unique=True
-                )
-                if matches.size == 0:
-                    return pd.DataFrame({"th": [], "n": []})
-        else:
-            matches = np.unique(
-                np.concatenate([a for arrs in per_term.values() for a in arrs])
-            )
-        dny = _deny_val(deny)
-        if dny is not None:
-            matches = matches[~np.isin(matches, dny)]
-            if matches.size == 0:
-                return pd.DataFrame({"th": [], "n": []})
-        ths, ns = [], []
-        for r in rpdf.itertuples(index=False):
-            docs_v = decode_posting_list(r.doc_ids, r.tfs, r.doclens)[0]
-            n = int(np.intersect1d(docs_v, matches, assume_unique=True).size)
+    def counts(pdf: pd.DataFrame, where, allow=None) -> pd.DataFrame:
+        out: dict = {"value": [], "n": []}
+        is_q = pdf["term"].isin(terms).to_numpy()
+        if not is_q.any():
+            return pd.DataFrame(out)
+        hits = matched(pdf[is_q].reset_index(drop=True), where)
+        docs = np.sort(hits["doc_id"].to_numpy(np.int64))
+        for r in pdf[pdf["term"].isin(values).to_numpy()].itertuples(index=False):
+            d = decode_posting_list(r.doc_ids, r.tfs, r.doclens)[0]
+            n = int(np.intersect1d(d, docs, assume_unique=True).size)
             if n:
-                ths.append(int(r.th))
-                ns.append(n)
-        return pd.DataFrame({"th": ths, "n": ns})
+                out["value"].append(r.term[len(prefix):])
+                out["n"].append(n)
+        return pd.DataFrame(out)
 
-    per_shard = (
-        left.groupBy("shard_id")
-        .cogroup(right.groupBy("shard_id"))
-        .applyInPandas(kernel, "th long, n long")
-    )
-    return (
-        per_shard.groupBy("th")
-        .agg(F.sum("n").alias("count"))
-        .join(F.broadcast(facet_terms), "th")
-        .select("value", "count")
-        .orderBy(F.desc("count"), F.asc("value"))
-        .limit(k)
-    )
+    per_shard = fetch.run(spark, counts, "value string, n long", only=shard_ids)
+    total = per_shard.groupby("value")["n"].sum()
+    top = sorted(zip(total.index, total.tolist()), key=lambda vn: (-vn[1], vn[0]))
+    return Hits(spark, top[:k], out_schema)
 
 
-def _dv_numeric_kind(h: IndexHandle, col: str) -> str:
-    """The docvalue kind of ``col``, refusing strings — range facets and
-    match stats are numeric operators (Lucene Long/DoubleRangeFacetCounts;
-    string sidecar values are per-index dictionary RANKS, meaningless to
-    sum or bin)."""
-    kinds = h.docvalue_kinds()
-    if col not in kinds:
+def _dv_numeric_kind(handles: list, col: str) -> str:
+    """The docvalue kind of ``col`` in every searched index, refusing
+    strings — range facets and match stats are numeric operators (Lucene
+    Long/DoubleRangeFacetCounts; string sidecar values are per-index
+    dictionary RANKS, meaningless to sum or bin) — and kinds that differ
+    between indexes (their mapped keys do not compare)."""
+    found = set()
+    for h in handles:
+        kinds = h.docvalue_kinds()
+        if col not in kinds:
+            raise ValueError(
+                f"column {col!r} is not in the index's docvalue sidecar "
+                f"(available: {sorted(kinds)}); rebuild with docvalue_cols "
+                "including it"
+            )
+        if kinds[col] == "string":
+            raise ValueError(
+                f"column {col!r} is a string docvalue; facet_ranges/"
+                "match_stats are numeric operators (use facet_counts or "
+                "search_grouped for string fields)"
+            )
+        found.add(kinds[col])
+    if len(found) > 1:
         raise ValueError(
-            f"column {col!r} is not in the index's docvalue sidecar "
-            f"(available: {sorted(kinds)}); rebuild with docvalue_cols "
-            "including it"
+            f"column {col!r} has kinds {sorted(found)} in different "
+            "indexes — their mapped keys cannot compare"
         )
-    if kinds[col] == "string":
-        raise ValueError(
-            f"column {col!r} is a string docvalue; facet_ranges/"
-            "match_stats are numeric operators (use facet_counts or "
-            "search_grouped for string fields)"
-        )
-    return kinds[col]
+    return found.pop()
 
 
 _I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
@@ -4241,13 +3911,20 @@ def _resolve_ranges(ranges, kind: str):
     return labels, bounds
 
 
-def _dv_agg_common(spark: SparkSession, index, query_kw: dict):
-    """Open the dv aggregate operators' index argument as handles and
-    fold their shared search() kwargs."""
-    query_kw.update(
-        k=2**31 - 1, prune=False, ordered=False, score_dtype="float64",
-    )
-    return _open_handles(spark, index)
+def _dv_agg_partials(
+    spark: SparkSession, handles: list, query: str, col: str, spec: tuple,
+    kind: str, **kw,
+) -> pd.DataFrame:
+    """The per-shard partial rows of the aggregate collector
+    (:func:`_dv_agg_collector`) over ``query``'s matches, one search per
+    index, concatenated on the driver."""
+    return pd.concat([
+        search(
+            spark, h, query, k=2**31 - 1, prune=False, ordered=False,
+            score_dtype="float64", _dv_agg=(col, spec, kind), **kw,
+        ).toPandas()
+        for h in handles
+    ], ignore_index=True)
 
 
 def facet_ranges(
@@ -4277,53 +3954,23 @@ def facet_ranges(
 
     Unlike facet_counts, the FULL query surface applies (boolean/
     phrase/tree/rewrites): the match set comes from the standard scoring
-    kernels with pruning disabled, cogrouped with the docvalue sidecar
-    (_make_dv_agg_cog) — per shard only the non-empty (range, count)
-    partials leave the kernel, so cost is one postings+sidecar scan at
-    any corpus size. ``filter_df`` and deletion tombstones compose like
-    in search(). A LIST of doc-disjoint indexes sums per-range counts
-    (numeric mapped keys are globally comparable across indexes)."""
-    kw = dict(
-        mode=mode, shard_ids=shard_ids, filter_df=filter_df,
-        filter_doc_col=filter_doc_col,
-    )
-    ihs = _dv_agg_common(spark, index, kw)
-    kind = _dv_numeric_kind(ihs[0], col)
-    for h in ihs[1:]:
-        if _dv_numeric_kind(h, col) != kind:
-            raise ValueError(
-                f"column {col!r} has kind {kind!r} in one index and "
-                f"{_dv_numeric_kind(h, col)!r} in another — range edges "
-                "cannot map consistently"
-            )
+    kernels with pruning disabled, and each shard task's range collector
+    (:func:`_dv_agg_collector`) reads the shard's docvalue rows and emits
+    only the non-empty (range, count) partials — one shard job per
+    index; the driver sums the partials. ``filter_df`` and deletion
+    tombstones compose like in search(). A LIST of doc-disjoint indexes
+    sums per-range counts (numeric mapped keys are globally comparable
+    across indexes)."""
+    ihs = _open_handles(spark, index)
+    kind = _dv_numeric_kind(ihs, col)
     labels, bounds = _resolve_ranges(ranges, kind)
-    spec = ("ranges", tuple(bounds))
-    parts = None
-    for h in ihs:
-        p = search(
-            spark, h, query,
-            _dv_agg=(col, spec, kind, _DV_RANGES_SCHEMA), **kw,
-        )
-        parts = p if parts is None else parts.unionByName(p)
-    ldf = _local_df(
-        spark,
-        [(i, lab) for i, lab in enumerate(labels)],
-        ["ridx", "label"],
-        "ridx int, label string",
+    parts = _dv_agg_partials(
+        spark, ihs, query, col, ("ranges", tuple(bounds)), kind, mode=mode,
+        shard_ids=shard_ids, filter_df=filter_df, filter_doc_col=filter_doc_col,
     )
-    return (
-        ldf.join(
-            parts.groupBy("ridx").agg(F.sum("n").alias("count")),
-            "ridx",
-            "left",
-        )
-        .select(
-            "ridx", "label",
-            F.coalesce(F.col("count"), F.lit(0)).cast("long").alias("count"),
-        )
-        .orderBy("ridx")
-        .select("label", "count")
-    )
+    counts = np.zeros(len(labels), dtype=np.int64)
+    np.add.at(counts, parts["ridx"].to_numpy(np.int64), parts["n"].to_numpy(np.int64))
+    return Hits(spark, list(zip(labels, counts.tolist())), "label string, count long")
 
 
 def match_stats(
@@ -4339,10 +3986,11 @@ def match_stats(
     """One row of summary statistics of docvalue column ``col`` over the
     query's matching documents — the Solr StatsComponent analog
     (count/missing/min/max/sum/mean/stddev), run entirely IN-INDEX: each
-    shard kernel collapses its match set to a constant-size partial
-    (_make_dv_agg_cog 'stats' mode), partials combine associatively, and
-    min/max map back to original values through the order-preserving
-    bijection — no stored-field join, no per-doc rows past the kernels.
+    shard task's stats collector (:func:`_dv_agg_collector`) collapses
+    its match set to a constant-size partial, the driver combines the
+    partials in shard order, and min/max map back to original values
+    through the order-preserving bijection — no stored-field join, no
+    per-doc rows past the tasks.
 
     Columns: ``count`` (matched docs with a value), ``missing`` (matched
     docs whose ``col`` is NULL), ``vmin``/``vmax``/``vsum`` (typed by the
@@ -4352,71 +4000,35 @@ def match_stats(
     query surface applies; ``filter_df``, ``shard_ids`` and deletion
     tombstones compose like in search(). A LIST of doc-disjoint indexes
     combines partials across all of them."""
-    kw = dict(
-        mode=mode, shard_ids=shard_ids, filter_df=filter_df,
-        filter_doc_col=filter_doc_col,
+    ihs = _open_handles(spark, index)
+    kind = _dv_numeric_kind(ihs, col)
+    parts = _dv_agg_partials(
+        spark, ihs, query, col, ("stats",), kind, mode=mode,
+        shard_ids=shard_ids, filter_df=filter_df, filter_doc_col=filter_doc_col,
     )
-    ihs = _dv_agg_common(spark, index, kw)
-    kind = _dv_numeric_kind(ihs[0], col)
-    for h in ihs[1:]:
-        if _dv_numeric_kind(h, col) != kind:
-            raise ValueError(
-                f"column {col!r} has kind {kind!r} in one index and "
-                f"{_dv_numeric_kind(h, col)!r} in another"
-            )
-    parts = None
-    for h in ihs:
-        p = search(
-            spark, h, query,
-            _dv_agg=(col, ("stats",), kind, _DV_STATS_SCHEMA), **kw,
-        )
-        parts = p if parts is None else parts.unionByName(p)
-    g = parts.agg(
-        F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("count"),
-        F.coalesce(F.sum("missing"), F.lit(0)).cast("long").alias("missing"),
-        F.min("kmin").alias("kmin"),
-        F.max("kmax").alias("kmax"),
-        F.coalesce(F.sum("sum_l"), F.lit(0)).cast("long").alias("sum_l"),
-        F.coalesce(F.sum("sum_d"), F.lit(0.0)).alias("sum_d"),
-        F.coalesce(F.sum("sumsq"), F.lit(0.0)).alias("sumsq"),
-    )
-    cnt = F.col("count")
-    mean = F.when(cnt > 0, F.col("sum_d") / cnt)
-    # sample variance from the sum/sumsq partials; clamped at 0 against
-    # float round-off on near-constant columns
-    stddev = F.when(
-        cnt > 1,
-        F.sqrt(
-            F.greatest(
-                F.lit(0.0),
-                (F.col("sumsq") - F.col("sum_d") * F.col("sum_d") / cnt)
-                / (cnt - 1),
-            )
-        ),
-    )
-    if kind == "double":
-
-        def _inv(s: pd.Series) -> pd.Series:
-            # null-safe: when() masks the fill value back to NULL
-            arr = s.fillna(0).to_numpy(np.int64)
-            return pd.Series(u64_to_f64_order(i64_to_u64_order(arr)))
-
-        inv = F.pandas_udf(_inv, "double")
-        vmin = F.when(cnt > 0, inv(F.col("kmin")))
-        vmax = F.when(cnt > 0, inv(F.col("kmax")))
-        vsum = F.col("sum_d")
-    else:
-        vmin = F.when(cnt > 0, F.col("kmin"))
-        vmax = F.when(cnt > 0, F.col("kmax"))
-        vsum = F.col("sum_l")
-    return g.select(
-        cnt.alias("count"),
-        F.col("missing"),
-        vmin.alias("vmin"),
-        vmax.alias("vmax"),
-        vsum.alias("vsum"),
-        mean.alias("mean"),
-        stddev.alias("stddev"),
+    cnt = int(parts["n"].sum())
+    sum_d = sum(parts["sum_d"].tolist(), 0.0)
+    sumsq = sum(parts["sumsq"].tolist(), 0.0)
+    vmin = vmax = mean = stddev = None
+    if cnt:
+        has = parts[parts["n"] > 0]
+        vmin, vmax = int(has["kmin"].min()), int(has["kmax"].max())
+        if kind == "double":
+            vmin, vmax = u64_to_f64_order(
+                i64_to_u64_order(np.array([vmin, vmax], np.int64))
+            ).tolist()
+        mean = sum_d / cnt
+    if cnt > 1:
+        # sample variance from the sum/sumsq partials; clamped at 0
+        # against float round-off on near-constant columns
+        stddev = math.sqrt(max(0.0, (sumsq - sum_d * sum_d / cnt) / (cnt - 1)))
+    vt = "double" if kind == "double" else "long"
+    vsum = sum_d if kind == "double" else int(parts["sum_l"].sum())
+    return Hits(
+        spark,
+        [(cnt, int(parts["missing"].sum()), vmin, vmax, vsum, mean, stddev)],
+        f"count long, missing long, vmin {vt}, vmax {vt}, vsum {vt}, "
+        "mean double, stddev double",
     )
 
 
@@ -4803,9 +4415,9 @@ def explain_score(
     phrase_specs = [(tuple(toks), int(slop)) for toks, slop in phrases]
     want_pos = bool(phrase_specs)
     verdict = _make_clause_kernel([c], n_docs, avgdl, 1, score_dtype)
-    deny = _deny_handle(spark, index)
+    deny = _deny_handle(spark, [index])
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(pdf: pd.DataFrame, *_) -> pd.DataFrame:
         rows_out: list[tuple] = []
         tf_of: dict[str, int] = {}
         dl_of: dict[str, int] = {}

@@ -4,15 +4,19 @@ be diffed.
 Usage: python scripts/dump_query_plans.py OUT_DIR [INDEX_DIR]
 
 Builds (unless INDEX_DIR already holds one) a 4-shard index over 2,000
-synthetic turns with keyword field ``role``, then runs ``search``,
-``search_with_total``, ``search_batch`` (one index and the list
-``[index, index]``), ``count_matches``, ``facet_counts`` and
-``explain_score`` over the benchmark's query shapes (perfbench/queries.py:
-or, and, phrase_term, role_terms, prefix, phrase) plus a wildcard that
-expands past the 64-term pushed-predicate limit. Every DataFrame a call
-collects, and the DataFrame it returns, is written in simple explain mode
-with expression ids, plan ids and the index path stripped, one file per
-call: OUT_DIR/<entry>__<shape>.txt. A call that raises writes its error.
+synthetic turns with keyword field ``role`` and docvalue columns
+``turn_idx`` and ``role``, then runs ``search``, ``search_with_total``,
+``search_batch`` (one index and the list ``[index, index]``),
+``count_matches``, ``facet_counts``, ``explain_score``, ``search`` with a
+``filter_docs`` list, a ``filter_df`` frame and a ``CachedFilter``,
+``search_sorted`` on an int and a string docvalue column,
+``search_grouped``, ``facet_ranges`` and ``match_stats`` over the
+benchmark's query shapes (perfbench/queries.py: or, and, phrase_term,
+role_terms, prefix, phrase) plus a wildcard that expands to more than 64
+terms. Every DataFrame a call collects, and the DataFrame it returns, is
+written in simple explain mode with expression ids, plan ids and the
+index path stripped, one file per call: OUT_DIR/<entry>__<shape>.txt. A
+call that raises writes its error.
 
 To compare commits, build the index once and pass the same INDEX_DIR to
 the script in both checkouts, then ``diff -r OUT_A OUT_B``.
@@ -45,7 +49,10 @@ def _normalize(plan: str, index_dir: str) -> str:
 def main() -> None:
     from pyspark.sql import DataFrame
 
+    from pyspark.sql import functions as F
+
     from katta_spark.build import build_index
+    from katta_spark.oracle import with_doc_ids
     from katta_spark.plans import physical_plan
     from katta_spark.session import get_spark
     from katta_spark.synth import synth_transcripts
@@ -57,12 +64,16 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump_query_plans", master="local[2]", shuffle_partitions=4)
+    src = synth_transcripts(spark, 2000, seed=42)
     if not os.path.isdir(index_dir):
         build_index(
-            spark, synth_transcripts(spark, 2000, seed=42), index_dir,
-            num_shards=4, keyword_cols=("role",),
+            spark, src, index_dir, num_shards=4, keyword_cols=("role",),
+            docvalue_cols=("turn_idx", "role"),
         )
     h = ksq.IndexHandle.open(spark, index_dir)
+    allowed = with_doc_ids(src, 4).where(F.col("role") == "user").select("doc_id")
+    ids = [r.doc_id for r in allowed.collect()]
+    cached = ksq.prepare_filter(spark, h, allowed)
 
     recorded: list[str] = []
     depth = [0]
@@ -100,6 +111,22 @@ def main() -> None:
             spark, h, q, top_doc[s]["doc_id"] if top_doc[s] else 0
         ),
         "search_batch_list": lambda q, s: ksq.search_batch(spark, [h, h], [q], k=10),
+        "search_filter_docs": lambda q, s: ksq.search(spark, h, q, k=10, filter_docs=ids),
+        "search_filter_df": lambda q, s: ksq.search(spark, h, q, k=10, filter_df=allowed),
+        "search_cached_filter": lambda q, s: ksq.search(spark, h, q, k=10, filter_df=cached),
+        "search_sorted_int": lambda q, s: ksq.search_sorted(
+            spark, h, q, src, [("turn_idx", "desc")], k=10
+        ),
+        "search_sorted_str": lambda q, s: ksq.search_sorted(
+            spark, h, q, src, [("role", "asc")], k=10
+        ),
+        "search_grouped": lambda q, s: ksq.search_grouped(
+            spark, h, q, "role", k_groups=3, k_docs=2
+        ),
+        "facet_ranges": lambda q, s: ksq.facet_ranges(
+            spark, h, q, "turn_idx", [("lo", 0, 10), ("hi", 10, None)]
+        ),
+        "match_stats": lambda q, s: ksq.match_stats(spark, h, q, "turn_idx"),
     }
     for entry, call in calls.items():
         for shape, q in SHAPES.items():
@@ -117,6 +144,7 @@ def main() -> None:
             with open(os.path.join(out_dir, name), "w") as fh:
                 fh.write(f"{entry}({q!r})\n{body}\n")
             print(name, len(recorded), "plans")
+    cached.unpersist()
     spark.stop()
 
 

@@ -630,12 +630,15 @@ def test_tree_prune_equals_noprune_fuzz(spark, bidx, docs):
     kernel's results (the unpruned evaluator search runs for every other
     tree) on random NOT-free trees, bit for bit, and the block counter
     must show real skips against a full decode of the fetched rows.
-    Kernels are exercised directly on the per-shard pandas groups (they
-    are pure functions of their input)."""
+    Each tree runs a second time with a tombstone (deny) set through both
+    kernels: the pruned kernel masks its leaves and must still rank
+    equally and skip blocks. Kernels are exercised directly on the
+    per-shard pandas groups (they are pure functions of their input)."""
     import random
 
     from katta_spark.codec import read_skips
     from katta_spark.query import (
+        DocFilter,
         IndexHandle,
         _Clauses,
         _make_clause_kernel,
@@ -678,23 +681,32 @@ def test_tree_prune_equals_noprune_fuzz(spark, bidx, docs):
     def ranked(hits):
         return sorted(zip(-hits["score"].to_numpy(np.float64), hits["doc_id"]))
 
-    total_skipped = 0
+    all_ids = np.sort([r.doc_id for r in docs.select("doc_id").collect()])
+    deny = DocFilter(None, all_ids[::3])
+    total_skipped = skipped_denied = 0
     for trial in range(15):
         q = gen(0)
         tree, qw = parse_tree_query(q, ())
         s_p: dict = {}
+        s_d: dict = {}
         kp = _make_tree_kernel(tree, n_docs, avgdl, 5, "float64", stats=s_p)
+        kd = _make_tree_kernel(tree, n_docs, avgdl, 5, "float64", stats=s_d)
         kf = _make_clause_kernel(
             [_Clauses(tree, qw, set(), set(), [], [], 0, None)],
             n_docs, avgdl, 5, "float64",
         )
         for _, grp in pdf_all.groupby("shard_id"):
-            a = kp(grp.reset_index(drop=True))
-            b = kf(grp.reset_index(drop=True))
-            assert ranked(a) == ranked(b), q
+            grp = grp.reset_index(drop=True)
+            assert ranked(kp(grp)) == ranked(kf(grp)), q
+            denied = kd(grp, deny)
+            assert ranked(denied) == ranked(kf(grp, deny)), q
+            assert not np.isin(denied["doc_id"], deny.deny).any(), q
         assert s_p.get("blocks_decoded", 0) <= all_blocks
+        assert s_d.get("blocks_decoded", 0) <= all_blocks
         total_skipped += all_blocks - s_p.get("blocks_decoded", 0)
+        skipped_denied += all_blocks - s_d.get("blocks_decoded", 0)
     assert total_skipped > 0, "pruning never skipped a block across 15 trees"
+    assert skipped_denied > 0, "no block skipped under the deny set"
 
 
 # boosted trees whose float64 scores differed between the pruned tree

@@ -410,3 +410,39 @@ def test_match_all_count_refuses_clause_options(spark, full_idx):
         ksq.count_matches(spark, full_idx, "*:*", min_should_match=2)
     with pytest.raises(ValueError, match="analyzed term clauses"):
         ksq.count_matches(spark, full_idx, "*:*", synonyms={"a": ["b"]})
+
+
+def test_tombstoned_index_in_a_second_session(spark, tiny_transcripts, tmp_path):
+    """The deny broadcast belongs to the SparkContext that made it: a
+    tombstoned index searched in one session, then searched again after
+    ``spark.stop()`` in a new session of the same process (the handle
+    outlives the session in the open-handle memo), answers the same.
+    Runs in a subprocess, because the suite shares one session."""
+    import subprocess
+    import sys
+    import textwrap
+
+    d = str(tmp_path / "idx")
+    build_index(spark, tiny_transcripts, d, num_shards=2)
+    hit = ksq.search(spark, d, "hotalpha", k=1).collect()[0]
+    kd.delete_docs(spark, d, [hit.doc_id])
+    script = textwrap.dedent(f"""
+        from katta_spark.query import search
+        from katta_spark.session import get_spark
+
+        rows = []
+        for app in ("first", "second"):
+            spark = get_spark(app, master="local[2]", shuffle_partitions=2)
+            rows.append(search(spark, {d!r}, "hotalpha", k=5).collect())
+            spark.stop()
+        assert rows[0] == rows[1], rows
+        assert {hit.doc_id} not in [r.doc_id for r in rows[1]], rows
+        print("SAME")
+    """)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, SPARK_GRAFT_CPUS="2")
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=root, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0 and "SAME" in out.stdout, out.stderr[-4000:]

@@ -205,14 +205,18 @@ def test_grouped_pass_caps(spark, gidx):
     assert ih.num_shards == 4
 
 
-def test_grouped_single_kernel_pass(spark, gidx):
-    """The pass-2 plan runs its cogroup kernel exactly ONCE: totals ride
-    the rows as a window aggregate and the string dictionary is pruned by
-    the driver-known selected ranks — the totals-join/semi-join form
-    executed the same kernel once per branch (4 instances measured)."""
-    df = search_grouped(spark, gidx, "hotalpha", "role", k_groups=3, k_docs=2)
-    tree = df._jdf.queryExecution().executedPlan().toString()
-    assert tree.count("FlatMapCoGroupsInPandas") == 1, tree
+def test_grouped_runs_two_shard_jobs(spark, gidx):
+    """Two-pass grouping is two shard jobs and nothing else: each pass's
+    collector runs in the shard tasks, and the totals, the per-group
+    top-k_docs and the group values are merged on the driver."""
+    from katta_spark.plans import jobs_started
+
+    search_grouped(spark, gidx, "hotalpha", "role", k_groups=3, k_docs=2)
+    with jobs_started(spark) as n:
+        rows = search_grouped(
+            spark, gidx, "hotalpha", "role", k_groups=3, k_docs=2
+        ).collect()
+    assert rows and n[0] <= 2, n
 
 
 def test_grouped_validation(spark, gidx):

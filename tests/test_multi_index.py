@@ -248,8 +248,6 @@ def test_relation_memo_and_invalidation(spark, split_indexes, tmp_path):
     p2 = h.postings(spark)
     assert p2 is not p1
     assert p2.count() == n_before
-    # self-join sites take a detached frame with fresh attribute ids
-    assert h.postings(spark, fresh=True) is not h.postings(spark)
     # the same for stats.parquet: the dictionary reloads from the new files
     _rewrite("stats.parquet")
     d2 = h.term_dict()

@@ -103,17 +103,38 @@ def test_sorted_search_plan_no_global_sort(spark, idx, tiny_transcripts):
     assert audit["no_global_limit"], audit["plan"][:2000]
 
 
-def test_filtered_search_plan_is_cogrouped(spark, idx, docs):
-    """The predicate-shaped filter must reach the kernels as a COGROUP —
-    never a driver-side collected list: the plan shows
-    FlatMapCoGroupsInPandas with both sides exchanged by shard."""
+def test_filter_ids_stay_off_the_driver(spark, idx, docs, monkeypatch):
+    """A ``filter_df``'s ids reach the kernels without passing through the
+    driver: the only frame the search collects is the per-shard kernel
+    output of the filter frame's shard groups (FlatMapGroupsInPandas,
+    the hit columns), no plan scans the postings with Spark, and the
+    hits equal those of the same ids passed as ``filter_docs``."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
     from katta_spark.plans import physical_plan
 
     allowed = docs.where(F.col("role") == "user").select("doc_id")
-    hits = search(spark, idx, "hotalpha", k=10, filter_df=allowed)
-    plan = physical_plan(hits, mode="simple")
-    assert "FlatMapCoGroupsInPandas" in plan, plan[:2000]
-    assert "LocalTableScan" not in plan, plan[:2000]
+    ids = [r.doc_id for r in allowed.collect()]
+    want = search(spark, idx, "hotalpha w00011", k=10, filter_docs=ids).collect()
+    collected = []
+    for name in ("collect", "toPandas", "toLocalIterator"):
+        orig = getattr(ClassicDataFrame, name)
+
+        def spy(self, *a, _orig=orig, **kw):
+            collected.append((self.columns, physical_plan(self, "simple")))
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(ClassicDataFrame, name, spy)
+    with jobs_started(spark) as n:
+        got = search(spark, idx, "hotalpha w00011", k=10, filter_df=allowed)
+    monkeypatch.undo()
+    assert n[0] <= 2, n
+    assert collected and all(
+        cols == ["shard_id", "doc_id", "score"]
+        and "FlatMapGroupsInPandas" in plan and "postings.parquet" not in plan
+        for cols, plan in collected
+    ), collected
+    assert got.collect() == want and want
 
 
 def test_rank_identity_fuzz(spark, idx, docs):
@@ -237,28 +258,29 @@ def test_one_index_phase1_runs_no_job(spark, idx):
 
 
 def test_dv_sorted_plan_shape(spark, tiny_transcripts, tmp_path_factory):
-    """Docvalue fast path plan: the sidecar scan is predicate-pushed to
-    the named sort column, and the display join broadcasts the merged
-    top-k (never the corpus)."""
-    from katta_spark.plans import physical_plan, scan_read_schemas
+    """Docvalue fast path plan: the shard tasks read only the named sort
+    column's sidecar rows, and the result is the display join, which
+    broadcasts the merged top-k (never the corpus) and scans neither the
+    postings nor the sidecar."""
+    import katta_spark.query as ksq
+    from katta_spark.plans import physical_plan
 
     d = str(tmp_path_factory.mktemp("plan_dv_idx"))
     build_index(
         spark, tiny_transcripts, d, num_shards=4,
-        docvalue_cols=("turn_idx",),
+        docvalue_cols=("turn_idx", "ts"),
     )
+    rows = ksq._read_dv(d, 0, ["turn_idx"])
+    assert len(rows) and set(rows["col"]) == {"turn_idx"}
     out = search_sorted(
         spark, d, "hotalpha", tiny_transcripts, [("turn_idx", "desc")], k=5
     )
-    plan = physical_plan(out)
-    assert "EqualTo(col,turn_idx)" in plan or "In(col" in plan, plan[:3000]
     simple = physical_plan(out, mode="simple")
     assert "BroadcastHashJoin" in simple and "SortMergeJoin" not in simple
-    # the dv scan reads only the sidecar columns
-    dv_scans = [
-        s for s in scan_read_schemas(out) if "vals" in s and "bucket" in s
-    ]
-    assert dv_scans and all("positions" not in s for s in dv_scans)
+    bcast = simple.split("BroadcastExchange", 1)[1]
+    assert "LocalTableScan" in bcast, simple
+    assert "postings.parquet" not in simple and "docvalues.parquet" not in simple
+    assert out.count() == 5
 
 
 def test_huge_k_is_clamped_to_corpus_size(spark, idx, monkeypatch):

@@ -133,15 +133,14 @@ def test_wildcard_expansion_cap(spark, index):
 
 
 def test_many_term_query_single_stage(spark, index, docs):
-    """>_ISIN_MAX_TERMS query terms (where the cogroup paths stop inlining
-    an In(th) predicate) still run as the one shard-local job, with no
-    exchange or broadcast, merged into a local result; ranking must be
+    """More than 64 query terms (past which a Spark scan could no longer
+    push an In(th) predicate) still run as the one shard-local job, with
+    no exchange or broadcast, merged into a local result; ranking must be
     identical to the oracle (this also exercises the incremental OR-kernel
     accumulator on a wide expansion-like query)."""
     from katta_spark.plans import audit_search_plan, jobs_started
-    from katta_spark.query import _ISIN_MAX_TERMS
 
-    terms = [f"w{i:05d}" for i in range(10, 10 + _ISIN_MAX_TERMS + 10)]
+    terms = [f"w{i:05d}" for i in range(10, 10 + 64 + 10)]
     q = " ".join(terms + ["hotalpha"])
     search(spark, index, q, k=15)  # warm the handle
     with jobs_started(spark) as n_search:

@@ -6,11 +6,11 @@ handle's term dictionary, and phase 2 is one plain RDD job whose tasks read
 their own shard's postings, in the Python workers the pandas UDFs use. So
 on a warm handle every scoring entry point over these shapes runs exactly
 one Spark job; only the unbounded ``ordered=False`` search stays a lazy
-``mapInPandas`` frame. The dictionary
-must give the same results whether it is held in memory or read per query
-(past ``termdict.MAX_RESIDENT_TERMS``), and the paths that keep a Spark
-scan of the postings (filters and docvalue cogroups) must not depend on
-how that scan is split.
+``mapInPandas`` frame. Filtered, docvalue-sorted, grouped and faceted
+searches run their filter and collector in that same shard job (their
+jobs per call are pinned below). The dictionary must give the same
+results whether it is held in memory or read per query (past
+``termdict.MAX_RESIDENT_TERMS``).
 """
 
 from __future__ import annotations
@@ -37,6 +37,10 @@ from katta_spark.query import (
     IndexHandle,
     _read_shard,
     count_matches,
+    facet_counts,
+    facet_ranges,
+    match_stats,
+    prepare_filter,
     search,
     search_batch,
     search_grouped,
@@ -107,6 +111,54 @@ def test_one_job_index_list_and_count(spark, sidx, sidx_b):
     assert _one_job(spark, lambda: count_matches(spark, ha, q)) == n
     tot = search_with_total(spark, ha, q, k=1).collect()
     assert n == tot[0].total_hits
+
+
+def test_jobs_per_bounded_search(spark, sidx, tiny_transcripts):
+    """Every bounded search is one shard job: a filter list, a
+    CachedFilter, facet counts, range facets and match stats run in 1 job
+    per call; an ad hoc filter frame adds at most its own exchange;
+    grouping is two shard jobs; a docvalue sort is one shard job plus the
+    display join's jobs, for one index and for ``[h, h]`` with a string
+    sort. Each call is counted warm, with its result collected."""
+    h = IndexHandle.open(spark, sidx)
+    q = "hotalpha w00011"
+    allowed = (
+        with_doc_ids(tiny_transcripts, 4).where(F.col("role") == "user")
+        .select("doc_id")
+    )
+    ids = [r.doc_id for r in allowed.collect()]
+    cf = prepare_filter(spark, h, allowed)
+
+    def sorted_by(index, spec):
+        return lambda: search_sorted(
+            spark, index, "hotalpha", tiny_transcripts, [spec], k=5
+        )
+
+    calls = {
+        "search": (1, lambda: search(spark, h, q, k=10)),
+        "filter_docs": (1, lambda: search(spark, h, q, k=10, filter_docs=ids)),
+        "cached_filter": (1, lambda: search(spark, h, q, k=10, filter_df=cf)),
+        "facet_counts": (1, lambda: facet_counts(spark, h, q, "role")),
+        "facet_ranges": (1, lambda: facet_ranges(
+            spark, h, q, "turn_idx", [("lo", 0, 10), ("hi", 10, None)]
+        )),
+        "match_stats": (1, lambda: match_stats(spark, h, q, "turn_idx")),
+        "filter_df": (2, lambda: search(spark, h, q, k=10, filter_df=allowed)),
+        "search_grouped": (2, lambda: search_grouped(
+            spark, h, q, "role", k_groups=3, k_docs=2
+        )),
+        "sorted_int": (3, sorted_by(h, ("turn_idx", "desc"))),
+        "sorted_str": (3, sorted_by(h, ("role", "asc"))),
+        "sorted_str_list": (3, sorted_by([h, h], ("role", "asc"))),
+    }
+    try:
+        for name, (most, call) in calls.items():
+            assert call().collect(), name
+            with jobs_started(spark) as n:
+                call().collect()
+            assert 0 < n[0] <= most, (name, n[0])
+    finally:
+        cf.unpersist()
 
 
 def _bits(rows) -> list[str]:
@@ -351,9 +403,10 @@ def test_open_shard_reader(sidx, tmp_path, monkeypatch):
 
 
 def test_small_scan_splits(spark, sidx, tiny_transcripts):
-    """The filter and docvalue paths keep a Spark scan of the postings that
-    is cogrouped by shard; splitting that scan into many small partitions
-    must not change their results."""
+    """Filtered, docvalue-sorted and grouped searches read their shards in
+    the shard tasks; the Spark scans that remain around them (the filter
+    frame's source, the display join's ``source``) must not change their
+    results when they are split into many small partitions."""
     allowed = (
         with_doc_ids(tiny_transcripts, 4)
         .where(F.col("role") == "user")

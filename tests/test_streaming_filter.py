@@ -16,7 +16,9 @@ from katta_spark.streaming import delta_index_dirs, stream_build
 from katta_spark.synth import synth_transcripts
 
 
-def test_filtered_search_matches_filtered_oracle(spark, tiny_transcripts, tmp_path):
+def test_filtered_search_matches_filtered_oracle(
+    spark, tiny_transcripts, tmp_path, monkeypatch
+):
     """P2: a filter restricts the matched doc set WITHOUT changing scores
     (reference: QueryWrapperFilter applied during collection,
     LuceneServer.java:334-345; test LuceneClientTest.java:562-617)."""
@@ -74,9 +76,20 @@ def test_filtered_search_matches_filtered_oracle(spark, tiny_transcripts, tmp_pa
 
     # CachedFilter (P3, CachingWrapperFilter analog): prepared once,
     # reused across queries, row-identical to the raw-DataFrame path;
-    # the prepared frame is persisted and its plan reuses the cache
+    # the prepared frame is persisted, and the frame that drives the
+    # shard tasks reads the cache with no exchange
+    import katta_spark.query as ksq
     from katta_spark.plans import physical_plan
     from katta_spark.query import prepare_filter
+
+    driving = []
+    by_filter = ksq._Fetch.by_filter
+
+    def record(self, *a, **kw):
+        driving.append(by_filter(self, *a, **kw))
+        return driving[-1]
+
+    monkeypatch.setattr(ksq._Fetch, "by_filter", record)
 
     cf = prepare_filter(spark, d, allowed_df)
     try:
@@ -93,10 +106,13 @@ def test_filtered_search_matches_filtered_oracle(spark, tiny_transcripts, tmp_pa
         ).collect() == search(
             spark, d, "hotalpha", k=10, filter_df=allowed_df
         ).collect()
-        plan = physical_plan(
-            search(spark, d, "hotalpha hotbeta", k=10, filter_df=cf)
-        )
-        assert "InMemoryTableScan" in plan
+        driving.clear()
+        search(spark, d, "hotalpha hotbeta", k=10, filter_df=cf)
+        plan = physical_plan(driving[0], mode="simple")
+        # (the cached relation's own plan, printed below its scan, holds
+        # the exchange prepare_filter ran once)
+        above, cached, _ = plan.partition("InMemoryTableScan")
+        assert cached and "Exchange" not in above, plan
         # sharding-config mismatch refuses
         d2 = str(tmp_path / "idx2")
         build_index(spark, tiny_transcripts, d2, num_shards=2)
